@@ -93,6 +93,34 @@ def _strip(df: DataFrame) -> DataFrame:
     return df.drop(SEQ) if SEQ in df.columns else df
 
 
+def _parallel_arms(arms: "dict[str, Callable[[], object]]") -> dict:
+    """Build independent query arms from driver threads so their
+    driver-synchronous construction jobs overlap: one
+    ``InheritableThread`` per arm (job properties are inherited), all
+    joined, then the first error in ``arms`` order re-raised on the
+    calling thread.  Threads only change WHEN the same jobs run, never
+    what any arm computes.  Returns ``{name: result}``."""
+    from pyspark import InheritableThread
+    box, errs = {}, {}
+
+    def run(name, fn):
+        try:
+            box[name] = fn()
+        except BaseException as e:  # re-raised on the calling thread
+            errs[name] = e
+
+    threads = [InheritableThread(target=run, args=(name, fn))
+               for name, fn in arms.items()]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for name in arms:
+        if name in errs:
+            raise errs[name]
+    return box
+
+
 def _scaled_sum(col, scale: int):
     """Order-insensitive exact sum of a double expression: round each
     value to a fixed decimal width as a SCALED LONG, sum longs (codegen
@@ -592,31 +620,11 @@ def q_minhash_survivors(spark, sf):
     # driver threads (guide §2.6) after ONE materializing action on
     # pairs (otherwise both first-touchers race to compute the banding).
     pairs.count()
-    from pyspark import InheritableThread
     from conduino_spark import k_core
-    box = {}
-
-    def _build_cc():
-        try:
-            box["labels"] = minhash_cc_labels(pairs)
-        except BaseException as e:  # re-raised on the main thread
-            box["labels_err"] = e
-
-    def _build_core():
-        try:
-            box["core"] = k_core(2)(pairs.select("id_a", "id_b"))
-        except BaseException as e:
-            box["core_err"] = e
-
-    ts = [InheritableThread(target=_build_cc),
-          InheritableThread(target=_build_core)]
-    for t in ts:
-        t.start()
-    for t in ts:
-        t.join()
-    for k in ("labels_err", "core_err"):
-        if k in box:
-            raise box[k]
+    box = _parallel_arms({
+        "labels": lambda: minhash_cc_labels(pairs),
+        "core": lambda: k_core(2)(pairs.select("id_a", "id_b")),
+    })
     cc_labels = box["labels"]
     greedy = minhash_dedup(pairs=pairs)(docs).select(
         "doc_id", F.lit("greedy").alias("policy"))
@@ -1239,17 +1247,6 @@ def q_pq_adc_search(spark, sf):
     # driver threads (the knn_methods pattern) so those jobs overlap.
     # Threads only change WHEN construction jobs run, never what any
     # arm computes.
-    from pyspark import InheritableThread
-    _box, _errs = {}, {}
-
-    def _t(name, fn_):
-        def run():
-            try:
-                _box[name] = fn_()
-            except BaseException as e:
-                _errs[name] = e
-        return InheritableThread(target=run)
-
     # r9 second arm: the SAME query through the SQ8 path (scalar
     # quantization — no codebook, affine decode) so both compressed-
     # ANN representations hash-verify under one pin; model memoized
@@ -1356,14 +1353,8 @@ def q_pq_adc_search(spark, sf):
                         (F.col("__nt") * 1000 + F.col("__nh"))
                         .cast("double").alias("approx_dist")))
 
-    _threads = [_t("sq", _arm_sq), _t("ivfpq", _arm_ivfpq),
-                _t("lsh_rec", _arm_lsh)]
-    for _th in _threads:
-        _th.start()
-    for _th in _threads:
-        _th.join()
-    if _errs:
-        raise next(iter(_errs.values()))
+    _box = _parallel_arms({"sq": _arm_sq, "ivfpq": _arm_ivfpq,
+                           "lsh_rec": _arm_lsh})
     sq = _box["sq"]
     ivfpq, ivfpqm = _box["ivfpq"]
     lsh_rec = _box["lsh_rec"]
@@ -2706,40 +2697,20 @@ def q_quality_classifier_docs(spark, sf):
     # thread-owned cache registry: each train's scoped release now
     # pops only its own caches.  Determinism unchanged — threads only
     # change when jobs run, never what they compute.
-    from pyspark import InheritableThread
     from conduino_spark import nb_score, nb_train
-    box, errs = {}, {}
-
-    def _train_lr():
-        try:
-            box["m"] = logreg_train(
-                feats, list(QUALITY_FEATURES), "label",
-                iters=LOGREG_ITERS, lr=LOGREG_LR,
-                term_scale=LOGREG_TS, track_loss=False)
-        except BaseException as e:
-            errs["m"] = e
-
-    def _train_nb():
-        try:
-            # r9 merge: the SECOND classifier family rides the same
-            # pin — multinomial naive Bayes (nb_train/nb_score) with
-            # lang as the label; its model is a DISTRIBUTED (token,
-            # k-vector) table, its train+score path exact scaled-long
-            # all the way, so the driver hash-verifies both classifier
-            # shapes (driver-weights GD and model-as-a-table NB) in
-            # one row set (_sql_nb_lang).
-            box["nbm"] = nb_train(docs, "text", "lang")
-        except BaseException as e:
-            errs["nbm"] = e
-
-    ts = [InheritableThread(target=_train_lr),
-          InheritableThread(target=_train_nb)]
-    for t in ts:
-        t.start()
-    for t in ts:
-        t.join()
-    if errs:
-        raise next(iter(errs.values()))
+    box = _parallel_arms({
+        "m": lambda: logreg_train(
+            feats, list(QUALITY_FEATURES), "label",
+            iters=LOGREG_ITERS, lr=LOGREG_LR,
+            term_scale=LOGREG_TS, track_loss=False),
+        # r9 merge: the SECOND classifier family rides the same pin —
+        # multinomial naive Bayes (nb_train/nb_score) with lang as the
+        # label; its model is a DISTRIBUTED (token, k-vector) table,
+        # its train+score path exact scaled-long all the way, so the
+        # driver hash-verifies both classifier shapes (driver-weights
+        # GD and model-as-a-table NB) in one row set (_sql_nb_lang).
+        "nbm": lambda: nb_train(docs, "text", "lang"),
+    })
     lr = logreg_score(box["m"])(feats).select("doc_id", "label", "score")
     nbm = box["nbm"]
     nb = nb_score(nbm)(docs).select("doc_id", "nb_label", "nb_score")
@@ -2941,23 +2912,12 @@ def q_knn_methods(spark, sf):
     # construction-time jobs overlap; the final union action is
     # unchanged.  Everything stays deterministic — threads only change
     # when the same jobs run, never what they compute.
-    from pyspark import InheritableThread
     qv = _knn_qv(spark, sf)
     from conduino_spark.plans.cachereg import track
     # brute top-10 feeds BOTH the 'brute' arm and the 'mmr' candidate
     # set — one cached computation instead of two plans (r15)
     brute_base = track(q_knn_bruteforce(spark, sf, qv=qv))
-    box, errs = {}, {}
-
-    def _arm(name, fn):
-        def run():
-            try:
-                box[name] = fn()
-            except BaseException as e:
-                errs[name] = e
-        return InheritableThread(target=run)
-
-    arm_fns = {
+    box = _parallel_arms({
         "ivf": lambda: q_ivf_search_topk(spark, sf, qv=qv),
         "lsh": lambda: q_knn_lsh_probe(spark, sf, qv=qv),
         "cells": lambda: q_ivf_build(spark, sf),
@@ -2965,14 +2925,7 @@ def q_knn_methods(spark, sf):
         "bm25i": lambda: q_bm25_index_docs(spark, sf),
         "phrase": lambda: q_phrase_search_docs(spark, sf),
         "lshm": lambda: q_knn_lsh_probe_merged(spark, sf, qv=qv),
-    }
-    threads = [_arm(n, f) for n, f in arm_fns.items()]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    if errs:
-        raise next(iter(errs.values()))
+    })
     brute = brute_base.select(
         F.lit("brute").alias("method"), "vec_id",
         F.col("cosine").alias("score"))
@@ -3235,17 +3188,6 @@ def q_minhash_pairs_eval(spark, sf):
     # sample's shingle cache) — build the arms from driver threads so
     # that job overlaps the others' construction.  Same plans, same
     # rows; threads only move when construction jobs run.
-    from pyspark import InheritableThread
-    box, errs = {}, {}
-
-    def _t(name, fn_):
-        def run():
-            try:
-                box[name] = fn_()
-            except BaseException as e:
-                errs[name] = e
-        return InheritableThread(target=run)
-
     def _arm_pairs():
         return q_minhash_pairs(spark, sf).select(
             F.lit("pair").alias("part"), "id_a", "id_b",
@@ -3282,14 +3224,8 @@ def q_minhash_pairs_eval(spark, sf):
             F.lit(None).cast("double").alias("precision"),
             F.lit(None).cast("double").alias("recall"))
 
-    ts = [_t("pairs", _arm_pairs), _t("eval", _arm_eval),
-          _t("edit", _arm_edit)]
-    for t in ts:
-        t.start()
-    for t in ts:
-        t.join()
-    if errs:
-        raise next(iter(errs.values()))
+    box = _parallel_arms({"pairs": _arm_pairs, "eval": _arm_eval,
+                          "edit": _arm_edit})
     return (box["pairs"].unionByName(box["eval"])
             .unionByName(box["edit"]))
 

@@ -437,6 +437,7 @@ def main() -> None:
         # them on a second stable line at 0.1 s resolution instead —
         # additions only, the headline line above is unchanged.
         pq = {"metric": "per_query", "unit": "sec",
+              "value": full["value"], "failed": sorted(failed),
               "queries": {n: round(t, 1) for n, t in times.items()},
               "sf": full["sf"], "cpus": CPUS}
         print(json.dumps(pq, separators=(",", ":")))

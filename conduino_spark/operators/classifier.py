@@ -41,6 +41,7 @@ from typing import List, Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from conduino_spark.operators.smallio import driver_collect
 from conduino_spark.plans.core import Stage
 
 TERM_SCALE = 10_000
@@ -132,10 +133,10 @@ def logreg_epoch_update(grads: Sequence[int], n: int, w: List[float],
     return ([w[i] - lr * gw[i] for i in range(d)], b - lr * gb)
 
 
-def _logreg_driver(feat: DataFrame, d: int, n: int, iters: int,
+def _logreg_driver(pdf, d: int, n: int, iters: int,
                    lr: float, l2: float, term_scale: int,
                    track_loss: bool,
-                   feature_cols: "List[str]") -> "LogRegModel | None":
+                   feature_cols: "List[str]") -> LogRegModel:
     """Driver fast path for :func:`logreg_train` (the _cc_min_label
     budget posture): the full-batch gradient epochs run vectorized
     over the collected feature matrix instead of one driver-
@@ -147,16 +148,11 @@ def _logreg_driver(feat: DataFrame, d: int, n: int, iters: int,
     update goes through the SAME :func:`logreg_epoch_update` both
     paths share with the DuckDB replay.  ``exp``/``log1p`` ride each
     engine's libm exactly as the established JVM↔DuckDB two-path law
-    already does — differences are absorbed by the 1e6-term rounding.
-    Returns None to decline (NaN features — the distributed path keeps
-    its exact NaN semantics there)."""
+    already does — differences are absorbed by the 1e6-term rounding."""
     import numpy as np
 
-    pdf = feat.toPandas()
     X = pdf[[f"__x{i}" for i in range(d)]].to_numpy(dtype=np.float64)
     y = pdf["__y"].to_numpy(dtype=np.float64)
-    if np.isnan(X).any() or np.isnan(y).any():
-        return None
 
     def hround_sum(v):
         r = np.where(v >= 0, np.floor(v + 0.5), np.ceil(v - 0.5))
@@ -215,18 +211,13 @@ def logreg_train(df: DataFrame, feature_cols: Sequence[str],
     try:
         # r16: budgeted driver fast path — the count gates it AND
         # materializes the cache the epochs read either way
-        import os
-        cells = int(os.environ.get("SPARK_GRAFT_LOGREG_DRIVER_CELLS",
-                                   "32000000"))
         n_gate = feat.count()
         if n_gate == 0:
             raise ValueError("logreg_train: no complete rows")
-        if n_gate * (d + 1) <= cells:
-            model = _logreg_driver(feat, d, n_gate, iters, lr, l2,
-                                   term_scale, track_loss,
-                                   feature_cols)
-            if model is not None:
-                return model
+        pdf = driver_collect(feat, n_gate, width=d + 1)
+        if pdf is not None:
+            return _logreg_driver(pdf, d, n_gate, iters, lr, l2,
+                                  term_scale, track_loss, feature_cols)
         w = [0.0] * d
         b = 0.0
         n: Optional[int] = None

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from conduino_spark.plans.cachereg import track
 from conduino_spark.plans.core import Stage
 from conduino_spark.functions.hashing import MERSENNE31, h32, lcg_params
+from conduino_spark.operators.smallio import driver_collect
 from conduino_spark.operators.text import tokens_col
 
 # default MinHash configuration, shared with the oracle SQL.  The
@@ -608,39 +609,15 @@ def minhash_dedup(text_col: str = "text", id_col: str = "doc_id", *,
     return Stage(fn, name="minhash_dedup", seq_preserving=False)
 
 
-def _graph_driver_budget() -> int:
-    """Edge budget (UNDIRECTED pairs) under which the bounded-iteration
-    graph loops run their driver fast path — one Arrow collect + a
-    vectorized numpy fixpoint instead of per-round shuffle joins and
-    driver-synchronous convergence collects (r16, guide §1.2: the
-    distributed loop is gap-bound at small edge counts — each 2-round
-    batch costs a full driver round-trip for milliseconds of compute).
-    2M edges ≈ 32 MB through Arrow + a few 4M-element numpy arrays —
-    trivially bounded driver memory at any corpus scale, and at 100 TB
-    the near-dup pair graph is corpus-sized, so the budget routes
-    straight to the distributed loop (the blocked-GEMM budget-gate
-    posture; the data-dependent CHOICE never changes the result, which
-    both paths compute as the same unique fixpoint)."""
-    import os
-    return int(os.environ.get("SPARK_GRAFT_GRAPH_DRIVER_EDGES",
-                              "2000000"))
-
-
-def _cc_driver(edges: DataFrame, spark, max_iters: int) -> "DataFrame | None":
+def _cc_driver(pdf, dt: str, spark, max_iters: int) -> DataFrame:
     """Driver fast path for :func:`_cc_min_label`: run the SAME
     min-label propagation, vectorized over the collected (src, dst)
     arrays — ``np.minimum.at`` per pass IS the per-round
     min-over-neighbours join.  Same unique fixpoint, same acceptance
     bound (a graph needing more than ``max_iters + 1`` label-changing
-    rounds raises exactly like the 2-round-batched loop).  Returns
-    None to decline (NULL ids — rare, the distributed loop keeps its
-    exact NULL semantics there)."""
+    rounds raises exactly like the 2-round-batched loop)."""
     import numpy as np
 
-    pdf = edges.toPandas()
-    if pdf.isnull().values.any():
-        return None
-    dt = dict(edges.dtypes)["src"]
     sd = np.concatenate([pdf["src"].to_numpy(), pdf["dst"].to_numpy()])
     verts, inv = np.unique(sd, return_inverse=True)
     n = len(verts)
@@ -688,9 +665,10 @@ def _cc_min_label(pairs: DataFrame, *, max_iters: int = 25) -> DataFrame:
     (near-dup clusters are shallow).  localCheckpoint bounds lineage
     exactly like feedback_pipe's driver fixpoint (lift.py), whose
     relaxation of the reference's feedback loop this reuses
-    (Data/Conduino.hs:429-442).  Below :func:`_graph_driver_budget`
-    edges the loop runs on the driver (:func:`_cc_driver`) — identical
-    labels, identical acceptance bound, no per-round driver syncs."""
+    (Data/Conduino.hs:429-442).  When :func:`smallio.driver_collect`
+    accepts the edge table the loop runs on the driver
+    (:func:`_cc_driver`) — identical labels, identical acceptance
+    bound, no per-round driver syncs."""
     # lazy checkpoints throughout (r15 job-count trim, guide §2.4):
     # the convergence aggregate right after each checkpoint materializes
     # it, so every round costs ONE driver-synchronous job instead of
@@ -702,10 +680,11 @@ def _cc_min_label(pairs: DataFrame, *, max_iters: int = 25) -> DataFrame:
     # the count materializes the checkpoint (replacing the first-touch
     # the initial label sum used to pay) AND gates the driver path
     n_directed = edges.count()
-    if n_directed <= 2 * _graph_driver_budget():
-        out = _cc_driver(edges, pairs.sparkSession, max_iters)
-        if out is not None:
-            return out
+    # width 8: a directed edge's two ids plus the numpy work arrays
+    pdf = driver_collect(edges, n_directed, width=8)
+    if pdf is not None:
+        return _cc_driver(pdf, dict(edges.dtypes)["src"],
+                          pairs.sparkSession, max_iters)
     labels = (edges.select(F.col("src").alias("id")).distinct()
                    .select("id", F.col("id").alias("lbl"))
                    .localCheckpoint(eager=False))

@@ -22,6 +22,7 @@ from typing import Optional, Union
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from conduino_spark.operators import smallio
 from conduino_spark.plans.core import SEQ, Source, Stage
 
 
@@ -190,15 +191,13 @@ def k_core(k: int, src: str = "id_a", dst: str = "id_b", *,
     if max_iters < 1:
         raise ValueError(f"max_iters must be >= 1, got {max_iters}")
 
-    def _driver_core(und: DataFrame, n_directed: int, spark) -> DataFrame:
+    def _driver_core(pdf, dt: str, n_directed: int, spark) -> DataFrame:
         """Driver fast path (r16, the _cc_min_label posture): the SAME
         parallel peeling, vectorized over the collected directed edge
         arrays — one np.bincount per round IS the degree aggregate.
         Iteration count and raise boundary mirror the distributed loop
         exactly; the k-core is unique, so the result cannot differ."""
         import numpy as np
-        dt = dict(und.dtypes)["a"]
-        pdf = und.toPandas()
         sd = np.concatenate([pdf["a"].to_numpy(), pdf["b"].to_numpy()])
         verts, inv = np.unique(sd, return_inverse=True)
         n = len(verts)
@@ -244,9 +243,11 @@ def k_core(k: int, src: str = "id_a", dst: str = "id_b", *,
         # (r15 job-count trim, guide §2.4)
         und = und.localCheckpoint(eager=False)
         n_edges = und.count()
-        from conduino_spark.operators.dedup import _graph_driver_budget
-        if n_edges <= 2 * _graph_driver_budget():
-            return _driver_core(und, n_edges, df.sparkSession)
+        # width 8: a directed edge's two ids plus the numpy work arrays
+        pdf = smallio.driver_collect(und, n_edges, width=8)
+        if pdf is not None:
+            return _driver_core(pdf, dict(und.dtypes)["a"], n_edges,
+                                df.sparkSession)
         for it in range(max_iters):
             if n_edges == 0:
                 break
@@ -279,7 +280,7 @@ def k_core(k: int, src: str = "id_a", dst: str = "id_b", *,
     return Stage(fn, name=f"{name}(k={k})", seq_preserving=False)
 
 
-def _lp_driver(nodes: DataFrame, sym: DataFrame, label_col: str,
+def _lp_driver(nodes: DataFrame, epdf, dt: str, label_col: str,
                id_col: str, iters: int, out: str,
                spark) -> "DataFrame | None":
     """Driver fast path for :func:`label_propagation` (the
@@ -294,22 +295,18 @@ def _lp_driver(nodes: DataFrame, sym: DataFrame, label_col: str,
     reach them — everything else keeps its seed/NULL by the recompute-
     from-scratch semantics); the result re-attaches distributively as
     one broadcast join, so the nodes table itself never moves.
-    Returns None to decline (NULL ids/weights, duplicate ids among the
-    edge vertices, or a label alphabet too wide for the dense vote
-    matrix) — the distributed loop then runs unchanged."""
+    Returns None to decline (duplicate ids among the edge vertices,
+    or a label alphabet too wide for the dense vote matrix) — the
+    distributed loop then runs unchanged."""
     import numpy as np
     import pandas as pd
 
-    epdf = sym.toPandas()
-    if epdf.isnull().values.any():
-        return None
     sd = np.concatenate([epdf["__s"].to_numpy(), epdf["__d"].to_numpy()])
     verts, inv = np.unique(sd, return_inverse=True)
     n = len(verts)
     s, d = inv[:len(epdf)], inv[len(epdf):]
     w = epdf["__w"].to_numpy()
     # seed labels for the edge vertices only (bounded by the budget)
-    dt = dict(sym.dtypes)["__s"]
     vdf = spark.createDataFrame(pd.DataFrame({"__vid": verts}),
                                 schema=f"__vid {dt}")
     spdf = (nodes.select(F.col(id_col).alias("__vid"),
@@ -327,16 +324,18 @@ def _lp_driver(nodes: DataFrame, sym: DataFrame, label_col: str,
         # no seeds anywhere near the graph: every pick is NULL
         prop = seed.copy()
     else:
-        if n * nl > 256_000_000:
+        if n * nl > smallio.DRIVER_CELLS:
             return None  # dense vote matrix would not be driver-sized
         code = {l: i for i, l in enumerate(labels_all)}
         seed_code = np.array([code[x] if x is not None else -1
                               for x in seed], dtype=np.int64)
         cur = seed_code.copy()
         lo = np.iinfo(np.int64).min
+        votes = np.empty((n, nl), dtype=np.int64)
+        nvote = np.empty((n, nl), dtype=np.int64)
         for _ in range(iters):
-            votes = np.zeros((n, nl), dtype=np.int64)
-            nvote = np.zeros((n, nl), dtype=np.int64)
+            votes.fill(0)
+            nvote.fill(0)
             labeled = cur[s] >= 0
             np.add.at(votes, (d[labeled], cur[s][labeled]), w[labeled])
             np.add.at(nvote, (d[labeled], cur[s][labeled]), 1)
@@ -429,10 +428,12 @@ def label_propagation(edges: Union[DataFrame, Source],
         # rounds fan out over it (the minhash sig-cache fill-race fix)
         # AND gates the driver fast path
         n_directed = sym.count()
-        from conduino_spark.operators.dedup import _graph_driver_budget
-        if n_directed <= 2 * _graph_driver_budget():
-            out_df = _lp_driver(nodes, sym, label_col, id_col, iters,
-                                out, nodes.sparkSession)
+        # width 8: a directed edge's two ids plus the numpy work arrays
+        epdf = smallio.driver_collect(sym, n_directed, width=8)
+        if epdf is not None:
+            out_df = _lp_driver(nodes, epdf, dict(sym.dtypes)["__s"],
+                                label_col, id_col, iters, out,
+                                nodes.sparkSession)
             if out_df is not None:
                 return out_df
         seeds = nodes.select(F.col(id_col).alias("__id"),

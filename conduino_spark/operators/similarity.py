@@ -23,6 +23,7 @@ from conduino_spark.plans.core import Stage
 from conduino_spark.functions.hashing import lcg_params
 
 from conduino_spark.operators.smallio import (
+    driver_collect,
     centroids_arrow as _centroids_arrow,
     driver_parquet_read as _driver_parquet_read,
     driver_parquet_write as _driver_parquet_write)
@@ -435,28 +436,26 @@ def kcenter_select(df: DataFrame, k: int = 8, *,
                          "(NULL ids/vectors are excluded)")
     sc = float(scale)
 
-    # r16 (the _cc_min_label driver-budget posture): the greedy loop is
-    # k−1 dependent driver round-trips — each a full plan build over
+    # r16 (the _cc_min_label driver posture): the greedy loop is k−1
+    # dependent driver round-trips — each a full plan build over
     # k·dim literals plus a max-struct job, for milliseconds of compute
-    # at small n.  Under an env-tunable cell budget
-    # (SPARK_GRAFT_KCENTER_DRIVER_CELLS; 32M cells ≈ 256 MB numpy —
-    # bounded driver memory) the SAME greedy runs vectorized on the
-    # collected matrix: per-term HALF-AWAY-FROM-ZERO rounding to int64
-    # (floor(v+0.5) on the non-negative squares — the r15 coarse-ranking
-    # convention, bit-equal to F.round), exact int64 sums and carried
-    # minima, identical (mind desc, id asc) tie rule.  Past the budget
-    # — any real corpus — the distributed carried-minimum loop below
-    # runs unchanged; law test forces both branches.
-    import os
-    cells = int(os.environ.get("SPARK_GRAFT_KCENTER_DRIVER_CELLS",
-                               "32000000"))
-    n_rows = base.count()
-    if n_rows * max(len(seed["__v"]), 1) <= cells:
+    # at small n.  When smallio.driver_collect accepts the n×dim matrix
+    # the SAME greedy runs vectorized on it: per-term
+    # HALF-AWAY-FROM-ZERO rounding to int64 (floor(v+0.5) on the
+    # non-negative squares — the r15 coarse-ranking convention,
+    # bit-equal to F.round), exact int64 sums and carried minima,
+    # identical (mind desc, id asc) tie rule.  Non-numeric ids (no
+    # .item() scalar) and NULL/NaN vector elements (NaN corrupts the
+    # int64 distances) decline like any real corpus: the distributed
+    # carried-minimum loop below runs unchanged.  Law tests force both.
+    pdf = driver_collect(base, base.count(),
+                         width=max(len(seed["__v"]), 1))
+    if pdf is not None:
         import numpy as np
-        pdf = base.toPandas()
-        base.unpersist()
         ids = pdf["__id"].to_numpy()
         V = np.stack(pdf["__v"].to_numpy())
+    if pdf is not None and ids.dtype.kind in "iuf" and np.isfinite(V).all():
+        base.unpersist()
         order = np.argsort(ids, kind="stable")
         ids, V = ids[order], V[order]
 

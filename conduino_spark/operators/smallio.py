@@ -19,12 +19,20 @@ the right call — the data never left the driver in the first place.
 
 Only ever use this for bounded, driver-known tables (models, stats
 partials, format metadata).  Corpus-sized tables stay Spark writes.
+
+The same rule bounds the loops' numpy fast paths (CC, k-core, label
+propagation, k-center, logreg): each collects only through
+:func:`driver_collect`, under the one :data:`DRIVER_CELLS` budget.
 """
 
 from __future__ import annotations
 
 import os
 from typing import Sequence
+
+# rows × width cap in 8-byte cells (≈256 MB) on a driver fast path's
+# collect; fixed, so driver memory stays bounded at any scale
+DRIVER_CELLS = 32_000_000
 
 
 def _fs_path(path: str):
@@ -80,3 +88,18 @@ def centroids_arrow(centroids: "dict[int, Sequence[float]]"):
          "centroid": pa.array(
              [[float(x) for x in centroids[c]] for c in cells],
              pa.list_(pa.float64()))})
+
+
+def driver_collect(df, rows: int, width: int) -> "pandas.DataFrame | None":
+    """Collect ``df`` for a driver-side numpy fast path, or return None
+    so the caller runs its distributed plan.  ``rows`` is a count the
+    caller already has; ``width`` is the 8-byte cells a row costs, so
+    nothing is collected past ``rows * width > DRIVER_CELLS``.  Any
+    NULL or NaN cell declines too: the numpy kernels have no NULL/NaN
+    semantics, the distributed plans keep Spark's."""
+    if rows * width > DRIVER_CELLS:
+        return None
+    pdf = df.toPandas()
+    if pdf.isnull().values.any():
+        return None
+    return pdf

@@ -29,6 +29,10 @@ from pyspark.sql import functions as F
 
 from conduino_spark.plans.core import SEQ, Source, Stage
 
+# rolling_agg(strategy="auto") RANGE-frame work bounds (see its doc)
+RANGE_AVG_FRAME = 32
+RANGE_KEY_CAP = 4_000_000
+
 
 def asof_join(right: Source, *, on: "str | Sequence[str]", left_time: str,
               right_time: Optional[str] = None,
@@ -222,10 +226,9 @@ def rolling_agg(time_col: str, preceding: float, *,
       timestamps at window width — a row's frame spans at most its own
       and the previous bin, so ``Σ_{key,bin} c·(c + c_prev)`` upper-
       bounds total frame work without computing any frame.  When the
-      bound proves the data sparse (small mean frame AND no hot key
-      past the per-key cap — both env-tunable,
-      ``SPARK_GRAFT_ROLLING_RANGE_AVG_FRAME`` /
-      ``SPARK_GRAFT_ROLLING_RANGE_KEY_CAP``), the plain RANGE frame is
+      bound proves the data sparse (mean frame at most
+      ``RANGE_AVG_FRAME`` rows AND no key's work past
+      ``RANGE_KEY_CAP``), the plain RANGE frame is
       strictly cheaper (one window pass, no union); past the bound the
       linear prefix-difference plan wins (the 64×-at-10×-rows probe).
     * ``"prefix"`` / ``"range"`` force a branch (law tests; callers
@@ -397,11 +400,6 @@ def rolling_agg(time_col: str, preceding: float, *,
         # its full c² (binning precision only moves rows between
         # adjacent bins, which moves the BOUND, never correctness:
         # both branches compute the same result).
-        import os
-        avg_cap = float(os.environ.get(
-            "SPARK_GRAFT_ROLLING_RANGE_AVG_FRAME", "32"))
-        key_cap = float(os.environ.get(
-            "SPARK_GRAFT_ROLLING_RANGE_KEY_CAP", "4000000"))
         t = _epoch_us(df, time_col)
         wb = float(max(w_us, 1))
         per = (df.select(*[F.col(k) for k in keys],
@@ -424,7 +422,8 @@ def rolling_agg(time_col: str, preceding: float, *,
                      F.coalesce(F.max("__work"), F.lit(0.0)).alias("m")
                      ).collect()[0]
         rows, tot, mx = row["r"], row["w"], row["m"]
-        return rows == 0 or (tot <= avg_cap * rows and mx <= key_cap)
+        return rows == 0 or (tot <= RANGE_AVG_FRAME * rows
+                             and mx <= RANGE_KEY_CAP)
 
     def fn_declared(df: DataFrame) -> DataFrame:
         if strategy == "range" or (strategy == "auto"

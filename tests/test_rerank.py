@@ -255,8 +255,9 @@ def test_kcenter_duckdb_bit_replay(spark):
     assert [tuple(p) for p in got] == [tuple(w) for w in want]
 
 
-def test_kcenter_edges(spark):
+def test_kcenter_edges(spark, monkeypatch):
     from conduino_spark import kcenter_select
+    from conduino_spark.operators import smallio
     df = spark.createDataFrame(
         [(1, [0.0, 0.0]), (2, [1.0, 0.0]), (None, [9.0, 9.0]),
          (3, None)],
@@ -273,6 +274,21 @@ def test_kcenter_edges(spark):
         [], "vec_id long, embedding array<double>")
     with pytest.raises(ValueError, match="no usable rows"):
         kcenter_select(empty, k=2)
+    # string ids and a NULL vector element decline the driver path to
+    # the distributed loop (NULL distances sort last there)
+    strs = spark.createDataFrame(
+        [("b", [0.0, 0.0]), ("a", [1.0, 0.0]), ("c", [5.0, 5.0])],
+        "vec_id string, embedding array<double>")
+    holes = spark.createDataFrame(
+        [(1, [0.0, 0.0]), (2, [None, None]), (3, [0.0, 0.0]),
+         (4, [3.0, 4.0])],
+        "vec_id long, embedding array<double>")
+    got_s, got_h = kcenter_select(strs, k=3), kcenter_select(holes, k=3)
+    assert got_s == [("a", 1, 0), ("c", 2, 41_000_000), ("b", 3, 1_000_000)]
+    assert got_h == [(1, 1, 0), (4, 2, 25_000_000), (3, 3, 0)]
+    monkeypatch.setattr(smallio, "DRIVER_CELLS", 0)
+    assert kcenter_select(strs, k=3) == got_s
+    assert kcenter_select(holes, k=3) == got_h
 
 
 def test_kcenter_duplicate_vectors_tie_on_id(spark):

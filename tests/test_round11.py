@@ -47,6 +47,23 @@ def test_driver_parquet_roundtrip_spark_readable(spark, tmp_path):
         driver_parquet_read(str(tmp_path / "missing"))
 
 
+def test_driver_collect_budget_and_decline(spark, monkeypatch):
+    """driver_collect returns the collected frame under the cell
+    budget, and None (nothing to run on the driver) over it or when any
+    collected cell is NULL or NaN."""
+    from conduino_spark.operators import smallio
+    df = spark.createDataFrame([(1, 0.5), (2, 1.5)], "a long, b double")
+    monkeypatch.setattr(smallio, "DRIVER_CELLS", 4)
+    got = smallio.driver_collect(df, 2, width=2)
+    assert got.to_dict("list") == {"a": [1, 2], "b": [0.5, 1.5]}
+    assert smallio.driver_collect(df, 2, width=3) is None
+    null = spark.createDataFrame([(1, 0.5), (None, 1.5)], "a long, b double")
+    assert smallio.driver_collect(null, 2, width=2) is None
+    nan = spark.createDataFrame([(1, 0.5), (2, float("nan"))],
+                                "a long, b double")
+    assert smallio.driver_collect(nan, 2, width=2) is None
+
+
 def test_index_metadata_spark_compatible(spark, tmp_path):
     """The persisted index metadata written driver-side is readable by
     a PLAIN spark.read.parquet — a reader that never imports

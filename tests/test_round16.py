@@ -11,10 +11,13 @@ from pyspark.sql import functions as F
 from conduino_spark import (
     from_dataframe, minhash_dedup_against, read_table, run_pipe, sink_df,
 )
+from conduino_spark.operators import smallio
 from conduino_spark.operators.dedup import (
     MINHASH_BANDS, MINHASH_K, _band_explode, _band_key_cols, _band_pairs,
     _banding_rows, _minhash_sig_df,
 )
+
+DEFAULT_CELLS = smallio.DRIVER_CELLS
 
 
 def _string_band_pairs(sigs, id_col, n_perm, bands_n):
@@ -151,7 +154,7 @@ def test_dup_span_windows_hook_trim_against(spark, sf_dir, tmp_path):
 def test_graph_driver_path_equals_distributed(spark, sf_dir, monkeypatch):
     """The budgeted driver fast paths for CC min-label and k-core
     compute the SAME unique fixpoints as the distributed loops — forced
-    branch comparison on the real near-dup pair graph (env budget 0
+    branch comparison on the real near-dup pair graph (DRIVER_CELLS 0
     pins the distributed loop; the default budget takes the driver
     path at this scale)."""
     from conduino_spark import k_core, read_table
@@ -161,11 +164,11 @@ def test_graph_driver_path_equals_distributed(spark, sf_dir, monkeypatch):
     docs = read_table(sf_dir, "documents").df(spark)
     pairs = minhash_dedup_pairs()(docs).cache()
     try:
-        monkeypatch.setenv("SPARK_GRAFT_GRAPH_DRIVER_EDGES", "0")
+        monkeypatch.setattr(smallio, "DRIVER_CELLS", 0)
         dist_cc = {(r.id, r.lbl) for r in _cc_min_label(pairs).collect()}
         dist_core = {r.id for r in
                      k_core(2)(pairs.select("id_a", "id_b")).collect()}
-        monkeypatch.delenv("SPARK_GRAFT_GRAPH_DRIVER_EDGES")
+        monkeypatch.setattr(smallio, "DRIVER_CELLS", DEFAULT_CELLS)
         drv_cc = {(r.id, r.lbl) for r in _cc_min_label(pairs).collect()}
         drv_core = {r.id for r in
                     k_core(2)(pairs.select("id_a", "id_b")).collect()}
@@ -196,9 +199,9 @@ def test_graph_driver_path_raise_parity(spark, monkeypatch):
 
     for n_chain in (3, 4, 5, 6, 7):
         for mi in (1, 2, 3):
-            monkeypatch.setenv("SPARK_GRAFT_GRAPH_DRIVER_EDGES", "0")
+            monkeypatch.setattr(smallio, "DRIVER_CELLS", 0)
             dist = outcome(n_chain, mi)
-            monkeypatch.setenv("SPARK_GRAFT_GRAPH_DRIVER_EDGES", "2000000")
+            monkeypatch.setattr(smallio, "DRIVER_CELLS", DEFAULT_CELLS)
             drv = outcome(n_chain, mi)
             assert drv == dist, (n_chain, mi, drv[0], dist[0])
 
@@ -210,9 +213,9 @@ def test_kcenter_driver_path_equals_distributed(spark, sf_dir, monkeypatch):
     from conduino_spark import kcenter_select, read_table
 
     emb = read_table(sf_dir, "embeddings").df(spark)
-    monkeypatch.setenv("SPARK_GRAFT_KCENTER_DRIVER_CELLS", "0")
+    monkeypatch.setattr(smallio, "DRIVER_CELLS", 0)
     dist = kcenter_select(emb, k=6)
-    monkeypatch.delenv("SPARK_GRAFT_KCENTER_DRIVER_CELLS")
+    monkeypatch.setattr(smallio, "DRIVER_CELLS", DEFAULT_CELLS)
     drv = kcenter_select(emb, k=6)
     assert [(int(i), int(r), int(m)) for i, r, m in drv] \
         == [(int(i), int(r), int(m)) for i, r, m in dist]
@@ -233,19 +236,15 @@ def test_lp_driver_path_equals_distributed(spark, sf_dir, monkeypatch):
         "doc_id",
         F.when(F.col("doc_id") % 10 == 0, F.col("lang")).alias("label"))
 
-    def run(env):
-        if env is None:
-            monkeypatch.delenv("SPARK_GRAFT_GRAPH_DRIVER_EDGES",
-                               raising=False)
-        else:
-            monkeypatch.setenv("SPARK_GRAFT_GRAPH_DRIVER_EDGES", env)
+    def run(cells):
+        monkeypatch.setattr(smallio, "DRIVER_CELLS", cells)
         st = label_propagation(edges, "label", "doc_id", iters=4)
         return sorted(((r.doc_id, r.label, r.label_prop)
                        for r in st(nodes).collect()),
                       key=lambda t: (t[0] is None, t[0]))
 
     try:
-        assert run("0") == run(None) and run(None)
+        assert run(0) == run(DEFAULT_CELLS) and run(DEFAULT_CELLS)
     finally:
         edges.unpersist()
 
@@ -259,15 +258,15 @@ def test_lp_driver_path_equals_distributed(spark, sf_dir, monkeypatch):
          (7, None), (None, "q"), (9, None)],
         "doc_id long, label string")
 
-    def run2(env):
-        monkeypatch.setenv("SPARK_GRAFT_GRAPH_DRIVER_EDGES", env)
+    def run2(cells):
+        monkeypatch.setattr(smallio, "DRIVER_CELLS", cells)
         st = label_propagation(e2, "label", "doc_id", iters=3,
                                weight_col="w")
         return sorted(((r.doc_id, r.label_prop)
                        for r in st(n2).collect()),
                       key=lambda t: (t[0] is None, t[0]))
 
-    assert run2("0") == run2("2000000")
+    assert run2(0) == run2(DEFAULT_CELLS)
 
 
 def test_logreg_driver_path_equals_distributed(spark, sf_dir, monkeypatch):
@@ -286,10 +285,10 @@ def test_logreg_driver_path_equals_distributed(spark, sf_dir, monkeypatch):
                         + fx["stop_sig"] + fx["punct_ok"])
          >= entry.LOGREG_THRESH).cast("int").alias("label")).cache()
     try:
-        monkeypatch.setenv("SPARK_GRAFT_LOGREG_DRIVER_CELLS", "0")
+        monkeypatch.setattr(smallio, "DRIVER_CELLS", 0)
         dist = logreg_train(feats, list(QUALITY_FEATURES), "label",
                             iters=6, lr=entry.LOGREG_LR)
-        monkeypatch.delenv("SPARK_GRAFT_LOGREG_DRIVER_CELLS")
+        monkeypatch.setattr(smallio, "DRIVER_CELLS", DEFAULT_CELLS)
         drv = logreg_train(feats, list(QUALITY_FEATURES), "label",
                            iters=6, lr=entry.LOGREG_LR)
         assert drv.weights == dist.weights
