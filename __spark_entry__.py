@@ -874,8 +874,6 @@ def q_knn_lsh_probe(spark, sf, qv=None):
     partitionBy(bucket); the probe reads only the query's bucket +
     Hamming-1 neighbors via partition pruning (plan test:
     tests/test_round4.py::test_knn_lsh_probe_partition_pruning)."""
-    import os
-    import tempfile
     from conduino_spark import knn_lsh, lsh_index_write
     emb = _src(sf, "embeddings").df(spark)
     if qv is None:
@@ -883,7 +881,7 @@ def q_knn_lsh_probe(spark, sf, qv=None):
     # build-once/probe-many is the index's whole point: memoize the
     # written index per (sf_dir, file mtime) so repeated calls (bench
     # passes) probe without re-materializing
-    d = _index_memo_dir(sf, "embeddings", "lsh_idx", "v1", "_SUCCESS",
+    d = _index_memo_dir(sf, "embeddings", "lsh_idx", "v2",
                         lambda d_: lsh_index_write(emb, d_, dim=len(qv)))
     idx = spark.read.parquet(d)
     p = from_dataframe(idx) | knn_lsh(qv, k=10, bucket_col="bucket") | sink_df()
@@ -916,8 +914,7 @@ def q_knn_lsh_probe_merged(spark, sf, qv=None):
     written cold, odd ids folded in by lsh_index_merge under the
     stored in-band (dim, planes) — probes are bit-equal to the
     full-corpus index (merge == rebuild law).  Memoized per (sf,
-    mtime); '_MERGED_OK' touched only after the merge half."""
-    import os
+    mtime)."""
     from conduino_spark import knn_lsh, lsh_index_merge, lsh_index_write
     emb = _src(sf, "embeddings").df(spark)
     if qv is None:
@@ -928,10 +925,8 @@ def q_knn_lsh_probe_merged(spark, sf, qv=None):
         odd = emb.where(F.col("vec_id") % 2 == 1)
         lsh_index_write(even, d_, dim=len(qv))
         lsh_index_merge(odd, d_)
-        _touch(os.path.join(d_, "_MERGED_OK"))
 
-    d = _index_memo_dir(sf, "embeddings", "lsh_merged_idx", "v1",
-                        "_MERGED_OK", build)
+    d = _index_memo_dir(sf, "embeddings", "lsh_merged_idx", "v2", build)
     idx = spark.read.parquet(d)
     p = (from_dataframe(idx) | knn_lsh(qv, k=10, bucket_col="bucket")
          | sink_df())
@@ -1046,19 +1041,15 @@ def q_dedup_against(spark, sf):
     # half the corpus + minhash_index_merge of the other half) — the
     # fifth member of the index family rides the gate like its
     # siblings ('mhit'/'lshm'/'ivfpqm'); survivors must hash-match the
-    # in-memory 'against' arm.  Memoized per (sf, mtime); _MERGED_OK
-    # touched only after the merge half.
-    import os as _os
+    # in-memory 'against' arm.  Memoized per (sf, mtime).
     from conduino_spark import minhash_index_dedup, minhash_index_merge, \
         minhash_index_write
 
     def _build(d_):
         minhash_index_write(corpus.where(F.col("doc_id") % 4 == 0), d_)
         minhash_index_merge(corpus.where(F.col("doc_id") % 4 == 2), d_)
-        _touch(_os.path.join(d_, "_MERGED_OK"))
 
-    d = _index_memo_dir(sf, "documents", "mh_merged_idx", "v1",
-                        "_MERGED_OK", _build)
+    d = _index_memo_dir(sf, "documents", "mh_merged_idx", "v2", _build)
     idx = (minhash_index_dedup(d, new_sigs=bsigs)(batch)
            .select("doc_id", F.lit("idx").alias("policy")))
     # r12 fourth+fifth arms: the SEVENTH index family (SimHash
@@ -1082,10 +1073,8 @@ def q_dedup_against(spark, sf):
     def _build_sh(d_):
         simhash_index_write(corpus.where(F.col("doc_id") % 4 == 0), d_)
         simhash_index_merge(corpus.where(F.col("doc_id") % 4 == 2), d_)
-        _touch(_os.path.join(d_, "_MERGED_OK"))
 
-    dsh = _index_memo_dir(sf, "documents", "sh_merged_idx", "v1",
-                          "_MERGED_OK", _build_sh)
+    dsh = _index_memo_dir(sf, "documents", "sh_merged_idx", "v2", _build_sh)
     shidx = (simhash_index_dedup(dsh, new_sigs=shsigs)(batch)
              .select("doc_id", F.lit("shidx").alias("policy")))
     # r12b sixth arm: the EIGHTH index family (exact content-hash
@@ -1099,10 +1088,8 @@ def q_dedup_against(spark, sf):
     def _build_x(d_):
         exact_index_write(corpus.where(F.col("doc_id") % 4 == 0), d_)
         exact_index_merge(corpus.where(F.col("doc_id") % 4 == 2), d_)
-        _touch(_os.path.join(d_, "_MERGED_OK"))
 
-    dx = _index_memo_dir(sf, "documents", "x_merged_idx", "v1",
-                         "_MERGED_OK", _build_x)
+    dx = _index_memo_dir(sf, "documents", "x_merged_idx", "v2", _build_x)
     xidx = (dedup_exact_against(dx)(batch)
             .select("doc_id", F.lit("xidx").alias("policy")))
     return (against.unionByName(exact).unionByName(idx)
@@ -1313,7 +1300,6 @@ def q_pq_adc_search(spark, sf):
         # the same frozen book + label-mean centroids) — identical
         # rows to 'ivfpq' under its own tag, so the compressed-index
         # ingestion path is driver-hash-gated.
-        import os as _os
         from conduino_spark import (KMeansModel, ivfpq_index_merge,
                                     ivfpq_index_read, ivfpq_index_write)
 
@@ -1323,10 +1309,9 @@ def q_pq_adc_search(spark, sf):
             ivfpq_index_write(even, d_, KMeansModel(cents), book,
                               cell_col="label")
             ivfpq_index_merge(odd, d_, cell_col="label")
-            _touch(_os.path.join(d_, "_MERGED_OK"))
 
         dm = _index_memo_dir(sf, "embeddings", "ivfpq_merged_idx", "v1",
-                             "_MERGED_OK", _build_merged)
+                             _build_merged)
         codes_m, book_m, cents_m = ivfpq_index_read(spark, dm)
         ivfpqm = (ivfpq_search(book_m, cents_m, qv, kk=10,
                                nprobe=2)(codes_m)
@@ -1479,7 +1464,6 @@ def q_line_dedup_docs(spark, sf):
     # batch hash-matches dup_span_trim_against_sql's direct replay
     # (membership ∪ batch-internal rule — ids interleave here, so the
     # union-trim law can't substitute).
-    import os as _os
     from conduino_spark import (dup_span_trim_against,
                                 dupspan_index_merge, dupspan_index_write)
 
@@ -1487,10 +1471,8 @@ def q_line_dedup_docs(spark, sf):
         dupspan_index_write(docs.where(F.col("doc_id") % 4 == 0), d_,
                             window_tokens=16)
         dupspan_index_merge(docs.where(F.col("doc_id") % 4 == 2), d_)
-        _touch(_os.path.join(d_, "_MERGED_OK"))
 
-    d = _index_memo_dir(sf, "documents", "ds_merged_idx", "v1",
-                        "_MERGED_OK", _build)
+    d = _index_memo_dir(sf, "documents", "ds_merged_idx", "v2", _build)
     # the hook table must cover EXACTLY the stage input's rows — the
     # odd half here (same L=16 as the index _meta)
     ti = (dup_span_trim_against(
@@ -1544,7 +1526,6 @@ def q_semantic_dedup(spark, sf):
     # nprobe = n_cells, so the probe is exhaustive and the oracle is
     # the brute NOT-EXISTS cosine rule (exact law in test_round12) —
     # the fourth modality's dedup-against joins the gate.
-    import os as _os
     from conduino_spark import (ivf_index_merge, ivf_index_write,
                                 kmeans_fit, semantic_dedup,
                                 semantic_dedup_against)
@@ -1560,10 +1541,8 @@ def q_semantic_dedup(spark, sf):
         ivf_index_write(ref.where(F.col("vec_id") % 4 == 0), d_,
                         kmeans_fit(ref, k=4, iters=1))
         ivf_index_merge(ref.where(F.col("vec_id") % 4 == 2), d_)
-        _touch(_os.path.join(d_, "_MERGED_OK"))
 
-    d = _index_memo_dir(sf, "embeddings", "sda_idx", "v1",
-                        "_MERGED_OK", _build)
+    d = _index_memo_dir(sf, "embeddings", "sda_idx", "v1", _build)
     against = (semantic_dedup_against(d, threshold=0.35,
                                       nprobe=4)(batch)
                .select("vec_id", F.lit("against").alias("part")))
@@ -2137,16 +2116,13 @@ def q_exact_against_docs(spark, sf):
     # r12b: exact md5 dedup of the odd-doc batch against the
     # PERSISTED reference index (build-once memoized over even ids,
     # broadcast probe + DPP) — the dedup_against 'xidx' arm standalone
-    import os as _os
     from conduino_spark import dedup_exact_against, exact_index_write
     docs = _src(sf, "documents", min_partitions="auto").df(spark)
 
     def _build(d_):
         exact_index_write(docs.where(F.col("doc_id") % 2 == 0), d_)
-        _touch(_os.path.join(d_, "_BUILT_OK"))
 
-    d = _index_memo_dir(sf, "documents", "exact_idx", "v1",
-                        "_BUILT_OK", _build)
+    d = _index_memo_dir(sf, "documents", "exact_idx", "v2", _build)
     return dedup_exact_against(d)(
         docs.where(F.col("doc_id") % 2 == 1)).select("doc_id")
 
@@ -2162,8 +2138,7 @@ def q_dupspan_trim_against_docs(spark, sf):
         dupspan_index_write(docs.where(F.col("doc_id") % 2 == 0), d_,
                             window_tokens=16)
 
-    d = _index_memo_dir(sf, "documents", "ds_idx", "v1",
-                        "_meta/part-00000.parquet", _build)
+    d = _index_memo_dir(sf, "documents", "ds_idx", "v2", _build)
     return dup_span_trim_against(d)(docs.where(F.col("doc_id") % 2 == 1))
 
 
@@ -2198,7 +2173,7 @@ def q_ivf_index_emb(spark, sf):
                                 ivf_index_write, kmeans_fit)
     emb = _src(sf, "embeddings").df(spark)
     d = _index_memo_dir(
-        sf, "embeddings", "ivf_idx", "v2", "centroids/part-00000.parquet",
+        sf, "embeddings", "ivf_idx", "v2",
         lambda d_: ivf_index_write(emb, d_, kmeans_fit(emb, k=8,
                                                        iters=2)))
     batch = hash_sample("vec_id", 0.1, salt="annq")(emb)
@@ -2216,7 +2191,7 @@ def q_ivfpq_index_emb(spark, sf):
     row = emb.where(F.col("vec_id") == QUERY_KNN_ID).first()
     qv = [float(x) for x in row["embedding"]]
     d = _index_memo_dir(
-        sf, "embeddings", "ivfpq_idx", "v2", "codebook/part-00000.parquet",
+        sf, "embeddings", "ivfpq_idx", "v2",
         lambda d_: ivfpq_index_write(
             emb, d_, kmeans_fit(emb, k=8, iters=2),
             pq_train(emb, m=8, k=16, iters=1)))
@@ -2247,7 +2222,7 @@ def q_ivf_merge_emb(spark, sf):
         ivf_index_write(even, d_, kmeans_fit(even, k=8, iters=1))
 
     base = _index_memo_dir(sf, "embeddings", "ivf_merge_base", "v1",
-                           "centroids/part-00000.parquet", _build)
+                           _build)
     d = os.path.join(tempfile.gettempdir(),
                      f"ivf_idx_merge_{os.getpid()}")
     shutil.rmtree(d, ignore_errors=True)  # append-mode index: reset
@@ -2355,24 +2330,28 @@ def _bm25_index_dir(spark, sf):
         bm25_index_write(docs, d, n_shards=64)
 
     # v2: additive stats format
-    return _index_memo_dir(sf, "documents", "bm25_idx", "v3",
-                           "stats/part-00000.parquet", build)
+    return _index_memo_dir(sf, "documents", "bm25_idx", "v3", build)
 
 
-def _index_memo_dir(sf, src_table, prefix, version, marker, build):
+def _index_memo_dir(sf, src_table, prefix, version, build):
     """ONE copy of the (sf_dir, file mtime, format version) index-memo
     idiom the LSH / BM25 / IVF bench paths share: derive the tempdir
-    tag, build on marker miss, return the dir.  abs(hash(...)) is
-    PYTHONHASHSEED-dependent — the memo is per-process (fine for bench
-    passes, never correctness-bearing)."""
+    tag, build on a miss, return the dir.  The ``_MEMO_OK`` marker is
+    written only after ``build(d)`` returns, so an interrupted build
+    (e.g. a write done but its merge not) is a miss, never a hit; the
+    ``_`` prefix keeps it out of Spark and pyarrow reads of ``d``.
+    abs(hash(...)) is PYTHONHASHSEED-dependent — the memo is
+    per-process (fine for bench passes, never correctness-bearing)."""
     import os
     import tempfile
     src_file = os.path.join(sf, f"{src_table}.parquet")
     tag = (f"{abs(hash(os.path.abspath(sf)))}_"
            f"{int(os.path.getmtime(src_file))}_{version}")
     d = os.path.join(tempfile.gettempdir(), f"{prefix}_{tag}")
-    if not os.path.exists(os.path.join(d, marker)):
+    marker = os.path.join(d, "_MEMO_OK")
+    if not os.path.exists(marker):
         build(d)
+        open(marker, "w").close()
     return d
 
 
@@ -2424,8 +2403,7 @@ def _cosine_w6_dir(spark, sf, even_half):
          .parquet(os.path.join(d, "w6.parquet")))
 
     name = "cosw6_half" if even_half else "cosw6_full"
-    return _index_memo_dir(sf, "documents", name, "v1",
-                           "w6.parquet/_SUCCESS", build)
+    return _index_memo_dir(sf, "documents", name, "v1", build)
 
 
 def q_cosine_prefix_docs(spark, sf):
@@ -2774,24 +2752,17 @@ def q_ann_join_emb(spark, sf):
     # proves equal to the in-memory path) — so the driver hash now
     # covers the merged-index layout + DPP probe end-to-end: any drift
     # between a merged index and the in-memory join breaks the gate.
-    # Build once per (sf, mtime); '_MERGED_OK' is touched only AFTER
-    # the merge so a half-built memo never passes.
+    # Built once per (sf, mtime).
     mhit = (_merged_ivf_join(spark, sf, emb)(batch)
             .select(F.lit("mhit").alias("arm"), "vec_id", "neighbor_id",
                     F.col("cosine").alias("score"), "rank"))
     return hits.unionByName(recall).unionByName(mhit)
 
 
-def _touch(path):
-    with open(path, "w"):
-        pass
-
-
 def _merged_ivf_join(spark, sf, emb):
     """The merged-index probe stage for the ann_join_emb 'mhit' arm:
     write even ids, merge odd ids (both under the corpus 'label'
     cells), return ivf_index_join over the merged directory."""
-    import os
     from conduino_spark import (KMeansModel, cell_centroids,
                                 ivf_index_join, ivf_index_merge,
                                 ivf_index_write)
@@ -2802,10 +2773,8 @@ def _merged_ivf_join(spark, sf, emb):
         odd = emb.where(F.col("vec_id") % 2 == 1)
         ivf_index_write(even, d_, model, cell_col="label")
         ivf_index_merge(odd, d_, cell_col="label")
-        _touch(os.path.join(d_, "_MERGED_OK"))
 
-    d = _index_memo_dir(sf, "embeddings", "ivf_merged_idx", "v1",
-                        "_MERGED_OK", build)
+    d = _index_memo_dir(sf, "embeddings", "ivf_merged_idx", "v1", build)
     return ivf_index_join(d, k=5, nprobe=2, exclude_self=True)
 
 

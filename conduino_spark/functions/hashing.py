@@ -41,6 +41,13 @@ def h32(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
+def h32_shard(col: Column, n_shards: int) -> Column:
+    """``pt = h32(col) mod n_shards`` — the shard key the persisted
+    exact, simhash, dupspan and bm25 indexes write, merge and probe
+    with (one expression, so the three can never disagree)."""
+    return F.pmod(h32(col), F.lit(n_shards))
+
+
 def h32_sql(expr: str) -> str:
     """DuckDB rendering of :func:`h32` — bit-identical."""
     return f"(('0x' || substr(md5({expr}), 1, 8))::BIGINT)"

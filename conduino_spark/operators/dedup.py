@@ -27,8 +27,10 @@ from pyspark.sql import functions as F
 
 from conduino_spark.plans.cachereg import track
 from conduino_spark.plans.core import Stage
-from conduino_spark.functions.hashing import MERSENNE31, h32, lcg_params
-from conduino_spark.operators.smallio import driver_collect
+from conduino_spark.functions.hashing import (MERSENNE31, h32, h32_shard,
+                                              lcg_params)
+from conduino_spark.operators.smallio import (driver_collect, read_meta,
+                                              write_meta)
 from conduino_spark.operators.text import tokens_col
 
 # default MinHash configuration, shared with the oracle SQL.  The
@@ -202,9 +204,10 @@ def _band_explode(sigs: DataFrame, id_col: str, alias: str, *,
     (``hi·2^31 + lo`` < 2^62 — no overflow, injective), giving
     byte-identical collision sets with ⌈rows/2⌉ fixed-width longs
     (16 bytes at the default 16/4 config) instead of the string.
-    Persisted-index note: the band files store these packed longs;
-    the index is versioned by its writer and rebuilt per process (the
-    bench memo), never probed across formats."""
+    Persisted-index note: the band files store these packed longs,
+    and the index ``_meta`` carries the layout's ``format``
+    (smallio.META_FORMAT), so a merge or probe of an index written in
+    another layout raises instead of mixing the two."""
     rows = _banding_rows(n_perm, bands)
 
     def pack(b: int, j: int) -> Column:
@@ -288,31 +291,19 @@ def exact_index_write(corpus: DataFrame, path: str, *,
     DRIVER-side (operators/smallio)."""
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    keys = (corpus.select(F.md5(F.col(text_col)).alias("digest"))
-                  .distinct()
-                  .withColumn("pt", F.pmod(h32(F.col("digest")),
-                                           F.lit(n_shards))))
+    _exact_put(corpus, path, mode, text_col, n_shards=n_shards)
+
+
+def _exact_put(docs: DataFrame, path: str, mode: str, text_col: str, *,
+               n_shards: int) -> None:
+    """The exact index's one writer (write and merge): ``docs``'
+    distinct digests into ``keys/``, then ``_meta``."""
+    keys = (docs.select(F.md5(F.col(text_col)).alias("digest"))
+                .distinct()
+                .withColumn("pt", h32_shard(F.col("digest"), n_shards)))
     (keys.repartition(min(n_shards, 32), "pt")
          .write.partitionBy("pt").mode(mode).parquet(f"{path}/keys"))
-    import pyarrow as pa
-    from conduino_spark.operators.smallio import driver_parquet_write
-    driver_parquet_write(
-        f"{path}/_meta",
-        pa.table({"n_shards": pa.array([int(n_shards)], pa.int32())}),
-        mode=mode)
-
-
-def _exact_index_meta(path: str) -> int:
-    from conduino_spark.operators.smallio import driver_parquet_read
-    try:
-        meta = driver_parquet_read(f"{path}/_meta")
-    except Exception as e:
-        raise ValueError(
-            f"no exact-dedup index at {path} (missing _meta): build "
-            f"one with exact_index_write before merging/probing") from e
-    if len(meta) != 1:
-        raise ValueError(f"corrupt _meta at {path}: {len(meta)} rows")
-    return int(meta[0]["n_shards"])
+    write_meta(path, "exact", mode, n_shards=n_shards)
 
 
 def exact_index_merge(new_docs: DataFrame, path: str, *,
@@ -323,13 +314,8 @@ def exact_index_merge(new_docs: DataFrame, path: str, *,
     merged index equals one against a from-scratch rebuild over the
     union corpus (membership is append-idempotent; law-tested).  Cost
     scales with the new batch only."""
-    n_shards = _exact_index_meta(path)
-    keys = (new_docs.select(F.md5(F.col(text_col)).alias("digest"))
-                    .distinct()
-                    .withColumn("pt", F.pmod(h32(F.col("digest")),
-                                             F.lit(n_shards))))
-    (keys.repartition(min(n_shards, 32), "pt")
-         .write.partitionBy("pt").mode("append").parquet(f"{path}/keys"))
+    _exact_put(new_docs, path, "append", text_col,
+               **read_meta(path, "exact"))
 
 
 def dedup_exact_against(path: str, text_col: str = "text",
@@ -348,11 +334,10 @@ def dedup_exact_against(path: str, text_col: str = "text",
 
     def fn(df: DataFrame) -> DataFrame:
         spark = df.sparkSession
-        n_shards = _exact_index_meta(path)
+        n_shards = read_meta(path, "exact")["n_shards"]
         probe = (df.select(F.col(id_col),
                            F.md5(F.col(text_col)).alias("digest"))
-                   .withColumn("pt", F.pmod(h32(F.col("digest")),
-                                            F.lit(n_shards))))
+                   .withColumn("pt", h32_shard(F.col("digest"), n_shards)))
         if broadcast_batch:
             probe = F.broadcast(probe)
         ref = spark.read.parquet(f"{path}/keys")
@@ -490,36 +475,23 @@ def minhash_index_write(corpus: DataFrame, path: str, *,
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
     _banding_rows(n_perm, bands)  # validate eagerly
-    sigs = _minhash_sig_df(corpus, text_col, id_col, n_perm=n_perm)
+    _minhash_put(corpus, path, mode, text_col, id_col, n_perm=n_perm,
+                 bands=bands, n_shards=n_shards)
+
+
+def _minhash_put(docs: DataFrame, path: str, mode: str, text_col: str,
+                 id_col: str, *, n_perm: int, bands: int,
+                 n_shards: int) -> None:
+    """The MinHash index's one writer (write and merge): ``docs``'
+    banded signature rows into ``bands/``, then ``_meta``."""
+    sigs = _minhash_sig_df(docs, text_col, id_col, n_perm=n_perm)
     rows = (_band_explode(sigs, id_col, id_col, n_perm=n_perm,
                           bands=bands)
             .withColumn("pt", _band_shard(n_perm, bands, n_shards)))
     (rows.repartition(n_shards, "pt")
          .write.partitionBy("pt").mode(mode).parquet(f"{path}/bands"))
-    import pyarrow as pa
-    from conduino_spark.operators.smallio import driver_parquet_write
-    driver_parquet_write(
-        f"{path}/_meta",
-        pa.table({"n_perm": pa.array([int(n_perm)], pa.int32()),
-                  "bands": pa.array([int(bands)], pa.int32()),
-                  "n_shards": pa.array([int(n_shards)], pa.int32())}),
-        mode=mode)
-
-
-def _minhash_index_meta(path: str) -> "tuple[int, int, int]":
-    """(n_perm, bands, n_shards) from the in-band ``_meta`` table —
-    fail fast when the path holds no index."""
-    from conduino_spark.operators.smallio import driver_parquet_read
-    try:
-        meta = driver_parquet_read(f"{path}/_meta")
-    except Exception as e:
-        raise ValueError(
-            f"no MinHash index at {path} (missing _meta): build one "
-            f"with minhash_index_write before merging/probing") from e
-    if len(meta) != 1:
-        raise ValueError(f"corrupt _meta at {path}: {len(meta)} rows")
-    return (int(meta[0]["n_perm"]), int(meta[0]["bands"]),
-            int(meta[0]["n_shards"]))
+    write_meta(path, "minhash", mode, n_perm=n_perm, bands=bands,
+               n_shards=n_shards)
 
 
 def minhash_index_merge(new_docs: DataFrame, path: str, *,
@@ -534,13 +506,8 @@ def minhash_index_merge(new_docs: DataFrame, path: str, *,
     probe against the merged index is BIT-EQUAL to a from-scratch
     rebuild over the union corpus (law-tested).  Cost scales with the
     new batch only; append-only contract as for the sibling merges."""
-    n_perm, bands, n_shards = _minhash_index_meta(path)
-    sigs = _minhash_sig_df(new_docs, text_col, id_col, n_perm=n_perm)
-    rows = (_band_explode(sigs, id_col, id_col, n_perm=n_perm,
-                          bands=bands)
-            .withColumn("pt", _band_shard(n_perm, bands, n_shards)))
-    (rows.repartition(n_shards, "pt")
-         .write.partitionBy("pt").mode("append").parquet(f"{path}/bands"))
+    _minhash_put(new_docs, path, "append", text_col, id_col,
+                 **read_meta(path, "minhash"))
 
 
 def minhash_index_dedup(path: str, *, text_col: str = "text",
@@ -566,7 +533,8 @@ def minhash_index_dedup(path: str, *, text_col: str = "text",
 
     def fn(df: DataFrame) -> DataFrame:
         spark = df.sparkSession
-        n_perm, bands, n_shards = _minhash_index_meta(path)
+        m = read_meta(path, "minhash")
+        n_perm, bands, n_shards = m["n_perm"], m["bands"], m["n_shards"]
         ns = (new_sigs if new_sigs is not None
               else _minhash_sig_df(df, text_col, id_col, n_perm=n_perm))
         probe = (_band_explode(ns, id_col, "__new_id",
@@ -982,19 +950,21 @@ def simhash_dedup_against(reference: DataFrame,
     return Stage(fn, name="simhash_dedup_against", seq_preserving=False)
 
 
-def _simhash_index_rows(docs: DataFrame, text_col: str, id_col: str, *,
-                        bits: int, max_hamming: int,
-                        n_shards: int) -> DataFrame:
-    """(sh, band_id, band_val, pt) rows for the persisted SimHash
-    index — per-row functions of the config, so write and merge can
-    never disagree."""
+def _simhash_put(docs: DataFrame, path: str, mode: str, text_col: str,
+                 id_col: str, *, bits: int, max_hamming: int,
+                 n_shards: int) -> None:
+    """The SimHash index's one writer (write and merge): ``docs``'
+    (sh, band_id, band_val) rows into ``bands/``, then ``_meta``."""
     sigs = _simhash_df(docs, text_col, id_col, bits=bits, out="sh")
-    bands = _simhash_bands(sigs, id_col, bits=bits,
+    rows = (_simhash_bands(sigs, id_col, bits=bits,
                            max_hamming=max_hamming)
-    return (bands.select("sh", "band_id", "band_val")
-                 .withColumn("pt", F.pmod(
-                     h32(F.concat_ws(":", "band_id", "band_val")),
-                     F.lit(n_shards))))
+            .select("sh", "band_id", "band_val")
+            .withColumn("pt", h32_shard(
+                F.concat_ws(":", "band_id", "band_val"), n_shards)))
+    (rows.repartition(n_shards, "pt")
+         .write.partitionBy("pt").mode(mode).parquet(f"{path}/bands"))
+    write_meta(path, "simhash", mode, bits=bits, max_hamming=max_hamming,
+               n_shards=n_shards)
 
 
 def simhash_index_write(corpus: DataFrame, path: str, *,
@@ -1020,36 +990,8 @@ def simhash_index_write(corpus: DataFrame, path: str, *,
     if not 1 <= max_hamming < bits:
         raise ValueError(
             f"max_hamming must be in [1, bits), got {max_hamming}")
-    rows = _simhash_index_rows(corpus, text_col, id_col, bits=bits,
-                               max_hamming=max_hamming,
-                               n_shards=n_shards)
-    (rows.repartition(n_shards, "pt")
-         .write.partitionBy("pt").mode(mode).parquet(f"{path}/bands"))
-    import pyarrow as pa
-    from conduino_spark.operators.smallio import driver_parquet_write
-    driver_parquet_write(
-        f"{path}/_meta",
-        pa.table({"bits": pa.array([int(bits)], pa.int32()),
-                  "max_hamming": pa.array([int(max_hamming)],
-                                          pa.int32()),
-                  "n_shards": pa.array([int(n_shards)], pa.int32())}),
-        mode=mode)
-
-
-def _simhash_index_meta(path: str) -> "tuple[int, int, int]":
-    """(bits, max_hamming, n_shards) from the in-band ``_meta`` —
-    fail fast when the path holds no index."""
-    from conduino_spark.operators.smallio import driver_parquet_read
-    try:
-        meta = driver_parquet_read(f"{path}/_meta")
-    except Exception as e:
-        raise ValueError(
-            f"no SimHash index at {path} (missing _meta): build one "
-            f"with simhash_index_write before merging/probing") from e
-    if len(meta) != 1:
-        raise ValueError(f"corrupt _meta at {path}: {len(meta)} rows")
-    return (int(meta[0]["bits"]), int(meta[0]["max_hamming"]),
-            int(meta[0]["n_shards"]))
+    _simhash_put(corpus, path, mode, text_col, id_col, bits=bits,
+                 max_hamming=max_hamming, n_shards=n_shards)
 
 
 def simhash_index_merge(new_docs: DataFrame, path: str, *,
@@ -1061,12 +1003,8 @@ def simhash_index_merge(new_docs: DataFrame, path: str, *,
     the config, so a probe against the merged index equals one against
     a from-scratch rebuild over the union corpus (law-tested); cost
     scales with the new batch only."""
-    bits, max_hamming, n_shards = _simhash_index_meta(path)
-    rows = _simhash_index_rows(new_docs, text_col, id_col, bits=bits,
-                               max_hamming=max_hamming,
-                               n_shards=n_shards)
-    (rows.repartition(n_shards, "pt")
-         .write.partitionBy("pt").mode("append").parquet(f"{path}/bands"))
+    _simhash_put(new_docs, path, "append", text_col, id_col,
+                 **read_meta(path, "simhash"))
 
 
 def simhash_index_dedup(path: str, text_col: str = "text",
@@ -1089,14 +1027,15 @@ def simhash_index_dedup(path: str, text_col: str = "text",
 
     def fn(df: DataFrame) -> DataFrame:
         spark = df.sparkSession
-        bits, max_hamming, n_shards = _simhash_index_meta(path)
+        m = read_meta(path, "simhash")
+        bits, max_hamming = m["bits"], m["max_hamming"]
         ns = (new_sigs if new_sigs is not None
               else _simhash_df(df, text_col, id_col, bits=bits, out="sh"))
         probe = (_simhash_bands(ns, id_col, bits=bits,
                                 max_hamming=max_hamming)
-                 .withColumn("pt", F.pmod(
-                     h32(F.concat_ws(":", "band_id", "band_val")),
-                     F.lit(n_shards))))
+                 .withColumn("pt", h32_shard(
+                     F.concat_ws(":", "band_id", "band_val"),
+                     m["n_shards"])))
         if broadcast_batch:
             probe = F.broadcast(probe)
         ref = (spark.read.parquet(f"{path}/bands")
@@ -2105,35 +2044,22 @@ def dupspan_index_write(corpus: DataFrame, path: str, *,
     if window_tokens < 1:
         raise ValueError(
             f"window_tokens must be >= 1, got {window_tokens}")
-    _, _, wins = _dup_span_wins(corpus, text_col, id_col, window_tokens)
+    _dupspan_put(corpus, path, mode, text_col, id_col,
+                 window_tokens=window_tokens, n_shards=n_shards)
+
+
+def _dupspan_put(docs: DataFrame, path: str, mode: str, text_col: str,
+                 id_col: str, *, window_tokens: int,
+                 n_shards: int) -> None:
+    """The dup-span index's one writer (write and merge): ``docs``'
+    distinct window digests into ``keys/``, then ``_meta``."""
+    _, _, wins = _dup_span_wins(docs, text_col, id_col, window_tokens)
     keys = (wins.select(F.col("__h").alias("digest")).distinct()
-                .withColumn("pt", F.pmod(h32(F.col("digest")),
-                                         F.lit(n_shards))))
+                .withColumn("pt", h32_shard(F.col("digest"), n_shards)))
     (keys.repartition(n_shards, "pt")
          .write.partitionBy("pt").mode(mode).parquet(f"{path}/keys"))
-    import pyarrow as pa
-    from conduino_spark.operators.smallio import driver_parquet_write
-    driver_parquet_write(
-        f"{path}/_meta",
-        pa.table({"window_tokens": pa.array([int(window_tokens)],
-                                            pa.int32()),
-                  "n_shards": pa.array([int(n_shards)], pa.int32())}),
-        mode=mode)
-
-
-def _dupspan_index_meta(path: str) -> "tuple[int, int]":
-    """(window_tokens, n_shards) from the in-band ``_meta`` table —
-    fail fast when the path holds no index."""
-    from conduino_spark.operators.smallio import driver_parquet_read
-    try:
-        meta = driver_parquet_read(f"{path}/_meta")
-    except Exception as e:
-        raise ValueError(
-            f"no dup-span index at {path} (missing _meta): build one "
-            f"with dupspan_index_write before merging/probing") from e
-    if len(meta) != 1:
-        raise ValueError(f"corrupt _meta at {path}: {len(meta)} rows")
-    return int(meta[0]["window_tokens"]), int(meta[0]["n_shards"])
+    write_meta(path, "dupspan", mode, window_tokens=window_tokens,
+               n_shards=n_shards)
 
 
 def dupspan_index_merge(new_docs: DataFrame, path: str, *,
@@ -2148,14 +2074,8 @@ def dupspan_index_merge(new_docs: DataFrame, path: str, *,
     a from-scratch rebuild over the union corpus (membership is
     append-idempotent — duplicate digests across appends cannot change
     a semi-join; law-tested).  Cost scales with the new batch only."""
-    window_tokens, n_shards = _dupspan_index_meta(path)
-    _, _, wins = _dup_span_wins(new_docs, text_col, id_col,
-                                window_tokens)
-    keys = (wins.select(F.col("__h").alias("digest")).distinct()
-                .withColumn("pt", F.pmod(h32(F.col("digest")),
-                                         F.lit(n_shards))))
-    (keys.repartition(n_shards, "pt")
-         .write.partitionBy("pt").mode("append").parquet(f"{path}/keys"))
+    _dupspan_put(new_docs, path, "append", text_col, id_col,
+                 **read_meta(path, "dupspan"))
 
 
 def dup_span_trim_against(path: str, text_col: str = "text",
@@ -2180,11 +2100,12 @@ def dup_span_trim_against(path: str, text_col: str = "text",
 
     def fn(df: DataFrame) -> DataFrame:
         spark = df.sparkSession
-        L, n_shards = _dupspan_index_meta(path)
+        m = read_meta(path, "dupspan")
+        L = m["window_tokens"]
         d2, toks, wins = _dup_span_wins(df, text_col, id_col, L,
                                         windows=windows)
-        probe = wins.withColumn("pt", F.pmod(h32(F.col("__h")),
-                                             F.lit(n_shards)))
+        probe = wins.withColumn("pt", h32_shard(F.col("__h"),
+                                                m["n_shards"]))
         if broadcast_batch:
             probe = F.broadcast(probe)
         ref = (spark.read.parquet(f"{path}/keys")
@@ -2232,10 +2153,11 @@ def dup_span_flag_against(path: str, text_col: str = "text",
 
     def fn(df: DataFrame) -> DataFrame:
         spark = df.sparkSession
-        L, n_shards = _dupspan_index_meta(path)
+        m = read_meta(path, "dupspan")
+        L = m["window_tokens"]
         d2, _toks, wins = _dup_span_wins(df, text_col, id_col, L)
-        probe = wins.withColumn("pt", F.pmod(h32(F.col("__h")),
-                                             F.lit(n_shards)))
+        probe = wins.withColumn("pt", h32_shard(F.col("__h"),
+                                                m["n_shards"]))
         if broadcast_batch:
             probe = F.broadcast(probe)
         ref = (spark.read.parquet(f"{path}/keys")

@@ -28,9 +28,10 @@ from __future__ import annotations
 import re
 from typing import Sequence, Union
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from conduino_spark.functions.hashing import h32_shard
 from conduino_spark.plans.core import Stage
 from conduino_spark.operators.smallio import (driver_parquet_read,
                                               driver_parquet_write)
@@ -68,6 +69,43 @@ def build_postings(text_col: str = "text", id_col: str = "doc_id") -> Stage:
     return Stage(fn, name="build_postings", seq_preserving=False)
 
 
+def _bm25_score(n: Column, avgdl: Column, k1: float, b: float,
+                term_round: "int | None" = None) -> Column:
+    """The one BM25 aggregate: Σ idf·tf_norm over a group's (tf, dl,
+    df_t) rows, rounded to 6dp.  With ``term_round`` each term is
+    first rounded to a scaled long, so the sum is order-free exact."""
+    idf = F.ln(1.0 + (n - F.col("df_t") + 0.5)
+               / (F.col("df_t") + 0.5))
+    tf_norm = (F.col("tf") * (k1 + 1.0)
+               / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl")
+                                      / avgdl)))
+    term = idf * tf_norm
+    if term_round is None:
+        return F.round(F.sum(term), 6)
+    scale = 10 ** term_round
+    return F.round(
+        F.sum(F.round(term * F.lit(scale)).cast("long"))
+        .cast("double") / F.lit(float(scale)), 6)
+
+
+def _check_top_k(k: int, term_round: "int | None") -> None:
+    if k < 1:
+        raise ValueError(f"need k >= 1, got k={k}")
+    if term_round is not None and not 1 <= term_round <= 9:
+        raise ValueError(f"term_round must be in [1, 9], got {term_round}")
+
+
+def _bm25_top_k(cand: DataFrame, score: Column, k: int, id_col: str,
+                query_id_col: str, out: str) -> DataFrame:
+    """Per-query top-``k`` of the (query, doc) scores over candidate
+    postings rows: rank 1..k by (score desc, doc id)."""
+    scored = cand.groupBy(query_id_col, id_col).agg(score.alias(out))
+    w = Window.partitionBy(query_id_col).orderBy(F.desc(out),
+                                                 F.col(id_col))
+    return (scored.withColumn("rank", F.row_number().over(w))
+                  .where(F.col("rank") <= k))
+
+
 def bm25_search(query: Union[str, Sequence[str]], k: int = 10, *,
                 k1: float = 1.2, b: float = 0.75,
                 text_col: str = "text", id_col: str = "doc_id",
@@ -100,14 +138,10 @@ def bm25_search(query: Union[str, Sequence[str]], k: int = 10, *,
         scored = (hits
                   .join(F.broadcast(dfreq), "token")
                   .crossJoin(F.broadcast(stats)))
-        idf = F.ln(1.0 + (F.col("__n") - F.col("df_t") + 0.5)
-                   / (F.col("df_t") + 0.5))
-        tf_norm = (F.col("tf") * (k1 + 1.0)
-                   / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl")
-                                          / F.col("__avgdl"))))
         return (scored
                 .groupBy(id_col)
-                .agg(F.round(F.sum(idf * tf_norm), 6).alias(out))
+                .agg(_bm25_score(F.col("__n"), F.col("__avgdl"),
+                                 k1, b).alias(out))
                 .orderBy(F.desc(out), F.col(id_col))
                 .limit(k))
 
@@ -175,12 +209,8 @@ def bm25_join(corpus: DataFrame, k: int = 10, *,
     None keeps full-precision doubles under the module's tolerance
     contract (libm ``ln``).  Queries with no terms, or no term hits,
     yield no rows."""
-    if k < 1:
-        raise ValueError(f"need k >= 1, got k={k}")
-    if term_round is not None and not 1 <= term_round <= 9:
-        raise ValueError(f"term_round must be in [1, 9], got {term_round}")
+    _check_top_k(k, term_round)
     from conduino_spark.plans.cachereg import track
-    from pyspark.sql import Window
 
     def fn(queries: DataFrame) -> DataFrame:
         post = track(build_postings(text_col, id_col)(corpus))
@@ -204,25 +234,9 @@ def bm25_join(corpus: DataFrame, k: int = 10, *,
         cand = (qt.join(post, "token")
                   .join(dfreq, "token")
                   .crossJoin(F.broadcast(stats)))
-        idf = F.ln(1.0 + (F.col("__n") - F.col("df_t") + 0.5)
-                   / (F.col("df_t") + 0.5))
-        tf_norm = (F.col("tf") * (k1 + 1.0)
-                   / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl")
-                                          / F.col("__avgdl"))))
-        term = idf * tf_norm
-        if term_round is None:
-            agg = F.round(F.sum(term), 6)
-        else:
-            scale = 10 ** term_round
-            agg = F.round(
-                F.sum(F.round(term * F.lit(scale)).cast("long"))
-                .cast("double") / F.lit(float(scale)), 6)
-        scored = (cand.groupBy(query_id_col, id_col)
-                      .agg(agg.alias(out)))
-        w = Window.partitionBy(query_id_col).orderBy(F.desc(out),
-                                                     F.col(id_col))
-        return (scored.withColumn("rank", F.row_number().over(w))
-                      .where(F.col("rank") <= k))
+        score = _bm25_score(F.col("__n"), F.col("__avgdl"), k1, b,
+                            term_round)
+        return _bm25_top_k(cand, score, k, id_col, query_id_col, out)
 
     return Stage(fn, name=f"bm25_join({k})", seq_preserving=False)
 
@@ -391,13 +405,20 @@ def bm25_index_write(corpus: DataFrame, path: str, *,
 
     The postings write repartitions BY shard first — without it every
     input task writes a file into every shard directory."""
-    from conduino_spark.functions.hashing import h32
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    post = (build_postings(text_col, id_col)(corpus)
-            .withColumn("pt", F.pmod(h32(F.col("token")),
-                                     F.lit(n_shards))))
-    (post.repartition(n_shards, "pt")
+    _bm25_put(corpus, path, mode, n_shards, n_shards, text_col, id_col)
+
+
+def _bm25_put(docs: DataFrame, path: str, mode: str, n_shards: int,
+              n_parts: int, text_col: str, id_col: str) -> None:
+    """The BM25 index's one writer (write and merge): ``docs``'
+    postings into ``n_parts`` shard-keyed tasks, their per-token df
+    delta, and one (count, token-sum) stats partial row."""
+    import pyarrow as pa
+    post = (build_postings(text_col, id_col)(docs)
+            .withColumn("pt", h32_shard(F.col("token"), n_shards)))
+    (post.repartition(n_parts, "pt")
          .write.partitionBy("pt").mode(mode).parquet(f"{path}/postings"))
     (post.groupBy("token").agg(F.count(F.lit(1)).alias("df_t"))
          .write.mode(mode).parquet(f"{path}/dfreq"))
@@ -405,34 +426,35 @@ def bm25_index_write(corpus: DataFrame, path: str, *,
     # the stats partial is ONE row: compute it with the agg job, then
     # write it driver-side (r11 — a Spark write of a 1-row table paid
     # the ~4.3 s job-commit floor on every cold build)
-    st = corpus.agg(F.count(F.lit(1)).alias("__n"),
-                    F.coalesce(F.sum(F.size(ctoks)), F.lit(0))
-                     .cast("long").alias("__sum_dl")).first()
-    driver_parquet_write(f"{path}/stats",
-                         _stats_arrow(st["__n"], st["__sum_dl"],
-                                      n_shards), mode=mode)
+    st = docs.agg(F.count(F.lit(1)).alias("__n"),
+                  F.coalesce(F.sum(F.size(ctoks)), F.lit(0))
+                   .cast("long").alias("__sum_dl")).first()
+    driver_parquet_write(
+        f"{path}/stats",
+        pa.table({"__n": pa.array([int(st["__n"])], pa.int64()),
+                  "__sum_dl": pa.array([int(st["__sum_dl"])], pa.int64()),
+                  "__n_shards": pa.array([int(n_shards)], pa.int32())}),
+        mode=mode)
 
 
-def _stats_arrow(n: int, sum_dl: int, n_shards: int):
-    """(__n long, __sum_dl long, __n_shards int) — the additive v2
-    stats schema, as a 1-row Arrow table (driver-side write path)."""
-    import pyarrow as pa
-    return pa.table({"__n": pa.array([int(n)], pa.int64()),
-                     "__sum_dl": pa.array([int(sum_dl)], pa.int64()),
-                     "__n_shards": pa.array([int(n_shards)], pa.int32())})
-
-
-def _require_v2_stats(stats_rows, path: str) -> None:
-    """Fail fast on a pre-additive (v1, ``__avgdl``) index instead of
-    crashing on a missing field or silently mixing schemas."""
-    if stats_rows and "__sum_dl" not in (
-            stats_rows[0].asDict() if hasattr(stats_rows[0], "asDict")
-            else stats_rows[0]):
+def _bm25_stats(path: str) -> "tuple[int, int, int]":
+    """(n_shards, N, token sum) from the index's additive stats rows
+    (one per write/merge batch — bounded, read driver-side).  Fails
+    fast on a pre-additive (v1, ``__avgdl``) index instead of crashing
+    on a missing field or mixing schemas, and on shard-modulus drift."""
+    st = driver_parquet_read(f"{path}/stats")
+    if st and "__sum_dl" not in st[0]:
         raise ValueError(
             f"BM25 index at {path} uses the old v1 stats format "
             f"(__avgdl); rebuild it with bm25_index_write — the "
             f"additive v2 format (__sum_dl) is what makes merges "
             f"exact")
+    shards = {r["__n_shards"] for r in st}
+    if len(shards) != 1:
+        raise ValueError(f"inconsistent n_shards in index at {path}: "
+                         f"{sorted(shards)}")
+    return (shards.pop(), sum(r["__n"] for r in st),
+            sum(r["__sum_dl"] for r in st))
 
 
 def bm25_index_merge(new_docs: DataFrame, path: str, *,
@@ -457,31 +479,9 @@ def bm25_index_merge(new_docs: DataFrame, path: str, *,
     indexed (run :func:`~conduino_spark.operators.dedup.dedup_exact`
     or an anti-join upstream; checking here would force a full
     postings scan, defeating the point)."""
-    from conduino_spark.functions.hashing import h32
-    spark = new_docs.sparkSession
-    st = driver_parquet_read(f"{path}/stats")  # bounded: 1 row/batch
-    _require_v2_stats(st, path)  # appending v2 rows into a v1 index
-    # would leave mixed-schema stats files — fail fast instead
-    shards = {r["__n_shards"] for r in st}
-    if len(shards) != 1:
-        raise ValueError(f"inconsistent n_shards in index at {path}: "
-                         f"{sorted(shards)}")
-    n_shards = shards.pop()
-    post = (build_postings(text_col, id_col)(new_docs)
-            .withColumn("pt", F.pmod(h32(F.col("token")),
-                                     F.lit(n_shards))))
-    (post.repartition(min(n_shards, 8), "pt")
-         .write.partitionBy("pt").mode("append")
-         .parquet(f"{path}/postings"))
-    (post.groupBy("token").agg(F.count(F.lit(1)).alias("df_t"))
-         .write.mode("append").parquet(f"{path}/dfreq"))
-    ctoks = tokens_col(F.coalesce(F.col(text_col), F.lit("")))
-    stp = new_docs.agg(F.count(F.lit(1)).alias("__n"),
-                       F.coalesce(F.sum(F.size(ctoks)), F.lit(0))
-                        .cast("long").alias("__sum_dl")).first()
-    driver_parquet_write(f"{path}/stats",
-                         _stats_arrow(stp["__n"], stp["__sum_dl"],
-                                      n_shards), mode="append")
+    n_shards = _bm25_stats(path)[0]
+    _bm25_put(new_docs, path, "append", n_shards, min(n_shards, 8),
+              text_col, id_col)
 
 
 def bm25_index_join(index_path: str, k: int = 10, *,
@@ -503,27 +503,11 @@ def bm25_index_join(index_path: str, k: int = 10, *,
     query-side shard key so the postings join carries the partition
     column, which is what lets dynamic partition pruning skip whole
     shard directories when the query side broadcasts."""
-    if k < 1:
-        raise ValueError(f"need k >= 1, got k={k}")
-    if term_round is not None and not 1 <= term_round <= 9:
-        raise ValueError(f"term_round must be in [1, 9], got {term_round}")
-    from pyspark.sql import Window
-    from conduino_spark.functions.hashing import h32
+    _check_top_k(k, term_round)
 
     def fn(queries: DataFrame) -> DataFrame:
         spark = queries.sparkSession
-        # one stats row per write/merge batch — additive partials
-        # (bounded: rows = batches, the 1-row-model-fetch convention);
-        # driver-side read (r11 — no Spark read job per plan build)
-        st = driver_parquet_read(f"{index_path}/stats")
-        _require_v2_stats(st, index_path)
-        shards = {r["__n_shards"] for r in st}
-        if len(shards) != 1:
-            raise ValueError(f"inconsistent n_shards in index at "
-                             f"{index_path}: {sorted(shards)}")
-        n_shards = shards.pop()
-        n = sum(r["__n"] for r in st)
-        sum_dl = sum(r["__sum_dl"] for r in st)
+        n_shards, n, sum_dl = _bm25_stats(index_path)
         if not (0 <= sum_dl < 2 ** 53):  # keep the double division exact
             raise ValueError(f"token sum {sum_dl} exceeds exact-double "
                              f"range; re-scale the index stats")
@@ -541,8 +525,8 @@ def bm25_index_join(index_path: str, k: int = 10, *,
             # int, not long: the partition column round-trips from the
             # directory names as int, and a cast(pt) on the scan side
             # would defeat dynamic partition pruning
-            .withColumn("pt", F.pmod(h32(F.col("token")),
-                                     F.lit(n_shards)).cast("int")))
+            .withColumn("pt", h32_shard(F.col("token"),
+                                        n_shards).cast("int")))
         # broadcast_queries=True is the probe-batch posture: the
         # broadcast is what arms dynamic partition pruning on the
         # sharded postings scan.  For a CORPUS-scale query side set
@@ -552,25 +536,9 @@ def bm25_index_join(index_path: str, k: int = 10, *,
         qside = F.broadcast(qt) if broadcast_queries else qt
         cand = (post.join(qside, ["pt", "token"])
                     .join(dfreq, "token"))
-        idf = F.ln(1.0 + (F.lit(float(n)) - F.col("df_t") + 0.5)
-                   / (F.col("df_t") + 0.5))
-        tf_norm = (F.col("tf") * (k1 + 1.0)
-                   / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl")
-                                          / F.lit(float(avgdl)))))
-        term = idf * tf_norm
-        if term_round is None:
-            agg = F.round(F.sum(term), 6)
-        else:
-            scale = 10 ** term_round
-            agg = F.round(
-                F.sum(F.round(term * F.lit(scale)).cast("long"))
-                .cast("double") / F.lit(float(scale)), 6)
-        scored = (cand.groupBy(query_id_col, id_col)
-                      .agg(agg.alias(out)))
-        w = Window.partitionBy(query_id_col).orderBy(F.desc(out),
-                                                     F.col(id_col))
-        return (scored.withColumn("rank", F.row_number().over(w))
-                      .where(F.col("rank") <= k))
+        score = _bm25_score(F.lit(float(n)), F.lit(float(avgdl)), k1, b,
+                            term_round)
+        return _bm25_top_k(cand, score, k, id_col, query_id_col, out)
 
     return Stage(fn, name=f"bm25_index_join({k})", seq_preserving=False)
 

@@ -23,7 +23,7 @@ from conduino_spark.plans.core import Stage
 from conduino_spark.functions.hashing import lcg_params
 
 from conduino_spark.operators.smallio import (
-    driver_collect,
+    driver_collect, read_meta as _read_meta, write_meta as _write_meta,
     centroids_arrow as _centroids_arrow,
     driver_parquet_read as _driver_parquet_read,
     driver_parquet_write as _driver_parquet_write)
@@ -165,22 +165,35 @@ def lsh_index_write(df: DataFrame, path: str, *, vec_col: str = "embedding",
         n_files = 0
     if n_files < target:
         df = df.repartition(target)
+    _lsh_put(df, path, "overwrite", vec_col, dim=dim, planes=planes)
+
+
+def _lsh_put(df: DataFrame, path: str, mode: str, vec_col: str, *,
+             dim: int, planes: int) -> None:
+    """The SRP index's one writer (write and merge): bucket ``df``
+    under (dim, planes), write it ``partitionBy(bucket)`` at the root,
+    then ``_meta``.  (dim, planes) stored in-band is what lets
+    :func:`lsh_index_merge` bucket under the SAME hyperplane family;
+    the underscore-prefixed ``_meta`` is hidden from
+    ``spark.read.parquet(path)``, so probes see only bucket dirs.
+
+    Fails fast on width drift: a vector whose width is not ``dim``
+    would bucket under TRUNCATED dot products (zip_with stops at the
+    shorter array) and silently corrupt the bucket space; raise_error
+    fires on the first mismatched row."""
+    target = df.sparkSession.sparkContext.defaultParallelism
     n_write = min(1 << planes, 2 * target)
-    (lsh_bucket(vec_col, dim=dim, planes=planes)(df)
+    v = F.col(vec_col)
+    guarded = df.withColumn(vec_col, F.when(
+        v.isNull() | (F.size(v) == F.lit(dim)), v).otherwise(
+        F.raise_error(F.concat(
+            F.lit("lsh index: batch vector width "),
+            F.size(v).cast("string"),
+            F.lit(f" != stored dim {dim} at {path}")))))
+    (lsh_bucket(vec_col, dim=dim, planes=planes)(guarded)
      .repartition(n_write, F.col("bucket"))
-     .write.partitionBy("bucket").mode("overwrite").parquet(path))
-    # r10: (dim, planes) stored in-band so lsh_index_merge assigns new
-    # batches under the SAME hyperplane family (the n_shards rule).
-    # The directory is underscore-prefixed: Spark's path filter hides
-    # it from `spark.read.parquet(path)`, so the v1 probe layout —
-    # bucket dirs at the root — is unchanged for existing readers.
-    # Driver-side write (r11): the two ints are driver constants; a
-    # Spark job here cost ~4.4 s/call and tripled the cold-build bench.
-    import pyarrow as _pa
-    _driver_parquet_write(
-        f"{path}/_meta",
-        _pa.table({"dim": _pa.array([int(dim)], _pa.int32()),
-                   "planes": _pa.array([int(planes)], _pa.int32())}))
+     .write.partitionBy("bucket").mode(mode).parquet(path))
+    _write_meta(path, "lsh", mode, dim=dim, planes=planes)
 
 
 def lsh_index_merge(new_vecs: DataFrame, path: str, *,
@@ -195,40 +208,11 @@ def lsh_index_merge(new_vecs: DataFrame, path: str, *,
     union corpus (law-tested); cost scales with the new batch only.
     Append-only contract as for the other merges.
 
-    A pre-r10 index without the in-band ``_meta`` table raises —
-    rebuild once with the current :func:`lsh_index_write` to upgrade
-    (guessing dim/planes here could silently split the bucket space)."""
-    spark = new_vecs.sparkSession
-    try:
-        # driver-side read (r11): the _meta table is two ints — a
-        # Spark read job here taxed every merge with a whole-job cycle
-        meta = _driver_parquet_read(f"{path}/_meta")
-    except Exception as e:
-        raise ValueError(
-            f"no mergeable LSH index at {path} (missing in-band _meta "
-            f"— a pre-r10 index must be rebuilt with lsh_index_write "
-            f"before merging)") from e
-    if len(meta) != 1:
-        raise ValueError(f"corrupt _meta at {path}: {len(meta)} rows")
-    dim, planes = int(meta[0]["dim"]), int(meta[0]["planes"])
-    target = spark.sparkContext.defaultParallelism
-    # same sizing as lsh_index_write (ADVICE r10: the old min(n, 8) cap
-    # silently serialized large merge batches onto <=8 tasks)
-    n_write = min(1 << planes, 2 * target)
-    # fail fast on width drift: a batch whose vectors are not the
-    # stored dim would bucket under TRUNCATED dot products (zip_with
-    # stops at the shorter array) and silently corrupt the bucket
-    # space.  raise_error fires on the first mismatched row.
-    v = F.col(vec_col)
-    guarded = new_vecs.withColumn(vec_col, F.when(
-        v.isNull() | (F.size(v) == F.lit(dim)), v).otherwise(
-        F.raise_error(F.concat(
-            F.lit(f"lsh_index_merge: batch vector width "),
-            F.size(v).cast("string"),
-            F.lit(f" != stored dim {dim} at {path}")))))
-    (lsh_bucket(vec_col, dim=dim, planes=planes)(guarded)
-     .repartition(n_write, F.col("bucket"))
-     .write.partitionBy("bucket").mode("append").parquet(path))
+    An index without a current in-band ``_meta`` table (pre-r10, or an
+    older ``_meta`` format) raises — rebuild once with the current
+    :func:`lsh_index_write` to upgrade (guessing dim/planes here could
+    silently split the bucket space)."""
+    _lsh_put(new_vecs, path, "append", vec_col, **_read_meta(path, "lsh"))
 
 
 def knn_lsh(query: Sequence[float], k: int = 10, *, vec_col: str = "embedding",
@@ -1100,6 +1084,41 @@ def sq_sql(kk: int = 10, *, table: str = "embeddings",
         ORDER BY approx_dist, {id_col} LIMIT {kk}"""
 
 
+def _assign_cells(df: DataFrame, model: KMeansModel, vec_col: str,
+                  cell_col: "Optional[str]") -> DataFrame:
+    """``df`` plus its IVF ``cell``: nearest stored centroid, or the
+    ``cell_col`` value verbatim (bring-your-own-partitioner).  Rows
+    with a NULL vector or cell are dropped (ann_join's universe
+    rule)."""
+    if cell_col is not None:
+        return (df.where(F.col(vec_col).isNotNull()
+                         & F.col(cell_col).isNotNull())
+                  .withColumn("cell", F.col(cell_col).cast("long")))
+    return kmeans_assign(model, vec_col=vec_col, out="cell")(
+        df.where(F.col(vec_col).isNotNull()))
+
+
+def _read_centroids(path: str) -> "dict[int, list[float]]":
+    """The stored quantizer of an IVF / IVF-PQ index at ``path`` — a
+    bounded k×d model fetch, driver-side (no Spark read job).  Raises
+    FileNotFoundError when ``centroids/`` is absent."""
+    return {int(r["cell"]): [float(x) for x in r["centroid"]]
+            for r in _driver_parquet_read(f"{path}/centroids")}
+
+
+def _ivf_put(df: DataFrame, path: str, mode: str, model: KMeansModel,
+             vec_col: str, id_col: str, cell_col: "Optional[str]") -> None:
+    """The IVF index's one writer (write and merge): assign ``df``'s
+    cells and write (id, vector) ``partitionBy(cell)`` into
+    ``vectors/``, one task per cell (the lsh_index_write file-churn
+    rule)."""
+    (_assign_cells(df, model, vec_col, cell_col)
+     .select(F.col(id_col), F.col(vec_col), F.col("cell"))
+     .repartition(max(model.k, 1), "cell")
+     .write.partitionBy("cell").mode(mode)
+     .parquet(f"{path}/vectors"))
+
+
 def ivf_index_write(df: DataFrame, path: str, model: KMeansModel, *,
                     vec_col: str = "embedding", id_col: str = "vec_id",
                     cell_col: "Optional[str]" = None,
@@ -1127,17 +1146,7 @@ def ivf_index_write(df: DataFrame, path: str, model: KMeansModel, *,
     the per-cell data means, the persisted probe is bit-equal to the
     in-memory ``ann_join(cell_col=...)``).  NULL cells are dropped
     (ann_join's universe rule)."""
-    if cell_col is not None:
-        assigned = (df.where(F.col(vec_col).isNotNull()
-                             & F.col(cell_col).isNotNull())
-                      .withColumn("cell", F.col(cell_col).cast("long")))
-    else:
-        assigned = kmeans_assign(model, vec_col=vec_col, out="cell")(
-            df.where(F.col(vec_col).isNotNull()))
-    (assigned.select(F.col(id_col), F.col(vec_col), F.col("cell"))
-             .repartition(max(model.k, 1), "cell")
-             .write.partitionBy("cell").mode(mode)
-             .parquet(f"{path}/vectors"))
+    _ivf_put(df, path, mode, model, vec_col, id_col, cell_col)
     # driver-side write (r11): the model is a driver dict; a Spark job
     # for a k-row table paid the ~4.3 s job-commit floor per cold build
     _driver_parquet_write(f"{path}/centroids",
@@ -1156,14 +1165,11 @@ def ivf_index_join(index_path: str, k: int = 10, *, nprobe: int = 2,
 
     def fn(queries: DataFrame) -> DataFrame:
         spark = queries.sparkSession
-        # bounded model fetch, driver-side (r11 — no Spark read job)
-        cents = {int(r["cell"]): [float(x) for x in r["centroid"]]
-                 for r in _driver_parquet_read(f"{index_path}/centroids")}
         corpus = spark.read.parquet(f"{index_path}/vectors")
         return ann_join(corpus, k, nprobe=nprobe, vec_col=vec_col,
                         id_col=id_col, cell_col="cell",
                         exclude_self=exclude_self, kernel=kernel,
-                        centroids=cents)(queries)
+                        centroids=_read_centroids(index_path))(queries)
 
     return Stage(fn, name=f"ivf_index_join({k},nprobe={nprobe})",
                  seq_preserving=False)
@@ -1198,31 +1204,16 @@ def ivf_index_merge(new_vecs: DataFrame, path: str, *,
 
     Cites reference semantics: conduino has no index maintenance; this
     is a north-star engine extension (SURVEY §7)."""
-    spark = new_vecs.sparkSession
     try:
-        cent_rows = _driver_parquet_read(f"{path}/centroids")
+        cents = _read_centroids(path)
     except Exception as e:
         raise ValueError(
             f"no IVF index at {path} (missing centroids/): build one "
             f"with ivf_index_write before merging") from e
-    if not cent_rows:
+    if not cents:
         raise ValueError(f"IVF index at {path} has an empty quantizer")
-    model = KMeansModel({int(r["cell"]): [float(x) for x in r["centroid"]]
-                         for r in cent_rows})
-    if cell_col is not None:
-        # bring-your-own-partitioner index (ivf_index_write cell_col
-        # mode): the batch carries its cell id — bucket by it verbatim
-        assigned = (new_vecs.where(F.col(vec_col).isNotNull()
-                                   & F.col(cell_col).isNotNull())
-                            .withColumn("cell",
-                                        F.col(cell_col).cast("long")))
-    else:
-        assigned = kmeans_assign(model, vec_col=vec_col, out="cell")(
-            new_vecs.where(F.col(vec_col).isNotNull()))
-    (assigned.select(F.col(id_col), F.col(vec_col), F.col("cell"))
-             .repartition(max(model.k, 1), "cell")
-             .write.partitionBy("cell").mode("append")
-             .parquet(f"{path}/vectors"))
+    _ivf_put(new_vecs, path, "append", KMeansModel(cents), vec_col,
+             id_col, cell_col)
 
 
 def ivfpq_index_write(df: DataFrame, path: str, model: KMeansModel,
@@ -1251,18 +1242,7 @@ def ivfpq_index_write(df: DataFrame, path: str, model: KMeansModel,
     :func:`ivf_index_write` — bucket by an existing cluster column,
     store ``model`` in-band for probe-time cell ranking only."""
     m = len(book)
-    if cell_col is not None:
-        assigned = (df.where(F.col(vec_col).isNotNull()
-                             & F.col(cell_col).isNotNull())
-                      .withColumn("cell", F.col(cell_col).cast("long")))
-    else:
-        assigned = kmeans_assign(model, vec_col=vec_col, out="cell")(
-            df.where(F.col(vec_col).isNotNull()))
-    coded = pq_encode(book, vec_col=vec_col, out="pq_codes")(assigned)
-    (coded.select(F.col(id_col), F.col("pq_codes"), F.col("cell"))
-          .repartition(max(model.k, 1), "cell")
-          .write.partitionBy("cell").mode(mode)
-          .parquet(f"{path}/codes"))
+    _ivfpq_put(df, path, mode, model, book, vec_col, id_col, cell_col)
     # driver-side writes (r11): both models are driver dicts; two Spark
     # jobs here paid 2× the ~4.3 s job-commit floor per cold build
     import pyarrow as _pa
@@ -1279,6 +1259,20 @@ def ivfpq_index_write(df: DataFrame, path: str, model: KMeansModel,
         mode=mode)
 
 
+def _ivfpq_put(df: DataFrame, path: str, mode: str, model: KMeansModel,
+               book: "dict[int, dict[int, list[float]]]", vec_col: str,
+               id_col: str, cell_col: "Optional[str]") -> None:
+    """The IVF-PQ index's one writer (write and merge): assign and
+    :func:`pq_encode` ``df``, write (id, pq_codes)
+    ``partitionBy(cell)`` into ``codes/``."""
+    coded = pq_encode(book, vec_col=vec_col, out="pq_codes")(
+        _assign_cells(df, model, vec_col, cell_col))
+    (coded.select(F.col(id_col), F.col("pq_codes"), F.col("cell"))
+          .repartition(max(model.k, 1), "cell")
+          .write.partitionBy("cell").mode(mode)
+          .parquet(f"{path}/codes"))
+
+
 def ivfpq_index_read(spark, path: str):
     """Load a persisted :func:`ivfpq_index_write` index: returns
     ``(codes_df, book, centroids)`` — the corpus codes frame (lazy,
@@ -1289,16 +1283,14 @@ def ivfpq_index_read(spark, path: str):
     SAME scan stage as the in-memory one (bit-equal, law-tested)."""
     try:
         # bounded model fetches, driver-side (r11 — no Spark read jobs)
-        cent_rows = _driver_parquet_read(f"{path}/centroids")
+        cents = _read_centroids(path)
         book_rows = _driver_parquet_read(f"{path}/codebook")
     except Exception as e:
         raise ValueError(
             f"no IVF-PQ index at {path} (missing centroids/ or "
             f"codebook/): build one with ivfpq_index_write") from e
-    if not cent_rows or not book_rows:
+    if not cents or not book_rows:
         raise ValueError(f"IVF-PQ index at {path} has an empty model")
-    cents = {int(r["cell"]): [float(x) for x in r["centroid"]]
-             for r in cent_rows}
     book: dict[int, dict[int, list[float]]] = {}
     for r in book_rows:
         book.setdefault(int(r["sub"]), {})[int(r["code"])] = \
@@ -1318,22 +1310,9 @@ def ivfpq_index_merge(new_vecs: DataFrame, path: str, *,
     index are BIT-EQUAL to a from-scratch rebuild over the union
     corpus under the same models (law-tested).  Cost scales with the
     new batch only.  Append-only contract as for the other merges."""
-    spark = new_vecs.sparkSession
-    _, book, cents = ivfpq_index_read(spark, path)
-    model = KMeansModel(cents)
-    if cell_col is not None:
-        assigned = (new_vecs.where(F.col(vec_col).isNotNull()
-                                   & F.col(cell_col).isNotNull())
-                            .withColumn("cell",
-                                        F.col(cell_col).cast("long")))
-    else:
-        assigned = kmeans_assign(model, vec_col=vec_col, out="cell")(
-            new_vecs.where(F.col(vec_col).isNotNull()))
-    coded = pq_encode(book, vec_col=vec_col, out="pq_codes")(assigned)
-    (coded.select(F.col(id_col), F.col("pq_codes"), F.col("cell"))
-          .repartition(max(model.k, 1), "cell")
-          .write.partitionBy("cell").mode("append")
-          .parquet(f"{path}/codes"))
+    _, book, cents = ivfpq_index_read(new_vecs.sparkSession, path)
+    _ivfpq_put(new_vecs, path, "append", KMeansModel(cents), book,
+               vec_col, id_col, cell_col)
 
 
 def ann_join(corpus: DataFrame, k: int = 10, *, nprobe: int = 2,

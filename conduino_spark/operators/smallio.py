@@ -20,6 +20,13 @@ the right call — the data never left the driver in the first place.
 Only ever use this for bounded, driver-known tables (models, stats
 partials, format metadata).  Corpus-sized tables stay Spark writes.
 
+:func:`write_meta` / :func:`read_meta` are the only path to a persisted
+index's one-row ``_meta`` table (exact, minhash, simhash, dupspan,
+lsh): the writer stamps the family's :data:`META_FORMAT`, the reader
+raises on a missing index, a corrupt table or a format it does not
+know, so a merge can only ever append under the config it was built
+with.
+
 The same rule bounds the loops' numpy fast paths (CC, k-core, label
 propagation, k-center, logreg): each collects only through
 :func:`driver_collect`, under the one :data:`DRIVER_CELLS` budget.
@@ -34,12 +41,28 @@ from typing import Sequence
 # collect; fixed, so driver memory stays bounded at any scale
 DRIVER_CELLS = 32_000_000
 
+#: family -> (``_meta`` layout version, name in error messages); bump a
+#: family's version whenever what its writer stores changes, so an
+#: index built by an older writer asks to be rebuilt instead of taking
+#: appends in a new layout
+META_FORMAT = {"exact": (1, "exact-dedup index"),
+               "minhash": (1, "MinHash index"),
+               "simhash": (1, "SimHash index"),
+               "dupspan": (1, "dup-span index"),
+               "lsh": (1, "mergeable LSH index")}
+
 
 def _fs_path(path: str):
     from pyarrow import fs as pafs
     if "://" not in path:
         path = os.path.abspath(path)
     return pafs.FileSystem.from_uri(path)
+
+
+def _exists(path: str) -> bool:
+    from pyarrow import fs as pafs
+    filesystem, fpath = _fs_path(path)
+    return filesystem.get_file_info(fpath).type != pafs.FileType.NotFound
 
 
 def driver_parquet_write(path: str, table, mode: str = "overwrite") -> None:
@@ -75,6 +98,52 @@ def driver_parquet_read(path: str) -> "list[dict]":
     filesystem, fpath = _fs_path(path)
     return (ds.dataset(fpath, format="parquet", filesystem=filesystem)
             .to_table().to_pylist())
+
+
+def write_meta(path: str, what: str, mode: str = "overwrite",
+               **ints: int) -> None:
+    """Write the one-row ``{path}/_meta`` table of index family
+    ``what``: its int config plus the family's ``format``.  In
+    ``mode='append'`` an existing ``_meta`` is kept, after checking it
+    holds the same config (appending under another one would mix two
+    layouts in one index)."""
+    import pyarrow as pa
+
+    if mode == "append" and _exists(f"{path}/_meta"):
+        stored = read_meta(path, what)
+        if stored != ints:
+            raise ValueError(
+                f"{META_FORMAT[what][1]} at {path} was built with "
+                f"{stored}; cannot append under {ints}")
+        return
+    cols = {"format": META_FORMAT[what][0], **ints}
+    driver_parquet_write(
+        f"{path}/_meta",
+        pa.table({k: pa.array([int(v)], pa.int32())
+                  for k, v in cols.items()}))
+
+
+def read_meta(path: str, what: str) -> "dict[str, int]":
+    """The int config stored in ``{path}/_meta`` by :func:`write_meta`
+    (without ``format``).  ValueError when the path holds no index of
+    family ``what``, the table is not one row, or its ``format`` is
+    missing or not this build's."""
+    want, name = META_FORMAT[what]
+    try:
+        meta = driver_parquet_read(f"{path}/_meta")
+    except Exception as e:
+        raise ValueError(
+            f"no {name} at {path} (missing _meta): build one with "
+            f"{what}_index_write before merging/probing") from e
+    if len(meta) != 1:
+        raise ValueError(f"corrupt _meta at {path}: {len(meta)} rows")
+    row = {k: int(v) for k, v in meta[0].items()}
+    got = row.pop("format", None)
+    if got != want:
+        raise ValueError(
+            f"{name} at {path} has _meta format {got}, this build reads "
+            f"format {want}: rebuild the index with {what}_index_write")
+    return row
 
 
 def centroids_arrow(centroids: "dict[int, Sequence[float]]"):

@@ -64,24 +64,89 @@ def test_driver_collect_budget_and_decline(spark, monkeypatch):
     assert smallio.driver_collect(nan, 2, width=2) is None
 
 
-def test_index_metadata_spark_compatible(spark, tmp_path):
+#: the index families with a one-row ``_meta``: family -> (data dir,
+#: its partition column)
+META_FAMILIES = {"exact": ("keys", "pt"), "minhash": ("bands", "pt"),
+                 "simhash": ("bands", "pt"), "dupspan": ("keys", "pt"),
+                 "lsh": ("", "bucket")}
+
+
+def _meta_index(spark, family, d):
+    """Build a small ``family`` index at ``d``; return (merge, probe),
+    two thunks that run a merge into it and a probe against it (probe
+    None for lsh: knn_lsh reads the bucket dirs, never ``_meta``)."""
+    import conduino_spark as cs
+    if family == "lsh":
+        emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+        cs.lsh_index_write(emb, d, dim=len(emb.first()["embedding"]))
+        return lambda: cs.lsh_index_merge(emb.limit(5), d), None
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    getattr(cs, f"{family}_index_write")(docs, d, n_shards=4)
+    probe = {"exact": cs.dedup_exact_against,
+             "minhash": cs.minhash_index_dedup,
+             "simhash": cs.simhash_index_dedup,
+             "dupspan": cs.dup_span_trim_against}[family](d)
+    return (lambda: getattr(cs, f"{family}_index_merge")(docs.limit(5), d),
+            lambda: probe(docs.limit(5)))
+
+
+@pytest.mark.parametrize("family", ["ivf", *META_FAMILIES])
+def test_index_metadata_spark_compatible(spark, tmp_path, family):
     """The persisted index metadata written driver-side is readable by
     a PLAIN spark.read.parquet — a reader that never imports
-    conduino_spark sees the same tables as before the r11 change."""
-    from conduino_spark import kmeans_fit, ivf_index_write, lsh_index_write
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    d = str(tmp_path / "ivf")
-    ivf_index_write(emb, d, kmeans_fit(emb, k=4, iters=1))
-    cents = spark.read.parquet(f"{d}/centroids")
-    assert cents.count() == 4
-    assert cents.schema["cell"].dataType.simpleString() == "bigint"
-    d2 = str(tmp_path / "lsh")
-    row = emb.first()
-    lsh_index_write(emb, d2, dim=len(row["embedding"]))
-    meta = spark.read.parquet(f"{d2}/_meta").collect()
-    assert len(meta) == 1 and meta[0]["planes"] == 8
-    # and the main read still hides _meta (v1 layout unchanged)
-    assert "bucket" in spark.read.parquet(d2).columns
+    conduino_spark sees the same tables as before the r11 change: the
+    ivf ``centroids/`` model, and each family's one ``_meta`` row,
+    which the data-directory read never sees."""
+    from conduino_spark import kmeans_fit, ivf_index_write
+    from conduino_spark.operators.smallio import META_FORMAT
+    d = str(tmp_path / family)
+    if family == "ivf":
+        emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+        ivf_index_write(emb, d, kmeans_fit(emb, k=4, iters=1))
+        cents = spark.read.parquet(f"{d}/centroids")
+        assert cents.count() == 4
+        assert cents.schema["cell"].dataType.simpleString() == "bigint"
+        return
+    _meta_index(spark, family, d)
+    meta = spark.read.parquet(f"{d}/_meta").collect()
+    assert len(meta) == 1 and meta[0]["format"] == META_FORMAT[family][0]
+    key, want = ("planes", 8) if family == "lsh" else ("n_shards", 4)
+    assert meta[0][key] == want
+    data_dir, part = META_FAMILIES[family]
+    data = spark.read.parquet(f"{d}/{data_dir}")
+    assert part in data.columns and "format" not in data.columns
+
+
+@pytest.mark.parametrize("family", META_FAMILIES)
+def test_index_meta_without_format_raises(spark, tmp_path, family):
+    """An index whose ``_meta`` has no ``format`` (written before the
+    field existed) must be rebuilt: merge and probe both raise instead
+    of appending or probing in a layout this build may not share."""
+    import pyarrow as pa
+    from conduino_spark.operators.smallio import (driver_parquet_read,
+                                                  driver_parquet_write)
+    d = str(tmp_path / family)
+    merge, probe = _meta_index(spark, family, d)
+    row = driver_parquet_read(f"{d}/_meta")[0]
+    row.pop("format", None)
+    driver_parquet_write(f"{d}/_meta", pa.Table.from_pylist([row]))
+    with pytest.raises(ValueError, match="rebuild the index"):
+        merge()
+    if probe is not None:
+        with pytest.raises(ValueError, match="rebuild the index"):
+            probe()
+
+
+def test_write_meta_append_keeps_stored_config(tmp_path):
+    """write_meta in append mode keeps an equal ``_meta`` (still one
+    row) and refuses a different config."""
+    from conduino_spark.operators.smallio import read_meta, write_meta
+    d = str(tmp_path / "idx")
+    write_meta(d, "exact", n_shards=4)
+    write_meta(d, "exact", "append", n_shards=4)
+    assert read_meta(d, "exact") == {"n_shards": 4}
+    with pytest.raises(ValueError, match="cannot append"):
+        write_meta(d, "exact", "append", n_shards=8)
 
 
 # ---------------------------------------------------------------------------
