@@ -10,7 +10,11 @@ lacks (SURVEY §2.7) as pure Spark built-ins.
 from __future__ import annotations
 
 import itertools
-from typing import Any, Callable, Iterable, Optional, Sequence
+import os
+import threading
+import urllib.parse
+from collections import OrderedDict
+from typing import Any, Callable, Iterable, Optional, Sequence, Union
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -264,12 +268,104 @@ def source_binary(path: str) -> Source:
     return Source(fn, name="binary")
 
 
+#: session confs the parquet-to-Spark type mapping reads (Spark 4.1's
+#: ``ParquetToSparkSchemaConverter``): part of every schema-memo key
+_PARQUET_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+)
+#: schemas kept by the process-wide footer-keyed memo (LRU beyond this)
+_PARQUET_SCHEMA_MEMO_SIZE = 256
+_parquet_schemas: "OrderedDict[tuple, T.StructType]" = OrderedDict()
+_parquet_schemas_lock = threading.Lock()
+
+
+def _is_local_file(spark: SparkSession, path: str) -> bool:
+    """True when ``path`` names one file on the local default filesystem
+    that Spark reads as given: absolute (the JVM resolves a relative
+    path against its own working directory), no scheme, no glob."""
+    glob = any(c in path for c in "{}[]*?\\")
+    if (urllib.parse.urlsplit(path).scheme or glob
+            or not os.path.isabs(path) or not os.path.isfile(path)):
+        return False
+    fs = spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS")
+    return fs is None or fs.startswith("file:")
+
+
+def _parquet_schema_key(spark: SparkSession, path: str) -> tuple:
+    """Footer (parquet schema + key-value metadata, which carries
+    Spark's own ``org.apache.spark.sql.parquet.row.metadata`` schema)
+    plus the type-mapping confs: everything Spark's inference reads."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path)
+    # repr's first line is the Python object address, not the schema
+    schema = repr(md.schema).split("\n", 1)[-1]
+    kv = tuple(sorted((md.metadata or {}).items()))
+    return schema, kv, tuple(spark.conf.get(k, None)
+                             for k in _PARQUET_SCHEMA_CONFS)
+
+
+def _scan_local_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` for one local file, minus the
+    footer-inference Spark job once this footer has been seen under
+    these confs: a hit passes the stored schema, which launches no job."""
+    from pyarrow import ArrowException
+
+    try:
+        key = _parquet_schema_key(spark, path)
+    except (OSError, ArrowException):  # unreadable footer: Spark reports it
+        return spark.read.parquet(path)
+    with _parquet_schemas_lock:
+        schema = _parquet_schemas.get(key)
+        if schema is not None:
+            _parquet_schemas.move_to_end(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    schema = df.schema
+    try:
+        # the file may have been replaced while Spark inferred
+        unchanged = _parquet_schema_key(spark, path) == key
+    except (OSError, ArrowException):
+        unchanged = False
+    if unchanged:
+        with _parquet_schemas_lock:
+            _parquet_schemas[key] = schema
+            _parquet_schemas.move_to_end(key)
+            while len(_parquet_schemas) > _PARQUET_SCHEMA_MEMO_SIZE:
+                _parquet_schemas.popitem(last=False)
+    return df
+
+
+def _file_uri_path(uri: str) -> str:
+    """Local path of a ``file:`` URI from ``inputFiles()``, %-escapes
+    decoded (``file:///a%20b/x`` → ``/a b/x``); other URIs unchanged."""
+    u = urllib.parse.urlsplit(uri)
+    return urllib.parse.unquote(u.path) if u.scheme == "file" else uri
+
+
 def read_parquet(path: str, *, seq_col: Optional[str] = None,
                  min_partitions: Union[int, str, None] = None,
                  name: Optional[str] = None) -> Source:
     """Format-aware scan (reference gap, SURVEY §2.7).  ``seq_col``
     designates an existing unique key as the stream order — zero-cost
     at any scale (no global sort, no row_number).
+
+    Building the plan of a single local file (absolute path) launches
+    no Spark job after the first time: its schema is inferred once per
+    (footer, type-mapping confs) per process and reused from a bounded
+    memo.
+    The file is still listed and read on every scan, so new contents
+    under the same footer schema are seen.  Directories and
+    ``scheme://`` paths are inferred on every build (their partition
+    columns come from directory names, which a footer cannot show).
 
     ``min_partitions`` (or ``"auto"`` = the cluster's default
     parallelism) repartitions ONLY when the scan yields fewer splits —
@@ -279,7 +375,9 @@ def read_parquet(path: str, *, seq_col: Optional[str] = None,
     the condition is false, and no shuffle happens."""
 
     def fn(spark: SparkSession) -> DataFrame:
-        df = spark.read.parquet(path)
+        local = _is_local_file(spark, path)
+        df = (_scan_local_parquet(spark, path) if local
+              else spark.read.parquet(path))
         if min_partitions:
             want = (spark.sparkContext.defaultParallelism
                     if min_partitions == "auto" else int(min_partitions))
@@ -288,10 +386,9 @@ def read_parquet(path: str, *, seq_col: Optional[str] = None,
             # maxPartitionBytes) — derivable from metadata without
             # .rdd's eager out-of-AQE conversion
             try:
-                import os
-                files = df.inputFiles()
-                total = sum(os.path.getsize(f.replace("file:", ""))
-                            for f in files)
+                files = [path] if local else [
+                    _file_uri_path(f) for f in df.inputFiles()]
+                total = sum(os.path.getsize(f) for f in files)
                 mpb = int(spark.conf.get(
                     "spark.sql.files.maxPartitionBytes",
                     "134217728").rstrip("b"))

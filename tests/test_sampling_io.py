@@ -118,7 +118,7 @@ def test_csv_round_trip(spark, tmp_path):
 
 
 def test_json_round_trip_and_partitioned_parquet(spark, tmp_path):
-    from conduino_spark import sink_parquet
+    from conduino_spark import read_parquet, sink_parquet
 
     df = spark.createDataFrame(
         [(1, ["x", "y"], {"k": 1}), (2, [], None)],
@@ -140,6 +140,9 @@ def test_json_round_trip_and_partitioned_parquet(spark, tmp_path):
     got = spark.read.parquet(ppath).where(F.col("part") == 1)
     assert sorted(r.id for r in got.collect()) \
         == [i for i in range(30) if i % 3 == 1]
+    # a directory keeps plain inference, partition column included
+    for _ in range(2):
+        assert sorted(read_parquet(ppath).df(spark).columns) == ["id", "part"]
     import io
     import contextlib
     buf = io.StringIO()
@@ -147,3 +150,154 @@ def test_json_round_trip_and_partitioned_parquet(spark, tmp_path):
         got.explain("formatted")
     scan = buf.getvalue().split("Scan parquet")[-1]
     assert "part" in scan.split("PartitionFilters:")[1].splitlines()[0]
+
+
+# -- read_parquet: footer-keyed schema memo ------------------------------
+
+def _next_job_id(spark):
+    """The id the next Spark job will get (the scheduler's counter,
+    read synchronously: the status tracker lags behind the listener
+    bus)."""
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def _write(path, table):
+    import pyarrow.parquet as pq
+
+    pq.write_table(table, str(path))
+    return str(path)
+
+
+def test_read_parquet_second_build_launches_no_job(spark, tmp_path):
+    import pyarrow as pa
+
+    from conduino_spark import read_parquet
+
+    p = _write(tmp_path / "t.parquet", pa.table({
+        "id": pa.array([1, 2, 3], pa.int64()),
+        "s": ["a", None, "c"],
+        "x": pa.array([0.5, None, -1.0], pa.float64()),
+        "arr": pa.array([[1], [], None], pa.list_(pa.int32())),
+    }))
+    read_parquet(p).df(spark)
+    before = _next_job_id(spark)
+    df = read_parquet(p).df(spark)
+    assert _next_job_id(spark) == before
+    ref = spark.read.parquet(p)
+    assert df.schema == ref.schema
+    assert sorted(map(str, df.collect())) == sorted(map(str, ref.collect()))
+
+
+def test_read_parquet_memo_under_concurrent_arms(spark, tmp_path,
+                                                 monkeypatch):
+    """Pipeline arms build their sources on parallel threads: with a
+    memo smaller than the file set, hits, misses and evictions race,
+    and every read must still get its own file's schema."""
+    import sys
+    import threading
+
+    import pyarrow as pa
+
+    from conduino_spark import read_parquet, sources
+
+    monkeypatch.setattr(sources, "_PARQUET_SCHEMA_MEMO_SIZE", 2)
+    want = {}
+    for i in range(4):
+        p = _write(tmp_path / f"t{i}.parquet",
+                   pa.table({f"c{i}": pa.array([i], pa.int64())}))
+        want[p] = [(f"c{i}", "bigint")]
+    paths, errors = list(want), []
+
+    def arm(k):
+        try:
+            for j in range(6):
+                p = paths[(k + j) % len(paths)]
+                assert read_parquet(p).df(spark).dtypes == want[p], p
+        except BaseException as e:  # noqa: BLE001 — re-raised below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=arm, args=(k,)) for k in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[0]
+    assert len(sources._parquet_schemas) <= 2
+
+
+def test_read_parquet_memo_follows_overwritten_schema(spark, tmp_path):
+    import pyarrow as pa
+
+    from conduino_spark import read_parquet
+
+    p = tmp_path / "t.parquet"
+    _write(p, pa.table({"id": pa.array([1, 2], pa.int64())}))
+    assert read_parquet(str(p)).df(spark).dtypes == [("id", "bigint")]
+    _write(p, pa.table({"id": pa.array([1.5], pa.float64()),
+                        "tag": ["new"]}))
+    df = read_parquet(str(p)).df(spark)
+    assert df.dtypes == [("id", "double"), ("tag", "string")]
+    assert df.schema == spark.read.parquet(str(p)).schema
+    assert [tuple(r) for r in df.collect()] == [(1.5, "new")]
+    # a footer pyarrow cannot read is left to Spark, which reports it
+    p.write_bytes(b"not parquet")
+    with pytest.raises(Exception) as err:
+        read_parquet(str(p)).df(spark)
+    assert not isinstance(err.value, pa.ArrowException)
+
+
+def test_read_parquet_memo_keys_on_type_mapping_confs(spark, tmp_path):
+    import pyarrow as pa
+
+    from conduino_spark import read_parquet
+
+    p = _write(tmp_path / "b.parquet",
+               pa.table({"b": pa.array([b"ab", b"c"], pa.binary())}))
+    conf = "spark.sql.parquet.binaryAsString"
+    assert read_parquet(p).df(spark).dtypes == [("b", "binary")]
+    spark.conf.set(conf, "true")
+    try:
+        df = read_parquet(p).df(spark)
+        assert df.dtypes == [("b", "string")]
+        assert sorted(r.b for r in df.collect()) == ["ab", "c"]
+    finally:
+        spark.conf.unset(conf)
+    assert read_parquet(p).df(spark).dtypes == [("b", "binary")]
+
+
+def test_read_table_events_ts_normalised_on_memo_hit(spark, sf_dir):
+    from conduino_spark import read_table
+
+    assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+    first = read_table(sf_dir, "events").df(spark)
+    before = _next_job_id(spark)
+    again = read_table(sf_dir, "events").df(spark)
+    assert _next_job_id(spark) == before
+    assert dict(first.dtypes)["ts"] == dict(again.dtypes)["ts"] == "timestamp"
+    assert first.agg(F.min("ts"), F.max("ts")).first() \
+        == again.agg(F.min("ts"), F.max("ts")).first()
+
+
+def test_read_parquet_min_partitions_on_escaped_path(spark, tmp_path):
+    """A path with a space reaches ``inputFiles()`` as ``%20``; the split
+    estimate must still find the file and skip the repartition."""
+    import pyarrow as pa
+
+    from conduino_spark import read_parquet
+
+    d = tmp_path / "a b"
+    (d / "dir").mkdir(parents=True)
+    t = pa.table({"id": pa.array(range(10), pa.int64())})
+    single = _write(d / "x.parquet", t)
+    _write(d / "dir" / "part-0.parquet", t)
+    for path in (single, str(d / "dir")):
+        df = read_parquet(path, min_partitions=1).df(spark)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, path
+        assert df.count() == 10

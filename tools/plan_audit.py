@@ -15,6 +15,9 @@ facts from the EXECUTED plan string:
   * cartesian        — CartesianProduct/BroadcastNestedLoopJoin count
                        (single-row broadcast bounds joins are the only
                        sanctioned use)
+  * build_jobs       — Spark jobs started while the query callable built
+                       its plan (eager gates, loops, cache fills, schema
+                       inference), before any action
 
 The audit is descriptive, not pass/fail — its value is DIFFS: a new
 round that doubles a query's exchanges or sprouts a CartesianProduct
@@ -283,6 +286,12 @@ def _over_budget(report: dict, gate_names: set) -> dict:
     return flagged
 
 
+def _next_job_id(spark) -> int:
+    """The scheduler's job counter, read synchronously (the status
+    tracker lags behind the listener bus)."""
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
 def main() -> None:
     import importlib.util
 
@@ -313,12 +322,14 @@ def main() -> None:
     report, errors = {}, {}
     for name, q in qs.items():
         try:
+            jobs0 = _next_job_id(spark)
             df = q(spark, sf)
+            build_jobs = _next_job_id(spark) - jobs0
             # query builders re-assert the driver conf (AQE on); the
             # plan is materialized lazily, so flip it back before
             # reading executedPlan
             spark.conf.set("spark.sql.adaptive.enabled", "false")
-            report[name] = plan_facts(df)
+            report[name] = dict(plan_facts(df), build_jobs=build_jobs)
         except Exception as e:  # noqa: BLE001 — audit must cover the rest
             errors[name] = f"{type(e).__name__}: {e}"[:200]
         finally:
@@ -335,6 +346,10 @@ def main() -> None:
                                       if f["n_row_python_udf"]),
         "with_giant_filter": sorted(n for n, f in report.items()
                                     if f["giant_filter"]),
+        # descriptive: eager jobs paid at plan build on every call
+        "with_build_jobs": sorted(n for n, f in report.items()
+                                  if f["build_jobs"]),
+        "build_jobs": sum(f["build_jobs"] for f in report.values()),
         "max_exchanges": max((f["n_exchange"] for f in report.values()),
                              default=0),
         # r10 (VERDICT r9 #2): per-GATE-pin weight budget — a pin over
