@@ -32,6 +32,8 @@ import struct
 
 import numpy as np
 
+from conduino_spark.operators.bitio import MsbReader, MsbWriter
+
 _FIXED_COEFS = {0: [], 1: [1], 2: [2, -1], 3: [3, -3, 1],
                 4: [4, -6, 4, -1]}
 
@@ -71,69 +73,19 @@ def _crc16(data: bytes) -> int:
     return crc
 
 
-class _BitWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def put(self, value: int, bits: int) -> None:
-        self.acc = (self.acc << bits) | (value & ((1 << bits) - 1))
-        self.n += bits
-        while self.n >= 8:
-            self.out.append((self.acc >> (self.n - 8)) & 0xFF)
-            self.n -= 8
-        self.acc &= (1 << self.n) - 1
-
-    def put_unary(self, q: int) -> None:
-        while q >= 32:
-            self.put(0, 32)
-            q -= 32
-        self.put(1, q + 1)
-
-    def align(self) -> None:
-        if self.n:
-            self.put(0, 8 - self.n)
-
-    def bytes(self) -> bytes:
-        assert self.n == 0
-        return bytes(self.out)
+_EOF = "truncated FLAC bitstream"
 
 
-class _BitReader:
-    def __init__(self, data: bytes, pos: int = 0):
-        self.d = data
-        self.pos = pos
-        self.acc = 0
-        self.n = 0
+def _signed(br: MsbReader, bits: int) -> int:
+    v = br.read(bits)
+    return v - (1 << bits) if v >= (1 << (bits - 1)) else v
 
-    def get(self, bits: int) -> int:
-        while self.n < bits:
-            if self.pos >= len(self.d):
-                raise ValueError("truncated FLAC bitstream")
-            self.acc = (self.acc << 8) | self.d[self.pos]
-            self.pos += 1
-            self.n += 8
-        self.n -= bits
-        v = (self.acc >> self.n) & ((1 << bits) - 1)
-        self.acc &= (1 << self.n) - 1
-        return v
 
-    def get_signed(self, bits: int) -> int:
-        v = self.get(bits)
-        return v - (1 << bits) if v >= (1 << (bits - 1)) else v
-
-    def get_unary(self) -> int:
-        q = 0
-        while self.get(1) == 0:
-            q += 1
-        return q
-
-    def align(self) -> None:
-        self.n = 0
-
-    def byte_pos(self) -> int:
-        return self.pos - (self.n // 8)
+def _unary(br: MsbReader) -> int:
+    q = 0
+    while br.read(1) == 0:
+        q += 1
+    return q
 
 
 def _zigzag(n: "np.ndarray") -> "np.ndarray":
@@ -161,8 +113,8 @@ def _utf8ish(n: int) -> bytes:
     return bytes(out)
 
 
-def _read_utf8ish(br: "_BitReader") -> int:
-    b0 = br.get(8)
+def _read_utf8ish(br: MsbReader) -> int:
+    b0 = br.read(8)
     if b0 < 0x80:
         return b0
     nbytes = 0
@@ -172,7 +124,7 @@ def _read_utf8ish(br: "_BitReader") -> int:
         mask >>= 1
     n = b0 & (mask - 1)
     for _ in range(nbytes - 1):
-        b = br.get(8)
+        b = br.read(8)
         if b & 0xC0 != 0x80:
             raise ValueError("corrupt FLAC frame number")
         n = (n << 6) | (b & 0x3F)
@@ -183,7 +135,7 @@ def _read_utf8ish(br: "_BitReader") -> int:
 # encoder
 # ---------------------------------------------------------------------------
 
-def _write_residuals(bw: "_BitWriter", res: "np.ndarray",
+def _write_residuals(bw: MsbWriter, res: "np.ndarray",
                      block: int, order: int) -> None:
     """Rice method 0, partition order 0, parameter chosen from the
     mean magnitude (escape to raw when Rice would blow up)."""
@@ -201,24 +153,24 @@ def _write_residuals(bw: "_BitWriter", res: "np.ndarray",
             raise ValueError(
                 f"FLAC escape residuals need {raw} bits (max 31): "
                 "residual range too wide for a raw partition")
-        bw.put(0, 2)
-        bw.put(0, 4)
-        bw.put(15, 4)                 # escape: raw residuals
-        bw.put(raw, 5)
+        bw.write(0, 2)
+        bw.write(0, 4)
+        bw.write(15, 4)                 # escape: raw residuals
+        bw.write(raw, 5)
         mask = (1 << raw) - 1
         for v in res:
-            bw.put(int(v) & mask, raw)
+            bw.write(int(v) & mask, raw)
         return
-    bw.put(0, 2)                      # residual method 0 (4-bit Rice)
-    bw.put(0, 4)                      # partition order 0
-    bw.put(param, 4)
+    bw.write(0, 2)                      # residual method 0 (4-bit Rice)
+    bw.write(0, 4)                      # partition order 0
+    bw.write(param, 4)
     for v in u:
-        bw.put_unary(int(v) >> param)
+        bw.write(1, (int(v) >> param) + 1)     # unary quotient
         if param:
-            bw.put(int(v) & ((1 << param) - 1), param)
+            bw.write(int(v) & ((1 << param) - 1), param)
 
 
-def _encode_subframe(bw: "_BitWriter", x: "np.ndarray",
+def _encode_subframe(bw: MsbWriter, x: "np.ndarray",
                      lpc: "tuple | None", bits: int = 16) -> None:
     if lpc is not None:
         coefs, shift = lpc
@@ -229,16 +181,16 @@ def _encode_subframe(bw: "_BitWriter", x: "np.ndarray",
             raise ValueError(f"LPC shift must be 0-15, got {shift}")
         if any(not -(1 << 14) <= int(c) < (1 << 14) for c in coefs):
             raise ValueError("LPC coefficients must fit signed 15 bits")
-        bw.put(0, 1)
-        bw.put(0x20 | (order - 1), 6)         # LPC subframe
-        bw.put(0, 1)                          # no wasted bits
+        bw.write(0, 1)
+        bw.write(0x20 | (order - 1), 6)         # LPC subframe
+        bw.write(0, 1)                          # no wasted bits
         for s in x[:order]:
-            bw.put(int(s) & ((1 << bits) - 1), bits)
+            bw.write(int(s) & ((1 << bits) - 1), bits)
         prec = 15
-        bw.put(prec - 1, 4)
-        bw.put(shift, 5)
+        bw.write(prec - 1, 4)
+        bw.write(shift, 5)
         for c in coefs:
-            bw.put(int(c) & 0x7FFF, prec)
+            bw.write(int(c) & 0x7FFF, prec)
         hist = x.astype(np.int64)
         res = []
         for i in range(order, len(x)):
@@ -248,10 +200,10 @@ def _encode_subframe(bw: "_BitWriter", x: "np.ndarray",
         _write_residuals(bw, np.array(res, np.int64), len(x), order)
         return
     if np.all(x == x[0]):
-        bw.put(0, 1)
-        bw.put(0, 6)                          # constant
-        bw.put(0, 1)
-        bw.put(int(x[0]) & ((1 << bits) - 1), bits)
+        bw.write(0, 1)
+        bw.write(0, 6)                          # constant
+        bw.write(0, 1)
+        bw.write(int(x[0]) & ((1 << bits) - 1), bits)
         return
     # pick the cheapest fixed order 0-2 by residual magnitude
     best_order, best_res, best_cost = None, None, None
@@ -267,18 +219,18 @@ def _encode_subframe(bw: "_BitWriter", x: "np.ndarray",
             best_order, best_res, best_cost = order, res, cost
     verbatim_cost = float(np.abs(xi).sum()) * 1.5
     if best_cost is not None and best_cost < verbatim_cost:
-        bw.put(0, 1)
-        bw.put(0x08 | best_order, 6)          # fixed
-        bw.put(0, 1)
+        bw.write(0, 1)
+        bw.write(0x08 | best_order, 6)          # fixed
+        bw.write(0, 1)
         for s in x[:best_order]:
-            bw.put(int(s) & ((1 << bits) - 1), bits)
+            bw.write(int(s) & ((1 << bits) - 1), bits)
         _write_residuals(bw, best_res, len(x), best_order)
         return
-    bw.put(0, 1)
-    bw.put(0x01, 6)                           # verbatim
-    bw.put(0, 1)
+    bw.write(0, 1)
+    bw.write(0x01, 6)                           # verbatim
+    bw.write(0, 1)
     for s in x:
-        bw.put(int(s) & ((1 << bits) - 1), bits)
+        bw.write(int(s) & ((1 << bits) - 1), bits)
 
 
 def encode_flac(samples, sample_rate: int, *, block_size: int = 4096,
@@ -311,20 +263,20 @@ def encode_flac(samples, sample_rate: int, *, block_size: int = 4096,
     for fi, off in enumerate(range(0, n, block_size)):
         blk = x[off:off + block_size]
         bs = blk.shape[0]
-        hdr = _BitWriter()
-        hdr.put(0b11111111111110, 14)
-        hdr.put(0, 1)                                    # reserved
-        hdr.put(0, 1)                                    # fixed blocksize
-        hdr.put(0b0111, 4)                               # 16-bit bs-1 next
-        hdr.put(0b0000, 4)                               # rate: STREAMINFO
-        hdr.put(nch - 1, 4)                              # independent
-        hdr.put(0b100, 3)                                # 16 bits
-        hdr.put(0, 1)
+        hdr = MsbWriter()
+        hdr.write(0b11111111111110, 14)
+        hdr.write(0, 1)                                    # reserved
+        hdr.write(0, 1)                                    # fixed blocksize
+        hdr.write(0b0111, 4)                               # 16-bit bs-1 next
+        hdr.write(0b0000, 4)                               # rate: STREAMINFO
+        hdr.write(nch - 1, 4)                              # independent
+        hdr.write(0b100, 3)                                # 16 bits
+        hdr.write(0, 1)
         hdr.align()
         head = hdr.bytes() + _utf8ish(fi) \
             + struct.pack(">H", bs - 1)
         head += bytes([_crc8(head)])
-        bw = _BitWriter()
+        bw = MsbWriter()
         for ch in range(nch):
             _encode_subframe(bw, blk[:, ch], lpc)
         bw.align()
@@ -343,51 +295,54 @@ _BS_TABLE = {1: 192, 2: 576, 3: 1152, 4: 2304, 5: 4608, 8: 256,
              14: 16384, 15: 32768}
 
 
-def _bit_cache(br: "_BitReader"):
-    """Lazily attach an unpacked-bit view of the whole stream to the
-    reader: ``bits`` (uint8 0/1, MSB-first — FLAC's bit order) and
-    ``ones`` (sorted positions of the 1-bits, as a Python list for
-    cheap per-symbol scanning).  Built once per decode; the Rice fast
-    path below runs on it instead of bit-by-bit reads.
+def _bit_cache(br: MsbReader, cache: dict):
+    """Lazily build (into ``cache``) an unpacked-bit view of the
+    reader's whole stream: ``bits`` (uint8 0/1, MSB-first — FLAC's
+    bit order) and ``ones`` (sorted positions of the 1-bits, as a
+    Python list for cheap per-symbol scanning).  Built once per
+    decode; the Rice fast path below runs on it instead of bit-by-bit
+    reads.
 
     Memory posture: transiently ~8x the blob for ``bits`` plus ~30x
-    for the ``ones`` int list — fine for the multi-MB audio blobs of
-    a crawl corpus inside a several-GB executor, and the cache dies
-    with the decode call."""
-    if not hasattr(br, "_bits"):
-        br._bits = np.unpackbits(np.frombuffer(br.d, np.uint8))
-        br._ones = np.flatnonzero(br._bits).tolist()
-    return br._bits, br._ones
+    for the ``ones`` int list (and ~40x for the reader's window list)
+    — fine for the multi-MB audio blobs of a crawl corpus inside a
+    several-GB executor, and the cache dies with the decode call."""
+    if not cache:
+        cache["bits"] = np.unpackbits(np.frombuffer(br.data, np.uint8))
+        cache["ones"] = np.flatnonzero(cache["bits"]).tolist()
+    return cache["bits"], cache["ones"]
 
 
-def _rice_batch(br: "_BitReader", cnt: int, param: int) -> "np.ndarray":
+def _rice_batch(br: MsbReader, cnt: int, param: int,
+                cache: dict) -> "np.ndarray":
     """Decode ``cnt`` Rice(param) codes in one pass: unary quotients
     by scanning the precomputed 1-bit positions (each code's
     terminator is a 1-bit; fixed ``param`` payload bits follow), then
     ONE vectorized gather for all payloads.  Bit-exact with the
     per-symbol path (tests/test_round11 fuzz matrix + round-trips)."""
-    bits, ones = _bit_cache(br)
-    bitpos = br.pos * 8 - br.n
+    bits, ones = _bit_cache(br, cache)
+    bitpos = br.pos
     nbits = len(bits)
     # index of the first 1-bit at/after bitpos
     import bisect
     j = bisect.bisect_left(ones, bitpos)
+    n_ones = len(ones)
     qs = np.empty(cnt, np.int64)
     starts = np.empty(cnt, np.int64)
     step = 1 + param
     for i in range(cnt):
         # skip 1-bits consumed by the previous payload
-        while j < len(ones) and ones[j] < bitpos:
+        while j < n_ones and ones[j] < bitpos:
             j += 1
-        if j >= len(ones):
-            raise ValueError("truncated FLAC bitstream")
+        if j >= n_ones:
+            raise ValueError(_EOF)
         t = ones[j]
         j += 1
         qs[i] = t - bitpos
         starts[i] = t + 1
         bitpos = t + step
     if bitpos > nbits:
-        raise ValueError("truncated FLAC bitstream")
+        raise ValueError(_EOF)
     if param:
         idx = starts[:, None] + np.arange(param)
         vals = bits[idx].astype(np.int64) @ \
@@ -395,54 +350,53 @@ def _rice_batch(br: "_BitReader", cnt: int, param: int) -> "np.ndarray":
         u = (qs << param) | vals
     else:
         u = qs
-    # reposition the bit reader exactly past the partition
-    br.pos = (bitpos + 7) >> 3
-    br.n = br.pos * 8 - bitpos
-    br.acc = (br.d[br.pos - 1] & ((1 << br.n) - 1)) if br.n else 0
+    br.pos = bitpos                          # exactly past the partition
     return (u >> 1) ^ -(u & 1)               # vectorized unzigzag
 
 
-def _read_residuals(br: "_BitReader", bs: int, order: int) -> "np.ndarray":
-    method = br.get(2)
+def _read_residuals(br: MsbReader, bs: int, order: int,
+                    cache: dict) -> "np.ndarray":
+    method = br.read(2)
     if method not in (0, 1):
         raise ValueError(f"unknown FLAC residual method {method}")
     pbits = 4 if method == 0 else 5
     escape = (1 << pbits) - 1
-    porder = br.get(4)
+    porder = br.read(4)
     parts = []
     nparts = 1 << porder
     if bs % nparts:
         raise ValueError("corrupt FLAC: partition order vs block size")
     for p in range(nparts):
         cnt = bs // nparts - (order if p == 0 else 0)
-        param = br.get(pbits)
+        param = br.read(pbits)
         if param == escape:
-            raw = br.get(5)
+            raw = br.read(5)
             parts.append(np.array(
-                [br.get_signed(raw) if raw else 0
+                [_signed(br, raw) if raw else 0
                  for _ in range(cnt)], np.int64))
             continue
-        parts.append(_rice_batch(br, cnt, param))
+        parts.append(_rice_batch(br, cnt, param, cache))
     return np.concatenate(parts) if parts else np.zeros(0, np.int64)
 
 
-def _decode_subframe(br: "_BitReader", bs: int, bits: int) -> "np.ndarray":
-    if br.get(1):
+def _decode_subframe(br: MsbReader, bs: int, bits: int,
+                     cache: dict) -> "np.ndarray":
+    if br.read(1):
         raise ValueError("corrupt FLAC: subframe padding bit set")
-    stype = br.get(6)
+    stype = br.read(6)
     wasted = 0
-    if br.get(1):
-        wasted = 1 + br.get_unary()
+    if br.read(1):
+        wasted = 1 + _unary(br)
     eff = bits - wasted
     if stype == 0:                                   # constant
-        out = np.full(bs, br.get_signed(eff), np.int64)
+        out = np.full(bs, _signed(br, eff), np.int64)
     elif stype == 1:                                 # verbatim
-        out = np.array([br.get_signed(eff) for _ in range(bs)],
+        out = np.array([_signed(br, eff) for _ in range(bs)],
                        np.int64)
     elif 8 <= stype <= 12:                           # fixed
         order = stype - 8
-        warm = [br.get_signed(eff) for _ in range(order)]
-        res = _read_residuals(br, bs, order)
+        warm = [_signed(br, eff) for _ in range(order)]
+        res = _read_residuals(br, bs, order, cache)
         # a fixed predictor of order o means res == the o-th finite
         # difference of the output, so reconstruction is o exact
         # integer integrations (cumsum) seeded by the warmup's
@@ -455,15 +409,15 @@ def _decode_subframe(br: "_BitReader", bs: int, bits: int) -> "np.ndarray":
         out = cur
     elif stype >= 0x20:                              # LPC
         order = (stype & 0x1F) + 1
-        warm = [br.get_signed(eff) for _ in range(order)]
-        prec = br.get(4) + 1
+        warm = [_signed(br, eff) for _ in range(order)]
+        prec = br.read(4) + 1
         if prec == 16:
             raise ValueError("invalid FLAC LPC precision")
-        shift = br.get_signed(5)
+        shift = _signed(br, 5)
         if shift < 0:
             raise ValueError("negative FLAC LPC shift")
-        coefs = [br.get_signed(prec) for _ in range(order)]
-        res = _read_residuals(br, bs, order)
+        coefs = [_signed(br, prec) for _ in range(order)]
+        res = _read_residuals(br, bs, order, cache)
         # sequential IIR recurrence — plain-Python ints beat numpy
         # scalar indexing ~4x here; exactness is integer either way
         out_l = list(warm)
@@ -522,43 +476,43 @@ def decode_flac(data: bytes):
         raise ValueError(f"only 1-2 channels supported (got {nch})")
 
     chans: "list[list[int]]" = [[] for _ in range(nch)]
-    bit_cache = None                 # shared unpacked-bit view: built
-    # by the FIRST frame's Rice fast path, reattached to every later
-    # frame's reader (rebuilding per frame would be quadratic)
+    # one reader over the whole blob; the Rice fast path's unpacked-
+    # bit view is built by the first frame that needs it and shared
+    # by every later frame (rebuilding per frame would be quadratic)
+    br = MsbReader(data, eof=_EOF)
+    bit_cache: dict = {}
     got = 0
     while (total == 0 or got < total) and pos < len(data):
         frame_start = pos
-        br = _BitReader(data, pos)
-        if bit_cache is not None:
-            br._bits, br._ones = bit_cache
-        sync = br.get(14)
+        br.pos = pos * 8
+        sync = br.read(14)
         if sync != 0b11111111111110:
             raise ValueError("corrupt FLAC: lost frame sync")
-        br.get(1)
-        br.get(1)
-        bs_code = br.get(4)
-        rate_code = br.get(4)
-        ch_code = br.get(4)
-        ss_code = br.get(3)
-        br.get(1)
+        br.read(1)
+        br.read(1)
+        bs_code = br.read(4)
+        rate_code = br.read(4)
+        ch_code = br.read(4)
+        ss_code = br.read(3)
+        br.read(1)
         _read_utf8ish(br)
         if bs_code == 6:
-            bs = br.get(8) + 1
+            bs = br.read(8) + 1
         elif bs_code == 7:
-            bs = br.get(16) + 1
+            bs = br.read(16) + 1
         elif bs_code in _BS_TABLE:
             bs = _BS_TABLE[bs_code]
         else:
             raise ValueError(f"reserved FLAC block size code {bs_code}")
         if rate_code == 12:
-            br.get(8)
+            br.read(8)
         elif rate_code in (13, 14):
-            br.get(16)
+            br.read(16)
         if ss_code not in (0, 0b100):
             raise ValueError("only 16-bit FLAC frames supported")
         br.align()
-        hdr_end = br.byte_pos()
-        crc8 = br.get(8)
+        hdr_end = br.pos >> 3
+        crc8 = br.read(8)
         if _crc8(data[frame_start:hdr_end]) != crc8:
             raise ValueError("FLAC frame header CRC-8 mismatch")
 
@@ -581,11 +535,9 @@ def decode_flac(data: bytes):
             extra = 1 if (ch_code == 8 and si == 1) \
                 or (ch_code == 9 and si == 0) \
                 or (ch_code == 10 and si == 1) else 0
-            subs.append(_decode_subframe(br, bs, 16 + extra))
+            subs.append(_decode_subframe(br, bs, 16 + extra, bit_cache))
         br.align()
-        if bit_cache is None and hasattr(br, "_bits"):
-            bit_cache = (br._bits, br._ones)
-        body_end = br.byte_pos()
+        body_end = br.pos >> 3
         crc16 = struct.unpack(">H", data[body_end:body_end + 2])[0] \
             if body_end + 2 <= len(data) else -1
         if _crc16(data[frame_start:body_end]) != crc16:

@@ -39,6 +39,8 @@ import struct
 
 import numpy as np
 
+from conduino_spark.operators.bitio import MsbReader, MsbWriter, PrefixDecoder
+
 # ---------------------------------------------------------------------------
 # tables (ITU-T T.81 Annex K — used by the ENCODER only; the decoder
 # reads whatever tables the file carries)
@@ -146,182 +148,78 @@ def _scaled_qt(base: "np.ndarray", quality: int) -> "np.ndarray":
 # canonical Huffman
 # ---------------------------------------------------------------------------
 
-def _huff_codes(bits, vals) -> "dict[int, tuple[int, int]]":
-    """value → (code, length) by the T.81 canonical assignment."""
-    out, code, k = {}, 0, 0
+def _huff_pairs(bits, vals) -> "list[tuple[int, tuple[int, int]]]":
+    """T.81 canonical assignment → ``(value, (length, code))`` in
+    code order (a list: a table that repeats a value keeps every
+    codeword)."""
+    out, code, k = [], 0, 0
     for length in range(1, 17):
         for _ in range(bits[length - 1]):
-            out[vals[k]] = (code, length)
+            out.append((vals[k], (length, code)))
             code += 1
             k += 1
         code <<= 1
     return out
 
 
-class _HuffDecoder:
-    """length-indexed canonical decode tables: (min_code, max_code,
-    first_value_index) per length — the classic T.81 DECODE proc."""
-
-    def __init__(self, bits, vals):
-        self.vals = list(vals)
-        self.mincode, self.maxcode, self.valptr = {}, {}, {}
-        code, k = 0, 0
-        for length in range(1, 17):
-            n = bits[length - 1]
-            if n:
-                self.valptr[length] = k
-                self.mincode[length] = code
-                code += n
-                k += n
-                self.maxcode[length] = code - 1
-            else:
-                self.maxcode[length] = -1
-            code <<= 1
-        # r13: 8-bit LUT fast path — entry = (value << 5) | hlen + 1
-        # for codes of <= 8 bits (the overwhelming majority of
-        # symbols), 0 = fall back to the canonical per-length walk
-        lut = [0] * 256
-        code, k = 0, 0
-        for length in range(1, 9):
-            for _ in range(bits[length - 1]):
-                base = code << (8 - length)
-                entry = (self.vals[k] << 5) | (length + 0x10)
-                for j in range(1 << (8 - length)):
-                    lut[base + j] = entry
-                code += 1
-                k += 1
-            code <<= 1
-        self.lut = lut
-
-    def read(self, br: "_BitReader") -> int:
-        e = self.lut[br.peek(8)]
-        if e:
-            br.consume((e & 0x1F) - 0x10)
-            return e >> 5
-        code, length = 0, 0
-        while True:
-            code = (code << 1) | br.bit()
-            length += 1
-            if length > 16:
-                raise ValueError("corrupt JPEG: Huffman code > 16 bits")
-            mx = self.maxcode.get(length, -1)
-            if mx >= 0 and code <= mx:
-                return self.vals[self.valptr[length]
-                                 + code - self.mincode[length]]
+def _huff_codes(bits, vals) -> "dict[int, tuple[int, int]]":
+    """value → (code, length) by the T.81 canonical assignment."""
+    return {v: (code, ln) for v, (ln, code) in _huff_pairs(bits, vals)}
 
 
-class _BitWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def put(self, code: int, length: int) -> None:
-        self.acc = (self.acc << length) | (code & ((1 << length) - 1))
-        self.n += length
-        while self.n >= 8:
-            b = (self.acc >> (self.n - 8)) & 0xFF
-            self.out.append(b)
-            if b == 0xFF:          # byte stuffing
-                self.out.append(0x00)
-            self.n -= 8
-        self.acc &= (1 << self.n) - 1
-
-    def pad(self) -> None:
-        """Pad with 1-bits to the byte boundary (T.81 fill bits) —
-        stuffing applies if the pad byte lands on 0xFF."""
-        if self.n:
-            self.put((1 << (8 - self.n)) - 1, 8 - self.n)
-
-    def raw_marker(self, byte2: int) -> None:
-        """Emit a literal marker (NOT stuffed) — caller must pad()
-        first so the stream is byte-aligned."""
-        assert self.n == 0
-        self.out += bytes([0xFF, byte2])
-
-    def flush(self) -> bytes:
-        self.pad()
-        return bytes(self.out)
+def _huff_decoder(bits, vals) -> PrefixDecoder:
+    """DHT table → decoder.  The walk reads a 17th bit before giving
+    up (the T.81 DECODE procedure), so a stream that ends inside an
+    invalid code reports truncation first."""
+    return PrefixDecoder(_huff_pairs(bits, vals), lsb_first=False,
+                         maxlen=17,
+                         error="corrupt JPEG: Huffman code > 16 bits")
 
 
-class _BitReader:
-    """entropy-coded segment reader: unstuffs 0xFF00, stops at any
-    other marker (caller handles RST).
+def _stuffed(bw: MsbWriter) -> bytes:
+    """A scan's entropy-coded bytes: ``bw`` padded with 1-bits to the
+    byte boundary (T.81 fill bits), then every 0xFF byte-stuffed with
+    0x00 (a pad byte landing on 0xFF is stuffed too)."""
+    pad = -bw.tell() & 7
+    bw.write((1 << pad) - 1, pad)
+    return bw.bytes().replace(b"\xff", b"\xff\x00")
 
-    r14 vectorization pass: the whole entropy segment is unstuffed
-    ONCE (C-level ``bytes.replace``) into 24-bit MSB window views —
-    every read is then pure window arithmetic on a Python list, no
-    per-byte accumulator fill (the r13 accumulator's ``_fill`` was
-    the progressive decoder's hottest path).  ``peek`` may look past
+
+_TRUNC = "truncated JPEG entropy stream"
+
+
+def _scan_reader(data: bytes, pos: int) -> "tuple[MsbReader, int]":
+    """Entropy-coded segment at byte ``pos`` → (reader over its
+    unstuffed bytes, position of the marker that ends it).
+
+    r14 vectorization pass: the whole segment is unstuffed ONCE
+    (C-level ``bytes.replace`` of 0xFF00) and read through the
+    reader's 24-bit windows — every read is then pure window
+    arithmetic, no per-byte accumulator fill.  A peek may look past
     the last real bit (virtual zeros — the Huffman LUT wants 8 bits
     of lookahead), but consuming a virtual bit still raises, which
     preserves the strict truncation behavior."""
+    n = len(data)
+    i = data.find(b"\xff", pos)
+    while i != -1:
+        if i + 1 >= n or data[i + 1] != 0x00:
+            break                        # marker (or trailing FF)
+        i = data.find(b"\xff", i + 2)
+    end = i if i != -1 else n
+    return MsbReader(data[pos:end].replace(b"\xff\x00", b"\xff"),
+                     eof=_TRUNC), end
 
-    __slots__ = ("d", "pos", "bitpos", "nbits", "w24")
 
-    def __init__(self, data: bytes, pos: int):
-        self.d = data
-        self._load_segment(pos)
-
-    def _load_segment(self, pos: int) -> None:
-        d = self.d
-        n = len(d)
-        i = d.find(b"\xff", pos)
-        while i != -1:
-            if i + 1 >= n or d[i + 1] != 0x00:
-                break                    # marker (or trailing FF)
-            i = d.find(b"\xff", i + 2)
-        end = i if i != -1 else n
-        u = d[pos:end].replace(b"\xff\x00", b"\xff")
-        self.pos = end                   # ON the terminating marker
-        self.bitpos = 0
-        self.nbits = len(u) * 8
-        a = np.frombuffer(u + b"\x00\x00\x00", np.uint8) \
-              .astype(np.uint32)
-        self.w24 = ((a[:-2] << np.uint32(16)) | (a[1:-1] << np.uint32(8))
-                    | a[2:]).tolist()
-
-    def peek(self, k: int) -> int:
-        p = self.bitpos
-        return (self.w24[p >> 3] >> (24 - k - (p & 7))) & ((1 << k) - 1)
-
-    def consume(self, k: int) -> None:
-        p = self.bitpos + k
-        if p > self.nbits:
-            raise ValueError("truncated JPEG entropy stream")
-        self.bitpos = p
-
-    def bit(self) -> int:
-        p = self.bitpos
-        if p >= self.nbits:
-            raise ValueError("truncated JPEG entropy stream")
-        self.bitpos = p + 1
-        return (self.w24[p >> 3] >> (23 - (p & 7))) & 1
-
-    def receive(self, length: int) -> int:
-        if not length:
-            return 0
-        p = self.bitpos
-        if p + length > self.nbits:
-            raise ValueError("truncated JPEG entropy stream")
-        self.bitpos = p + length
-        return (self.w24[p >> 3] >> (24 - length - (p & 7))) \
-            & ((1 << length) - 1)
-
-    def align_to_marker(self) -> "int | None":
-        """Drop partial pad bits; if an RST marker terminates the
-        segment (and at most 7 unconsumed bits remain — more means
-        the decoder lost sync before the restart), consume it and
-        return its index (0-7), else None."""
-        if self.nbits - self.bitpos >= 8:
-            return None
-        d = self.d
-        if (self.pos + 1 < len(d) and d[self.pos] == 0xFF
-                and 0xD0 <= d[self.pos + 1] <= 0xD7):
-            m = d[self.pos + 1] - 0xD0
-            self._load_segment(self.pos + 2)
-            return m
-        return None
+def _restart(data: bytes, br: MsbReader,
+             end: int) -> "tuple[MsbReader, int]":
+    """Restart interval boundary: drop the partial pad bits and
+    continue after the RST marker that must end the segment — with at
+    most 7 unconsumed bits (more means the decoder lost sync before
+    the restart)."""
+    if (br.nbits - br.pos < 8 and end + 1 < len(data)
+            and data[end] == 0xFF and 0xD0 <= data[end + 1] <= 0xD7):
+        return _scan_reader(data, end + 2)
+    raise ValueError("corrupt JPEG: missing RST marker")
 
 
 def _extend(v: int, t: int) -> int:
@@ -337,16 +235,16 @@ def _category(v: int) -> int:
 # entropy layer (unit-tested as an identity on quantized coefficients)
 # ---------------------------------------------------------------------------
 
-def _encode_block(bw: "_BitWriter", zz: "np.ndarray", pred: int,
+def _encode_block(bw: MsbWriter, zz: "np.ndarray", pred: int,
                   dc_codes, ac_codes) -> int:
     """Huffman-encode one zigzagged quantized block; returns the new
     DC predictor."""
     diff = int(zz[0]) - pred
     t = _category(diff)
     code, ln = dc_codes[t]
-    bw.put(code, ln)
+    bw.write(code, ln)
     if t:
-        bw.put(diff if diff >= 0 else diff + (1 << t) - 1, t)
+        bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
     run = 0
     for k in range(1, 64):
         v = int(zz[k])
@@ -355,41 +253,41 @@ def _encode_block(bw: "_BitWriter", zz: "np.ndarray", pred: int,
             continue
         while run > 15:
             code, ln = ac_codes[0xF0]     # ZRL
-            bw.put(code, ln)
+            bw.write(code, ln)
             run -= 16
         t = _category(v)
         code, ln = ac_codes[(run << 4) | t]
-        bw.put(code, ln)
-        bw.put(v if v >= 0 else v + (1 << t) - 1, t)
+        bw.write(code, ln)
+        bw.write(v if v >= 0 else v + (1 << t) - 1, t)
         run = 0
     if run:
         code, ln = ac_codes[0x00]         # EOB
-        bw.put(code, ln)
+        bw.write(code, ln)
     return int(zz[0])
 
 
-def _decode_block(br: "_BitReader", pred: int, dc: "_HuffDecoder",
-                  ac: "_HuffDecoder") -> "tuple[np.ndarray, int]":
+def _decode_block(br: MsbReader, pred: int, dc: PrefixDecoder,
+                  ac: PrefixDecoder) -> "tuple[np.ndarray, int]":
     """Huffman-decode one block → (zigzagged coefficients, new DC
     predictor).  r14: window reads inlined over local aliases (the
     one_block convention) — per-coefficient method calls dominated the
     baseline scan."""
     zz = [0] * 64                # plain list: scalar writes are hot
-    trunc = "truncated JPEG entropy stream"
+    trunc = _TRUNC
     w24 = br.w24
-    pos = br.bitpos
+    pos = br.pos
     nbits = br.nbits
     dlut = dc.lut
     e = dlut[(w24[pos >> 3] >> (16 - (pos & 7))) & 0xFF]
     if e:
-        pos += (e & 0x1F) - 0x10
+        pos += e & 15
         if pos > nbits:
             raise ValueError(trunc)
         t = e >> 5
     else:
-        br.bitpos = pos
-        t = dc.read(br)
-        pos = br.bitpos
+        br.pos = pos
+        t = dc.decode(br)
+        pos = br.pos
     if t:
         if pos + t > nbits:
             raise ValueError(trunc)
@@ -402,14 +300,14 @@ def _decode_block(br: "_BitReader", pred: int, dc: "_HuffDecoder",
     while k < 64:
         e = lut[(w24[pos >> 3] >> (16 - (pos & 7))) & 0xFF]
         if e:
-            pos += (e & 0x1F) - 0x10
+            pos += e & 15
             if pos > nbits:
                 raise ValueError(trunc)
             rs = e >> 5
         else:
-            br.bitpos = pos
-            rs = ac.read(br)
-            pos = br.bitpos
+            br.pos = pos
+            rs = ac.decode(br)
+            pos = br.pos
         r, t = rs >> 4, rs & 0x0F
         if t == 0:
             if r == 15:       # ZRL
@@ -425,7 +323,7 @@ def _decode_block(br: "_BitReader", pred: int, dc: "_HuffDecoder",
         pos += t
         zz[k] = v if v >= (1 << (t - 1)) else v - (1 << t) + 1
         k += 1
-    br.bitpos = pos
+    br.pos = pos
     return zz, pred
 
 
@@ -484,15 +382,16 @@ def encode_jpeg(arr, *, quality: int = 90, subsample: str = "444",
     ac_tabs = [_huff_codes(*_AC_LUMA), _huff_codes(*_AC_CHROMA)]
     tsel = [0] if gray else [0, 1, 1]
 
-    bw = _BitWriter()
+    bw = MsbWriter()
+    segs = []                   # stuffed segments + RST markers
     preds = [0] * len(samp)
     mcu_idx = rst_idx = 0
     for my in range(mcuy):
         for mx in range(mcux):
             if restart_interval and mcu_idx and \
                     mcu_idx % restart_interval == 0:
-                bw.pad()
-                bw.raw_marker(0xD0 + (rst_idx % 8))
+                segs += [_stuffed(bw), bytes([0xFF, 0xD0 + (rst_idx % 8)])]
+                bw = MsbWriter()
                 rst_idx += 1
                 preds = [0] * len(samp)
             mcu_idx += 1
@@ -503,7 +402,7 @@ def encode_jpeg(arr, *, quality: int = 90, subsample: str = "444",
                         preds[ci] = _encode_block(
                             bw, zz, preds[ci],
                             dc_tabs[tsel[ci]], ac_tabs[tsel[ci]])
-    scan = bw.flush()
+    scan = b"".join(segs) + _stuffed(bw)
 
     out = [b"\xff\xd8"]                                     # SOI
     for i, t in enumerate(qt[:1 if gray else 2]):
@@ -546,7 +445,7 @@ def decode_jpeg(data: bytes) -> "np.ndarray":
         raise ValueError("not a JPEG blob")
     pos = 2
     qt: "dict[int, np.ndarray]" = {}
-    huff: "dict[tuple[int, int], _HuffDecoder]" = {}
+    huff: "dict[tuple[int, int], PrefixDecoder]" = {}
     frame = None
     restart = 0
     while True:
@@ -582,7 +481,7 @@ def decode_jpeg(data: bytes) -> "np.ndarray":
                 bits = list(body[p + 1:p + 17])
                 n = sum(bits)
                 vals = list(body[p + 17:p + 17 + n])
-                huff[(cls, th)] = _HuffDecoder(bits, vals)
+                huff[(cls, th)] = _huff_decoder(bits, vals)
                 p += 17 + n
         elif m in (0xC0, 0xC1):                             # SOF0/1
             prec, fh, fw, nc = struct.unpack(">BHHB", body[:6])
@@ -637,7 +536,7 @@ def decode_jpeg(data: bytes) -> "np.ndarray":
     planes = [np.zeros((mcuy * 8 * c["v"], mcux * 8 * c["h"]))
               for c in comps]
 
-    br = _BitReader(data, pos)
+    br, end = _scan_reader(data, pos)
     preds = [0] * len(comps)
     mcu_count = 0
     # pass 1: entropy-decode every block into a Python grid; pass 2
@@ -648,8 +547,7 @@ def decode_jpeg(data: bytes) -> "np.ndarray":
     for my in range(mcuy):
         for mx in range(mcux):
             if restart and mcu_count and mcu_count % restart == 0:
-                if br.align_to_marker() is None:
-                    raise ValueError("corrupt JPEG: missing RST marker")
+                br, end = _restart(data, br, end)
                 preds = [0] * len(comps)
             for ci, c in enumerate(comps):
                 dc_t, ac_t = sel[c["id"]]
@@ -721,14 +619,14 @@ def _decode_progressive(data: bytes) -> "np.ndarray":
     (DC/AC × first/refinement), EOB runs, restart intervals."""
     pos = 2
     qt: "dict[int, np.ndarray]" = {}
-    huff: "dict[tuple[int, int], _HuffDecoder]" = {}
+    huff: "dict[tuple[int, int], PrefixDecoder]" = {}
     frame = None
     restart = 0
     coefs = None        # per comp: (bh_full, bw_full, 64) int32
     geo = None
     eobrun = 0
 
-    def decode_scan(br, scan_comps, sel, ss, se, ah, al):
+    def decode_scan(br, end, scan_comps, sel, ss, se, ah, al):
         nonlocal eobrun
         eobrun = 0
         preds = [0] * len(scan_comps)
@@ -750,9 +648,9 @@ def _decode_progressive(data: bytes) -> "np.ndarray":
             nonlocal eobrun
             cf = coefs[ci][by][bx]           # plain Python list: per-
             # coefficient access beats numpy scalar views ~5x
-            trunc = "truncated JPEG entropy stream"
+            trunc = _TRUNC
             w24 = br.w24
-            pos = br.bitpos
+            pos = br.pos
             nbits = br.nbits
             if ss == 0 and ah == 0:              # DC first
                 dh = dc_tabs[i]
@@ -761,14 +659,14 @@ def _decode_progressive(data: bytes) -> "np.ndarray":
                                      "table")
                 e = dh.lut[(w24[pos >> 3] >> (16 - (pos & 7))) & 0xFF]
                 if e:
-                    pos += (e & 0x1F) - 0x10
+                    pos += e & 15
                     if pos > nbits:
                         raise ValueError(trunc)
                     t = e >> 5
                 else:
-                    br.bitpos = pos
-                    t = dh.read(br)
-                    pos = br.bitpos
+                    br.pos = pos
+                    t = dh.decode(br)
+                    pos = br.pos
                 if t:
                     if pos + t > nbits:
                         raise ValueError(trunc)
@@ -778,13 +676,13 @@ def _decode_progressive(data: bytes) -> "np.ndarray":
                     preds[i] += v if v >= (1 << (t - 1)) \
                         else v - (1 << t) + 1
                 cf[0] = preds[i] << al
-                br.bitpos = pos
+                br.pos = pos
             elif ss == 0:                        # DC refinement
                 if pos >= nbits:
                     raise ValueError(trunc)
                 if (w24[pos >> 3] >> (23 - (pos & 7))) & 1:
                     cf[0] |= (1 << al)
-                br.bitpos = pos + 1
+                br.pos = pos + 1
             elif ah == 0:                        # AC first
                 if eobrun > 0:
                     eobrun -= 1
@@ -798,14 +696,14 @@ def _decode_progressive(data: bytes) -> "np.ndarray":
                 while k <= se:
                     e = lut[(w24[pos >> 3] >> (16 - (pos & 7))) & 0xFF]
                     if e:
-                        pos += (e & 0x1F) - 0x10
+                        pos += e & 15
                         if pos > nbits:
                             raise ValueError(trunc)
                         rs = e >> 5
                     else:
-                        br.bitpos = pos
-                        rs = ac.read(br)
-                        pos = br.bitpos
+                        br.pos = pos
+                        rs = ac.decode(br)
+                        pos = br.pos
                     r, s = rs >> 4, rs & 0x0F
                     if s == 0:
                         if r == 15:
@@ -832,7 +730,7 @@ def _decode_progressive(data: bytes) -> "np.ndarray":
                     cf[k] = (v if v >= (1 << (s - 1))
                              else v - (1 << s) + 1) << al
                     k += 1
-                br.bitpos = pos
+                br.pos = pos
             else:                                # AC refinement
                 ac = ac_tabs[i]
                 if ac is None:
@@ -846,14 +744,14 @@ def _decode_progressive(data: bytes) -> "np.ndarray":
                         e = lut[(w24[pos >> 3]
                                  >> (16 - (pos & 7))) & 0xFF]
                         if e:
-                            pos += (e & 0x1F) - 0x10
+                            pos += e & 15
                             if pos > nbits:
                                 raise ValueError(trunc)
                             rs = e >> 5
                         else:
-                            br.bitpos = pos
-                            rs = ac.read(br)
-                            pos = br.bitpos
+                            br.pos = pos
+                            rs = ac.decode(br)
+                            pos = br.pos
                         r, s = rs >> 4, rs & 0x0F
                         newval = 0
                         if s:
@@ -906,7 +804,7 @@ def _decode_progressive(data: bytes) -> "np.ndarray":
                                 cf[k] += p1 if cf[k] > 0 else m1
                         k += 1
                     eobrun -= 1
-                br.bitpos = pos
+                br.pos = pos
 
         if interleaved:                          # DC scans only (T.81)
             _, _, mcux, mcuy, _ = _comp_geometry(*frame)
@@ -914,9 +812,7 @@ def _decode_progressive(data: bytes) -> "np.ndarray":
             for my in range(mcuy):
                 for mx in range(mcux):
                     if restart and n and n % restart == 0:
-                        if br.align_to_marker() is None:
-                            raise ValueError("corrupt JPEG: missing "
-                                             "RST marker")
+                        br, end = _restart(data, br, end)
                         preds[:] = [0] * len(scan_comps)
                         eobrun = 0
                     for i, ci in enumerate(scan_comps):
@@ -934,13 +830,12 @@ def _decode_progressive(data: bytes) -> "np.ndarray":
             for by in range(g["bh"]):
                 for bx in range(g["bw"]):
                     if restart and n and n % restart == 0:
-                        if br.align_to_marker() is None:
-                            raise ValueError("corrupt JPEG: missing "
-                                             "RST marker")
+                        br, end = _restart(data, br, end)
                         preds[:] = [0]
                         eobrun = 0
                     one_block(0, ci, by, bx)
                     n += 1
+        return end
 
     while True:
         if pos + 2 > len(data):
@@ -978,7 +873,7 @@ def _decode_progressive(data: bytes) -> "np.ndarray":
                 bits = list(body[p + 1:p + 17])
                 nv = sum(bits)
                 vals = list(body[p + 17:p + 17 + nv])
-                huff[(cls, th)] = _HuffDecoder(bits, vals)
+                huff[(cls, th)] = _huff_decoder(bits, vals)
                 p += 17 + nv
         elif m == 0xC2:                                     # SOF2
             prec, fh, fw, nc = struct.unpack(">BHHB", body[:6])
@@ -1026,10 +921,9 @@ def _decode_progressive(data: bytes) -> "np.ndarray":
             if ns > 1 and ss != 0:
                 raise ValueError("progressive AC scans must be "
                                  "non-interleaved")
-            br = _BitReader(data, pos + 2 + seglen)
-            decode_scan(br, scan_comps, sel, ss, se, ah, al)
+            br, end = _scan_reader(data, pos + 2 + seglen)
             # resync to the next marker after the entropy data
-            pos = br.pos
+            pos = decode_scan(br, end, scan_comps, sel, ss, se, ah, al)
             # next marker = LAST 0xFF of a fill run followed by a
             # non-00/non-RST/non-FF byte (T.81 B.1.1.2 allows FF fill
             # bytes before any marker)
@@ -1181,7 +1075,7 @@ def encode_jpeg_progressive(arr, *, quality: int = 90,
         geo.append(((ch + 7) // 8, (cw + 7) // 8))
 
     def encode_scan(comp_ids, ss, se, ah, al):
-        bw = _BitWriter()
+        bw = MsbWriter()
         preds = [0] * len(comp_ids)
 
         def dc_first(i, zz):
@@ -1190,9 +1084,9 @@ def encode_jpeg_progressive(arr, *, quality: int = 90,
             preds[i] = s_val
             t = _category(diff)
             code, ln = dc_tabs[tsel[comp_ids[i]]][t]
-            bw.put(code, ln)
+            bw.write(code, ln)
             if t:
-                bw.put(diff if diff >= 0 else diff + (1 << t) - 1, t)
+                bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
 
         def ac_first(ci, zz):
             tab = ac_tabs[tsel[ci]]
@@ -1206,18 +1100,18 @@ def encode_jpeg_progressive(arr, *, quality: int = 90,
                     continue
                 while run > 15:
                     code, ln = tab[0xF0]
-                    bw.put(code, ln)
+                    bw.write(code, ln)
                     run -= 16
                 coded = sv if v > 0 else -sv
                 t = _category(coded)
                 code, ln = tab[(run << 4) | t]
-                bw.put(code, ln)
-                bw.put(coded if coded >= 0 else coded + (1 << t) - 1,
+                bw.write(code, ln)
+                bw.write(coded if coded >= 0 else coded + (1 << t) - 1,
                        t)
                 run = 0
             if run:
                 code, ln = tab[0x00]         # EOB (run of 1)
-                bw.put(code, ln)
+                bw.write(code, ln)
 
         def ac_refine(ci, zz):
             tab = ac_tabs[tsel[ci]]
@@ -1234,7 +1128,7 @@ def encode_jpeg_progressive(arr, *, quality: int = 90,
 
             def corr_flush():
                 for b in correction:
-                    bw.put(b, 1)
+                    bw.write(b, 1)
                 correction.clear()
 
             for nk in newly:
@@ -1248,13 +1142,13 @@ def encode_jpeg_progressive(arr, *, quality: int = 90,
                         run += 1
                         if run == 16:
                             code, ln = tab[0xF0]
-                            bw.put(code, ln)
+                            bw.write(code, ln)
                             corr_flush()
                             run = 0
                     k += 1
                 code, ln = tab[(run << 4) | 1]
-                bw.put(code, ln)
-                bw.put(1 if zz[nk] > 0 else 0, 1)
+                bw.write(code, ln)
+                bw.write(1 if zz[nk] > 0 else 0, 1)
                 corr_flush()
                 k = nk + 1
             # EOB with correction bits for the remaining history
@@ -1269,12 +1163,12 @@ def encode_jpeg_progressive(arr, *, quality: int = 90,
                 # the last newly-significant coefficient
                 if k <= se:
                     code, ln = tab[0x00]
-                    bw.put(code, ln)
+                    bw.write(code, ln)
                     for b in rest:
-                        bw.put(b, 1)
+                        bw.write(b, 1)
                 elif not newly:
                     code, ln = tab[0x00]
-                    bw.put(code, ln)
+                    bw.write(code, ln)
             return
 
         interleaved = len(comp_ids) > 1
@@ -1289,7 +1183,7 @@ def encode_jpeg_progressive(arr, *, quality: int = 90,
                                 if ss == 0 and ah == 0:
                                     dc_first(i, zz)
                                 else:
-                                    bw.put((zz[0] >> al) & 1, 1)
+                                    bw.write((zz[0] >> al) & 1, 1)
         else:
             ci = comp_ids[0]
             bh, bwid = geo[ci]
@@ -1299,12 +1193,12 @@ def encode_jpeg_progressive(arr, *, quality: int = 90,
                     if ss == 0 and ah == 0:
                         dc_first(0, zz)
                     elif ss == 0:
-                        bw.put((zz[0] >> al) & 1, 1)
+                        bw.write((zz[0] >> al) & 1, 1)
                     elif ah == 0:
                         ac_first(ci, zz)
                     else:
                         ac_refine(ci, zz)
-        return bw.flush()
+        return _stuffed(bw)
 
     out = [b"\xff\xd8"]
     for i, t in enumerate(qt[:1 if gray else 2]):

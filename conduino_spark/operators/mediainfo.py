@@ -185,6 +185,33 @@ def encode_mp3_stub(n_frames: int, *, kbps: int = 128,
 # Ogg (Vorbis / Opus) page walk
 # ---------------------------------------------------------------------------
 
+def _ogg_pages(data: bytes):
+    """Walk consecutive Ogg pages from byte 0 (stops at the first
+    missing 'OggS' capture pattern) → per page ``(start, header_type,
+    granule, serial, segment_table, body_start, body_end)``.
+    ``body_end`` may pass ``len(data)`` on a truncated last page —
+    callers decide whether that is an error."""
+    pos = 0
+    while pos + 27 <= len(data) and data[pos:pos + 4] == b"OggS":
+        granule, serial = struct.unpack("<qI", data[pos + 6:pos + 18])
+        n_segs = data[pos + 26]
+        seg_table = data[pos + 27:pos + 27 + n_segs]
+        body_start = pos + 27 + n_segs
+        body_end = body_start + sum(seg_table)
+        yield (pos, data[pos + 5], granule, serial, seg_table,
+               body_start, body_end)
+        pos = body_end
+
+
+def _ogg_page_crc_ok(data: bytes, start: int, end: int) -> bool:
+    """Page CRC check (poly 0x04C11DB7, unreflected), computed over
+    the page with its CRC field zeroed."""
+    page = bytearray(data[start:end])
+    want = struct.unpack("<I", page[22:26])[0]
+    page[22:26] = b"\x00" * 4
+    return _ogg_crc(bytes(page)) == want
+
+
 def ogg_info(data: bytes, *, verify_crc: bool = False) -> dict:
     """Walk Ogg pages → ``{codec, rate, channels, n_pages,
     duration_ms}``.  Codec/rate/channels come from the first packet's
@@ -194,29 +221,17 @@ def ogg_info(data: bytes, *, verify_crc: bool = False) -> dict:
     CRC (poly 0x04C11DB7, unreflected) and raises on corruption."""
     if data[:4] != b"OggS":
         raise ValueError("not an Ogg stream")
-    pos = 0
     first_payload = None
     stream_serial = None                     # serial of the first BOS
     last_granule = 0
     n_pages = 0
-    while pos + 27 <= len(data):
-        if data[pos:pos + 4] != b"OggS":
-            break
-        granule = struct.unpack("<q", data[pos + 6:pos + 14])[0]
-        serial = struct.unpack("<I", data[pos + 14:pos + 18])[0]
-        n_segs = data[pos + 26]
-        seg_table = data[pos + 27:pos + 27 + n_segs]
-        body_len = sum(seg_table)
-        body_start = pos + 27 + n_segs
-        if verify_crc:
-            page = bytearray(data[pos:body_start + body_len])
-            want = struct.unpack("<I", page[22:26])[0]
-            page[22:26] = b"\x00" * 4
-            if _ogg_crc(bytes(page)) != want:
-                raise ValueError(f"ogg: page {n_pages} CRC mismatch")
+    for start, _, granule, serial, _, body_start, body_end in \
+            _ogg_pages(data):
+        if verify_crc and not _ogg_page_crc_ok(data, start, body_end):
+            raise ValueError(f"ogg: page {n_pages} CRC mismatch")
         if stream_serial is None:
             stream_serial = serial
-            first_payload = data[body_start:body_start + body_len]
+            first_payload = data[body_start:body_end]
         # multiplexed/chained streams: duration and page count follow
         # the FIRST logical stream's serial only — another stream's
         # last page must not set this stream's granule clock
@@ -224,7 +239,6 @@ def ogg_info(data: bytes, *, verify_crc: bool = False) -> dict:
             if granule >= 0:
                 last_granule = granule
             n_pages += 1
-        pos = body_start + body_len
     if first_payload is None:
         raise ValueError("ogg: no pages found")
     if first_payload[:7] == b"\x01vorbis":

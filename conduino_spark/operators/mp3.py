@@ -33,6 +33,8 @@ import struct
 
 import numpy as np
 
+from conduino_spark.operators.bitio import MsbReader, MsbWriter
+from conduino_spark.operators.mediainfo import _MP3_BITRATES, _MP3_RATES
 from conduino_spark.operators.mp3_tables import (
     BIG_TABLES, COUNT1_A, LINBITS, PRETAB, SFB_LONG, SFB_SHORT,
     SYNTH_D, UNCERTIFIED_TABLES,
@@ -41,48 +43,12 @@ from conduino_spark.operators.mp3_tables import (
 __all__ = ["decode_mp3", "encode_mp3", "side_info_scan"]
 
 
-# ---------------------------------------------------------------------------
-# bit reader (MSB-first)
-# ---------------------------------------------------------------------------
-
-class _Bits:
-    __slots__ = ("data", "pos")
-
-    def __init__(self, data: bytes, bitpos: int = 0):
-        self.data = data
-        self.pos = bitpos
-
-    def read(self, n: int) -> int:
-        v = 0
-        d, p = self.data, self.pos
-        if (p + n) > len(d) * 8:
-            raise ValueError("mp3: bitstream overrun")
-        for _ in range(n):
-            v = (v << 1) | ((d[p >> 3] >> (7 - (p & 7))) & 1)
-            p += 1
-        self.pos = p
-        return v
-
-    def read1(self) -> int:
-        p = self.pos
-        if p >= len(self.data) * 8:
-            raise ValueError("mp3: bitstream overrun")
-        self.pos = p + 1
-        return (self.data[p >> 3] >> (7 - (p & 7))) & 1
+_EOF = "mp3: bitstream overrun"
 
 
 # ---------------------------------------------------------------------------
 # frame header (full fields — mediainfo._mp3_frame keeps only geometry)
 # ---------------------------------------------------------------------------
-
-_BITRATES_V1L3 = (0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192,
-                  224, 256, 320)
-_BITRATES_V2L3 = (0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128,
-                  144, 160)
-_RATES = {3: (44100, 48000, 32000),          # MPEG-1
-          2: (22050, 24000, 16000),          # MPEG-2
-          0: (11025, 12000, 8000)}           # MPEG-2.5
-
 
 def _parse_header(data: bytes, pos: int):
     """Layer III frame header at ``pos`` → dict or None."""
@@ -100,8 +66,8 @@ def _parse_header(data: bytes, pos: int):
     if br_idx in (0, 15) or sr_idx == 3:
         return None
     mpeg1 = ver_bits == 3
-    kbps = (_BITRATES_V1L3 if mpeg1 else _BITRATES_V2L3)[br_idx]
-    rate = _RATES[ver_bits][sr_idx]
+    kbps = _MP3_BITRATES[(1, 3) if mpeg1 else (2, 2)][br_idx]
+    rate = _MP3_RATES[ver_bits][sr_idx]
     pad = (b2 >> 1) & 1
     protection = not (b1 & 1)                # CRC present when bit==0
     mode = (b3 >> 6) & 0x3                   # 0 stereo 1 js 2 dual 3 mono
@@ -122,13 +88,13 @@ def _parse_header(data: bytes, pos: int):
 # side info (11172-3 2.4.1.7 / 13818-3 LSF layout)
 # ---------------------------------------------------------------------------
 
-def _read_side_info(br: _Bits, h: dict) -> dict:
+def _read_side_info(br: MsbReader, h: dict) -> dict:
     nch = h["nch"]
     si: dict = {}
     if h["mpeg1"]:
         si["main_data_begin"] = br.read(9)
         br.read(5 if nch == 1 else 3)        # private_bits
-        si["scfsi"] = [[br.read1() for _ in range(4)]
+        si["scfsi"] = [[br.read(1) for _ in range(4)]
                        for _ in range(nch)]
         ngr = 2
     else:
@@ -149,10 +115,10 @@ def _read_side_info(br: _Bits, h: dict) -> dict:
                     f"mp3: big_values {g['big_values']} > 288")
             g["global_gain"] = br.read(8)
             g["scalefac_compress"] = br.read(4 if h["mpeg1"] else 9)
-            g["window_switching"] = br.read1()
+            g["window_switching"] = br.read(1)
             if g["window_switching"]:
                 g["block_type"] = br.read(2)
-                g["mixed_block"] = br.read1()
+                g["mixed_block"] = br.read(1)
                 if g["block_type"] == 0:
                     raise ValueError("mp3: window_switching with "
                                      "block_type 0 is forbidden")
@@ -172,11 +138,11 @@ def _read_side_info(br: _Bits, h: dict) -> dict:
                 g["region0_count"] = br.read(4)
                 g["region1_count"] = br.read(3)
             if h["mpeg1"]:
-                g["preflag"] = br.read1()
+                g["preflag"] = br.read(1)
             else:
                 g["preflag"] = 0             # LSF: derived, not sent
-            g["scalefac_scale"] = br.read1()
-            g["count1table_select"] = br.read1()
+            g["scalefac_scale"] = br.read(1)
+            g["count1table_select"] = br.read(1)
             chs.append(g)
         grs.append(chs)
     si["granules"] = grs
@@ -199,7 +165,7 @@ _SLEN = ((0, 0), (0, 1), (0, 2), (0, 3), (3, 0), (1, 1), (1, 2),
          (4, 2), (4, 3))
 
 
-def _read_scalefactors_mpeg1(br: _Bits, g: dict, scfsi, prev) -> dict:
+def _read_scalefactors_mpeg1(br: MsbReader, g: dict, scfsi, prev) -> dict:
     """MPEG-1 scalefactor read → {'l': [22], 's': [[3][13]]} raw
     indices (NOT yet scaled); honors scfsi copy from granule 0."""
     slen1, slen2 = _SLEN[g["scalefac_compress"]]
@@ -278,7 +244,7 @@ def _lsf_slens(g: dict, *, intensity: bool) -> tuple:
     return slens, nsfb, preflag
 
 
-def _read_scalefactors_lsf(br: _Bits, g: dict, *,
+def _read_scalefactors_lsf(br: MsbReader, g: dict, *,
                            intensity: bool) -> dict:
     slens, nsfb, preflag = _lsf_slens(g, intensity=intensity)
     g["preflag"] = preflag
@@ -330,7 +296,7 @@ def _part2_bits_mpeg1(g: dict, scfsi, first_granule: bool) -> int:
 # Huffman spectral decode
 # ---------------------------------------------------------------------------
 
-def _decode_big_pair(br: _Bits, table: int):
+def _decode_big_pair(br: MsbReader, table: int):
     """One (x, y) pair from big-values table ``table`` (with linbits
     and sign handling)."""
     if table == 0:
@@ -348,23 +314,23 @@ def _decode_big_pair(br: _Bits, table: int):
                          "in the spec (tables 4 and 14 are unused)")
     node = codes
     while True:
-        node = node[br.read1()]
+        node = node[br.read(1)]
         if not isinstance(node, tuple):
             break
     x, y = node >> 4, node & 0xF
     lb = LINBITS[table]
     if x == 15 and lb:
         x += br.read(lb)
-    if x and br.read1():
+    if x and br.read(1):
         x = -x
     if y == 15 and lb:                       # y is 0..15 here (sign
         y += br.read(lb)                     # applied just below)
-    if y and br.read1():
+    if y and br.read(1):
         y = -y
     return x, y
 
 
-def _decode_count1(br: _Bits, table_b: bool):
+def _decode_count1(br: MsbReader, table_b: bool):
     """One (v, w, x, y) quadruple from the count1 region."""
     if table_b:
         bits = br.read(4)
@@ -377,14 +343,14 @@ def _decode_count1(br: _Bits, table_b: bool):
     else:
         node = COUNT1_A
         while True:
-            node = node[br.read1()]
+            node = node[br.read(1)]
             if not isinstance(node, tuple):
                 break
         quad = [(node >> 3) & 1, (node >> 2) & 1, (node >> 1) & 1,
                 node & 1]
     out = []
     for q in quad:
-        if q and br.read1():
+        if q and br.read(1):
             q = -q
         out.append(q)
     return out
@@ -442,14 +408,14 @@ def _get_lut(key, tree):
     return lut
 
 
-def _read_huffman(br: _Bits, g: dict, h: dict, bits_end: int):
+def _read_huffman(br: MsbReader, g: dict, h: dict, bits_end: int):
     """Spectral values ``is[576]`` + count1 extent; raises when the
     region decode overruns ``bits_end`` (conformance violation).
 
-    r15: decodes via flat window LUTs over a zero-padded local
-    buffer — one 24-bit window probe per symbol instead of a Python
-    tree step per bit.  The three zero pad bytes only ever supply
-    bits PAST the physical stream end; every decode that consumed a
+    r15: decodes via flat window LUTs over the reader's zero-padded
+    24-bit windows — one window probe per symbol instead of a Python
+    tree step per bit.  The zero pad only ever supplies bits PAST
+    the physical stream end; every decode that consumed a
     phantom bit is detected by the ``p > nbits`` checks below and
     handled exactly as the bit-at-a-time reader's overrun raise did
     (big values: loud ValueError; the final count1 quad: dropped and
@@ -457,9 +423,8 @@ def _read_huffman(br: _Bits, g: dict, h: dict, bits_end: int):
     xs = np.zeros(576, np.int32)
     r1, r2 = _region_boundaries(g, h)
     nbig = g["big_values"] * 2
-    d = br.data
-    nbits = len(d) * 8
-    dd = d + b"\x00\x00\x00"
+    w24 = br.w24
+    nbits = br.nbits
     p = br.pos
     pos = 0
     ts = g["table_select"]
@@ -478,29 +443,25 @@ def _read_huffman(br: _Bits, g: dict, h: dict, bits_end: int):
         msk = (1 << L) - 1
         sh = 24 - L
         while pos < seg_end:
-            b = p >> 3
-            idx = (((dd[b] << 16) | (dd[b + 1] << 8) | dd[b + 2])
-                   >> (sh - (p & 7))) & msk
+            idx = (w24[p >> 3] >> (sh - (p & 7))) & msk
             packed = lv[idx]
             p += ll[idx]
             x = packed >> 4
             y = packed & 15
             if x == 15 and lb:
-                b = p >> 3
-                x += (((dd[b] << 16) | (dd[b + 1] << 8) | dd[b + 2])
+                x += (w24[p >> 3]
                       >> (24 - lb - (p & 7))) & ((1 << lb) - 1)
                 p += lb
             if x:
-                if (dd[p >> 3] >> (7 - (p & 7))) & 1:
+                if (w24[p >> 3] >> (23 - (p & 7))) & 1:
                     x = -x
                 p += 1
             if y == 15 and lb:
-                b = p >> 3
-                y += (((dd[b] << 16) | (dd[b + 1] << 8) | dd[b + 2])
+                y += (w24[p >> 3]
                       >> (24 - lb - (p & 7))) & ((1 << lb) - 1)
                 p += lb
             if y:
-                if (dd[p >> 3] >> (7 - (p & 7))) & 1:
+                if (w24[p >> 3] >> (23 - (p & 7))) & 1:
                     y = -y
                 p += 1
             xs[pos] = x
@@ -526,22 +487,18 @@ def _read_huffman(br: _Bits, g: dict, h: dict, bits_end: int):
         qstart = pos
         if table_b:
             # table B: 4 sent bits are the INVERTED quad values
-            b = p >> 3
-            bits = (((dd[b] << 8) | dd[b + 1])
-                    >> (12 - (p & 7))) & 0xF
+            bits = (w24[p >> 3] >> (20 - (p & 7))) & 0xF
             p += 4
             node = 0xF ^ bits
         else:
-            b = p >> 3
-            idx = (((dd[b] << 16) | (dd[b + 1] << 8) | dd[b + 2])
-                   >> (shc - (p & 7))) & mskc
+            idx = (w24[p >> 3] >> (shc - (p & 7))) & mskc
             node = lvc[idx]
             p += llc[idx]
         quad = []
         for shift in (3, 2, 1, 0):
             q = (node >> shift) & 1
             if q:
-                if (dd[p >> 3] >> (7 - (p & 7))) & 1:
+                if (w24[p >> 3] >> (23 - (p & 7))) & 1:
                     q = -1
                 p += 1
             quad.append(q)
@@ -596,9 +553,9 @@ def _frames(data: bytes):
         if pos + h["flen"] > end:
             break
         body_start = pos + 4 + (2 if h["protection"] else 0)
-        br = _Bits(data, body_start * 8)
-        si = _read_side_info(br, h)
         md_start = body_start + _side_info_len(h)
+        br = MsbReader(data[body_start:md_start], eof=_EOF)
+        si = _read_side_info(br, h)
         main = data[md_start:pos + h["flen"]]
         yield h, si, main
         n += 1
@@ -905,7 +862,7 @@ def decode_mp3(data: bytes):
             reservoir = (reservoir + main)[-4096:]
             continue
         buf = (reservoir[len(reservoir) - mdb:] if mdb else b"") + main
-        br = _Bits(buf, 0)
+        br = MsbReader(buf, eof=_EOF)
         prev_sf = [None] * nch
         for gr_i, gr in enumerate(si["granules"]):
             for ch in range(nch):
@@ -983,7 +940,7 @@ _ENC_TABLES = None
 
 
 def _enc_tables():
-    """Lazy {table: {(x, y): codestring}} encode maps (certified
+    """Lazy {table: {(x, y): (code, length)}} encode maps (certified
     tables only) + per-table max value."""
     global _ENC_TABLES
     if _ENC_TABLES is None:
@@ -991,34 +948,14 @@ def _enc_tables():
                                                          _COUNT1_A_CODES)
         maps = {}
         for t, codes in _CODE_TABLES.items():
-            inv = {xy: code for code, xy in codes.items()}
+            inv = {xy: (int(code, 2), len(code))
+                   for code, xy in codes.items()}
             n = max(x for x, _ in inv) + 1
             maps[t] = (inv, n - 1)
-        c1 = {v: code for code, v in _COUNT1_A_CODES.items()}
+        c1 = {v: (int(code, 2), len(code))
+              for code, v in _COUNT1_A_CODES.items()}
         _ENC_TABLES = (maps, c1)
     return _ENC_TABLES
-
-
-class _BitWriter:
-    def __init__(self):
-        self.bits: list = []
-
-    def write(self, v: int, n: int):
-        for i in range(n - 1, -1, -1):
-            self.bits.append((v >> i) & 1)
-
-    def write_code(self, s: str):
-        self.bits.extend(1 if c == "1" else 0 for c in s)
-
-    def to_bytes(self) -> bytes:
-        bits = self.bits + [0] * (-len(self.bits) % 8)
-        out = bytearray()
-        for i in range(0, len(bits), 8):
-            b = 0
-            for c in bits[i:i + 8]:
-                b = (b << 1) | c
-            out.append(b)
-        return bytes(out)
 
 
 def _pick_table(maxv: int) -> int:
@@ -1066,9 +1003,9 @@ def _alias_forward(xr):
     return out
 
 
-def _encode_granule_channel(xr, sfb_l, maps, c1map):
-    """Quantize + Huffman-encode one granule-channel spectrum →
-    (payload_bits, side_dict)."""
+def _encode_granule_channel(xr, sfb_l, maps, c1map, bw: MsbWriter):
+    """Quantize + Huffman-encode one granule-channel spectrum onto the
+    frame's main-data writer ``bw`` → side_dict."""
     import math
     amax = np.abs(xr).max()
     if amax < 1e-10:
@@ -1099,7 +1036,7 @@ def _encode_granule_channel(xr, sfb_l, maps, c1map):
     r0c, r1c = 7, 7
     r1 = sfb_l[r0c + 1]
     r2 = sfb_l[r0c + r1c + 2]
-    bw = _BitWriter()
+    start = bw.tell()
     tsel = []
     for lo, hi in ((0, min(r1, big_end)),
                    (min(r1, big_end), min(r2, big_end)),
@@ -1112,7 +1049,7 @@ def _encode_granule_channel(xr, sfb_l, maps, c1map):
         inv, _cap = maps[t]
         for i in range(lo, hi, 2):
             xv, yv = int(xs[i]), int(xs[i + 1])
-            bw.write_code(inv[(abs(xv), abs(yv))])
+            bw.write_code(*inv[(abs(xv), abs(yv))])
             if xv:
                 bw.write(1 if xv < 0 else 0, 1)
             if yv:
@@ -1121,15 +1058,14 @@ def _encode_granule_channel(xr, sfb_l, maps, c1map):
         quad = [int(xs[j]) if j < 576 else 0 for j in range(i, i + 4)]
         packed = sum((1 if abs(v) else 0) << (3 - k)
                      for k, v in enumerate(quad))
-        bw.write_code(c1map[packed])
+        bw.write_code(*c1map[packed])
         for v in quad:
             if v:
                 bw.write(1 if v < 0 else 0, 1)
-    side = {"part2_3_length": len(bw.bits),
+    return {"part2_3_length": bw.tell() - start,
             "big_values": big_end // 2,
             "global_gain": gain,
             "table_select": tsel}
-    return bw.bits[:], side
 
 
 def encode_mp3(samples, rate: int = 44100, *, kbps: int = 128,
@@ -1162,12 +1098,12 @@ def encode_mp3(samples, rate: int = 44100, *, kbps: int = 128,
     states = [np.zeros(512) for _ in range(nch)]
     prev_subs = [np.zeros((18, 32)) for _ in range(nch)]
     frames = []
-    br_idx = _BITRATES_V1L3.index(kbps)
+    br_idx = _MP3_BITRATES[(1, 3)].index(kbps)
     # header mode/ext: mono 0xC0; stereo 0x00; MS joint 0x60
     b3 = 0xC0 if nch == 1 else (0x60 if ms_stereo else 0x00)
     si_len = 17 if nch == 1 else 32
     for f in range(n_frames):
-        granule_payloads = []
+        mw = MsbWriter()                     # main data, all granules
         side = []
         for gr in range(2):
             xrs = []
@@ -1188,14 +1124,12 @@ def encode_mp3(samples, rate: int = 44100, *, kbps: int = 128,
                 s2 = np.sqrt(2.0)
                 xrs = [(xrs[0] + xrs[1]) / s2, (xrs[0] - xrs[1]) / s2]
             for c in range(nch):
-                payload, g = _encode_granule_channel(xrs[c], sfb_l,
-                                                     maps, c1map)
-                granule_payloads.append(payload)
-                side.append(g)
+                side.append(_encode_granule_channel(xrs[c], sfb_l,
+                                                    maps, c1map, mw))
         # frame assembly
         hdr = bytes([0xFF, 0xFA | 0x01,      # MPEG-1 L3, no CRC
                      (br_idx << 4) | (sr_idx << 2), b3])
-        bw = _BitWriter()
+        bw = MsbWriter()
         bw.write(0, 9)                       # main_data_begin = 0
         bw.write(0, 5 if nch == 1 else 3)    # private bits
         bw.write(0, 4 * nch)                 # scfsi
@@ -1212,12 +1146,9 @@ def encode_mp3(samples, rate: int = 44100, *, kbps: int = 128,
             bw.write(0, 1)                   # preflag
             bw.write(0, 1)                   # scalefac_scale
             bw.write(0, 1)                   # count1table A
-        si_bytes = bw.to_bytes()
+        si_bytes = bw.bytes()
         assert len(si_bytes) == si_len
-        main_bits = [b for p in granule_payloads for b in p]
-        mw = _BitWriter()
-        mw.bits = main_bits
-        main_bytes = mw.to_bytes()
+        main_bytes = mw.bytes()
         flen = 144 * kbps * 1000 // rate     # no padding bit
         room = flen - 4 - si_len
         if len(main_bytes) > room:

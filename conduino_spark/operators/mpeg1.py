@@ -60,6 +60,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from conduino_spark.operators.bitio import MsbReader, MsbWriter
 from conduino_spark.operators.jpeg import _ZIGZAG, _dct8, _idct8
 
 __all__ = ["decode_mpeg1", "encode_mpeg1", "mpeg1_info",
@@ -281,91 +282,31 @@ _validate_tables()
 # bit I/O (MSB-first)
 # ---------------------------------------------------------------------------
 
-class _Bits:
-    __slots__ = ("data", "pos", "_n")
-
-    def __init__(self, data: bytes, bitpos: int = 0):
-        self.data = data
-        self.pos = bitpos
-        self._n = len(data) * 8
-
-    def read(self, n: int) -> int:
-        p = self.pos
-        if p + n > self._n:
-            raise ValueError("mpeg1: bitstream truncated")
-        v = 0
-        d = self.data
-        for _ in range(n):
-            v = (v << 1) | ((d[p >> 3] >> (7 - (p & 7))) & 1)
-            p += 1
-        self.pos = p
-        return v
-
-    def read1(self) -> int:
-        p = self.pos
-        if p >= self._n:
-            raise ValueError("mpeg1: bitstream truncated")
-        self.pos = p + 1
-        return (self.data[p >> 3] >> (7 - (p & 7))) & 1
-
-    def peek(self, n: int) -> int:
-        p, v = self.pos, 0
-        d = self.data
-        for _ in range(n):
-            if p >= self._n:
-                v <<= 1             # virtual zero padding at the end
-            else:
-                v = (v << 1) | ((d[p >> 3] >> (7 - (p & 7))) & 1)
-                p += 1
-        return v
-
-    def vlc(self, codes: dict, what: str, maxlen: int = 12):
-        """Longest-prefix decode against a {bitstring: value} table."""
-        s = ""
-        for _ in range(maxlen):
-            s += "1" if self.read1() else "0"
-            if s in codes:
-                return codes[s]
-        raise ValueError(f"mpeg1: invalid {what} code {s!r}")
+_EOF = "mpeg1: bitstream truncated"
 
 
-class _BitWriter:
-    __slots__ = ("buf", "cur", "n")
+def _vlc(br: MsbReader, codes: dict, what: str, maxlen: int = 12):
+    """Longest-prefix decode against a {bitstring: value} table."""
+    s = ""
+    for _ in range(maxlen):
+        s += "1" if br.read(1) else "0"
+        if s in codes:
+            return codes[s]
+    raise ValueError(f"mpeg1: invalid {what} code {s!r}")
 
-    def __init__(self):
-        self.buf = bytearray()
-        self.cur = 0
-        self.n = 0
 
-    def write(self, v: int, n: int) -> None:
-        for i in range(n - 1, -1, -1):
-            self.cur = (self.cur << 1) | ((v >> i) & 1)
-            self.n += 1
-            if self.n == 8:
-                self.buf.append(self.cur)
-                self.cur = 0
-                self.n = 0
-
-    def write_code(self, code: str) -> None:
-        for c in code:
-            self.write(int(c), 1)
-
-    def align(self) -> None:
-        while self.n:
-            self.write(0, 1)
-
-    def bytes(self) -> bytes:
-        self.align()
-        return bytes(self.buf)
+def _put(bw: MsbWriter, code: str) -> None:
+    """Append a table codeword given as its bitstring."""
+    bw.write(int(code, 2), len(code))
 
 
 # ---------------------------------------------------------------------------
 # block-level decode
 # ---------------------------------------------------------------------------
 
-def _decode_dc(br: _Bits, luma: bool) -> int:
-    size = br.vlc(DC_SIZE_LUMA if luma else DC_SIZE_CHROMA,
-                  "dct_dc_size")
+def _decode_dc(br: MsbReader, luma: bool) -> int:
+    size = _vlc(br, DC_SIZE_LUMA if luma else DC_SIZE_CHROMA,
+                "dct_dc_size")
     if size == 0:
         return 0
     bits = br.read(size)
@@ -374,7 +315,7 @@ def _decode_dc(br: _Bits, luma: bool) -> int:
     return bits - ((1 << size) - 1)
 
 
-def _decode_escape_level(br: _Bits) -> int:
+def _decode_escape_level(br: MsbReader) -> int:
     b = br.read(8)
     if b == 0:
         lvl = br.read(8)
@@ -389,7 +330,7 @@ def _decode_escape_level(br: _Bits) -> int:
     return b - 256 if b > 128 else b
 
 
-def _decode_intra_block(br: _Bits, luma: bool, dc_pred: int,
+def _decode_intra_block(br: MsbReader, luma: bool, dc_pred: int,
                         qscale: int, iq: np.ndarray):
     """One intra block → (8,8 float spatial samples, new dc predictor).
     Reconstruction per 11172-2 2.4.4.1: oddification mismatch control,
@@ -403,7 +344,7 @@ def _decode_intra_block(br: _Bits, luma: bool, dc_pred: int,
     while True:
         code = ""
         for _ in range(12):
-            code += "1" if br.read1() else "0"
+            code += "1" if br.read(1) else "0"
             if code == AC_EOB:
                 break
             if code == AC_ESCAPE:
@@ -416,7 +357,7 @@ def _decode_intra_block(br: _Bits, luma: bool, dc_pred: int,
                 break
             if code in AC_HEAD:
                 run, level = AC_HEAD[code]
-                if br.read1():
+                if br.read(1):
                     level = -level
                 i += run + 1
                 if i > 63:
@@ -446,7 +387,7 @@ def _decode_intra_block(br: _Bits, luma: bool, dc_pred: int,
     return _idct8(coef.reshape(8, 8)), dc
 
 
-def _decode_nonintra_zz(br: _Bits) -> np.ndarray:
+def _decode_nonintra_zz(br: MsbReader) -> np.ndarray:
     """Run-level decode of one coded non-intra block → zigzag levels
     (r15).  The whole block (index 0 included) is run-level coded;
     the FIRST coefficient uses B.5c's 'first' context where the
@@ -459,14 +400,14 @@ def _decode_nonintra_zz(br: _Bits) -> np.ndarray:
         code = ""
         if first:
             first = False
-            if br.read1():
-                zz[0] = -1 if br.read1() else 1
+            if br.read(1):
+                zz[0] = -1 if br.read(1) else 1
                 i = 0
                 continue
             code = "0"
         matched = False
         for _ in range(12):
-            code += "1" if br.read1() else "0"
+            code += "1" if br.read(1) else "0"
             if code == AC_EOB:
                 matched = True
                 break
@@ -481,7 +422,7 @@ def _decode_nonintra_zz(br: _Bits) -> np.ndarray:
                 break
             if code in AC_HEAD:
                 run, level = AC_HEAD[code]
-                if br.read1():
+                if br.read(1):
                     level = -level
                 i += run + 1
                 if i > 63:
@@ -522,10 +463,10 @@ def _reconstruct_nonintra(zz: np.ndarray, qscale: int,
 # motion vectors
 # ---------------------------------------------------------------------------
 
-def _decode_mv_component(br: _Bits, f_code: int, pred: int) -> int:
-    code = br.vlc(MOTION_CODE, "motion_code")
+def _decode_mv_component(br: MsbReader, f_code: int, pred: int) -> int:
+    code = _vlc(br, MOTION_CODE, "motion_code")
     if code:
-        if br.read1():
+        if br.read(1):
             code = -code
     f = 1 << (f_code - 1)
     if f > 1 and code != 0:
@@ -618,7 +559,7 @@ def _find_start_codes(data: bytes):
     return out
 
 
-def _parse_seq_header(br: _Bits) -> dict:
+def _parse_seq_header(br: MsbReader) -> dict:
     w = br.read(12)
     h = br.read(12)
     if w == 0 or h == 0:
@@ -628,21 +569,21 @@ def _parse_seq_header(br: _Bits) -> dict:
     if rate_code not in PICTURE_RATES:
         raise ValueError(f"mpeg1: reserved picture_rate {rate_code}")
     bitrate = br.read(18)
-    if not br.read1():
+    if not br.read(1):
         raise ValueError("mpeg1: sequence-header marker bit 0")
     vbv = br.read(10)
-    constrained = br.read1()
+    constrained = br.read(1)
     # quant matrices kept in ZIGZAG order (reconstruction indexes by
     # zigzag position; custom matrices transmit in zigzag order
     # already, 11172-2 2.4.3.2)
     iq_zz = DEFAULT_INTRA_Q[_ZIGZAG]
-    if br.read1():
+    if br.read(1):
         iq_zz = np.array([br.read(8) for _ in range(64)],
                          dtype=np.int64)
         if (iq_zz == 0).any():
             raise ValueError("mpeg1: zero in intra quant matrix")
     nq = DEFAULT_NONINTRA_Q          # flat 16: zigzag == row-major
-    if br.read1():                   # custom non-intra matrix (r15:
+    if br.read(1):                   # custom non-intra matrix (r15:
         # used by the coded-block residual path; zigzag order)
         nq = np.array([br.read(8) for _ in range(64)], dtype=np.int64)
         if (nq == 0).any():
@@ -729,14 +670,14 @@ def _decode_picture(slices, seq, fwd: "_PlaneSet | None",
     for sval, payload in slices:
         if not 1 <= sval <= mbh:
             raise ValueError(f"mpeg1: slice row {sval} > {mbh}")
-        br = _Bits(payload)
+        br = MsbReader(payload, eof=_EOF)
         qscale = br.read(5)
         if qscale == 0:
             raise ValueError("mpeg1: quantizer_scale 0")
         while br.peek(1) == 1:       # extra slice information
-            br.read1()
+            br.read(1)
             br.read(8)
-        br.read1()
+        br.read(1)
         mb_addr = (sval - 1) * mbw - 1
         dc_y = dc_cb = dc_cr = 1024
         mv_fy = mv_fx = mv_by = mv_bx = 0
@@ -747,11 +688,11 @@ def _decode_picture(slices, seq, fwd: "_PlaneSet | None",
         while True:
             # slice ends when only zero stuffing remains before the
             # next (byte-aligned) start code
-            if br.pos >= br._n or br.peek(23) == 0:
+            if br.pos >= br.nbits or br.peek(23) == 0:
                 break
             inc = 0
             while True:
-                v = br.vlc(ADDR_INC, "macroblock_address_increment")
+                v = _vlc(br, ADDR_INC, "macroblock_address_increment")
                 if v == "stuff":
                     continue
                 if v == "esc":
@@ -827,7 +768,7 @@ def _decode_picture(slices, seq, fwd: "_PlaneSet | None",
                 # dct_dc_size chains as intra — certified B.5a/b; no
                 # AC, no EOB), then the end_of_macroblock '1' bit.
                 # A DC-only block reconstructs flat at dc/8.
-                if br.read1() != 1:
+                if br.read(1) != 1:
                     raise ValueError(
                         "mpeg1: invalid D-picture macroblock_type")
                 y0, x0 = row * 16, col * 16
@@ -850,19 +791,19 @@ def _decode_picture(slices, seq, fwd: "_PlaneSet | None",
                         f"mpeg1: intra DC {dc_cr} out of range")
                 _store_block(rec.cr, row * 8, col * 8,
                              np.full((8, 8), dc_cr / 8.0))
-                if br.read1() != 1:
+                if br.read(1) != 1:
                     raise ValueError(
                         "mpeg1: end_of_macroblock bit missing")
                 continue
             if ptype == 1:
-                quant, mf, mbk, pattern, intra = br.vlc(
-                    MB_TYPE_I, "macroblock_type(I)")
+                quant, mf, mbk, pattern, intra = _vlc(
+                    br, MB_TYPE_I, "macroblock_type(I)")
             elif ptype == 2:
-                quant, mf, mbk, pattern, intra = br.vlc(
-                    MB_TYPE_P, "macroblock_type(P)")
+                quant, mf, mbk, pattern, intra = _vlc(
+                    br, MB_TYPE_P, "macroblock_type(P)")
             else:
-                quant, mf, mbk, pattern, intra = br.vlc(
-                    MB_TYPE_B, "macroblock_type(B)")
+                quant, mf, mbk, pattern, intra = _vlc(
+                    br, MB_TYPE_B, "macroblock_type(B)")
             if quant:
                 qscale = br.read(5)
                 if qscale == 0:
@@ -924,7 +865,7 @@ def _decode_picture(slices, seq, fwd: "_PlaneSet | None",
             if not pattern:
                 store_mb(row, col, py, pcb, pcr)
                 continue
-            cbp = br.vlc(CBP, "coded_block_pattern")
+            cbp = _vlc(br, CBP, "coded_block_pattern")
             y0, x0 = row * 16, col * 16
             for bi, (dy, dx) in enumerate(
                     ((0, 0), (0, 8), (8, 0), (8, 8))):
@@ -1024,7 +965,7 @@ def decode_mpeg1(data: bytes, max_frames: "int | None" = None):
     for code, s, e in codes:
         body = data[s:e]
         if code == 0xB3:
-            br = _Bits(body)
+            br = MsbReader(body, eof=_EOF)
             seq = _parse_seq_header(br)
         elif code == 0xB8:           # GOP header: reorder boundary
             flush()
@@ -1040,7 +981,7 @@ def decode_mpeg1(data: bytes, max_frames: "int | None" = None):
             if max_frames is not None and len(frames) >= max_frames:
                 return (seq["fps"], (seq["w"], seq["h"]),
                         frames[:max_frames])
-            br = _Bits(body)
+            br = MsbReader(body, eof=_EOF)
             tref = br.read(10)
             ptype = br.read(3)
             br.read(16)              # vbv_delay
@@ -1048,12 +989,12 @@ def decode_mpeg1(data: bytes, max_frames: "int | None" = None):
             if ptype == 1:
                 fpf, fcf = 0, 1
             elif ptype in (2, 3):
-                fpf = br.read1()
+                fpf = br.read(1)
                 fcf = br.read(3)
                 if fcf == 0:
                     raise ValueError("mpeg1: forward_f_code 0")
                 if ptype == 3:
-                    fpb = br.read1()
+                    fpb = br.read(1)
                     fcb = br.read(3)
                     if fcb == 0:
                         raise ValueError("mpeg1: backward_f_code 0")
@@ -1095,7 +1036,7 @@ def mpeg1_info(data: bytes) -> dict:
     bitrate, picture count + types from the start-code walk."""
     if len(data) < 16 or data[:4] != b"\x00\x00\x01\xb3":
         raise ValueError("not an MPEG-1 video elementary stream")
-    br = _Bits(data[4:])
+    br = MsbReader(data[4:], eof=_EOF)
     seq = _parse_seq_header(br)
     types = []
     i = data.find(b"\x00\x00\x01\x00")
@@ -1112,13 +1053,13 @@ def mpeg1_info(data: bytes) -> dict:
 # encoder (conformant subset: I + skip/MC/intra P, 1 slice per MB row)
 # ---------------------------------------------------------------------------
 
-def _encode_dc(bw: _BitWriter, diff: int, luma: bool) -> None:
+def _encode_dc(bw: MsbWriter, diff: int, luma: bool) -> None:
     table = DC_SIZE_LUMA if luma else DC_SIZE_CHROMA
     inv = {v: k for k, v in table.items()}
     size = 0 if diff == 0 else max(1, abs(diff).bit_length())
     if size > 8:
         raise ValueError(f"mpeg1: DC differential {diff} too large")
-    bw.write_code(inv[size])
+    _put(bw, inv[size])
     if size:
         bits = diff if diff > 0 else diff + (1 << size) - 1
         bw.write(bits, size)
@@ -1127,17 +1068,17 @@ def _encode_dc(bw: _BitWriter, diff: int, luma: bool) -> None:
 _AC_INV = {v: k for k, v in AC_HEAD.items()}
 
 
-def _encode_ac(bw: _BitWriter, run: int, level: int) -> None:
+def _encode_ac(bw: MsbWriter, run: int, level: int) -> None:
     key = (run, abs(level))
     if key in _AC_INV:
-        bw.write_code(_AC_INV[key])
+        _put(bw, _AC_INV[key])
         bw.write(1 if level < 0 else 0, 1)
         return
     # escape (fully specified fixed-length coding — accepted by every
     # decoder; the uncertified VLC tail is never emitted)
     if not -255 <= level <= 255 or level == 0:
         raise ValueError(f"mpeg1: AC level {level} out of escape range")
-    bw.write_code(AC_ESCAPE)
+    _put(bw, AC_ESCAPE)
     bw.write(run, 6)
     if level > 127:
         bw.write(0, 8)
@@ -1163,7 +1104,7 @@ def _quantize_intra(block: np.ndarray, qscale: int,
     return out
 
 
-def _encode_intra_block(bw: _BitWriter, block: np.ndarray, luma: bool,
+def _encode_intra_block(bw: MsbWriter, block: np.ndarray, luma: bool,
                         dc_pred: int, qscale: int,
                         iq_zz: np.ndarray) -> int:
     zz = _quantize_intra(block, qscale, iq_zz)
@@ -1174,11 +1115,11 @@ def _encode_intra_block(bw: _BitWriter, block: np.ndarray, luma: bool,
     for i in nz:
         _encode_ac(bw, int(i) - last - 1, int(zz[1:][i]))
         last = int(i)
-    bw.write_code(AC_EOB)
+    _put(bw, AC_EOB)
     return dc
 
 
-def _encode_mv_component(bw: _BitWriter, delta: int,
+def _encode_mv_component(bw: MsbWriter, delta: int,
                          f_code: int = 1) -> None:
     """Code one motion-vector delta at any f_code (r15): modulo-32f
     wrap into [-16f, 16f), |motion_code| = ceil(|delta|/f) with
@@ -1193,11 +1134,11 @@ def _encode_mv_component(bw: _BitWriter, delta: int,
         delta -= rng
     a = abs(delta)
     if a == 0:
-        bw.write_code(inv[0])
+        _put(bw, inv[0])
         return
     c = (a + f - 1) // f             # |motion_code| in 1..16
     r = a - (1 + f * (c - 1))        # residual in [0, f-1]
-    bw.write_code(inv[c])
+    _put(bw, inv[c])
     bw.write(1 if delta < 0 else 0, 1)
     if f_code > 1:
         bw.write(r, f_code - 1)
@@ -1220,7 +1161,7 @@ def _quantize_nonintra(block: np.ndarray, qscale: int,
     return np.sign(zz).astype(np.int64) * lv
 
 
-def _encode_nonintra_block(bw: _BitWriter, zz: np.ndarray) -> None:
+def _encode_nonintra_block(bw: MsbWriter, zz: np.ndarray) -> None:
     """Run-level code one coded block (must be nonzero): B.5c with the
     'first' context — (0, ±1) opens as '1'+sign (EOB cannot open)."""
     nz = np.nonzero(zz)[0]
@@ -1236,7 +1177,7 @@ def _encode_nonintra_block(bw: _BitWriter, zz: np.ndarray) -> None:
             _encode_ac(bw, run, level)
         first = False
         last = int(i)
-    bw.write_code(AC_EOB)
+    _put(bw, AC_EOB)
 
 
 def _find_exact_mv(ref: _PlaneSet, yp, cbp, crp, row: int,
@@ -1376,7 +1317,7 @@ def encode_mpeg1(frames, fps: float = 25.0, *, qscale: int = 6,
 
     out = bytearray()
     # sequence header
-    bw = _BitWriter()
+    bw = MsbWriter()
     bw.write(w, 12)
     bw.write(h, 12)
     bw.write(1, 4)                   # square pels
@@ -1395,7 +1336,7 @@ def encode_mpeg1(frames, fps: float = 25.0, *, qscale: int = 6,
     out += b"\x00\x00\x01\xb3" + bw.bytes()
 
     def gop_header() -> bytes:
-        g = _BitWriter()
+        g = MsbWriter()
         g.write(0, 25)               # time code 0
         g.write(1, 1)                # closed gop
         g.write(0, 1)
@@ -1428,7 +1369,7 @@ def encode_mpeg1(frames, fps: float = 25.0, *, qscale: int = 6,
             rec.cb[:] = fwd_rec.cb
             rec.cr[:] = fwd_rec.cr
         pic = bytearray()
-        bw = _BitWriter()
+        bw = MsbWriter()
         bw.write(tref % 1024, 10)
         bw.write(ptype, 3)
         bw.write(0xFFFF, 16)         # vbv_delay: variable
@@ -1442,7 +1383,7 @@ def encode_mpeg1(frames, fps: float = 25.0, *, qscale: int = 6,
         inv_addr = {v: k for k, v in ADDR_INC.items()
                     if isinstance(v, int)}
         for row in range(mbh):
-            bw = _BitWriter()
+            bw = MsbWriter()
             bw.write(qscale, 5)
             bw.write(0, 1)           # no extra slice info
             dc_y = dc_cb = dc_cr = 1024
@@ -1541,9 +1482,9 @@ def encode_mpeg1(frames, fps: float = 25.0, *, qscale: int = 6,
                 inc = pending_skip + 1
                 pending_skip = 0
                 while inc > 33:
-                    bw.write_code("00000001000")
+                    _put(bw, "00000001000")
                     inc -= 33
-                bw.write_code(inv_addr[inc])
+                _put(bw, inv_addr[inc])
                 if inc > 1 and ptype == 2:
                     # P predictors reset across skipped macroblocks
                     dc_y = dc_cb = dc_cr = 1024
@@ -1553,7 +1494,7 @@ def encode_mpeg1(frames, fps: float = 25.0, *, qscale: int = 6,
                 y0, x0 = row * 16, col * 16
                 if ptype == 1:
                     emit_addr(col)
-                    bw.write_code("1")          # intra
+                    _put(bw, "1")          # intra
                     emit_intra(col)
                     continue
                 if ptype == 2:
@@ -1566,7 +1507,7 @@ def encode_mpeg1(frames, fps: float = 25.0, *, qscale: int = 6,
                                         row, col, mv_search, fcode)
                     if mv is not None:
                         emit_addr(col)
-                        bw.write_code("001")    # MC, not coded
+                        _put(bw, "001")    # MC, not coded
                         _encode_mv_component(bw, mv[1] - mvp_f[0],
                                              fcode)
                         _encode_mv_component(bw, mv[0] - mvp_f[1],
@@ -1595,7 +1536,7 @@ def encode_mpeg1(frames, fps: float = 25.0, *, qscale: int = 6,
                             dc_y = dc_cb = dc_cr = 1024
                             if cbp_bits == 0:
                                 # quantized to nothing: MC not coded
-                                bw.write_code("001")
+                                _put(bw, "001")
                                 _encode_mv_component(
                                     bw, mv[1] - mvp_f[0], fcode)
                                 _encode_mv_component(
@@ -1608,23 +1549,23 @@ def encode_mpeg1(frames, fps: float = 25.0, *, qscale: int = 6,
                                        col * 8:col * 8 + 8] = pcr
                                 continue
                             if mv == (0, 0):
-                                bw.write_code("01")   # no MC, coded
+                                _put(bw, "01")   # no MC, coded
                                 mvp_f[0] = mvp_f[1] = 0
                             else:
-                                bw.write_code("1")    # MC, coded
+                                _put(bw, "1")    # MC, coded
                                 _encode_mv_component(
                                     bw, mv[1] - mvp_f[0], fcode)
                                 _encode_mv_component(
                                     bw, mv[0] - mvp_f[1], fcode)
                                 mvp_f[:] = [mv[1], mv[0]]
-                            bw.write_code(_CBP_INV[cbp_bits])
+                            _put(bw, _CBP_INV[cbp_bits])
                             for z in zzs:
                                 if z is not None:
                                     _encode_nonintra_block(bw, z)
                             store_coded(col, py, pcb, pcr, zzs)
                             continue
                     emit_addr(col)
-                    bw.write_code("00011")      # P intra
+                    _put(bw, "00011")      # P intra
                     emit_intra(col)
                     mvp_f[0] = mvp_f[1] = 0
                     continue
@@ -1655,7 +1596,7 @@ def encode_mpeg1(frames, fps: float = 25.0, *, qscale: int = 6,
                                      row, col, mv_search, fcode)
                 if mvf is not None:
                     emit_addr(col)
-                    bw.write_code("0010")       # fwd, not coded
+                    _put(bw, "0010")       # fwd, not coded
                     _encode_mv_component(bw, mvf[1] - mvp_f[0], fcode)
                     _encode_mv_component(bw, mvf[0] - mvp_f[1], fcode)
                     mvp_f[:] = [mvf[1], mvf[0]]
@@ -1673,7 +1614,7 @@ def encode_mpeg1(frames, fps: float = 25.0, *, qscale: int = 6,
                                      row, col, mv_search, fcode)
                 if mvb is not None:
                     emit_addr(col)
-                    bw.write_code("010")        # bwd, not coded
+                    _put(bw, "010")        # bwd, not coded
                     _encode_mv_component(bw, mvb[1] - mvp_b[0], fcode)
                     _encode_mv_component(bw, mvb[0] - mvp_b[1], fcode)
                     mvp_b[:] = [mvb[1], mvb[0]]
@@ -1696,7 +1637,7 @@ def encode_mpeg1(frames, fps: float = 25.0, *, qscale: int = 6,
                         and np.array_equal(ccb, pavg[1])
                         and np.array_equal(ccr, pavg[2])):
                     emit_addr(col)
-                    bw.write_code("10")         # interp, not coded
+                    _put(bw, "10")         # interp, not coded
                     _encode_mv_component(bw, 0 - mvp_f[0], fcode)
                     _encode_mv_component(bw, 0 - mvp_f[1], fcode)
                     _encode_mv_component(bw, 0 - mvp_b[0], fcode)
@@ -1721,14 +1662,14 @@ def encode_mpeg1(frames, fps: float = 25.0, *, qscale: int = 6,
                         for z in zzs)
                     if not saturated and cbp_bits:
                         emit_addr(col)
-                        bw.write_code("0011")   # fwd, coded
+                        _put(bw, "0011")   # fwd, coded
                         _encode_mv_component(bw, mv[1] - mvp_f[0],
                                              fcode)
                         _encode_mv_component(bw, mv[0] - mvp_f[1],
                                              fcode)
                         mvp_f[:] = [mv[1], mv[0]]
                         dc_y = dc_cb = dc_cr = 1024
-                        bw.write_code(_CBP_INV[cbp_bits])
+                        _put(bw, _CBP_INV[cbp_bits])
                         for z in zzs:
                             if z is not None:
                                 _encode_nonintra_block(bw, z)
@@ -1736,7 +1677,7 @@ def encode_mpeg1(frames, fps: float = 25.0, *, qscale: int = 6,
                         last_b = (1, 0, mv, (0, 0))
                         continue
                 emit_addr(col)
-                bw.write_code("00011")          # B intra
+                _put(bw, "00011")          # B intra
                 emit_intra(col)
                 mvp_f[0] = mvp_f[1] = 0
                 mvp_b[0] = mvp_b[1] = 0
@@ -1755,7 +1696,7 @@ def encode_mpeg1(frames, fps: float = 25.0, *, qscale: int = 6,
         out += gop_header()
         for idx, fr in enumerate(frames):
             yp, cbp_pl, crp = planes(fr)
-            bw = _BitWriter()
+            bw = MsbWriter()
             bw.write(idx % 1024, 10)
             bw.write(4, 3)
             bw.write(0xFFFF, 16)     # vbv_delay: variable
@@ -1766,13 +1707,13 @@ def encode_mpeg1(frames, fps: float = 25.0, *, qscale: int = 6,
                 return int(min(max(round(m), 0), 255)) * 8
 
             for row in range(mbh):
-                bw = _BitWriter()
+                bw = MsbWriter()
                 bw.write(qscale, 5)
                 bw.write(0, 1)       # no extra slice info
                 dc_y = dc_cb = dc_cr = 1024
                 for col in range(mbw):
-                    bw.write_code("1")          # addr inc 1
-                    bw.write_code("1")          # B.2d type
+                    _put(bw, "1")          # addr inc 1
+                    _put(bw, "1")          # B.2d type
                     for (dy, dx) in ((0, 0), (0, 8), (8, 0), (8, 8)):
                         dc = block_dc(yp, row * 16 + dy,
                                       col * 16 + dx)

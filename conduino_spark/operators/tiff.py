@@ -25,6 +25,8 @@ import struct
 
 import numpy as np
 
+from conduino_spark.operators.bitio import MsbReader, MsbWriter
+
 _TAG_WIDTH = 256
 _TAG_HEIGHT = 257
 _TAG_BITS = 258
@@ -66,22 +68,12 @@ def _lzw_decode(data: bytes, expected: int) -> bytes:
     2^w - 1, one code before GIF would), Clear=256 / EOI=257."""
     CLEAR, EOI = 256, 257
     out = bytearray()
-    pos = 0
-    nbits = len(data) * 8
+    br = MsbReader(data)
     width = 9
     table = []
     prev = None
-
-    def read_code():
-        nonlocal pos
-        v = 0
-        for _ in range(width):
-            v = (v << 1) | ((data[pos >> 3] >> (7 - (pos & 7))) & 1)
-            pos += 1
-        return v
-
-    while pos + width <= nbits and len(out) < expected:
-        code = read_code()
+    while br.pos + width <= br.nbits and len(out) < expected:
+        code = br.read(width)
         if code == CLEAR:
             table = [bytes([i]) for i in range(256)] + [b"", b""]
             width = 9
@@ -117,25 +109,13 @@ def _lzw_encode(data: bytes) -> bytes:
     """TIFF LZW writer — the exact mirror of :func:`_lzw_decode`
     (early-change widths, table reset at 4094 entries)."""
     CLEAR, EOI = 256, 257
-    outbits = bytearray()
-    cur = 0
-    ncur = 0
+    bw = MsbWriter()
     width = 9
-
-    def put(code):
-        nonlocal cur, ncur
-        for i in range(width - 1, -1, -1):
-            cur = (cur << 1) | ((code >> i) & 1)
-            ncur += 1
-            if ncur == 8:
-                outbits.append(cur)
-                cur = 0
-                ncur = 0
 
     def fresh():
         return ({bytes([i]): i for i in range(256)}, 258)
 
-    put(CLEAR)
+    bw.write(CLEAR, width)
     table, nxt = fresh()
     run = b""
     for byte in data:
@@ -143,7 +123,7 @@ def _lzw_encode(data: bytes) -> bytes:
         if cand in table:
             run = cand
             continue
-        put(table[run])
+        bw.write(table[run], width)
         table[cand] = nxt
         nxt += 1
         # early-change sync (libtiff): the encoder bumps when its
@@ -152,16 +132,14 @@ def _lzw_encode(data: bytes) -> bytes:
         if nxt >= (1 << width) and width < 12:
             width += 1
         if nxt > 4093:
-            put(CLEAR)
+            bw.write(CLEAR, width)
             width = 9
             table, nxt = fresh()
         run = bytes([byte])
     if run:
-        put(table[run])
-    put(EOI)
-    if ncur:
-        outbits.append(cur << (8 - ncur))
-    return bytes(outbits)
+        bw.write(table[run], width)
+    bw.write(EOI, width)
+    return bw.bytes()
 
 
 def _predict2_encode(a: "np.ndarray") -> "np.ndarray":

@@ -58,117 +58,17 @@ import struct
 
 import numpy as np
 
+from conduino_spark.operators.bitio import (LsbReader, LsbWriter,
+                                            PrefixDecoder)
+from conduino_spark.operators.mediainfo import (_ogg_page_crc_ok,
+                                                _ogg_page_multi, _ogg_pages)
+
 __all__ = ["decode_vorbis", "encode_vorbis"]
 
 
-# ---------------------------------------------------------------------------
-# bit I/O — Vorbis packs LSB-first; huffman codewords are walked
-# MSB-of-codeword-first (same convention as VP8L)
-# ---------------------------------------------------------------------------
-
-class _Bits:
-    __slots__ = ("data", "pos", "_nbits", "_w16", "_w24", "_w24l")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self._nbits = len(data) * 8
-        self._w16 = None
-        self._w24 = None
-        self._w24l = None
-
-    def words16(self) -> list:
-        """Cached per-byte 16-bit LE window list: ``w16[i] == data[i] |
-        data[i+1] << 8`` (zero-padded past the end, exactly like the
-        1-byte-slice ``from_bytes`` it replaces).  One numpy pass per
-        packet; turns the residue hot loop's per-symbol slice +
-        from_bytes into a plain list index (r14 vectorization pass)."""
-        if self._w16 is None:
-            a = np.frombuffer(self.data, np.uint8).astype(np.uint16)
-            w = a.copy()
-            if len(a) > 1:
-                w[:-1] |= a[1:] << np.uint16(8)
-            self._w16 = w.tolist() + [0, 0]
-        return self._w16
-
-    def words24_list(self) -> list:
-        """``words24`` as a plain Python list (plus a cached int mask
-        domain) — list indexing beats numpy scalar indexing ~5x in
-        the small-partition loop."""
-        if self._w24l is None:
-            self._w24l = self.words24().tolist()
-        return self._w24l
-
-    def words24(self) -> "np.ndarray":
-        """Cached per-byte 24-bit LE window array (uint32, zero-padded
-        past the end): ``(w24[p >> 3] >> (p & 7)) & mask`` yields up
-        to 17 valid bits at ANY bit position p — the gather the
-        uniform-length codebook fast path rides (r14)."""
-        if self._w24 is None:
-            a = np.frombuffer(self.data, np.uint8).astype(np.uint32)
-            w = np.zeros(len(a) + 3, np.uint32)
-            w[:len(a)] = a
-            w[:len(a)][: max(len(a) - 1, 0)] |= a[1:] << np.uint32(8)
-            if len(a) > 2:
-                w[:len(a) - 2] |= a[2:] << np.uint32(16)
-            self._w24 = w
-        return self._w24
-
-    def read(self, n: int) -> int:
-        p = self.pos
-        if p + n > self._nbits:
-            raise ValueError("vorbis: packet truncated")
-        byte = p >> 3
-        v = int.from_bytes(self.data[byte:byte + ((n + 14) >> 3)],
-                           "little")
-        self.pos = p + n
-        return (v >> (p & 7)) & ((1 << n) - 1)
-
-    def read1(self) -> int:
-        p = self.pos
-        if p >= self._nbits:
-            raise ValueError("vorbis: packet truncated")
-        self.pos = p + 1
-        return (self.data[p >> 3] >> (p & 7)) & 1
-
-    def peek8(self) -> int:
-        p = self.pos
-        byte = p >> 3
-        return (int.from_bytes(self.data[byte:byte + 2], "little")
-                >> (p & 7)) & 0xFF
-
-    def consume(self, n: int) -> None:
-        self.pos += n
-        if self.pos > self._nbits:
-            raise ValueError("vorbis: packet truncated")
-
-
-class _BitWriter:
-    __slots__ = ("buf", "cur", "nbits")
-
-    def __init__(self):
-        self.buf = bytearray()
-        self.cur = 0
-        self.nbits = 0
-
-    def write(self, v: int, n: int) -> None:
-        self.cur |= (v & ((1 << n) - 1)) << self.nbits
-        self.nbits += n
-        while self.nbits >= 8:
-            self.buf.append(self.cur & 0xFF)
-            self.cur >>= 8
-            self.nbits -= 8
-
-    def write_code(self, code: int, length: int) -> None:
-        """Huffman codewords go MSB-of-code-first."""
-        for i in range(length - 1, -1, -1):
-            self.write((code >> i) & 1, 1)
-
-    def bytes(self) -> bytes:
-        out = bytes(self.buf)
-        if self.nbits:
-            out += bytes([self.cur & 0xFF])
-        return out
+#: Vorbis packs LSB-first; huffman codewords are walked
+#: MSB-of-codeword-first (same convention as VP8L)
+_EOF = "vorbis: packet truncated"
 
 
 def _ilog(x: int) -> int:
@@ -248,91 +148,15 @@ def _assign_codewords(lengths: "list[int]") -> "dict[int, tuple[int, int]]":
     return out
 
 
-class _Huff:
-    """LUT-accelerated prefix decoder over the Vorbis assignment."""
-
-    __slots__ = ("table", "lut", "single", "uniform", "utable", "_utl")
-
-    def __init__(self, lengths):
-        used = [(s, ln) for s, ln in enumerate(lengths) if ln > 0]
-        if len(used) == 1:
-            # single-entry book: reads ONE bit per symbol (the spec's
-            # single-entry special case — codeword 0 of length 1)
-            self.single = used[0][0]
-            self.table = None
-            self.lut = None
-            self.uniform = None
-            self.utable = None
-            self._utl = None
-            return
-        self.single = None
-        codes = _assign_codewords(lengths)
-        self.table = {}
-        lut = [0] * 256
-        for sym, (ln, code) in codes.items():
-            self.table[(ln, code)] = sym
-            if ln <= 8:
-                rev = 0
-                for i in range(ln):
-                    rev |= ((code >> i) & 1) << (ln - 1 - i)
-                for j in range(1 << (8 - ln)):
-                    lut[rev | (j << ln)] = ((sym << 6) | ln) + (1 << 5)
-        self.lut = lut
-        # r14: UNIFORM-length books (every used codeword the same
-        # length L <= 16 — e.g. the fixed-rate scalar value books
-        # most encoders emit) get a direct window->symbol array, so a
-        # whole residue partition's symbols decode as ONE numpy
-        # gather instead of a per-symbol Python loop
-        lns = {ln for _, ln in used}
-        self.uniform = None
-        self.utable = None
-        self._utl = None
-        if len(lns) == 1 and (L := lns.pop()) <= 16:
-            # -1 marks windows no codeword maps to (sparse/incomplete
-            # books): the gather checks and raises like the slow path
-            ut = np.full(1 << L, -1, np.int32)
-            for sym, (ln, code) in codes.items():
-                rev = 0
-                for i in range(ln):
-                    rev |= ((code >> i) & 1) << (ln - 1 - i)
-                ut[rev] = sym
-            self.uniform = L
-            self.utable = ut
-            self._utl = None
-
-    def utable_list(self) -> list:
-        if self._utl is None:
-            self._utl = self.utable.tolist()
-        return self._utl
-
-    def decode(self, br: _Bits) -> int:
-        if self.single is not None:
-            br.read1()
-            return self.single
-        e = self.lut[br.peek8()]
-        if e:
-            br.consume(e & 0x1F)
-            return e >> 6
-        code = 0
-        length = 0
-        t = self.table
-        for _ in range(32):
-            code = (code << 1) | br.read1()
-            length += 1
-            sym = t.get((length, code))
-            if sym is not None:
-                return sym
-        raise ValueError("vorbis: invalid codeword in stream")
-
-
 # ---------------------------------------------------------------------------
 # codebook (setup-header) parse
 # ---------------------------------------------------------------------------
 
 class _Codebook:
-    __slots__ = ("dims", "entries", "lengths", "huff", "vq", "seq_p")
+    __slots__ = ("dims", "entries", "lengths", "huff", "single",
+                 "uniform", "utable", "utl", "vq", "seq_p")
 
-    def __init__(self, br: _Bits):
+    def __init__(self, br: LsbReader):
         if br.read(24) != 0x564342:
             raise ValueError("vorbis: bad codebook sync")
         self.dims = br.read(16)
@@ -345,7 +169,7 @@ class _Codebook:
                 f"vorbis: codebook with {self.entries} entries "
                 "exceeds the sanity cap")
         lengths = [0] * self.entries
-        if br.read1():                       # ordered
+        if br.read(1):                       # ordered
             cur_len = br.read(5) + 1
             cur = 0
             while cur < self.entries:
@@ -357,15 +181,14 @@ class _Codebook:
                 cur += num
                 cur_len += 1
         else:
-            sparse = br.read1()
+            sparse = br.read(1)
             for j in range(self.entries):
                 if sparse:
-                    if br.read1():
+                    if br.read(1):
                         lengths[j] = br.read(5) + 1
                 else:
                     lengths[j] = br.read(5) + 1
-        self.lengths = lengths
-        self.huff = _Huff(lengths) if any(lengths) else None
+        self.set_lengths(lengths)
         lookup = br.read(4)
         self.vq = None
         self.seq_p = 0
@@ -380,7 +203,7 @@ class _Codebook:
         minv = _float32_unpack(br.read(32))
         delta = _float32_unpack(br.read(32))
         value_bits = br.read(4) + 1
-        self.seq_p = br.read1()
+        self.seq_p = br.read(1)
         if lookup == 1:
             lv = 0
             while (lv + 1) ** self.dims <= self.entries:
@@ -418,12 +241,53 @@ class _Codebook:
                         last = vq[e, d]
         self.vq = vq
 
-    def decode_scalar(self, br: _Bits) -> int:
+    def set_lengths(self, lengths) -> None:
+        """Codeword lengths → decode tables.  ``huff`` is the LUT
+        prefix decoder over the Vorbis assignment; a single-entry
+        book instead sets ``single`` and reads ONE bit per symbol
+        (the spec's single-entry special case — codeword 0 of length
+        1).  r14: a UNIFORM-length book (every used codeword the same
+        length L <= 16 — e.g. the fixed-rate scalar value books most
+        encoders emit) also gets ``utable``, a direct window->symbol
+        array, so a whole residue partition's symbols decode as ONE
+        numpy gather instead of a per-symbol Python loop (``utl`` is
+        its list form for small partitions)."""
+        self.lengths = lengths
+        self.huff = self.single = self.uniform = None
+        self.utable = self.utl = None
+        used = [(s, ln) for s, ln in enumerate(lengths) if ln > 0]
+        if not used:
+            return
+        if len(used) == 1:
+            self.single = used[0][0]
+            return
+        codes = _assign_codewords(lengths)
+        self.huff = PrefixDecoder(
+            codes.items(), lsb_first=True, maxlen=32,
+            error="vorbis: invalid codeword in stream")
+        lns = {ln for _, ln in used}
+        if len(lns) == 1 and (L := lns.pop()) <= 16:
+            # -1 marks windows no codeword maps to (sparse/incomplete
+            # books): the gather checks and raises like the slow path
+            ut = np.full(1 << L, -1, np.int32)
+            for sym, (ln, code) in codes.items():
+                rev = 0
+                for i in range(ln):
+                    rev |= ((code >> i) & 1) << (ln - 1 - i)
+                ut[rev] = sym
+            self.uniform = L
+            self.utable = ut
+            self.utl = ut.tolist()
+
+    def decode_scalar(self, br: LsbReader) -> int:
+        if self.single is not None:
+            br.read(1)
+            return self.single
         if self.huff is None:
             raise ValueError("vorbis: scalar decode from unused book")
         return self.huff.decode(br)
 
-    def decode_vector(self, br: _Bits) -> "np.ndarray":
+    def decode_vector(self, br: LsbReader) -> "np.ndarray":
         if self.vq is None:
             raise ValueError("vorbis: VQ decode from scalar-only book")
         return self.vq[self.decode_scalar(br)]
@@ -471,7 +335,7 @@ class _Floor1:
                  "masterbooks", "subclass_books", "multiplier",
                  "rangebits", "xs", "posts")
 
-    def __init__(self, br: _Bits, n_books: int):
+    def __init__(self, br: LsbReader, n_books: int):
         partitions = br.read(5)
         self.partition_classes = [br.read(4) for _ in range(partitions)]
         max_class = (max(self.partition_classes) + 1
@@ -509,10 +373,10 @@ class _Floor1:
         self.xs = xs
         self.posts = len(xs)
 
-    def decode(self, br: _Bits, books, n: int):
+    def decode(self, br: LsbReader, books, n: int):
         """One channel's floor for a half-window of ``n`` bins →
         float curve or None (channel unused this frame)."""
-        if not br.read1():
+        if not br.read(1):
             return None
         range_ = (256, 128, 86, 64)[self.multiplier - 1]
         ybits = _ilog(range_ - 1)
@@ -592,7 +456,7 @@ class _Residue:
                  "classbook", "cascade", "books", "_fast0_cache",
                  "_multi")
 
-    def __init__(self, br: _Bits, rtype: int, n_books: int):
+    def __init__(self, br: LsbReader, rtype: int, n_books: int):
         self.rtype = rtype
         self.begin = br.read(24)
         self.end = br.read(24)
@@ -604,7 +468,7 @@ class _Residue:
         self.cascade = []
         for _ in range(self.classifications):
             low = br.read(3)
-            high = br.read(5) if br.read1() else 0
+            high = br.read(5) if br.read(1) else 0
             self.cascade.append((high << 3) | low)
         self.books = []
         for c in range(self.classifications):
@@ -619,7 +483,7 @@ class _Residue:
                     row.append(-1)
             self.books.append(row)
 
-    def decode(self, br: _Bits, books, vectors, do_not_decode):
+    def decode(self, br: LsbReader, books, vectors, do_not_decode):
         """Additive decode into the channel ``vectors`` (numpy,
         length n/2 each).  Type 2 interleaves all channels into one
         virtual vector first."""
@@ -635,7 +499,7 @@ class _Residue:
             return
         self._decode_core(br, books, vectors, do_not_decode)
 
-    def _decode_core(self, br: _Bits, books, vectors, do_not_decode):
+    def _decode_core(self, br: LsbReader, books, vectors, do_not_decode):
         n = len(vectors[0])
         begin = min(self.begin, n)
         end = min(self.end, n)
@@ -664,7 +528,6 @@ class _Residue:
             # LUT fast path), ONE numpy gather + add for the whole
             # partition (r13b — per-symbol 1-element slice adds
             # dominated the decode profile)
-            huff = book.huff
             # symbol count per spec 8.6.2 / stb_vorbis
             # residue_decode: format 0 reads floor(psize/dims)
             # codewords (strided writes, trailing psize % dims
@@ -681,13 +544,13 @@ class _Residue:
                         "exceed partition size")
             else:
                 nsym = -(-psz // dims)
-            if huff.single is not None:
+            if book.single is not None:
                 br.pos += nsym
-                if br.pos > br._nbits:
+                if br.pos > br.nbits:
                     raise ValueError(
                         "vorbis: packet truncated")
-                idxs = [huff.single] * nsym
-            elif huff.uniform is not None:
+                idxs = [book.single] * nsym
+            elif book.uniform is not None:
                 # r14 fast path: fixed-rate book — window arithmetic
                 # replaces the per-symbol VLC walk.  Partitions are
                 # typically tiny (psize/dims ~ 8-32 symbols), where
@@ -695,14 +558,14 @@ class _Residue:
                 # partitions take a flat Python loop over the
                 # list-form table and only large ones take the
                 # vectorized gather.
-                L = huff.uniform
+                L = book.uniform
                 pos = br.pos
-                if pos + L * nsym > br._nbits:
+                if pos + L * nsym > br.nbits:
                     raise ValueError(
                         "vorbis: packet truncated")
                 if nsym < 64:
-                    ut = huff.utable_list()
-                    w24 = br.words24_list()
+                    ut = book.utl
+                    w24 = br.w24
                     mask = (1 << L) - 1
                     idxs = [0] * nsym
                     k = 0
@@ -729,10 +592,10 @@ class _Residue:
                 else:
                     ps = pos + L * np.arange(
                         nsym, dtype=np.int64)
-                    win = ((br.words24()[ps >> 3]
+                    win = ((br.w24_array[ps >> 3]
                             >> (ps & 7).astype(np.uint32))
                            & np.uint32((1 << L) - 1))
-                    idxs = huff.utable[win]
+                    idxs = book.utable[win]
                     if (idxs < 0).any():
                         raise ValueError(
                             "vorbis: invalid codeword "
@@ -740,27 +603,28 @@ class _Residue:
                     pos += L * nsym
                 br.pos = pos
             else:
-                # r14 hot loop: w16 list index instead of per-symbol
+                # r14 hot loop: window list index instead of per-symbol
                 # slice+from_bytes, local pos instead of attribute
-                # round-trips, ONE bounds check per partition (w16 is
-                # zero-padded past the end exactly like the slice
-                # read it replaces, so a truncated packet still lands
-                # on the same loud ValueError)
-                w16 = br.words16()
+                # round-trips, ONE bounds check per partition (the
+                # windows are zero-padded past the end, so a
+                # truncated packet still lands on the same loud
+                # ValueError)
+                w24 = br.w24
+                huff = book.huff
                 lut = huff.lut
                 pos = br.pos
-                nbits = br._nbits
+                nbits = br.nbits
                 idxs = []
                 app = idxs.append
                 for _ in range(nsym):
                     if pos > nbits:
                         raise ValueError(
                             "vorbis: packet truncated")
-                    e = lut[(w16[pos >> 3]
+                    e = lut[(w24[pos >> 3]
                              >> (pos & 7)) & 0xFF]
                     if e:
-                        pos += e & 0x1F
-                        app(e >> 6)
+                        pos += e & 15
+                        app(e >> 5)
                     else:
                         br.pos = pos
                         app(huff.decode(br))
@@ -829,11 +693,11 @@ class _Residue:
         classifs = ([[0] * (ptr + cw) for _ in range(ch)]
                     if multi else None)
         b0set = {self.books[c][0] for c in range(self.classifications)}
-        fast0 = (live and cb.huff.uniform is not None
+        fast0 = (live and cb.uniform is not None
                  and len(b0set) == 1 and self.rtype != 0)
         if fast0:
             b0 = b0set.pop()
-            fast0 = (b0 >= 0 and books[b0].huff.uniform is not None
+            fast0 = (b0 >= 0 and books[b0].uniform is not None
                      and books[b0].vq is not None)
         if fast0:
             book = books[b0]
@@ -843,8 +707,8 @@ class _Residue:
             nlive = len(live)
             cache = getattr(self, "_fast0_cache", None)
             if cache is None or cache[0] != (n, nlive):
-                Lc = cb.huff.uniform
-                L = book.huff.uniform
+                Lc = cb.uniform
+                L = book.uniform
                 dims = book.dims
                 nsym = -(-psz // dims)
                 B = nsym * L
@@ -880,13 +744,13 @@ class _Residue:
                 self._fast0_cache = cache
             cc = cache[1]
             total_bits = cc["total_bits"]
-            if br.pos + total_bits > br._nbits:
+            if br.pos + total_bits > br.nbits:
                 raise ValueError("vorbis: packet truncated")
-            w24 = br.words24()
+            w24 = br.w24_array
             cpos = cc["cpos_rel"] + br.pos
             cwin = ((w24[cpos >> 3] >> (cpos & 7).astype(np.uint32))
                     & cc["cmask"])
-            cvals = cb.huff.utable[cwin].astype(np.int64)
+            cvals = cb.utable[cwin].astype(np.int64)
             if (cvals < 0).any():
                 raise ValueError("vorbis: invalid codeword in stream")
             digits = np.empty((cvals.shape[0], nlive, cw), np.int64)
@@ -897,7 +761,7 @@ class _Residue:
             sympos = cc["sympos_rel"] + br.pos
             win = ((w24[sympos >> 3]
                     >> (sympos & 7).astype(np.uint32)) & cc["pmask"])
-            idxs = book.huff.utable[win]        # (nlive, ptr, nsym)
+            idxs = book.utable[win]        # (nlive, ptr, nsym)
             if (idxs < 0).any():
                 raise ValueError("vorbis: invalid codeword in stream")
             allvals = book.vq[idxs.reshape(nlive, -1)].reshape(
@@ -970,10 +834,10 @@ class _Mapping:
     __slots__ = ("submaps", "coupling", "mux", "submap_floor",
                  "submap_residue")
 
-    def __init__(self, br: _Bits, ch: int, n_floors: int, n_res: int):
-        self.submaps = br.read(4) + 1 if br.read1() else 1
+    def __init__(self, br: LsbReader, ch: int, n_floors: int, n_res: int):
+        self.submaps = br.read(4) + 1 if br.read(1) else 1
         self.coupling = []
-        if br.read1():
+        if br.read(1):
             steps = br.read(8) + 1
             bits = _ilog(ch - 1)
             for _ in range(steps):
@@ -1009,7 +873,7 @@ class _Setup:
 def _parse_setup(data: bytes, ch: int) -> _Setup:
     if data[:7] != b"\x05vorbis":
         raise ValueError("vorbis: bad setup header")
-    br = _Bits(data[7:])
+    br = LsbReader(data[7:], eof=_EOF)
     s = _Setup()
     n_books = br.read(8) + 1
     s.books = [_Codebook(br) for _ in range(n_books)]
@@ -1041,14 +905,14 @@ def _parse_setup(data: bytes, ch: int) -> _Setup:
                                    len(s.residues)))
     s.modes = []
     for _ in range(br.read(6) + 1):
-        blockflag = br.read1()
+        blockflag = br.read(1)
         if br.read(16) or br.read(16):
             raise ValueError("vorbis: reserved window/transform type")
         mapping = br.read(8)
         if mapping >= len(s.mappings):
             raise ValueError("vorbis: mode mapping oob")
         s.modes.append((blockflag, mapping))
-    if not br.read1():
+    if not br.read(1):
         raise ValueError("vorbis: setup framing bit unset")
     return s
 
@@ -1104,30 +968,17 @@ def _ogg_packets(data: bytes):
     """Walk Ogg pages of the FIRST logical stream → (packets,
     final_granule).  CRCs verified; continued packets reassembled via
     the lacing rules."""
-    from conduino_spark.operators.mediainfo import _ogg_crc
     if data[:4] != b"OggS":
         raise ValueError("vorbis: not an Ogg stream")
-    pos = 0
     serial0 = None
     packets = []
     cur = bytearray()
     granule = 0
-    while pos + 27 <= len(data):
-        if data[pos:pos + 4] != b"OggS":
-            break
-        hdr_type = data[pos + 5]
-        g = struct.unpack("<q", data[pos + 6:pos + 14])[0]
-        serial = struct.unpack("<I", data[pos + 14:pos + 18])[0]
-        n_segs = data[pos + 26]
-        seg_table = data[pos + 27:pos + 27 + n_segs]
-        body_start = pos + 27 + n_segs
-        body_len = sum(seg_table)
-        if body_start + body_len > len(data):
+    for start, hdr_type, g, serial, seg_table, body_start, body_end in \
+            _ogg_pages(data):
+        if body_end > len(data):
             raise ValueError("vorbis: truncated Ogg page")
-        page = bytearray(data[pos:body_start + body_len])
-        want = struct.unpack("<I", page[22:26])[0]
-        page[22:26] = b"\x00" * 4
-        if _ogg_crc(bytes(page)) != want:
+        if not _ogg_page_crc_ok(data, start, body_end):
             raise ValueError("vorbis: Ogg page CRC mismatch")
         if serial0 is None:
             serial0 = serial
@@ -1136,7 +987,7 @@ def _ogg_packets(data: bytes):
                 # a fresh page while a packet is mid-assembly without
                 # the continuation flag: lost sync
                 raise ValueError("vorbis: lost Ogg packet sync")
-            body = data[body_start:body_start + body_len]
+            body = data[body_start:body_end]
             off = 0
             for lace in seg_table:
                 cur += body[off:off + lace]
@@ -1146,7 +997,6 @@ def _ogg_packets(data: bytes):
                     cur = bytearray()
             if g >= 0:
                 granule = g
-        pos = body_start + body_len
     if cur:
         raise ValueError("vorbis: unterminated Ogg packet")
     return packets, granule
@@ -1179,7 +1029,7 @@ def _decode_vorbis(data: bytes):
     idh = packets[0]
     if idh[:7] != b"\x01vorbis" or len(idh) < 30:
         raise ValueError("vorbis: bad identification header")
-    br = _Bits(idh[7:])
+    br = LsbReader(idh[7:], eof=_EOF)
     if br.read(32) != 0:
         raise ValueError("vorbis: unsupported stream version")
     ch = br.read(8)
@@ -1193,7 +1043,7 @@ def _decode_vorbis(data: bytes):
         raise ValueError("vorbis: bad channel count / rate")
     if not (64 <= bs0 <= bs1 <= 8192):
         raise ValueError("vorbis: bad blocksizes")
-    if not br.read1():
+    if not br.read(1):
         raise ValueError("vorbis: id framing bit unset")
     if packets[1][:7] != b"\x03vorbis":
         raise ValueError("vorbis: bad comment header")
@@ -1216,8 +1066,8 @@ def _decode_vorbis(data: bytes):
     prev_n = 0
     out_parts = []
     for pk in packets[3:]:
-        br = _Bits(pk)
-        if br.read1() != 0:
+        br = LsbReader(pk, eof=_EOF)
+        if br.read(1) != 0:
             raise ValueError("vorbis: expected an audio packet")
         blockflag, mapping_i = setup.modes[br.read(mode_bits)
                                            if mode_bits else 0]
@@ -1225,8 +1075,8 @@ def _decode_vorbis(data: bytes):
         n = bs1 if blockflag else bs0
         prev_flag = next_flag = 1
         if blockflag:
-            prev_flag = br.read1()
-            next_flag = br.read1()
+            prev_flag = br.read(1)
+            next_flag = br.read(1)
         floors = []
         no_residue = []
         for c in range(ch):
@@ -1299,7 +1149,6 @@ def _decode_vorbis(data: bytes):
 # type-2 residue over a scalar lookup-1 codebook)
 # ---------------------------------------------------------------------------
 
-from conduino_spark.operators.mediainfo import _ogg_page_multi
 
 
 def _encode_setup(n0: int, n1: int, value_bits: int, *,
@@ -1312,7 +1161,7 @@ def _encode_setup(n0: int, n1: int, value_bits: int, *,
     books so the class-based floor decode path is exercised; one
     floor, one residue of the requested type, one mapping (optionally
     with one square-polar coupling step), one mode per block size."""
-    bw = _BitWriter()
+    bw = LsbWriter()
     for b in b"\x05vorbis":
         bw.write(b, 8)
     n_books = 4 if floor_classes else 2
@@ -1565,7 +1414,7 @@ def encode_vorbis(samples, rate: int = 44100, *, blocksize=256,
 
     pkts = []
     for b, (n, S) in enumerate(zip(sizes, specs)):
-        bw = _BitWriter()
+        bw = LsbWriter()
         bw.write(0, 1)
         if n_modes == 2:
             bw.write(1 if n == n_l else 0, 1)

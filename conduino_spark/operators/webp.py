@@ -42,72 +42,12 @@ import struct
 
 import numpy as np
 
-# ---------------------------------------------------------------------------
-# bit I/O — VP8L reads bits LSB-first within each byte; prefix codes
-# are traversed MSB-of-code-first (the deflate convention)
-# ---------------------------------------------------------------------------
+from conduino_spark.operators.bitio import (LsbReader, LsbWriter,
+                                            PrefixDecoder)
 
-
-class _BitReader:
-    __slots__ = ("data", "pos", "_nbits")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0            # bit position
-        self._nbits = len(data) * 8
-
-    def read(self, n: int) -> int:
-        """LSB-first multi-bit read — one 5-byte slice covers any
-        n <= 25 after shifting (VP8L never reads more than 18+7)."""
-        p = self.pos
-        if p + n > self._nbits:
-            raise ValueError("vp8l: bitstream truncated")
-        byte = p >> 3
-        v = int.from_bytes(self.data[byte:byte + 5], "little")
-        self.pos = p + n
-        return (v >> (p & 7)) & ((1 << n) - 1)
-
-    def peek8(self) -> int:
-        """Next 8 stream bits (zero-padded past the end) — the prefix
-        LUT's lookahead; consume() still enforces the real end."""
-        p = self.pos
-        byte = p >> 3
-        return (int.from_bytes(self.data[byte:byte + 2], "little")
-                >> (p & 7)) & 0xFF
-
-    def consume(self, n: int) -> None:
-        self.pos += n
-        if self.pos > self._nbits:
-            raise ValueError("vp8l: bitstream truncated")
-
-
-class _BitWriter:
-    __slots__ = ("buf", "cur", "nbits")
-
-    def __init__(self):
-        self.buf = bytearray()
-        self.cur = 0
-        self.nbits = 0
-
-    def write(self, v: int, n: int) -> None:
-        for i in range(n):
-            self.cur |= ((v >> i) & 1) << self.nbits
-            self.nbits += 1
-            if self.nbits == 8:
-                self.buf.append(self.cur)
-                self.cur = 0
-                self.nbits = 0
-
-    def write_code(self, code: int, length: int) -> None:
-        """Prefix-code bits go MSB-first."""
-        for i in range(length - 1, -1, -1):
-            self.write((code >> i) & 1, 1)
-
-    def bytes(self) -> bytes:
-        out = bytes(self.buf)
-        if self.nbits:
-            out += bytes([self.cur])
-        return out
+#: VP8L reads bits LSB-first within each byte; prefix codes are
+#: traversed MSB-of-code first (the deflate convention)
+_EOF = "vp8l: bitstream truncated"
 
 
 # ---------------------------------------------------------------------------
@@ -140,65 +80,15 @@ def _canonical_codes(lengths) -> dict:
     return out
 
 
-class _HuffDecoder:
-    """Bit-by-bit canonical-code decoder.  A single-symbol code (the
-    VP8L 'simple' 1-symbol form, length 0) reads no bits at all."""
-
-    __slots__ = ("table", "single", "lut")
-
-    def __init__(self, lengths):
-        nonzero = [(s, ln) for s, ln in enumerate(lengths) if ln]
-        if len(nonzero) == 1 and nonzero[0][1] == 0:
-            raise AssertionError("unreachable")          # pragma: no cover
-        if len(nonzero) == 1:
-            self.single = nonzero[0][0]
-            self.table = None
-            self.lut = None
-            return
-        self.single = None
-        self.table = {}
-        # r13: 8-bit LUT fast path — prefix bits arrive MSB-of-code
-        # first in the LSB-first stream, so a code of length L fills
-        # the LUT entries whose LOW L bits equal bit-reverse(code)
-        lut = [0] * 256
-        for sym, (ln, code) in _canonical_codes(lengths).items():
-            self.table[(ln, code)] = sym
-            if ln <= 8:
-                rev = 0
-                for i in range(ln):
-                    rev |= ((code >> i) & 1) << (ln - 1 - i)
-                for j in range(1 << (8 - ln)):
-                    lut[rev | (j << ln)] = (sym << 4) | ln
-        self.lut = lut
-
-    @classmethod
-    def fixed(cls, symbol: int):
-        d = cls.__new__(cls)
-        d.single = symbol
-        d.table = None
-        d.lut = None
-        return d
-
-    def decode(self, br: _BitReader) -> int:
-        if self.single is not None:
-            return self.single
-        e = self.lut[br.peek8()]
-        if e:
-            br.consume(e & 0xF)
-            return e >> 4
-        code = 0
-        length = 0
-        t = self.table
-        for _ in range(16):
-            code = (code << 1) | br.read(1)
-            length += 1
-            sym = t.get((length, code))
-            if sym is not None:
-                return sym
-        raise ValueError("vp8l: invalid prefix code in stream")
+def _decoder(codes) -> PrefixDecoder:
+    """``(symbol, (length, code))`` pairs → decoder.  A single-symbol
+    code (the VP8L 'simple' 1-symbol form) is one length-0 codeword:
+    it decodes without reading a bit."""
+    return PrefixDecoder(codes, lsb_first=True, maxlen=16,
+                         error="vp8l: invalid prefix code in stream")
 
 
-def _read_code_lengths(br: _BitReader, cl_dec: _HuffDecoder,
+def _read_code_lengths(br: LsbReader, cl_dec: PrefixDecoder,
                        alphabet: int) -> list:
     lengths = [0] * alphabet
     if br.read(1):                       # use max_symbol
@@ -233,18 +123,18 @@ def _read_code_lengths(br: _BitReader, cl_dec: _HuffDecoder,
     return lengths
 
 
-def _read_prefix_code(br: _BitReader, alphabet: int) -> _HuffDecoder:
+def _read_prefix_code(br: LsbReader, alphabet: int) -> PrefixDecoder:
     if br.read(1):                       # simple code
         num_symbols = br.read(1) + 1
         sym0 = br.read(8) if br.read(1) else br.read(1)
         lengths = [0] * alphabet
         if num_symbols == 1:
-            return _HuffDecoder.fixed(sym0)
+            return _decoder([(sym0, (0, 0))])
         sym1 = br.read(8)
         if sym0 >= alphabet or sym1 >= alphabet or sym0 == sym1:
             raise ValueError("vp8l: bad simple code symbols")
         lengths[sym0] = lengths[sym1] = 1
-        return _HuffDecoder(lengths)
+        return _decoder(_canonical_codes(lengths).items())
     # normal code: code lengths are themselves prefix-coded
     num_cl = 4 + br.read(4)
     cl_lengths = [0] * 19
@@ -254,23 +144,23 @@ def _read_prefix_code(br: _BitReader, alphabet: int) -> _HuffDecoder:
     if not cl_used:
         raise ValueError("vp8l: empty code-length code")
     if len(cl_used) == 1:
-        cl_dec = _HuffDecoder.fixed(cl_used[0])
+        cl_dec = _decoder([(cl_used[0], (0, 0))])
     else:
-        cl_dec = _HuffDecoder(cl_lengths)
+        cl_dec = _decoder(_canonical_codes(cl_lengths).items())
     lengths = _read_code_lengths(br, cl_dec, alphabet)
     used = [s for s, ln in enumerate(lengths) if ln]
     if not used:
         raise ValueError("vp8l: prefix code with no symbols")
     if len(used) == 1:
-        return _HuffDecoder.fixed(used[0])
-    return _HuffDecoder(lengths)
+        return _decoder([(used[0], (0, 0))])
+    return _decoder(_canonical_codes(lengths).items())
 
 
 # ---------------------------------------------------------------------------
 # LZ77 prefix values and the 2-D distance map
 # ---------------------------------------------------------------------------
 
-def _prefix_value(code: int, br: _BitReader) -> int:
+def _prefix_value(code: int, br: LsbReader) -> int:
     if code < 4:
         return code + 1
     extra = (code - 2) >> 1
@@ -346,7 +236,7 @@ def _dist_to_code(dist: int, xsize: int) -> int:
 _CACHE_MUL = 0x1E35A7BD
 
 
-def _decode_pixels(br: _BitReader, w: int, h: int, *,
+def _decode_pixels(br: LsbReader, w: int, h: int, *,
                    top_level: bool) -> list:
     """Decode an entropy-coded VP8L image into a flat list of ARGB
     ints (row-major, length w*h)."""
@@ -395,41 +285,39 @@ def _decode_pixels(br: _BitReader, w: int, h: int, *,
         sym = g_dec.decode(br)
         if sym < 256:                        # literal: G then R, B, A
             # inlined LUT fast path (r13): three decode() calls per
-            # literal are the hottest call sites in the whole codec
-            d = br.data
-            if r_dec.single is not None:
-                red = r_dec.single
+            # literal are the hottest call sites in the whole codec;
+            # one truncation check covers all three (the window pad
+            # keeps the reads in range, and the slow path raises the
+            # same text)
+            w24 = br.w24
+            p = br.pos
+            e = r_dec.lut[(w24[p >> 3] >> (p & 7)) & 0xFF]
+            if e:
+                p += e & 15
+                red = e >> 5
             else:
+                br.pos = p
+                red = r_dec.decode(br)
                 p = br.pos
-                e = r_dec.lut[(int.from_bytes(d[p >> 3:(p >> 3) + 2],
-                                              "little") >> (p & 7)) & 0xFF]
-                if e:
-                    br.consume(e & 0xF)
-                    red = e >> 4
-                else:
-                    red = r_dec.decode(br)
-            if b_dec.single is not None:
-                blue = b_dec.single
+            e = b_dec.lut[(w24[p >> 3] >> (p & 7)) & 0xFF]
+            if e:
+                p += e & 15
+                blue = e >> 5
             else:
+                br.pos = p
+                blue = b_dec.decode(br)
                 p = br.pos
-                e = b_dec.lut[(int.from_bytes(d[p >> 3:(p >> 3) + 2],
-                                              "little") >> (p & 7)) & 0xFF]
-                if e:
-                    br.consume(e & 0xF)
-                    blue = e >> 4
-                else:
-                    blue = b_dec.decode(br)
-            if a_dec.single is not None:
-                alpha = a_dec.single
+            e = a_dec.lut[(w24[p >> 3] >> (p & 7)) & 0xFF]
+            if e:
+                p += e & 15
+                alpha = e >> 5
             else:
+                br.pos = p
+                alpha = a_dec.decode(br)
                 p = br.pos
-                e = a_dec.lut[(int.from_bytes(d[p >> 3:(p >> 3) + 2],
-                                              "little") >> (p & 7)) & 0xFF]
-                if e:
-                    br.consume(e & 0xF)
-                    alpha = e >> 4
-                else:
-                    alpha = a_dec.decode(br)
+            if p > br.nbits:
+                raise ValueError(_EOF)
+            br.pos = p
             px = (alpha << 24) | (red << 16) | (sym << 8) | blue
             out[pos] = px
             if cache is not None:
@@ -769,7 +657,7 @@ def _palette_inverse(pix: list, w: int, h: int, palette: list) -> list:
 def decode_vp8l(payload: bytes):
     """Decode a raw VP8L chunk payload → (h, w, 3|4) uint8 RGB(A)
     array (alpha kept iff the stream's alpha hint is set)."""
-    br = _BitReader(payload)
+    br = LsbReader(payload, eof=_EOF)
     if br.read(8) != 0x2F:
         raise ValueError("vp8l: bad signature byte")
     w = br.read(14) + 1
@@ -914,7 +802,7 @@ def _limit_lengths(freqs: list, limit: int) -> list:
     return out
 
 
-def _write_prefix_code(bw: _BitWriter, lengths: list):
+def _write_prefix_code(bw: LsbWriter, lengths: list):
     """Write one prefix code (simple if ≤2 small symbols, else the
     code-length-coded normal form) and return symbol->(len, code)."""
     used = [s for s, ln in enumerate(lengths) if ln]
@@ -987,7 +875,7 @@ class _CodeWriter:
         self.codes = codes
         self.multi = len(codes) > 1
 
-    def emit(self, bw: _BitWriter, sym: int):
+    def emit(self, bw: LsbWriter, sym: int):
         ln, code = self.codes[sym]
         if self.multi:
             bw.write_code(code, ln)
@@ -1039,7 +927,7 @@ def _tokenize(pix: list, w: int, *, cache_bits: int,
     return tokens
 
 
-def _encode_pixels(bw: _BitWriter, pix: list, w: int, *,
+def _encode_pixels(bw: LsbWriter, pix: list, w: int, *,
                    cache_bits: int = 0, use_lz77: bool = False,
                    top_level: bool = False) -> None:
     """Write one entropy-coded image (single prefix-code group).
@@ -1172,7 +1060,7 @@ def encode_vp8l(arr, *, use_palette: "bool | None" = None,
     if use_palette and len(colors) > 256:
         raise ValueError("vp8l: palette path needs ≤256 colors")
 
-    bw = _BitWriter()
+    bw = LsbWriter()
     bw.write(0x2F, 8)
     bw.write(w - 1, 14)
     bw.write(h - 1, 14)

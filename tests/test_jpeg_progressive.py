@@ -17,9 +17,10 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from conduino_spark.operators.bitio import MsbWriter
 from conduino_spark.operators.jpeg import (
-    _BitWriter, _DC_LUMA, _huff_codes, _marker, decode_jpeg,
-    encode_jpeg, encode_jpeg_progressive,
+    _DC_LUMA, _huff_codes, _marker, _stuffed, decode_jpeg, encode_jpeg,
+    encode_jpeg_progressive,
 )
 
 
@@ -115,22 +116,22 @@ def test_progressive_eobrun_greater_than_one():
            _marker(0xC4, dc_dht), _marker(0xC4, ac_dht)]
     # DC scan (Ss=0, Se=0, Ah=0, Al=0): two blocks, DC diffs +40, -16
     dc_codes = _huff_codes(*_DC_LUMA)
-    bw = _BitWriter()
+    bw = MsbWriter()
     for diff in (40, -56):                       # values 40 then -16
         t = diff if diff >= 0 else -diff
         cat = t.bit_length()
         code, ln = dc_codes[cat]
-        bw.put(code, ln)
-        bw.put(diff if diff >= 0 else diff + (1 << cat) - 1, cat)
+        bw.write(code, ln)
+        bw.write(diff if diff >= 0 else diff + (1 << cat) - 1, cat)
     out += [_marker(0xDA, bytes([1, 1, 0x00, 0, 0, 0x00])),
-            bw.flush()]
+            _stuffed(bw)]
     # AC scan (Ss=1, Se=63): a single EOB-run code 0x10 + 1 extra bit
     # (0) -> eobrun = 2 - 1 + 0 ... covers this block and the next
-    bw = _BitWriter()
-    bw.put(0b0, 1)                               # canonical code of 0x10
-    bw.put(0, 1)                                 # extra bit -> run 2
+    bw = MsbWriter()
+    bw.write(0b0, 1)                               # canonical code of 0x10
+    bw.write(0, 1)                                 # extra bit -> run 2
     out += [_marker(0xDA, bytes([1, 1, 0x00, 1, 63, 0x00])),
-            bw.flush()]
+            _stuffed(bw)]
     out.append(b"\xff\xd9")
     got = decode_jpeg(b"".join(out))
     assert got.shape == (8, 16, 1)

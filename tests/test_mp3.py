@@ -300,28 +300,27 @@ def test_count1_final_partial_quad_not_dropped():
     # decode (spilled values discarded), not be zeroed as stuffing.
     # Build a granule payload by hand whose big-values region ends at
     # 574 and whose last count1 quad covers 574..577.
-    from conduino_spark.operators.mp3 import (_Bits, _enc_tables,
-                                              _read_huffman)
+    from conduino_spark.operators.bitio import MsbReader, MsbWriter
+    from conduino_spark.operators.mp3 import _enc_tables, _read_huffman
     maps, c1map = _enc_tables()
-    from conduino_spark.operators.mp3 import _BitWriter
-    bw = _BitWriter()
+    bw = MsbWriter()
     inv, _ = maps[1]                         # table 1: values 0/1
     for _ in range(287):                     # pairs 0..573 as (1,1)
-        bw.write_code(inv[(1, 1)])
+        bw.write_code(*inv[(1, 1)])
         bw.write(0, 1)                       # + sign
         bw.write(0, 1)
     # count1 quad at 574: (v, w) land at 574/575, (x, y) spill
-    bw.write_code(c1map[0b1100])             # v=1 w=1 x=0 y=0
+    bw.write_code(*c1map[0b1100])             # v=1 w=1 x=0 y=0
     bw.write(0, 1)
     bw.write(1, 1)                           # w negative
-    payload = bw.to_bytes()
+    payload = bw.bytes()
     g = {"table_select": [1, 1, 1], "big_values": 287,
          "count1table_select": 0, "window_switching": 0,
          "block_type": 0, "mixed_block": 0,
          "region0_count": 7, "region1_count": 7}
     h = {"mpeg1": True, "mpeg25": False, "sr_idx": 0}
-    br = _Bits(payload, 0)
-    xs, pos = _read_huffman(br, g, h, len(bw.bits))
+    br = MsbReader(payload)
+    xs, pos = _read_huffman(br, g, h, bw.tell())
     assert pos == 576
     assert xs[574] == 1 and xs[575] == -1    # previously zeroed
-    assert br.pos == len(bw.bits)            # exact conformance
+    assert br.pos == bw.tell()            # exact conformance

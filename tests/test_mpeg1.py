@@ -11,9 +11,10 @@ the documented uncertified tables, and fuzz = ValueError always.
 import numpy as np
 import pytest
 
+from conduino_spark.operators.bitio import MsbReader, MsbWriter
 from conduino_spark.operators.mpeg1 import (
-    _BitWriter, _Bits, _decode_mv_component, _mc_predict,
-    decode_mpeg1, encode_mpeg1, mpeg1_info)
+    _decode_mv_component, _mc_predict, decode_mpeg1, encode_mpeg1,
+    mpeg1_info)
 
 
 def _gray_blocks(seed, h=48, w=64):
@@ -138,18 +139,18 @@ def test_gop_structure_and_info():
 def test_mv_component_fcode_arithmetic():
     # f_code 3 (f=4): delta = 1 + 4*(|code|-1) + r; round-trip a
     # hand-written (code, r) pair through the decoder
-    bw = _BitWriter()
-    bw.write_code("001")          # |motion_code| = 2
+    bw = MsbWriter()
+    bw.write_code(0b001, 3)          # |motion_code| = 2
     bw.write(0, 1)                # positive
     bw.write(3, 2)                # r = 3 (f_code-1 = 2 bits)
-    br = _Bits(bw.bytes())
+    br = MsbReader(bw.bytes())
     mv = _decode_mv_component(br, 3, 0)
     assert mv == 1 + 4 * 1 + 3    # = 8
     # modulo wrap at the top of the range
-    bw = _BitWriter()
-    bw.write_code("01")           # |code| = 1
+    bw = MsbWriter()
+    bw.write_code(0b01, 2)           # |code| = 1
     bw.write(0, 1)                # positive
-    br = _Bits(bw.bytes())
+    br = MsbReader(bw.bytes())
     assert _decode_mv_component(br, 1, 15) == -16   # 16 wraps
 
 
@@ -250,7 +251,7 @@ def test_d_pictures_fuzz():
 def _mini_stream(slice_bits: "list[tuple]", ptype: int = 1) -> bytes:
     """Sequence + picture header + ONE hand-written slice."""
     out = bytearray()
-    bw = _BitWriter()
+    bw = MsbWriter()
     bw.write(16, 12)
     bw.write(16, 12)
     bw.write(1, 4)
@@ -262,7 +263,7 @@ def _mini_stream(slice_bits: "list[tuple]", ptype: int = 1) -> bytes:
     bw.write(0, 1)
     bw.write(0, 1)
     out += b"\x00\x00\x01\xb3" + bw.bytes()
-    bw = _BitWriter()
+    bw = MsbWriter()
     bw.write(0, 10)
     bw.write(ptype, 3)
     bw.write(0xFFFF, 16)
@@ -270,12 +271,12 @@ def _mini_stream(slice_bits: "list[tuple]", ptype: int = 1) -> bytes:
         bw.write(0, 1)
         bw.write(1, 3)
     out += b"\x00\x00\x01\x00" + bw.bytes()
-    bw = _BitWriter()
+    bw = MsbWriter()
     bw.write(8, 5)                # quantizer_scale
     bw.write(0, 1)                # no extra info
     for kind, val in slice_bits:
         if kind == "code":
-            bw.write_code(val)
+            bw.write_code(int(val, 2), len(val))
         else:
             bw.write(val[0], val[1])
     out += b"\x00\x00\x01\x01" + bw.bytes()
@@ -539,9 +540,8 @@ def test_slice_spanning_mb_rows():
     # a single slice carrying macroblocks across TWO rows (legal; our
     # encoder emits one slice per row, so hand-build it): 16x32 image
     # = 1x2 MBs, slice vertical position 1, two intra MBs in one slice
-    from conduino_spark.operators.mpeg1 import _BitWriter
     out = bytearray()
-    bw = _BitWriter()
+    bw = MsbWriter()
     bw.write(16, 12)
     bw.write(32, 12)
     bw.write(1, 4)
@@ -553,22 +553,25 @@ def test_slice_spanning_mb_rows():
     bw.write(0, 1)
     bw.write(0, 1)
     out += b"\x00\x00\x01\xb3" + bw.bytes()
-    bw = _BitWriter()
+    bw = MsbWriter()
     bw.write(0, 10)
     bw.write(1, 3)                 # I picture
     bw.write(0xFFFF, 16)
     out += b"\x00\x00\x01\x00" + bw.bytes()
-    bw = _BitWriter()
+    bw = MsbWriter()
     bw.write(8, 5)                 # qscale
     bw.write(0, 1)
     for _mb in range(2):           # two MBs: rows 0 and 1
-        bw.write_code("1")         # addr inc 1
-        bw.write_code("1")         # intra
+        bw.write_code(0b1, 1)         # addr inc 1
+        bw.write_code(0b1, 1)         # intra
         for blk in range(6):
             luma = blk < 4
             # DC diff 0 for every block, EOB immediately
-            bw.write_code("100" if luma else "00")
-            bw.write_code("10")
+            if luma:
+                bw.write_code(0b100, 3)
+            else:
+                bw.write_code(0b00, 2)
+            bw.write_code(0b10, 2)
     out += b"\x00\x00\x01\x01" + bw.bytes()
     out += b"\x00\x00\x01\xb7"
     fps, (w, h), frames = decode_mpeg1(bytes(out))

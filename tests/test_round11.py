@@ -538,9 +538,10 @@ def test_jpeg_entropy_layer_is_lossless():
     blocks with extreme categories, long zero runs (ZRL), and EOB all
     survive bit-exactly, including DC prediction across blocks."""
     import numpy as np
+    from conduino_spark.operators.bitio import MsbWriter
     from conduino_spark.operators.jpeg import (
-        _AC_LUMA, _BitReader, _BitWriter, _DC_LUMA, _HuffDecoder,
-        _decode_block, _encode_block, _huff_codes)
+        _AC_LUMA, _DC_LUMA, _decode_block, _encode_block, _huff_codes,
+        _huff_decoder, _scan_reader, _stuffed)
     rng = np.random.RandomState(7)
     blocks = []
     for i in range(40):
@@ -553,14 +554,14 @@ def test_jpeg_entropy_layer_is_lossless():
     zrl = np.zeros(64, np.int64)
     zrl[63] = 1                                    # 62-zero run → 3 ZRL
     blocks.append(zrl)
-    bw = _BitWriter()
+    bw = MsbWriter()
     dc_codes, ac_codes = _huff_codes(*_DC_LUMA), _huff_codes(*_AC_LUMA)
     pred = 0
     for zz in blocks:
         pred = _encode_block(bw, zz, pred, dc_codes, ac_codes)
-    data = bw.flush()
-    br = _BitReader(data, 0)
-    dc, ac = _HuffDecoder(*_DC_LUMA), _HuffDecoder(*_AC_LUMA)
+    data = _stuffed(bw)
+    br, _ = _scan_reader(data, 0)
+    dc, ac = _huff_decoder(*_DC_LUMA), _huff_decoder(*_AC_LUMA)
     pred = 0
     for zz in blocks:
         got, pred = _decode_block(br, pred, dc, ac)

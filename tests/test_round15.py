@@ -11,8 +11,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from conduino_spark.operators.mpeg1 import (
-    _BitWriter, decode_mpeg1, encode_mpeg1)
+from conduino_spark.operators.bitio import MsbReader, MsbWriter
+from conduino_spark.operators.mpeg1 import decode_mpeg1, encode_mpeg1
 
 
 def _gray_blocks(seed, h=48, w=64):
@@ -62,7 +62,7 @@ def test_multi_slice_per_row_i_picture_decodes():
     # 1: slice A codes MB0, slice B opens with inc 2 to position at
     # MB1 past the MB slice A covered — conformant, must decode
     out = bytearray()
-    bw = _BitWriter()
+    bw = MsbWriter()
     bw.write(32, 12)
     bw.write(16, 12)
     bw.write(1, 4)
@@ -74,29 +74,32 @@ def test_multi_slice_per_row_i_picture_decodes():
     bw.write(0, 1)
     bw.write(0, 1)
     out += b"\x00\x00\x01\xb3" + bw.bytes()
-    bw = _BitWriter()
+    bw = MsbWriter()
     bw.write(0, 10)
     bw.write(1, 3)                 # I picture
     bw.write(0xFFFF, 16)
     out += b"\x00\x00\x01\x00" + bw.bytes()
 
     def intra_mb(bw):
-        bw.write_code("1")         # intra
+        bw.write_code(0b1, 1)         # intra
         for blk in range(6):
             luma = blk < 4
-            bw.write_code("100" if luma else "00")  # DC diff 0
-            bw.write_code("10")                     # EOB
+            if luma:
+                bw.write_code(0b100, 3)
+            else:
+                bw.write_code(0b00, 2)
+            bw.write_code(0b10, 2)                     # EOB
 
-    bw = _BitWriter()
+    bw = MsbWriter()
     bw.write(8, 5)                 # qscale
     bw.write(0, 1)
-    bw.write_code("1")             # inc 1 -> MB0
+    bw.write_code(0b1, 1)             # inc 1 -> MB0
     intra_mb(bw)
     out += b"\x00\x00\x01\x01" + bw.bytes()
-    bw = _BitWriter()
+    bw = MsbWriter()
     bw.write(8, 5)
     bw.write(0, 1)
-    bw.write_code("011")           # inc 2 -> MB1 (past slice A's MB)
+    bw.write_code(0b011, 3)           # inc 2 -> MB1 (past slice A's MB)
     intra_mb(bw)
     out += b"\x00\x00\x01\x01" + bw.bytes()
     out += b"\x00\x00\x01\xb7"
@@ -109,7 +112,7 @@ def test_mid_slice_skip_in_i_picture_still_raises():
     # inside a slice (not at its start) inc>1 in an I-picture remains
     # illegal: 32x16, MB0 coded then inc 2
     out = bytearray()
-    bw = _BitWriter()
+    bw = MsbWriter()
     bw.write(32, 12)
     bw.write(16, 12)
     bw.write(1, 4)
@@ -121,20 +124,23 @@ def test_mid_slice_skip_in_i_picture_still_raises():
     bw.write(0, 1)
     bw.write(0, 1)
     out += b"\x00\x00\x01\xb3" + bw.bytes()
-    bw = _BitWriter()
+    bw = MsbWriter()
     bw.write(0, 10)
     bw.write(1, 3)
     bw.write(0xFFFF, 16)
     out += b"\x00\x00\x01\x00" + bw.bytes()
-    bw = _BitWriter()
+    bw = MsbWriter()
     bw.write(8, 5)
     bw.write(0, 1)
-    bw.write_code("1")             # inc 1 -> MB0
-    bw.write_code("1")             # intra
+    bw.write_code(0b1, 1)             # inc 1 -> MB0
+    bw.write_code(0b1, 1)             # intra
     for blk in range(6):
-        bw.write_code("100" if blk < 4 else "00")
-        bw.write_code("10")
-    bw.write_code("011")           # inc 2 mid-slice: skip in I
+        if blk < 4:
+            bw.write_code(0b100, 3)
+        else:
+            bw.write_code(0b00, 2)
+        bw.write_code(0b10, 2)
+    bw.write_code(0b011, 3)           # inc 2 mid-slice: skip in I
     out += b"\x00\x00\x01\x01" + bw.bytes()
     out += b"\x00\x00\x01\xb7"
     with pytest.raises(ValueError, match="skipped macroblock in I"):
@@ -171,7 +177,7 @@ def _walk_first_p_mb(blob):
     first P picture — a test-side bitstream walker over the module's
     own certified tables."""
     from conduino_spark.operators.mpeg1 import (
-        _Bits, ADDR_INC, MB_TYPE_P, CBP, MOTION_CODE)
+        _vlc, ADDR_INC, MB_TYPE_P, CBP, MOTION_CODE)
     i = blob.find(b"\x00\x00\x01\x00")
     while i >= 0:
         if (blob[i + 5] >> 3) & 7 == 2:
@@ -179,21 +185,21 @@ def _walk_first_p_mb(blob):
         i = blob.find(b"\x00\x00\x01\x00", i + 4)
     assert i >= 0, "no P picture"
     s = blob.find(b"\x00\x00\x01\x01", i)
-    br = _Bits(blob[s + 4:])
+    br = MsbReader(blob[s + 4:])
     br.read(5)                        # qscale
-    assert br.read1() == 0            # no extra info
-    v = br.vlc(ADDR_INC, "inc")
+    assert br.read(1) == 0            # no extra info
+    v = _vlc(br, ADDR_INC, "inc")
     assert v == 1
-    mt = br.vlc(MB_TYPE_P, "mb_type")
+    mt = _vlc(br, MB_TYPE_P, "mb_type")
     quant, mf, _, pattern, intra = mt
     if quant:
         br.read(5)
     if mf:
         for _ in range(2):
-            c = br.vlc(MOTION_CODE, "mv")
+            c = _vlc(br, MOTION_CODE, "mv")
             if c:
-                br.read1()
-    cbp = br.vlc(CBP, "cbp") if pattern else 0
+                br.read(1)
+    cbp = _vlc(br, CBP, "cbp") if pattern else 0
     return mt, cbp
 
 
@@ -377,7 +383,7 @@ def test_handbuilt_backward_coded_b_macroblock():
     # DC-only residual at qscale 8 → odd(5*8)=39 → +39/8 → +5 on the
     # Y0 block; anchors are uniform gray 120
     out = bytearray()
-    bw = _BitWriter()
+    bw = MsbWriter()
     bw.write(16, 12)
     bw.write(16, 12)
     bw.write(1, 4)
@@ -391,7 +397,7 @@ def test_handbuilt_backward_coded_b_macroblock():
     out += b"\x00\x00\x01\xb3" + bw.bytes()
 
     def picture_header(tref, ptype, n_fcodes):
-        g = _BitWriter()
+        g = MsbWriter()
         g.write(tref, 10)
         g.write(ptype, 3)
         g.write(0xFFFF, 16)
@@ -401,30 +407,30 @@ def test_handbuilt_backward_coded_b_macroblock():
         return b"\x00\x00\x01\x00" + g.bytes()
 
     def slice_bits(codes):
-        g = _BitWriter()
+        g = MsbWriter()
         g.write(8, 5)                  # qscale 8
         g.write(0, 1)
         for c in codes:
-            g.write_code(c)
+            g.write_code(int(c, 2), len(c))
         return b"\x00\x00\x01\x01" + g.bytes()
 
     # I picture: 1 intra MB, uniform gray 120: luma DC 960, predictor
     # starts 1024 → DC diff (960-1024)/8 = -8 (size 4, bits 7)
     out += picture_header(0, 1, 0)
-    g = _BitWriter()
+    g = MsbWriter()
     g.write(8, 5)
     g.write(0, 1)
-    g.write_code("1")
-    g.write_code("1")
-    g.write_code("110")
+    g.write_code(0b1, 1)
+    g.write_code(0b1, 1)
+    g.write_code(0b110, 3)
     g.write(7, 4)
-    g.write_code("10")
+    g.write_code(0b10, 2)
     for _ in range(3):
-        g.write_code("100")
-        g.write_code("10")
+        g.write_code(0b100, 3)
+        g.write_code(0b10, 2)
     for _ in range(2):
-        g.write_code("00")
-        g.write_code("10")
+        g.write_code(0b00, 2)
+        g.write_code(0b10, 2)
     out += b"\x00\x00\x01\x01" + g.bytes()
     # P picture (tref 2): MC not coded, mv 0
     out += picture_header(2, 2, 1)

@@ -14,8 +14,8 @@ import struct
 import numpy as np
 import pytest
 
-from conduino_spark.operators.vorbis import (FLOOR1_INVERSE_DB, _Bits,
-                                             _BitWriter,
+from conduino_spark.operators.bitio import LsbReader, LsbWriter
+from conduino_spark.operators.vorbis import (FLOOR1_INVERSE_DB,
                                              _assign_codewords,
                                              _imdct_mat, _ogg_packets,
                                              _parse_setup, _window,
@@ -201,7 +201,7 @@ def test_exact_255_multiple_packet():
 # ---------------------------------------------------------------------------
 
 def test_floor0_raises_loudly():
-    bw = _BitWriter()
+    bw = LsbWriter()
     for b in b"\x05vorbis":
         bw.write(b, 8)
     bw.write(0, 8)                           # 1 codebook
@@ -371,7 +371,7 @@ def test_codebook_bomb_guard():
     # a forged setup header demanding a gigabyte value table must
     # raise, not allocate (24-bit entries x 16-bit dims)
     from conduino_spark.operators.vorbis import _Codebook
-    bw = _BitWriter()
+    bw = LsbWriter()
     bw.write(0x564342, 24)
     bw.write(64, 16)                         # dims 64
     bw.write(1 << 20, 24)                    # entries 1M
@@ -384,13 +384,13 @@ def test_codebook_bomb_guard():
     bw.write(0, 4)
     bw.write(0, 1)
     with pytest.raises(ValueError):
-        _Codebook(_Bits(bw.bytes() + b"\x00" * 64))
+        _Codebook(LsbReader(bw.bytes() + b"\x00" * 64))
 
 
 def test_review_regressions_r13():
     from conduino_spark.operators.vorbis import _Codebook
     # dims=0 lookup book must raise, not hang
-    bw = _BitWriter()
+    bw = LsbWriter()
     bw.write(0x564342, 24)
     bw.write(0, 16)                          # dims 0
     bw.write(2, 24)
@@ -400,14 +400,14 @@ def test_review_regressions_r13():
     bw.write(0, 5)
     bw.write(1, 4)                           # lookup type 1
     with pytest.raises(ValueError, match="0 dims"):
-        _Codebook(_Bits(bw.bytes() + b"\x00" * 32))
+        _Codebook(LsbReader(bw.bytes() + b"\x00" * 32))
     # raw 16M-entry codebook must raise before allocating
-    bw = _BitWriter()
+    bw = LsbWriter()
     bw.write(0x564342, 24)
     bw.write(1, 16)
     bw.write((1 << 24) - 1, 24)              # entries
     with pytest.raises(ValueError, match="sanity cap"):
-        _Codebook(_Bits(bw.bytes() + b"\x00" * 32))
+        _Codebook(LsbReader(bw.bytes() + b"\x00" * 32))
     # zero-length stream trims to zero samples (granule 0 is legal)
     r, c, pcm = decode_vorbis(encode_vorbis(np.zeros(0), 44100))
     assert len(pcm) == 0

@@ -18,8 +18,9 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from conduino_spark.operators.bitio import LsbReader, LsbWriter
 from conduino_spark.operators.webp import (
-    _BitReader, _BitWriter, _DIST_MAP, _dist_from_code, _dist_to_code,
+    _DIST_MAP, _dist_from_code, _dist_to_code,
     _encode_pixels, _prefix_encode, _prefix_value, _read_prefix_code,
     _write_prefix_code, decode_vp8l, decode_webp, encode_webp,
 )
@@ -141,7 +142,7 @@ def test_vp8l_meta_prefix_groups_decode():
     # images, so build the stream by hand
     w, h = 8, 4
     px0, px1 = 0xFF400000, 0xFF000040
-    bw = _BitWriter()
+    bw = LsbWriter()
     bw.write(0x2F, 8)
     bw.write(w - 1, 14)
     bw.write(h - 1, 14)
@@ -177,7 +178,7 @@ def test_vp8l_meta_prefix_groups_decode():
 def test_vp8l_max_symbol_path():
     # normal code using the max-symbol shortcut: symbols 0,1 length 1,
     # written with max_symbol=2 so reading stops after two lengths
-    bw = _BitWriter()
+    bw = LsbWriter()
     bw.write(0, 1)                           # not simple
     bw.write(15, 4)                          # all 19 CL slots
     for sym in (17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12,
@@ -187,8 +188,8 @@ def test_vp8l_max_symbol_path():
     bw.write(0, 3)                           # nbits = 2
     bw.write(0, 2)                           # max_symbol = 2
     # CL tree is single-symbol → the two code lengths cost no bits
-    dec = _read_prefix_code(_BitReader(bw.bytes() + b"\x00" * 4), 256)
-    r = _BitReader(bytes([0b10]))            # LSB-first: bit0=0, bit1=1
+    dec = _read_prefix_code(LsbReader(bw.bytes() + b"\x00" * 4), 256)
+    r = LsbReader(bytes([0b10]))            # LSB-first: bit0=0, bit1=1
     assert dec.decode(r) == 0
     assert dec.decode(r) == 1
 
@@ -196,7 +197,7 @@ def test_vp8l_max_symbol_path():
 def test_vp8l_code_length_repeat_16():
     # CL run code 16 repeats the previous nonzero length: emit one
     # literal length 2 then 16 (repeat 3) → four symbols at length 2
-    bw = _BitWriter()
+    bw = LsbWriter()
     bw.write(0, 1)                           # not simple
     bw.write(15, 4)
     cl_lengths = [0] * 19
@@ -212,9 +213,9 @@ def test_vp8l_code_length_repeat_16():
     bw.write_code(0, 1)                      # length 2 for symbol 0
     bw.write_code(1, 1)                      # run code 16
     bw.write(0, 2)                           # repeat = 3
-    dec = _read_prefix_code(_BitReader(bw.bytes() + b"\x00" * 64), 256)
+    dec = _read_prefix_code(LsbReader(bw.bytes() + b"\x00" * 64), 256)
     # four symbols of length 2 → canonical codes 00,01,10,11
-    r = _BitReader(bytes([0b00011110, 0b0]))  # MSB-first codes 00,11,
+    r = LsbReader(bytes([0b00011110, 0b0]))  # MSB-first codes 00,11,
     assert dec.decode(r) == 1                 # bits 0,1 → code 01
     assert dec.decode(r) == 3                 # bits 1,1 → code 11
     assert dec.decode(r) == 2                 # bits 1,0 → code 10
@@ -236,9 +237,9 @@ def test_webp_distance_map_inverse():
 def test_webp_prefix_value_inverse():
     for v in list(range(1, 200)) + [1024, 3072, 4096]:
         code, ebits, extra = _prefix_encode(v)
-        bw = _BitWriter()
+        bw = LsbWriter()
         bw.write(extra, ebits)
-        br = _BitReader(bw.bytes() + b"\x00" * 4)
+        br = LsbReader(bw.bytes() + b"\x00" * 4)
         assert _prefix_value(code, br) == v
 
 

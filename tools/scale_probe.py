@@ -623,6 +623,13 @@ def main() -> None:
         fixtures["vorbis"] = (
             encode_vorbis(x[:8192], 32000, blocksize=1024,
                           value_bits=6), decode_vorbis)
+        # MPEG-1 video: an I picture plus a P picture of the same
+        # content shifted by one macroblock (forward MC)
+        from conduino_spark.operators.mpeg1 import (decode_mpeg1,
+                                                    encode_mpeg1)
+        fixtures["mpeg1"] = (
+            encode_mpeg1([img, np.roll(img, (16, 16), (0, 1))],
+                         mv_search=16), decode_mpeg1)
         def _out_bytes(v):
             # decoded payload size: (rate, nch, samples) for audio,
             # (frames, delays) for gif, ndarray for images
