@@ -47,6 +47,7 @@ from conduino_spark.operators.text import (  # noqa: E402
     normalize_text_sql, strip_html_sql,
 )
 from conduino_spark.timeutil import epoch_seconds as _eps  # noqa: E402
+from conduino_spark.operators.smallio import local_frame  # noqa: E402
 from conduino_spark.operators.text import (  # noqa: E402
     lang_id_sql, quality_score_sql, repetition_stats_sql, tokens_sql,
 )
@@ -2107,8 +2108,8 @@ def q_kcenter_emb(spark, sf):
     from conduino_spark import kcenter_select
     emb = _src(sf, "embeddings").df(spark)
     picks = kcenter_select(emb, k=16)
-    return spark.createDataFrame(
-        [(int(i), int(r), int(m)) for i, r, m in picks],
+    return local_frame(
+        spark, [(int(i), int(r), int(m)) for i, r, m in picks],
         "vec_id long, sel_round int, mind long")
 
 
@@ -2579,8 +2580,8 @@ def q_dsir_select_docs(spark, sf):
     from conduino_spark import kcenter_select
     emb = _src(sf, "embeddings", min_partitions="auto").df(spark)
     picks = kcenter_select(emb, k=5)
-    kc = spark.createDataFrame(
-        [(f"kc:{rnd}", int(i), float(mind)) for i, rnd, mind in picks],
+    kc = local_frame(
+        spark, [(f"kc:{rnd}", int(i), float(mind)) for i, rnd, mind in picks],
         "part string, doc_id long, val double")
     return dsir.unionByName(kc)
 
@@ -2793,8 +2794,8 @@ def q_bpe_train_docs(spark, sf):
     from conduino_spark import bpe_encode, bpe_train
     docs = _src(sf, "documents", min_partitions="auto").df(spark)
     merges = bpe_train(docs, n_merges=64)
-    train = spark.createDataFrame(
-        [(i, a, b) for i, (a, b) in enumerate(merges)],
+    train = local_frame(
+        spark, [(i, a, b) for i, (a, b) in enumerate(merges)],
         "merge_no int, a string, b string").select(
         F.lit("merge").alias("part"),
         F.col("merge_no").cast("string").alias("k"),

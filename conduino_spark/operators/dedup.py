@@ -29,8 +29,8 @@ from conduino_spark.plans.cachereg import track
 from conduino_spark.plans.core import Stage
 from conduino_spark.functions.hashing import (MERSENNE31, h32, h32_shard,
                                               lcg_params)
-from conduino_spark.operators.smallio import (driver_collect, read_meta,
-                                              write_meta)
+from conduino_spark.operators.smallio import (driver_collect, local_frame,
+                                              read_meta, write_meta)
 from conduino_spark.operators.text import tokens_col
 
 # default MinHash configuration, shared with the oracle SQL.  The
@@ -619,7 +619,7 @@ def _cc_driver(pdf, dt: str, spark, max_iters: int) -> DataFrame:
             f"raise max_iters")
     import pandas as pd
     out = pd.DataFrame({"id": verts, "lbl": verts[lbl]})
-    return spark.createDataFrame(out, schema=f"id {dt}, lbl {dt}")
+    return local_frame(spark, out, f"id {dt}, lbl {dt}")
 
 
 def _cc_min_label(pairs: DataFrame, *, max_iters: int = 25) -> DataFrame:
@@ -2513,7 +2513,7 @@ def _blocked_gemm_pairs(vec: DataFrame, keep, *,
                  for q in range(b, n_blocks)]
                 + [(q, p, q, 1) for p in range(n_blocks)
                    for q in range(p + 1, n_blocks)])
-    asn = spark.createDataFrame(asn_rows, "b int, ba int, bb int, side int")
+    asn = local_frame(spark, asn_rows, "b int, ba int, bb int, side int")
     cols = ["ba", "bb", "side", "__id", "gs"] + ([] if binary else ["ws"])
     sides = (vec.join(F.broadcast(asn), "b")
              .select(*cols)

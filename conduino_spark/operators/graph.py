@@ -208,8 +208,8 @@ def k_core(k: int, src: str = "id_a", dst: str = "id_b", *,
 
         def survivors(mask):
             kept = np.unique(np.concatenate([s[mask], d[mask]]))
-            return spark.createDataFrame(
-                pd.DataFrame({"id": verts[kept]}), schema=f"id {dt}")
+            return smallio.local_frame(
+                spark, pd.DataFrame({"id": verts[kept]}), f"id {dt}")
 
         for _ in range(max_iters):
             if n_edges == 0:
@@ -307,8 +307,8 @@ def _lp_driver(nodes: DataFrame, epdf, dt: str, label_col: str,
     s, d = inv[:len(epdf)], inv[len(epdf):]
     w = epdf["__w"].to_numpy()
     # seed labels for the edge vertices only (bounded by the budget)
-    vdf = spark.createDataFrame(pd.DataFrame({"__vid": verts}),
-                                schema=f"__vid {dt}")
+    vdf = smallio.local_frame(spark, pd.DataFrame({"__vid": verts}),
+                              f"__vid {dt}")
     spdf = (nodes.select(F.col(id_col).alias("__vid"),
                          F.col(label_col).cast("string").alias("__seed"))
                  .join(F.broadcast(vdf), "__vid").toPandas())
@@ -349,8 +349,7 @@ def _lp_driver(nodes: DataFrame, epdf, dt: str, label_col: str,
         prop = np.where(cur >= 0, labels_all[np.clip(cur, 0, None)],
                         None)
     pout = pd.DataFrame({"__vid": verts, "__lpv": prop})
-    prop_df = spark.createDataFrame(pout,
-                                    schema=f"__vid {dt}, __lpv string")
+    prop_df = smallio.local_frame(spark, pout, f"__vid {dt}, __lpv string")
     joined = nodes.join(
         F.broadcast(prop_df.withColumnRenamed("__vid", id_col)),
         id_col, "left")

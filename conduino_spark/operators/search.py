@@ -34,7 +34,8 @@ from pyspark.sql import functions as F
 from conduino_spark.functions.hashing import h32_shard
 from conduino_spark.plans.core import Stage
 from conduino_spark.operators.smallio import (driver_parquet_read,
-                                              driver_parquet_write)
+                                              driver_parquet_write,
+                                              local_frame)
 from conduino_spark.operators.text import TOKEN_SPLIT, tokens_col, tokens_sql
 
 
@@ -321,9 +322,8 @@ def phrase_search(phrase: Union[str, Sequence[str]], *,
 
     def fn(df: DataFrame) -> DataFrame:
         spark = df.sparkSession
-        tdf = spark.createDataFrame(
-            [(t, i) for i, t in enumerate(terms)],
-            "__t string, __i int")
+        tdf = local_frame(spark, [(t, i) for i, t in enumerate(terms)],
+                          "__t string, __i int")
         toks = tokens_col(F.coalesce(F.col(text_col), F.lit("")))
         # r16 (guide §2.2/§2.3 — and what the docstring promised all
         # along): filter to the phrase's terms BEFORE the explode.  The

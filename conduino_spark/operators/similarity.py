@@ -26,7 +26,7 @@ from conduino_spark.operators.smallio import (
     driver_collect, read_meta as _read_meta, write_meta as _write_meta,
     centroids_arrow as _centroids_arrow,
     driver_parquet_read as _driver_parquet_read,
-    driver_parquet_write as _driver_parquet_write)
+    driver_parquet_write as _driver_parquet_write, local_frame)
 
 LSH_PLANES = 8  # 2^8 = 256 buckets
 
@@ -1412,7 +1412,8 @@ def ann_join(corpus: DataFrame, k: int = 10, *, nprobe: int = 2,
         # data-derived path when the model equals the data means
         # (law-tested).
         if centroids is not None:
-            means = queries.sparkSession.createDataFrame(
+            means = local_frame(
+                queries.sparkSession,
                 [(int(c), i, float(x))
                  for c, v in centroids.items()
                  for i, x in enumerate(v)],
@@ -1450,8 +1451,7 @@ def ann_join(corpus: DataFrame, k: int = 10, *, nprobe: int = 2,
             StructField("__cell", cell_type),
         ])
         if not mrows:
-            probes = queries.sparkSession.createDataFrame(
-                [], probe_schema)
+            probes = local_frame(queries.sparkSession, [], probe_schema)
         else:
             cells_sorted = sorted({r["__cell"] for r in mrows})
             cidx = {c: j for j, c in enumerate(cells_sorted)}

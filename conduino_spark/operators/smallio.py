@@ -1,4 +1,5 @@
-"""Driver-side parquet I/O for DRIVER-SIZED index metadata.
+"""Driver-side I/O for DRIVER-SIZED tables: index metadata, fast-path
+collects, and driver-held tables handed back to Spark.
 
 Rationale (r10 verdict's one measured defect): a 1-row
 ``coalesce(1).write.parquet`` pays a full Spark job-commit cycle —
@@ -30,6 +31,15 @@ with.
 The same rule bounds the loops' numpy fast paths (CC, k-core, label
 propagation, k-center, logreg): each collects only through
 :func:`driver_collect`, under the one :data:`DRIVER_CELLS` budget.
+
+The way back is the rule too: every table the driver holds (fast-path
+results, model means, phrase terms, selection picks, ``source_list``
+scalars) becomes a DataFrame only through :func:`local_frame`.  It
+hands Spark an Arrow table, so the plan holds a ``LocalTableScan``:
+no Python worker job scans it (a row list, or an empty pandas frame,
+given to ``createDataFrame`` becomes a ``Scan ExistingRDD`` that every
+stage reading it re-runs as a Python-worker job), and an empty table
+is a ``LocalTableScan <empty>`` the optimizer prunes.
 """
 
 from __future__ import annotations
@@ -172,3 +182,32 @@ def driver_collect(df, rows: int, width: int) -> "pandas.DataFrame | None":
     if pdf.isnull().values.any():
         return None
     return pdf
+
+
+def local_frame(spark, data, schema):
+    """``data`` — a pandas frame, or row tuples in ``schema`` order,
+    empty included — as a DataFrame over an Arrow local relation.
+    ``schema`` (a DDL string or ``StructType``) is the frame's schema
+    exactly: names, types and nullability.  Row tuples go through
+    Spark's own type verifier first, so a value that does not fit
+    raises as ``createDataFrame`` would."""
+    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import (StructType, _make_type_verifier,
+                                   _parse_datatype_string)
+
+    struct = (schema if isinstance(schema, StructType)
+              else _parse_datatype_string(schema))
+    arrow = to_arrow_schema(struct)
+    if isinstance(data, pd.DataFrame):
+        table = pa.Table.from_pandas(data, schema=arrow,
+                                     preserve_index=False)
+    else:
+        rows = list(data)
+        verify = _make_type_verifier(struct)
+        for r in rows:
+            verify(r)
+        table = pa.table([pa.array([r[i] for r in rows], f.type)
+                          for i, f in enumerate(arrow)], schema=arrow)
+    return spark.createDataFrame(table, struct)

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from conduino_spark.plans.cachereg import track
 from conduino_spark.plans.core import SEQ, Stage
+from conduino_spark.operators.smallio import local_frame
 
 _SCAN_FNS = {"sum": F.sum, "min": F.min, "max": F.max, "count": F.count,
              "product": F.product}
@@ -512,8 +513,8 @@ def ewma(alpha: float, expr: Union[str, Column] = "v", *, out: str = "ewma",
         for r in rows:
             carries.append((r["__pid"], carry))
             carry = r["__tail"] + (q ** r["__n"]) * carry
-        offs = spark.createDataFrame(carries or [(0, 0.0)],
-                                     "__pid long, __carry double")
+        offs = local_frame(spark, carries or [(0, 0.0)],
+                           "__pid long, __carry double")
         res = (local.join(F.broadcast(offs), "__pid")
                     .withColumn(out, F.col("__t") + F.col("__carry")
                                 * F.pow(F.lit(q), F.col("__pos")))

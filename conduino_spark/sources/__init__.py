@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from conduino_spark.operators.smallio import local_frame
 from conduino_spark.plans.core import SEQ, Source, with_seq_from
 
 
@@ -61,9 +62,9 @@ def source_list(values: Iterable[Any], *, name: str = "source_list") -> Source:
 
     def fn(spark: SparkSession) -> DataFrame:
         rows, schema = _rows_from_values(vals)
-        if schema is None:
+        if schema is None:      # dict rows keep Spark's schema inference
             return spark.createDataFrame(rows)
-        return spark.createDataFrame(rows, schema)
+        return local_frame(spark, rows, schema)
 
     return Source(fn, name=name)
 

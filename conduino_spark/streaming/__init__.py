@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from conduino_spark.plans.core import SEQ, Sink, Source, Stage
+from conduino_spark.operators.smallio import local_frame
 
 
 def rate_source(rows_per_second: int = 100) -> Source:
@@ -152,7 +153,7 @@ def feedback_pipe_stream(stage: Stage, src: Source, spark: SparkSession,
         return spark.read.parquet(out_dir)
     except Exception:
         if schema_holder:           # every batch fixpointed to empty
-            return spark.createDataFrame([], schema_holder[-1])
+            return local_frame(spark, [], schema_holder[-1])
         raise
 
 

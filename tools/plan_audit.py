@@ -18,6 +18,12 @@ facts from the EXECUTED plan string:
   * build_jobs       — Spark jobs started while the query callable built
                        its plan (eager gates, loops, cache fills, schema
                        inference), before any action
+  * n_python_rdd_scan — `Scan ExistingRDD` nodes over a PythonRDD:
+                       driver data handed to `createDataFrame` as a row
+                       list (or an empty pandas frame), which every
+                       scan re-runs as a Python-worker job;
+                       `smallio.local_frame` tables show as
+                       `LocalTableScan` instead
 
 The audit is descriptive, not pass/fail — its value is DIFFS: a new
 round that doubles a query's exchanges or sprouts a CartesianProduct
@@ -137,22 +143,19 @@ def classify_cartesians(jplan) -> "tuple[int, int]":
     return total, real
 
 
-def count_exchanges(jplan) -> int:
-    """Shuffle-exchange count by TREE WALK with cached-plan dedup
-    (r10).  The old string count overstated persisted plans: an
+def _plan_nodes(jplan):
+    """Every node of an executed plan, by TREE WALK with cached-plan
+    dedup (r10): a string count overstates persisted plans, since an
     InMemoryRelation referenced k times prints its cached lineage k
-    times, so one shared `track()` cache's exchanges counted k-fold —
-    but the cache materializes ONCE.  Walk the tree, count Exchange
-    nodes, and descend into each DISTINCT cached plan exactly once
-    (ReusedExchange is skipped — reuse doesn't re-shuffle)."""
+    times, but the cache materializes ONCE.  Descends into each
+    DISTINCT cached plan exactly once and skips what a ReusedExchange
+    references (reuse doesn't re-run it)."""
     seen_caches = set()
-    n = 0
     stack = [jplan]
     while stack:
         node = stack.pop()
+        yield node
         name = node.nodeName()
-        if name == "Exchange":
-            n += 1
         if name == "ReusedExchange":
             continue
         if name == "InMemoryTableScan":
@@ -188,7 +191,22 @@ def count_exchanges(jplan) -> int:
                 stack.append(sq.apply(i))
         except Exception:
             pass
-    return n
+
+
+def count_exchanges(jplan) -> int:
+    """Shuffle-exchange count over :func:`_plan_nodes`."""
+    return sum(n.nodeName() == "Exchange" for n in _plan_nodes(jplan))
+
+
+def count_python_rdd_scans(jplan) -> int:
+    """`Scan ExistingRDD` nodes whose RDD is fed by a PythonRDD: driver
+    data handed to `createDataFrame` as a row list (or an empty pandas
+    frame), which every scan re-runs as a Python-worker job.  A
+    `localCheckpoint` scan prints the same node name but reads a
+    JVM-side checkpoint, so it does not count."""
+    return sum(n.nodeName() == "Scan ExistingRDD"
+               and "PythonRDD" in n.rdd().toDebugString()
+               for n in _plan_nodes(jplan))
 
 
 def plan_facts(df) -> dict:
@@ -211,6 +229,7 @@ def plan_facts(df) -> dict:
                          + s.count("FlatMapGroupsInPandas")
                          + s.count("MapInPandas")),
         "n_row_python_udf": s.count("BatchEvalPython"),
+        "n_python_rdd_scan": count_python_rdd_scans(jplan),
         "pushed_filters": bool(re.search(r"PushedFilters: \[[^\]]", s)),
         "wscg": wscg,
         "cartesian": n_cart,
@@ -350,6 +369,9 @@ def main() -> None:
         "with_build_jobs": sorted(n for n, f in report.items()
                                   if f["build_jobs"]),
         "build_jobs": sum(f["build_jobs"] for f in report.values()),
+        # descriptive: driver tables scanned through a Python-worker RDD
+        "with_python_rdd_scan": sorted(n for n, f in report.items()
+                                       if f["n_python_rdd_scan"]),
         "max_exchanges": max((f["n_exchange"] for f in report.values()),
                              default=0),
         # r10 (VERDICT r9 #2): per-GATE-pin weight budget — a pin over

@@ -383,9 +383,10 @@ def main() -> None:
         # r12b: greedy k-center — k carried-minimum scans; the 10x
         # ratio measures the per-scan linearity (picks are k rows)
         from conduino_spark import kcenter_select
+        from conduino_spark.operators.smallio import local_frame
         picks = kcenter_select(df, k=8)
-        return df.sparkSession.createDataFrame(
-            [(int(i), int(r), int(m)) for i, r, m in picks],
+        return local_frame(
+            df.sparkSession, [(int(i), int(r), int(m)) for i, r, m in picks],
             "vec_id long, sel_round int, mind long")
 
     EMB_OPS["kcenter"] = _kcenter
