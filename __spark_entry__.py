@@ -3233,6 +3233,20 @@ def q_windowed_sketches(spark, sf):
     return quant.unionByName(cm)
 
 
+def _synth_blobs(spark, sf, gen):
+    """The media fixtures' shared pass: ``gen`` maps pandas batches of
+    ``documents.doc_id`` to ``(id, content)`` blob rows inside one
+    ``mapInPandas``.  The pass ends at a hash repartition on ``id``,
+    so the encoder and the decoder that reads its blobs run in
+    different stages and each task holds ONE Python worker, not two
+    stacked in one pipeline.  The explicit partition count keeps AQE
+    from coalescing the decode onto one core."""
+    docs = _src(sf, "documents", min_partitions="auto").df(spark) \
+        .select("doc_id")
+    return docs.mapInPandas(gen, "id long, content binary") \
+        .repartition(spark.sparkContext.defaultParallelism, "id")
+
+
 def _synth_media_blobs(spark, sf, cbp_arm=True):
     """Deterministic media fixtures derived from documents.doc_id —
     one sawtooth-PCM WAV and one formula PNG per doc, both encoded by
@@ -3247,9 +3261,6 @@ def _synth_media_blobs(spark, sf, cbp_arm=True):
     picture rotation stays — blockwise-constant content decodes
     PIXEL-IDENTICAL through D-only and I/P/P streams, so the decoded
     stats are unchanged), while profile_media carries the full set."""
-    docs = _src(sf, "documents", min_partitions="auto").df(spark) \
-        .select("doc_id")
-
     def gen(batches):
         import numpy as np
         import pandas as pd
@@ -3425,7 +3436,7 @@ def _synth_media_blobs(spark, sf, cbp_arm=True):
                                  else mux_mpeg_ps(es, packet_bytes=700))
             yield pd.DataFrame({"id": ids, "content": blobs})
 
-    return docs.mapInPandas(gen, "id long, content binary")
+    return _synth_blobs(spark, sf, gen)
 
 
 def _synth_container_blobs(spark, sf):
@@ -3435,9 +3446,6 @@ def _synth_container_blobs(spark, sf):
     writers from pure integer formulas.  Rates and durations are
     chosen so every duration_ms is an exact integer (no rounding-mode
     question can enter the hash)."""
-    docs = _src(sf, "documents", min_partitions="auto").df(spark) \
-        .select("doc_id")
-
     def gen(batches):
         import pandas as pd
         from conduino_spark import (encode_mp3_stub, encode_mp4_stub,
@@ -3512,7 +3520,7 @@ def _synth_container_blobs(spark, sf):
                              else mux_mpeg_ps(es9, packet_bytes=400))
             yield pd.DataFrame({"id": ids, "content": blobs})
 
-    return docs.mapInPandas(gen, "id long, content binary")
+    return _synth_blobs(spark, sf, gen)
 
 
 def q_profile_docs_gate(spark, sf):
@@ -3526,43 +3534,15 @@ def q_profile_docs_gate(spark, sf):
     # cbp_arm=False reproduces the r14 blob set exactly (see
     # _synth_media_blobs).  The benched profile_media pin itemizes
     # per-codec cost separately, incl. the r15 CBP/B/D chains.
-    from conduino_spark import container_info, media_profile, sniff_format
     base = q_profile_docs(spark, sf).select(
         F.lit("col").alias("part"),
         "column", "n_rows", "n_nulls", "null_frac", "min", "max")
-    prof = media_profile("content", "id", codec_col="format")(
-        sniff_format("content")(_synth_media_blobs(spark, sf,
-                                                   cbp_arm=False)))
-    mm = prof.select(
-        F.lit("mm").alias("part"),
-        F.concat_ws(":", "format",
-                    F.col("id").cast("string")).alias("column"),
-        F.col("n_units").alias("n_rows"),
-        F.col("meta").alias("n_nulls"),
-        F.lit(0.0).alias("null_frac"),
-        F.col("sum_abs").cast("string").alias("min"),
-        F.col("max_abs").cast("string").alias("max"))
-    cinfo = container_info("content", "id", codec_col="format")(
-        sniff_format("content")(_synth_container_blobs(spark, sf)))
-    ct = cinfo.select(
-        F.lit("ct").alias("part"),
-        F.concat_ws(
-            ":", "format",
-            F.col("id").cast("string")).alias("column"),
-        F.col("n_units").alias("n_rows"),
-        (F.when(F.col("sample_rate") > 0,
-                F.col("sample_rate").cast("long") * 10
-                + F.col("channels"))
-          .otherwise(F.col("width").cast("long") * 1000
-                     + F.col("height"))).alias("n_nulls"),
-        F.lit(0.0).alias("null_frac"),
-        F.col("duration_ms").cast("string").alias("min"),
-        F.col("format").alias("max"))
-    return base.unionByName(mm).unionByName(ct)
+    return base.unionByName(q_profile_media(spark, sf, cbp_arm=False))
 
 
-def q_profile_media(spark, sf):
-    # r15 itemized codec pin (split out of profile_docs).
+def q_profile_media(spark, sf, cbp_arm=True):
+    # r15 itemized codec pin (split out of profile_docs, whose gate
+    # pin carries these arms with ``cbp_arm=False``).
     # 'mm' arm (r12, VERDICT r11 #1): synth wav/png/pnm/tiff/aiff/
     # webp/mp3/ogg/mpeg1 blobs per doc → sniff_format container
     # dispatch → media_profile REAL decode → exact INTEGER stats,
@@ -3575,7 +3555,7 @@ def q_profile_media(spark, sf):
     # qscale=1 — the exactly-invertible CBP class.
     from conduino_spark import media_profile, sniff_format
     prof = media_profile("content", "id", codec_col="format")(
-        sniff_format("content")(_synth_media_blobs(spark, sf)))
+        sniff_format("content")(_synth_media_blobs(spark, sf, cbp_arm)))
     mm = prof.select(
         F.lit("mm").alias("part"),
         F.concat_ws(":", "format",

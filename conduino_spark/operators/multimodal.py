@@ -58,6 +58,17 @@ numbers live in the README (tools/scale_probe.py records them per
 round); wire PIL/soundfile into the raise slots for production decode
 rates.  :func:`media_profile` (r12) emits exact INTEGER stats per
 blob, the hash-verifiable corpus-health pass.
+
+One Python worker per task: the decoding operators here
+(:func:`media_profile`, :func:`container_info`, :func:`feature_extract`,
+the ``*_metadata`` readers, ...) each run one ``mapInPandas`` pass, and
+each running task holds a Python worker for it.  A Python producer that feeds the operator in the same stage, such
+as a ``mapInPandas`` that builds the blobs, pipelines into that task
+and holds a second worker for the whole pass.  End the producer at a
+stage boundary (``.repartition(n, id_col)`` with an explicit ``n``, so
+AQE does not coalesce the decode onto one core), as the media fixtures
+in ``__spark_entry__.py`` do; ``tools/plan_audit.py`` reports the
+per-task count as ``max_python_per_task``.
 """
 
 from __future__ import annotations

@@ -24,6 +24,11 @@ facts from the EXECUTED plan string:
                        scan re-runs as a Python-worker job;
                        `smallio.local_frame` tables show as
                        `LocalTableScan` instead
+  * max_python_per_task — the most Python exec nodes one task runs
+                       pipelined between stage boundaries; each holds
+                       its own Python worker for the whole task, so 2
+                       means a producer pass (a blob encoder) stacked
+                       on a consumer pass in one stage
 
 The audit is descriptive, not pass/fail — its value is DIFFS: a new
 round that doubles a query's exchanges or sprouts a CartesianProduct
@@ -193,6 +198,59 @@ def _plan_nodes(jplan):
             pass
 
 
+#: physical nodes that run their input through a Python worker
+_PYTHON_EXECS = frozenset((
+    "MapInPandas", "MapInArrow", "PythonMapInArrow", "ArrowEvalPython",
+    "BatchEvalPython", "ArrowEvalPythonUDTF", "BatchEvalPythonUDTF",
+    "FlatMapGroupsInPandas", "FlatMapGroupsInArrow",
+    "FlatMapCoGroupsInPandas", "FlatMapCoGroupsInArrow",
+    "ArrowAggregatePython", "ArrowWindowPython",
+    "FlatMapGroupsInPandasWithState", "TransformWithStateInPySpark",
+))
+
+#: nodes a task's pipeline ends at: their input runs as other tasks
+_STAGE_INPUTS = frozenset((
+    "Exchange", "BroadcastExchange", "Subquery", "SubqueryBroadcast"))
+#: ... plus the edges whose input is walked elsewhere: at the original
+#: of a reuse, at the exchange under an AQE query stage
+_STAGE_EDGES = _STAGE_INPUTS | {
+    "ReusedExchange", "ReusedSubquery", "ShuffleQueryStage",
+    "BroadcastQueryStage"}
+
+
+def _task_python(node) -> int:
+    """Python exec nodes in the pipeline one task of ``node`` runs, up
+    to the stage edges below it.  A Union's task runs one child's
+    partition, so it takes the max; any other multi-child node reads
+    all its children in the same task, so it takes the sum.  A cached
+    frame is computed inside the task that first reads it, so the walk
+    descends into the cached plan."""
+    name = node.nodeName()
+    if name in _STAGE_EDGES:
+        return 0
+    if name == "InMemoryTableScan":
+        kids = [node.relation().cachedPlan()]
+    elif name == "AdaptiveSparkPlan":
+        kids = [node.executedPlan()]
+    elif name.endswith("QueryStage"):  # TableCache / Result stage
+        kids = [node.plan()]
+    else:
+        ch = node.children()
+        kids = [ch.apply(i) for i in range(ch.size())]
+    counts = [_task_python(k) for k in kids] or [0]
+    return ((name in _PYTHON_EXECS)
+            + (max(counts) if name == "Union" else sum(counts)))
+
+
+def max_python_per_task(jplan) -> int:
+    """The most Python workers one task of the plan holds at once:
+    :func:`_task_python` of the plan's root and of the input of every
+    stage edge :func:`_plan_nodes` reaches."""
+    roots = [jplan] + [n.child() for n in _plan_nodes(jplan)
+                       if n.nodeName() in _STAGE_INPUTS]
+    return max(_task_python(r) for r in roots)
+
+
 def count_exchanges(jplan) -> int:
     """Shuffle-exchange count over :func:`_plan_nodes`."""
     return sum(n.nodeName() == "Exchange" for n in _plan_nodes(jplan))
@@ -230,6 +288,7 @@ def plan_facts(df) -> dict:
                          + s.count("MapInPandas")),
         "n_row_python_udf": s.count("BatchEvalPython"),
         "n_python_rdd_scan": count_python_rdd_scans(jplan),
+        "max_python_per_task": max_python_per_task(jplan),
         "pushed_filters": bool(re.search(r"PushedFilters: \[[^\]]", s)),
         "wscg": wscg,
         "cartesian": n_cart,
@@ -372,6 +431,9 @@ def main() -> None:
         # descriptive: driver tables scanned through a Python-worker RDD
         "with_python_rdd_scan": sorted(n for n, f in report.items()
                                        if f["n_python_rdd_scan"]),
+        # descriptive: tasks that hold two or more Python workers
+        "with_stacked_python": sorted(n for n, f in report.items()
+                                      if f["max_python_per_task"] > 1),
         "max_exchanges": max((f["n_exchange"] for f in report.values()),
                              default=0),
         # r10 (VERDICT r9 #2): per-GATE-pin weight budget — a pin over
