@@ -24,14 +24,12 @@ def tuned_confs() -> "dict[str, str]":
         # light sf0.1 stages.  Local default therefore stays Spark's
         # parallelism-first.  At cluster scale the trade flips (per-
         # task cost includes real scheduling + fetch RPCs; partition
-        # bytes grow with data): set SPARK_GRAFT_AQE_PARALLELISM_FIRST
-        # =false and SPARK_GRAFT_AQE_ADVISORY=256m (guide §9).
+        # bytes grow with data): a cluster session sets
+        # parallelismFirst=false and an advisory size of 256m (guide §9).
         # Explicit repartition(N, ...) kernels are never coalesced
         # either way.
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst":
-            os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"),
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes":
-            os.environ.get("SPARK_GRAFT_AQE_ADVISORY", "64m"),
+        "spark.sql.adaptive.coalescePartitions.parallelismFirst": "true",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64m",
         # skewed sort-merge joins re-split at runtime (LSH band joins,
         # hot keys); free when unused
         "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -48,10 +46,9 @@ def tuned_confs() -> "dict[str, str]":
         # O(1k) dirs in microseconds; raise the threshold so listing
         # stays driver-side.  Cluster posture: on object stores with
         # genuinely huge partition counts, distributed listing still
-        # engages past the (env-tunable) 1024, and manifest-based
-        # table formats avoid the listing entirely (guide §6).
-        "spark.sql.sources.parallelPartitionDiscovery.threshold":
-            os.environ.get("SPARK_GRAFT_PAR_DISCOVERY_THRESHOLD", "1024"),
+        # engages past 1024 paths, and manifest-based table formats
+        # avoid the listing entirely (guide §6).
+        "spark.sql.sources.parallelPartitionDiscovery.threshold": "1024",
         "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "48g"),
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
