@@ -71,30 +71,11 @@ QUALITY_FEATURES = ("len_ok", "alpha_ratio", "stop_sig", "punct_ok")
 
 def quality_features(text_col: str = "text") -> dict:
     """The four :func:`~conduino_spark.operators.text.quality_score`
-    components as separate feature columns (same constants —
-    text.py:121) — the trainer's stock featurizer.  Every value is a
-    ratio of exact integer counts (or a capped linear map of one), so
-    the features are bit-identical across engines without rounding."""
-    from conduino_spark.operators.text import QUALITY_STOPWORDS, tokens_col
-    t = F.col(text_col)
-    n_chars = F.length(t)
-    alpha = F.length(F.regexp_replace(t, "[^A-Za-z]", ""))
-    punct = F.length(F.regexp_replace(t, "[^.,!?;:]", ""))
-    toks = tokens_col(t)
-    n_toks = F.size(toks)
-    stop_hits = F.size(F.filter(toks, lambda x: x.isin(QUALITY_STOPWORDS)))
-    len_ok = (F.when(n_chars >= 8000, F.lit(8000.0) / n_chars)
-               .when(n_chars >= 200, F.lit(1.0))
-               .otherwise(n_chars / F.lit(200.0)))
-    alpha_ratio = F.when(n_chars > 0, alpha / n_chars).otherwise(F.lit(0.0))
-    stop_sig = F.when(n_toks > 0,
-                      F.least(F.lit(1.0), F.lit(5.0) * stop_hits / n_toks)
-                      ).otherwise(F.lit(0.0))
-    punct_ratio = F.when(n_chars > 0, punct / n_chars).otherwise(F.lit(0.0))
-    punct_ok = (F.lit(1.0) - F.greatest(F.lit(0.0), punct_ratio - F.lit(0.1))
-                / F.lit(0.9))
-    return {"len_ok": len_ok, "alpha_ratio": alpha_ratio,
-            "stop_sig": stop_sig, "punct_ok": punct_ok}
+    components as separate feature columns (one definition, in
+    text.py) — the trainer's stock featurizer, bit-identical across
+    engines without rounding."""
+    from conduino_spark.operators.text import _quality_components
+    return _quality_components(F.col(text_col))
 
 
 def quality_features_sql(expr: str = "text") -> dict:

@@ -24,6 +24,7 @@ from typing import Optional
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, ShortType
 
 from conduino_spark.plans.cachereg import track
 from conduino_spark.plans.core import Stage
@@ -63,6 +64,13 @@ def _banding_rows(n_perm: int, bands: int) -> int:
     return n_perm // bands
 
 
+def _check_n(n: int) -> None:
+    """Refuse a shingle length below 1 (the slice arithmetic of
+    :func:`shingles_col` would run it as 1)."""
+    if n < 1:
+        raise ValueError(f"n must be >= 1, got {n}")
+
+
 def shingles_col(text: Column, n: int = SHINGLE_N) -> Column:
     """Word n-gram shingles (distinct).  Empty when fewer than n tokens.
 
@@ -73,6 +81,7 @@ def shingles_col(text: Column, n: int = SHINGLE_N) -> Column:
     shingle (measured 2.5× slower at sf0.1; same lesson as
     text.repetition_stats' 2-grams).  ``m = 0`` when k < n makes every
     slice empty, so the zip yields the empty array without a branch."""
+    _check_n(n)
     toks = tokens_col(text)
     m = F.greatest(F.size(toks) - (n - 1), F.lit(0))
     acc = F.slice(toks, 1, m)
@@ -122,12 +131,13 @@ def _spread(df: DataFrame, key: Optional[str]) -> DataFrame:
 
 
 def _shingle_hashes(df: DataFrame, text_col: str, id_col: str,
-                    spread: bool = True) -> DataFrame:
-    """(id, __h) — one row per distinct shingle hash per doc (md5 runs
-    exactly once per shingle); docs with no shingles keep a NULL row
-    (``explode_outer``).  The shared base for MinHash signatures AND
-    exact-Jaccard verification — persist it so one tokenize+md5 pass
-    over the corpus feeds both.
+                    n: int = SHINGLE_N, spread: bool = True) -> DataFrame:
+    """(id, __h) — one row per distinct word-``n``-gram shingle hash
+    per doc (md5 runs exactly once per shingle); docs with no shingles
+    keep a NULL row (``explode_outer``).  The one (id, shingle-hash)
+    table of the MinHash signatures, the exact n-gram joins and
+    decontamination — persist it so one tokenize+md5 pass over the
+    corpus feeds both a signature and a verify.
 
     ``spread=False`` skips the :func:`_spread` repartition — for
     callers whose input is a MID-PIPELINE frame that is already
@@ -138,7 +148,15 @@ def _shingle_hashes(df: DataFrame, text_col: str, id_col: str,
     base = _spread(df, id_col) if spread else df
     return base.select(
         F.col(id_col),
-        F.explode_outer(F.transform(shingles_col(F.col(text_col)), h32)).alias("__h"))
+        F.explode_outer(F.transform(shingles_col(F.col(text_col), n), h32))
+        .alias("__h"))
+
+
+def _shingle_rows(hs: DataFrame, id_col: str) -> DataFrame:
+    """(id, g): the non-NULL rows of a :func:`_shingle_hashes` table —
+    the feature table the exact n-gram joins verify on."""
+    return hs.where(F.col("__h").isNotNull()) \
+             .select(F.col(id_col), F.col("__h").alias("g"))
 
 
 def _sig_from_hashes(h: DataFrame, id_col: str, *,
@@ -184,6 +202,51 @@ def _band_shard(n_perm: int, bands: int, n_shards: int) -> Column:
                              *[F.col(c) for c in
                                _band_key_cols(n_perm, bands)]),
                   F.lit(n_shards))
+
+
+def _lsh_pairs(hs: DataFrame, id_col: str, *, n_perm: int = MINHASH_K,
+               bands: int = MINHASH_BANDS) -> DataFrame:
+    """Distinct (id_a < id_b) MinHash-LSH candidate pairs of a
+    :func:`_shingle_hashes` table: the registry-tracked signature
+    table (``n_perm`` longs/doc), filled once, then the band self-join
+    (:func:`_band_pairs`)."""
+    sigs = track(_sig_from_hashes(hs, id_col, n_perm=n_perm))
+    # r16 (guide §5 caching): materialize the cache BEFORE the band
+    # self-join fans out.  Both join sides read it, and when their
+    # map stages launch concurrently they RACE the lazy fill — each
+    # recomputes the whole tokenize+md5 signature pipeline (observed
+    # as duplicated 6-7 s-task stages in the web_ingest /
+    # minhash_survivors profiles: 2× the most expensive pass in the
+    # operator, at any scale, for the price of one tiny count job).
+    sigs.count()
+    return _band_pairs(sigs, id_col, n_perm=n_perm, bands_n=bands)
+
+
+def _pair_sides(pairs: DataFrame, per_doc: DataFrame, id_col: str,
+                *cols: str) -> DataFrame:
+    """``pairs`` (id_a, id_b, …) joined to both docs' ``cols`` of the
+    one-row-per-doc table ``per_doc``, as ``<col>_a`` / ``<col>_b``."""
+    for s in ("a", "b"):
+        pairs = pairs.join(
+            per_doc.select(F.col(id_col).alias(f"id_{s}"),
+                           *[F.col(c).alias(f"{c}_{s}") for c in cols]),
+            f"id_{s}")
+    return pairs
+
+
+def _jaccard_at_least(inter: DataFrame, sizes: DataFrame, id_col: str,
+                      threshold: float) -> DataFrame:
+    """(id_a, id_b, jaccard) of the (id_a, id_b, i = |A∩B|) pairs whose
+    6-dp ROUNDED Jaccard ``i / (sz_a + sz_b − i)`` reaches
+    ``threshold`` — the compare :func:`ngram_jaccard_pairs` and
+    :func:`ngram_jaccard_lsh` pin (:func:`jaccard_prefix_pairs`
+    compares the unrounded counts instead)."""
+    jac = F.round(F.col("i") / (F.col("sz_a") + F.col("sz_b") - F.col("i")),
+                  6)
+    return (_pair_sides(inter, sizes, id_col, "sz")
+            .withColumn("jaccard", jac)
+            .where(F.col("jaccard") >= threshold)
+            .select("id_a", "id_b", "jaccard"))
 
 
 def _band_explode(sigs: DataFrame, id_col: str, alias: str, *,
@@ -372,19 +435,9 @@ def minhash_dedup_pairs(text_col: str = "text", id_col: str = "doc_id", *,
     _banding_rows(n_perm, bands)  # validate eagerly
 
     def fn(df: DataFrame) -> DataFrame:
-        # narrow signature table (n_perm longs/doc), registry-tracked
-        # persist — see _band_pairs for why
-        sigs = track(_minhash_sig_df(df, text_col, id_col, n_perm=n_perm,
-                                     spread=spread))
-        # r16 (guide §5 caching): materialize the cache BEFORE the band
-        # self-join fans out.  Both join sides read it, and when their
-        # map stages launch concurrently they RACE the lazy fill — each
-        # recomputes the whole tokenize+md5 signature pipeline (observed
-        # as duplicated 6-7 s-task stages in the web_ingest /
-        # minhash_survivors profiles: 2× the most expensive pass in the
-        # operator, at any scale, for the price of one tiny count job).
-        sigs.count()
-        return _band_pairs(sigs, id_col, n_perm=n_perm, bands_n=bands)
+        return _lsh_pairs(_shingle_hashes(df, text_col, id_col,
+                                          spread=spread),
+                          id_col, n_perm=n_perm, bands=bands)
 
     return Stage(fn, name="minhash_dedup_pairs", seq_preserving=False)
 
@@ -1058,35 +1111,22 @@ def ngram_jaccard_pairs(text_col: str = "text", id_col: str = "doc_id", *,
     At scale the join key is a 32-bit shingle hash, and extremely
     frequent shingles should be stop-listed; here the corpus is clean.
     """
+    _check_n(n)
 
     def fn(df: DataFrame) -> DataFrame:
-        sh = track(_spread(df, id_col).select(
-            F.col(id_col),
-            F.explode(F.transform(shingles_col(F.col(text_col), n), h32)).alias("g")
-        ))  # reused by sizes + both sides of the inverted-index join
+        # reused by sizes + both sides of the inverted-index join
+        sh = track(_shingle_rows(_shingle_hashes(df, text_col, id_col, n),
+                                 id_col))
         sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
-        # r15 verify-strategy choice (the jaccard_prefix_pairs /
-        # cosine_prefix_pairs gate): on output-dense corpora the
-        # inverted-index self-join explodes to ~all pairs x shared
-        # shingles (the 48 MB match shuffle this query used to pay) —
-        # a per-block-pair GEMM over per-(doc, g) MULTIPLICITY vectors
-        # computes the identical i = sum_g cnt_a(g)*cnt_b(g) without
-        # shipping a single match row.  The kernel mask is a slack
-        # superset (0.5 integer + 1e-6 rounding) of the final
-        # round-then-compare filter, which re-runs in Spark below.
-        row = (sizes.agg(F.count("*").alias("n"))
-               .crossJoin(sh.groupBy("g").agg(F.count("*").alias("c"))
-                          .agg(F.coalesce(
-                              F.sum(F.col("c") * F.col("c")),
-                              F.lit(0)).alias("df2")))
-               .collect()[0])
-        n_docs, sum_df2 = row["n"], row["df2"]
-        from pyspark.sql.types import IntegerType, LongType, ShortType
-        par = df.sparkSession.sparkContext.defaultParallelism
-        numeric_id = isinstance(df.schema[id_col].dataType,
-                                (LongType, IntegerType, ShortType))
-        if numeric_id and n_docs * n_docs / 2 + sum_df2 \
-                <= _GEMM_VERIFY_BUDGET * par:
+        if _gemm_verify(sh, id_col):
+            # on output-dense corpora the inverted-index self-join
+            # explodes to ~all pairs x shared shingles (the 48 MB match
+            # shuffle this query used to pay) — a per-block-pair GEMM
+            # over per-(doc, g) MULTIPLICITY vectors computes the
+            # identical i = sum_g cnt_a(g)*cnt_b(g) without shipping a
+            # single match row.  The kernel mask is a slack superset
+            # (0.5 integer + 1e-6 rounding) of the final
+            # round-then-compare filter, which re-runs in Spark.
             vec = (sh.groupBy(id_col, "g")
                    .agg(F.count("*").alias("__m"))
                    .groupBy(id_col)
@@ -1097,35 +1137,19 @@ def ngram_jaccard_pairs(text_col: str = "text", id_col: str = "doc_id", *,
                            F.col("fw").getField("g").alias("gs"),
                            F.col("fw").getField("w").alias("ws")))
             th_eff = float(threshold) - 1e-6
-            hits = _blocked_gemm_pairs(
+            inter = _blocked_gemm_pairs(
                 vec,
                 lambda dots, la, lb:
-                dots >= th_eff * (la[:, None] + lb[None, :] - dots) - 0.5)
-            hits = (hits.join(sizes.select(F.col(id_col).alias("id_a"),
-                                           F.col("sz").alias("sz_a")),
-                              "id_a")
-                    .join(sizes.select(F.col(id_col).alias("id_b"),
-                                       F.col("sz").alias("sz_b")),
-                          "id_b"))
-            jac = F.round(F.col("__dot")
-                          / (F.col("sz_a") + F.col("sz_b")
-                             - F.col("__dot")), 6)
-            return (hits.withColumn("jaccard", jac)
-                    .where(F.col("jaccard") >= threshold)
-                    .select("id_a", "id_b", "jaccard"))
-        a, b = sh.alias("a"), sh.alias("b")
-        inter = (a.join(b, "g")
-                   .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-                   .groupBy(F.col(f"a.{id_col}").alias("id_a"),
-                            F.col(f"b.{id_col}").alias("id_b"))
-                   .agg(F.count("*").alias("i")))
-        sz_a = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
-        sz_b = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
-        return (inter.join(sz_a, "id_a").join(sz_b, "id_b")
-                     .withColumn("jaccard",
-                                 F.round(F.col("i") / (F.col("sz_a") + F.col("sz_b") - F.col("i")), 6))
-                     .where(F.col("jaccard") >= threshold)
-                     .select("id_a", "id_b", "jaccard"))
+                dots >= th_eff * (la[:, None] + lb[None, :] - dots) - 0.5
+            ).withColumnRenamed("__dot", "i")
+        else:
+            a, b = sh.alias("a"), sh.alias("b")
+            inter = (a.join(b, "g")
+                       .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+                       .groupBy(F.col(f"a.{id_col}").alias("id_a"),
+                                F.col(f"b.{id_col}").alias("id_b"))
+                       .agg(F.count("*").alias("i")))
+        return _jaccard_at_least(inter, sizes, id_col, threshold)
 
     return Stage(fn, name="ngram_jaccard_pairs", seq_preserving=False)
 
@@ -1135,37 +1159,25 @@ def ngram_jaccard_lsh(text_col: str = "text", id_col: str = "doc_id", *,
     """n-gram Jaccard dedup, the 100 TB shape: MinHash-LSH candidate
     pairs (band-bucket join, ~linear) verified by EXACT Jaccard — the
     quadratic inverted-index join of :func:`ngram_jaccard_pairs` runs
-    only on the candidate set (broadcast-joinable by construction)."""
-    cand_stage = minhash_dedup_pairs(text_col, id_col)
+    only on the candidate set (broadcast-joinable by construction).
+    The signatures and the verify read the same word-``n``-gram
+    shingle sets, so the banding's recall curve is over the Jaccard
+    being verified."""
+    _check_n(n)
 
     def fn(df: DataFrame) -> DataFrame:
-        if n == SHINGLE_N:
-            # ONE tokenize+md5 pass feeds both the MinHash signatures
-            # and the exact-Jaccard shingle table (r2: was two full
-            # corpus passes — the slowest bench query at 2.5s)
-            hs = track(_shingle_hashes(df, text_col, id_col))
-            sigs = track(_sig_from_hashes(hs, id_col))
-            cand = _band_pairs(sigs, id_col)
-            sh = hs.where(F.col("__h").isNotNull()) \
-                   .select(F.col(id_col), F.col("__h").alias("g"))
-        else:
-            cand = cand_stage(df)
-            sh = track(_spread(df, id_col).select(
-                F.col(id_col),
-                F.explode(F.transform(shingles_col(F.col(text_col), n), h32)).alias("g")
-            ))
+        # ONE tokenize+md5 pass feeds both the MinHash signatures
+        # and the exact-Jaccard shingle table (r2: was two full
+        # corpus passes — the slowest bench query at 2.5s)
+        hs = track(_shingle_hashes(df, text_col, id_col, n))
+        cand = _lsh_pairs(hs, id_col)
+        sh = _shingle_rows(hs, id_col)
         sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
         inter = (cand
                  .join(sh.select(F.col(id_col).alias("id_a"), F.col("g")), "id_a")
                  .join(sh.select(F.col(id_col).alias("id_b"), F.col("g")), ["id_b", "g"])
                  .groupBy("id_a", "id_b").agg(F.count("*").alias("i")))
-        sz_a = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
-        sz_b = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
-        return (inter.join(sz_a, "id_a").join(sz_b, "id_b")
-                     .withColumn("jaccard",
-                                 F.round(F.col("i") / (F.col("sz_a") + F.col("sz_b") - F.col("i")), 6))
-                     .where(F.col("jaccard") >= threshold)
-                     .select("id_a", "id_b", "jaccard"))
+        return _jaccard_at_least(inter, sizes, id_col, threshold)
 
     return Stage(fn, name="ngram_jaccard_lsh", seq_preserving=False)
 
@@ -1204,18 +1216,11 @@ def jaccard_prefix_pairs(text_col: str = "text", id_col: str = "doc_id", *,
     """
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
+    _check_n(n)
 
     def fn(df: DataFrame) -> DataFrame:
-        if n == SHINGLE_N:
-            hs = _shingle_hashes(df, text_col, id_col)
-        else:
-            hs = _spread(df, id_col).select(
-                F.col(id_col),
-                F.explode_outer(
-                    F.transform(shingles_col(F.col(text_col), n), h32)
-                ).alias("__h"))
-        sh = track(hs.where(F.col("__h").isNotNull())
-                     .select(F.col(id_col), F.col("__h").alias("g")))
+        sh = track(_shingle_rows(_shingle_hashes(df, text_col, id_col, n),
+                                 id_col))
         # per-doc sorted shingle-set ARRAYS: the verify side — one row
         # per doc (the doc's own size, never corpus-scale; cap giant
         # outlier docs upstream via corpus_filter), so verification is
@@ -1225,29 +1230,16 @@ def jaccard_prefix_pairs(text_col: str = "text", id_col: str = "doc_id", *,
         sets = track(sh.groupBy(id_col).agg(
             F.sort_array(F.collect_list("g")).alias("__gs"),
             F.count("*").alias("sz")))
-        # r15 verify-strategy choice (one stats action; same rationale
-        # and flop budget as cosine_prefix_pairs): on output-dense
-        # corpora the prefix equi-join admits ~all pairs, so verify by
-        # per-block-pair set-intersection GEMM instead; the kernel
-        # mask is a 0.5-slack superset of the exact integer filter,
-        # which re-runs in Spark below — identical rows either way.
-        row = (sets.agg(F.count("*").alias("n"))
-               .crossJoin(sh.groupBy("g").agg(F.count("*").alias("c"))
-                          .agg(F.coalesce(
-                              F.sum(F.col("c") * F.col("c")),
-                              F.lit(0)).alias("df2")))
-               .collect()[0])
-        n_docs, sum_df2 = row["n"], row["df2"]
-        from pyspark.sql.types import IntegerType, LongType, ShortType
-        par = df.sparkSession.sparkContext.defaultParallelism
-        numeric_id = isinstance(sets.schema[id_col].dataType,
-                                (LongType, IntegerType, ShortType))
         th = float(threshold)
-        if numeric_id and n_docs * n_docs / 2 + sum_df2 <= _GEMM_VERIFY_BUDGET * par:
-            # array_distinct: h32 collisions can leave duplicate g per
-            # doc; the verify path's array_intersect dedups matches, so
-            # the kernel must count distinct matches too (the sparse
-            # sub-kernel ADDS duplicates, the dense one assigns them)
+        if _gemm_verify(sh, id_col, sets):
+            # on output-dense corpora the prefix equi-join admits ~all
+            # pairs, so verify by per-block-pair set-intersection GEMM
+            # instead; the kernel mask is a 0.5-slack superset of the
+            # exact integer filter below.  array_distinct: h32
+            # collisions can leave duplicate g per doc; the pair
+            # path's array_intersect dedups matches, so the kernel
+            # must count distinct matches too (the sparse sub-kernel
+            # ADDS duplicates, the dense one assigns them)
             vec = sets.select(F.col(id_col).alias("__id"),
                               F.array_distinct("__gs").alias("gs"))
             hits = _blocked_gemm_pairs(
@@ -1255,50 +1247,35 @@ def jaccard_prefix_pairs(text_col: str = "text", id_col: str = "doc_id", *,
                 lambda dots, la, lb:
                 dots >= th * (la[:, None] + lb[None, :] - dots) - 0.5,
                 binary=True)
-            szs = sets.select(F.col(id_col), "sz")
-            hits = (hits.join(szs.select(F.col(id_col).alias("id_a"),
-                                         F.col("sz").alias("sz_a")),
-                              "id_a")
-                    .join(szs.select(F.col(id_col).alias("id_b"),
-                                     F.col("sz").alias("sz_b")),
-                          "id_b"))
-            union = F.col("sz_a") + F.col("sz_b") - F.col("__dot")
-            return (hits.where(F.col("__dot") >= F.lit(threshold) * union)
-                    .select("id_a", "id_b",
-                            F.round(F.col("__dot") / union, 6)
-                            .alias("jaccard")))
-        dfreq = sh.groupBy("g").agg(F.count("*").alias("__df"))
-        w = Window.partitionBy(id_col).orderBy("__df", "g")
-        pref = (sh.join(dfreq, "g")
-                  .withColumn("__pos", F.row_number().over(w))
-                  .join(sets.select(id_col, "sz"), id_col)
-                  .where(F.col("__pos")
-                         <= F.col("sz")
-                         - F.ceil(F.lit(threshold) * F.col("sz")) + 1)
-                  .select(F.col(id_col), "g", "sz"))
-        a = pref.select(F.col(id_col).alias("id_a"), "g",
-                        F.col("sz").alias("sz_a"))
-        b = pref.select(F.col(id_col).alias("id_b"), "g",
-                        F.col("sz").alias("sz_b"))
-        cand = (a.join(b, "g")
-                 .where((F.col("id_a") < F.col("id_b"))
-                        & (F.least("sz_a", "sz_b")
-                           >= F.ceil(F.lit(threshold)
-                                     * F.greatest("sz_a", "sz_b"))))
-                 .select("id_a", "id_b").distinct())
-        ga = sets.select(F.col(id_col).alias("id_a"),
-                         F.col("__gs").alias("__ga"),
-                         F.col("sz").alias("sz_a"))
-        gb = sets.select(F.col(id_col).alias("id_b"),
-                         F.col("__gs").alias("__gb"),
-                         F.col("sz").alias("sz_b"))
-        j = (cand.join(ga, "id_a").join(gb, "id_b")
-                 .withColumn("i", F.size(F.array_intersect("__ga",
-                                                           "__gb"))))
+            inter = (_pair_sides(hits, sets, id_col, "sz")
+                     .withColumnRenamed("__dot", "i"))
+        else:
+            dfreq = sh.groupBy("g").agg(F.count("*").alias("__df"))
+            w = Window.partitionBy(id_col).orderBy("__df", "g")
+            pref = (sh.join(dfreq, "g")
+                      .withColumn("__pos", F.row_number().over(w))
+                      .join(sets.select(id_col, "sz"), id_col)
+                      .where(F.col("__pos")
+                             <= F.col("sz")
+                             - F.ceil(F.lit(threshold) * F.col("sz")) + 1)
+                      .select(F.col(id_col), "g", "sz"))
+            a = pref.select(F.col(id_col).alias("id_a"), "g",
+                            F.col("sz").alias("sz_a"))
+            b = pref.select(F.col(id_col).alias("id_b"), "g",
+                            F.col("sz").alias("sz_b"))
+            cand = (a.join(b, "g")
+                     .where((F.col("id_a") < F.col("id_b"))
+                            & (F.least("sz_a", "sz_b")
+                               >= F.ceil(F.lit(threshold)
+                                         * F.greatest("sz_a", "sz_b"))))
+                     .select("id_a", "id_b").distinct())
+            inter = (_pair_sides(cand, sets, id_col, "__gs", "sz")
+                     .withColumn("i", F.size(F.array_intersect("__gs_a",
+                                                               "__gs_b"))))
         union = F.col("sz_a") + F.col("sz_b") - F.col("i")
-        return (j.where(F.col("i") >= F.lit(threshold) * union)
-                 .select("id_a", "id_b",
-                         F.round(F.col("i") / union, 6).alias("jaccard")))
+        return (inter.where(F.col("i") >= F.lit(threshold) * union)
+                     .select("id_a", "id_b",
+                             F.round(F.col("i") / union, 6).alias("jaccard")))
 
     return Stage(fn, name="jaccard_prefix_pairs", seq_preserving=False)
 
@@ -1464,6 +1441,7 @@ def decontaminate(benchmark, *, text_col: str = "text",
     join on the shuffle key ``__h`` otherwise (Spark's planner decides
     by stats).  One groupBy(id) closes the score; the raw corpus text
     never shuffles."""
+    _check_n(n)
 
     def fn(df: DataFrame) -> DataFrame:
         spark = df.sparkSession
@@ -1472,10 +1450,8 @@ def decontaminate(benchmark, *, text_col: str = "text",
                     F.transform(shingles_col(F.col(bench_text_col), n), h32))
                     .alias("__h"))
                   .distinct())
-        doc_h = _spread(df.select(id_col, text_col), id_col).select(
-            F.col(id_col),
-            F.explode_outer(F.transform(shingles_col(F.col(text_col), n), h32))
-            .alias("__h"))
+        doc_h = _shingle_hashes(df.select(id_col, text_col), text_col,
+                                id_col, n)
         hits = (doc_h.join(F.broadcast(bench.withColumn("__hit", F.lit(1))),
                            "__h", "left")
                      .groupBy(id_col)
@@ -2261,6 +2237,7 @@ def source_overlap(text_col: str = "text", group_col: str = "source", *,
     corpus text never shuffles, and nothing is ever quadratic in
     documents — only in GROUPS, the point of aggregating by shingle
     first (contrast ``ngram_jaccard_pairs``, which pairs documents)."""
+    _check_n(n)
 
     def fn(df: DataFrame) -> DataFrame:
         # round-robin spread: the group column has FEW distinct values
@@ -2321,14 +2298,14 @@ def minhash_eval(threshold: float = 0.5, *, text_col: str = "text",
     pair-keyed join.  Empty sides yield 1.0 precision/recall by
     convention (nothing claimed, nothing missed → vacuous success);
     n_candidates == 0 with n_true > 0 yields recall 0.0."""
+    cand_stage = minhash_dedup_pairs(text_col, id_col, n_perm=n_perm,
+                                     bands=bands)
+    true_stage = ngram_jaccard_pairs(text_col, id_col,
+                                     threshold=threshold, n=n)
 
     def fn(df: DataFrame) -> DataFrame:
-        cand = minhash_dedup_pairs(text_col, id_col, n_perm=n_perm,
-                                   bands=bands)(df) \
-            .select("id_a", "id_b")
-        true = ngram_jaccard_pairs(text_col, id_col,
-                                   threshold=threshold, n=n)(df) \
-            .select("id_a", "id_b")
+        cand = cand_stage(df).select("id_a", "id_b")
+        true = true_stage(df).select("id_a", "id_b")
         cand = track(cand)
         true = track(true)
         hit = cand.join(true, ["id_a", "id_b"], "semi")
@@ -2455,6 +2432,41 @@ _GEMM_DENSE_FLOPS = 2e8
 # filter; above it the window count grows cubically and q-grams win.
 # Module constant so tests can force either branch.
 _EDJOIN_CHUNK_MAX_K = 3
+
+
+def _gemm_verify(feat: DataFrame, id_col: str,
+                 docs: "DataFrame | None" = None) -> bool:
+    """The verify-strategy gate of the exact similarity joins
+    (:func:`ngram_jaccard_pairs`, :func:`jaccard_prefix_pairs`,
+    :func:`cosine_prefix_pairs`): True when the blocked-GEMM verify
+    (:func:`_blocked_gemm_pairs`) should replace the candidate-bound
+    pair path.  ``feat`` is the join's (id, g) feature table.
+
+    The pair paths cost ~Σ_g c(g)² candidate match rows through a
+    shuffle, a dedup and a per-pair verify; the GEMM costs ~(n²/2 dot
+    cells + Σ_g df² MACs) of exact float64 BLAS inside numpy.  On
+    output-dense corpora (shared vocabulary — the prefix join admits
+    ~all pairs anyway) GEMM wins by orders of magnitude; past the
+    budget, which scales with cluster parallelism, the candidate-bound
+    pair path stays the 100 TB shape.  ONE stats job reads n (rows of
+    ``docs``, the caller's one-row-per-doc table when it persists one,
+    so the job fills that cache; else the distinct ids of ``feat``)
+    and Σ_g df²; the decision is deterministic and data-derived, and
+    both paths are exact, so the rows are identical either way.  The
+    kernel keys docs by a numeric id, so other id types take the pair
+    path without the stats job."""
+    if not isinstance(feat.schema[id_col].dataType,
+                      (LongType, IntegerType, ShortType)):
+        return False
+    if docs is None:
+        docs = feat.groupBy(id_col).agg(F.count("*").alias("sz"))
+    row = (docs.agg(F.count("*").alias("n"))
+           .crossJoin(feat.groupBy("g").agg(F.count("*").alias("c"))
+                      .agg(F.coalesce(F.sum(F.col("c") * F.col("c")),
+                                      F.lit(0)).alias("df2")))
+           .collect()[0])
+    par = feat.sparkSession.sparkContext.defaultParallelism
+    return row["n"] * row["n"] / 2 + row["df2"] <= _GEMM_VERIFY_BUDGET * par
 
 
 def _blocked_gemm_pairs(vec: DataFrame, keep, *,
@@ -2697,38 +2709,8 @@ def cosine_prefix_pairs(text_col: str = "text", id_col: str = "doc_id", *,
             w6 = track(df.repartition(par, id_col))
         else:
             w6 = track(prep.fn(df))
-        # ONE stats action (was: a max_tot-only collect): the largest
-        # rounded squared norm across docs (the ||y|| factor of the
-        # Cauchy-Schwarz bound, exact integer; rounding can push it
-        # slightly above scale²), the doc count, and Σ_g df² — the
-        # last two feed the r15 verify-strategy decision below.
-        row = ((w6.groupBy(id_col)
-                .agg(F.sum(F.col("w6") * F.col("w6")).alias("__t"))
-                .agg(F.coalesce(F.max("__t"), F.lit(0)).alias("mt"),
-                     F.count("*").alias("n")))
-               .crossJoin(w6.select("g", "__df").distinct()
-                          .agg(F.coalesce(
-                              F.sum(F.col("__df") * F.col("__df")),
-                              F.lit(0)).alias("df2")))
-               .collect()[0])
-        max_tot, n_docs, sum_df2 = row["mt"] or 0, row["n"], row["df2"]
-        # r15 verify-strategy choice (guide §1.1 first-principles):
-        # the prefix path below costs ~Σ_g c(g)² candidate match rows
-        # through a shuffle, a dedup and an interpreted per-pair
-        # map-fold; the blocked-GEMM path costs ~(n²/2 dot cells +
-        # Σ_g df² MACs) of exact float64 BLAS inside numpy.  On
-        # output-dense corpora (shared vocabulary — the prefix join
-        # admits ~all pairs anyway) GEMM wins by orders of magnitude;
-        # past the flop budget the candidate-bound prefix path stays
-        # the 100 TB shape.  The budget scales with cluster
-        # parallelism; the decision is deterministic and data-derived,
-        # and both paths are exact (integer dots are order-free), so
-        # the result is identical either way.
-        from pyspark.sql.types import IntegerType, LongType, ShortType
-        par = df.sparkSession.sparkContext.defaultParallelism
-        numeric_id = isinstance(w6.schema[id_col].dataType,
-                                (LongType, IntegerType, ShortType))
-        if numeric_id and n_docs * n_docs / 2 + sum_df2 <= _GEMM_VERIFY_BUDGET * par:
+        # integer dots are order-free, so both verify paths are exact
+        if _gemm_verify(w6, id_col):
             vec = (w6.groupBy(id_col)
                    .agg(F.collect_list(F.struct("g", "w6")).alias("fw"))
                    .select(F.col(id_col).alias("__id"),
@@ -2737,77 +2719,76 @@ def cosine_prefix_pairs(text_col: str = "text", id_col: str = "doc_id", *,
             tau_f = float(tau)
             hits = _blocked_gemm_pairs(
                 vec, lambda dots, la, lb: dots >= tau_f)
-            return (hits.where(F.col("__dot") >= F.lit(tau))
-                    .select("id_a", "id_b",
-                            F.round(F.col("__dot")
-                                    / F.lit(float(scale * scale)), 6)
-                            .alias("cosine")))
-        mw = w6.groupBy("g").agg(F.max("w6").alias("mw6"))
-        # CS prune floor: keep position i iff
-        # sqrt(suffix_sq_i · max_tot) >= t·scale², i.e. suffix_sq_i >=
-        # t²·scale⁴ / max_tot — computed on the driver with a safety
-        # margin (a smaller floor only keeps MORE rows, never unsound)
-        cs_floor = (threshold * threshold * float(scale) ** 4
-                    / max_tot - 1e3) if max_tot else 0.0
-        # TWO independent suffix bounds in the rare-first global order
-        # (cumulative desc sums INCLUDING the current row); a position
-        # is indexed only if BOTH still reach the threshold:
-        #   * max-weight (Bayardo):  dot ≤ Σ_sfx w·maxw
-        #   * Cauchy-Schwarz:        dot ≤ ||x_sfx||·||y||
-        # CS is what bites on corpora whose common features carry most
-        # of the energy (maxw stays near 1 there and prunes nothing)
-        ws = (Window.partitionBy(id_col)
-              .orderBy(F.desc("__df"), F.desc("g"))
-              .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        pref = (w6.join(mw, "g")
-                  .withColumn("__susp",
-                              F.sum(F.col("w6") * F.col("mw6")).over(ws))
-                  .withColumn("__sfx2",
-                              F.sum(F.col("w6") * F.col("w6")).over(ws))
-                  .where((F.col("__susp") >= F.lit(tau))
-                         & (F.col("__sfx2") >= F.lit(cs_floor)))
-                  .select(F.col(id_col), "g"))
-        # cached: the candidate self-join below consumes pref twice
-        # (both aliases) — without the persist the whole mw-join +
-        # double-window pipeline ran once per side (r15)
-        pref = track(pref)
-        # explicit repartition BEFORE the dedup: the candidate table is
-        # narrow (two longs) so AQE's size-based coalescing would hand
-        # the verify stage 2-3 fat partitions — but each row costs a
-        # map intersection, so parallelism must follow ROWS, not bytes.
-        # Hash-partitioning by (id_a, id_b) with an explicit count does
-        # double duty: AQE never coalesces a user-numbered repartition,
-        # and it satisfies dropDuplicates' clustering requirement, so
-        # the distinct agg AND the fused broadcast-join + dot verify
-        # all run at full width off this ONE exchange.
-        par = df.sparkSession.sparkContext.defaultParallelism
-        cand = (pref.select(F.col(id_col).alias("id_a"), "g")
-                .join(pref.select(F.col(id_col).alias("id_b"), "g"), "g")
-                .where(F.col("id_a") < F.col("id_b"))
-                .select("id_a", "id_b")
-                .repartition(par, "id_a", "id_b")
-                .dropDuplicates(["id_a", "id_b"]))
-        vecs = w6.groupBy(id_col).agg(
-            F.map_from_entries(
-                F.sort_array(F.collect_list(F.struct("g", "w6"))))
-            .alias("__fw"))
-        va = vecs.select(F.col(id_col).alias("id_a"),
-                         F.col("__fw").alias("__ma"))
-        vb = vecs.select(F.col(id_col).alias("id_b"),
-                         F.col("__fw").alias("__mb"))
-        # dot via map_zip_with (hash-merged, O(|a|+|b|)) — NOT
-        # array_intersect + element_at, whose MapType lookup is a
-        # linear scan (O(|a|·|b|) per pair — 10× slower measured)
-        dot = F.aggregate(
-            F.map_values(F.map_zip_with(
-                "__ma", "__mb",
-                lambda _, x, y: F.coalesce(x, F.lit(0))
-                * F.coalesce(y, F.lit(0)))),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v)
-        return (cand.join(va, "id_a").join(vb, "id_b")
-                    .withColumn("__dot", dot)
-                    .where(F.col("__dot") >= F.lit(tau))
+        else:
+            # the largest rounded squared norm across docs: the ||y||
+            # factor of the Cauchy-Schwarz bound (exact integer; rounding
+            # can push it slightly above scale²)
+            max_tot = (w6.groupBy(id_col)
+                       .agg(F.sum(F.col("w6") * F.col("w6")).alias("__t"))
+                       .agg(F.coalesce(F.max("__t"), F.lit(0)))
+                       .collect()[0][0])
+            mw = w6.groupBy("g").agg(F.max("w6").alias("mw6"))
+            # CS prune floor: keep position i iff
+            # sqrt(suffix_sq_i · max_tot) >= t·scale², i.e. suffix_sq_i >=
+            # t²·scale⁴ / max_tot — computed on the driver with a safety
+            # margin (a smaller floor only keeps MORE rows, never unsound)
+            cs_floor = (threshold * threshold * float(scale) ** 4
+                        / max_tot - 1e3) if max_tot else 0.0
+            # TWO independent suffix bounds in the rare-first global order
+            # (cumulative desc sums INCLUDING the current row); a position
+            # is indexed only if BOTH still reach the threshold:
+            #   * max-weight (Bayardo):  dot ≤ Σ_sfx w·maxw
+            #   * Cauchy-Schwarz:        dot ≤ ||x_sfx||·||y||
+            # CS is what bites on corpora whose common features carry most
+            # of the energy (maxw stays near 1 there and prunes nothing)
+            ws = (Window.partitionBy(id_col)
+                  .orderBy(F.desc("__df"), F.desc("g"))
+                  .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+            pref = (w6.join(mw, "g")
+                      .withColumn("__susp",
+                                  F.sum(F.col("w6") * F.col("mw6")).over(ws))
+                      .withColumn("__sfx2",
+                                  F.sum(F.col("w6") * F.col("w6")).over(ws))
+                      .where((F.col("__susp") >= F.lit(tau))
+                             & (F.col("__sfx2") >= F.lit(cs_floor)))
+                      .select(F.col(id_col), "g"))
+            # cached: the candidate self-join below consumes pref twice
+            # (both aliases) — without the persist the whole mw-join +
+            # double-window pipeline ran once per side (r15)
+            pref = track(pref)
+            # explicit repartition BEFORE the dedup: the candidate table is
+            # narrow (two longs) so AQE's size-based coalescing would hand
+            # the verify stage 2-3 fat partitions — but each row costs a
+            # map intersection, so parallelism must follow ROWS, not bytes.
+            # Hash-partitioning by (id_a, id_b) with an explicit count does
+            # double duty: AQE never coalesces a user-numbered repartition,
+            # and it satisfies dropDuplicates' clustering requirement, so
+            # the distinct agg AND the fused broadcast-join + dot verify
+            # all run at full width off this ONE exchange.
+            par = df.sparkSession.sparkContext.defaultParallelism
+            cand = (pref.select(F.col(id_col).alias("id_a"), "g")
+                    .join(pref.select(F.col(id_col).alias("id_b"), "g"), "g")
+                    .where(F.col("id_a") < F.col("id_b"))
+                    .select("id_a", "id_b")
+                    .repartition(par, "id_a", "id_b")
+                    .dropDuplicates(["id_a", "id_b"]))
+            vecs = w6.groupBy(id_col).agg(
+                F.map_from_entries(
+                    F.sort_array(F.collect_list(F.struct("g", "w6"))))
+                .alias("__fw"))
+            # dot via map_zip_with (hash-merged, O(|a|+|b|)) — NOT
+            # array_intersect + element_at, whose MapType lookup is a
+            # linear scan (O(|a|·|b|) per pair — 10× slower measured)
+            dot = F.aggregate(
+                F.map_values(F.map_zip_with(
+                    "__fw_a", "__fw_b",
+                    lambda _, x, y: F.coalesce(x, F.lit(0))
+                    * F.coalesce(y, F.lit(0)))),
+                F.lit(0).cast("long"),
+                lambda acc, v: acc + v)
+            hits = (_pair_sides(cand, vecs, id_col, "__fw")
+                    .withColumn("__dot", dot))
+        return (hits.where(F.col("__dot") >= F.lit(tau))
                     .select("id_a", "id_b",
                             F.round(F.col("__dot")
                                     / F.lit(float(scale * scale)), 6)
@@ -2902,6 +2883,18 @@ def edit_distance_pairs(text_col: str = "text", id_col: str = "doc_id", *,
         raise ValueError(f"q must be >= 2, got {q}")
     cap = k * q
 
+    def short_pairs(shorts: DataFrame) -> DataFrame:
+        # (id_a < id_b) pairs of (id, __len) rows whose lengths differ
+        # by <= k: each row probes its 2k+1 partner lengths
+        return (shorts.select(
+            F.col(id_col).alias("id_a"),
+            F.explode(F.sequence(F.col("__len") - k,
+                                 F.col("__len") + k)).alias("__lb"))
+            .join(shorts.select(F.col(id_col).alias("id_b"),
+                                F.col("__len").alias("__lb")), "__lb")
+            .where(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b"))
+
     def chunk_candidates(s: DataFrame) -> DataFrame:
         # r15 candidate filter (guide §2.3/§3.2; PartEnum/pigeonhole,
         # Arasu et al. VLDB'06 family): dist <= k means an optimal
@@ -2963,17 +2956,8 @@ def edit_distance_pairs(text_col: str = "text", id_col: str = "doc_id", *,
                 .where(F.col("id_a") != F.col("id_b"))
                 .select(F.least("id_a", "id_b").alias("id_a"),
                         F.greatest("id_a", "id_b").alias("id_b")))
-        shorts = s.where(F.col("__len") < kp1).select(F.col(id_col),
-                                                      "__len")
-        short_short = (shorts.select(
-            F.col(id_col).alias("id_a"),
-            F.explode(F.sequence(F.col("__len") - k,
-                                 F.col("__len") + k)).alias("__lb"))
-            .join(shorts.select(F.col(id_col).alias("id_b"),
-                                F.col("__len").alias("__lb")), "__lb")
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b"))
-        return both.unionByName(short_short)
+        return both.unionByName(short_pairs(
+            s.where(F.col("__len") < kp1).select(F.col(id_col), "__len")))
 
     def fn(df: DataFrame) -> DataFrame:
         s = track(
@@ -2992,7 +2976,6 @@ def edit_distance_pairs(text_col: str = "text", id_col: str = "doc_id", *,
             .alias("__pos", "__gram"))
             .select(id_col, "__ng", "__pos",
                     h32(F.col("__gram")).alias("g")))
-        sl = s.select(F.col(id_col), "__len")
         if k <= _EDJOIN_CHUNK_MAX_K:
             cand_pre = chunk_candidates(s)
         else:
@@ -3014,34 +2997,17 @@ def edit_distance_pairs(text_col: str = "text", id_col: str = "doc_id", *,
                                ["g", "__occ"])
                          .where(F.col("id_a") < F.col("id_b"))
                          .select("id_a", "id_b"))
-            shorts = s.where(F.col("__ng") <= cap).select(
-                F.col(id_col), "__len")
-            cand_short = (shorts.select(
-                F.col(id_col).alias("id_a"),
-                F.explode(F.sequence(F.col("__len") - k,
-                                     F.col("__len") + k)).alias("__lb"))
-                .join(shorts.select(F.col(id_col).alias("id_b"),
-                                    F.col("__len").alias("__lb")),
-                      "__lb")
-                .where(F.col("id_a") < F.col("id_b"))
-                .select("id_a", "id_b"))
-            cand_pre = cand_gram.unionByName(cand_short)
+            cand_pre = cand_gram.unionByName(short_pairs(
+                s.where(F.col("__ng") <= cap).select(F.col(id_col),
+                                                     "__len")))
         par = df.sparkSession.sparkContext.defaultParallelism
-        cand = (cand_pre
-                .join(sl.select(F.col(id_col).alias("id_a"),
-                                F.col("__len").alias("__la")), "id_a")
-                .join(sl.select(F.col(id_col).alias("id_b"),
-                                F.col("__len").alias("__lb")), "id_b")
-                .where(F.abs(F.col("__la") - F.col("__lb")) <= k)
+        cand = (_pair_sides(cand_pre, s, id_col, "__len")
+                .where(F.abs(F.col("__len_a") - F.col("__len_b")) <= k)
                 .select("id_a", "id_b")
                 .repartition(par, "id_a", "id_b")
                 .dropDuplicates(["id_a", "id_b"]))
-        ta = s.select(F.col(id_col).alias("id_a"),
-                      F.col("__s").alias("__sa"))
-        tb = s.select(F.col(id_col).alias("id_b"),
-                      F.col("__s").alias("__sb"))
-        dist = F.levenshtein("__sa", "__sb", k)
-        return (cand.join(ta, "id_a").join(tb, "id_b")
+        dist = F.levenshtein("__s_a", "__s_b", k)
+        return (_pair_sides(cand, s, id_col, "__s")
                     .withColumn("dist", dist)
                     .where((F.col("dist") >= 0) & (F.col("dist") <= k))
                     .select("id_a", "id_b",

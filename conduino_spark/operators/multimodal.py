@@ -932,37 +932,34 @@ def _ps_video_es(b: bytes) -> bytes:
 
 
 def _sniffed_es(b: bytes) -> bytes:
-    # video_metadata and frame_sample take either mpeg form under
-    # either name: a pack start code marks a program stream
+    # a pack start code marks a program stream
     return _ps_video_es(b) if b[:4] == b"\x00\x00\x01\xba" else b
 
 
-def _mpeg_codec(es: Callable) -> _Codec:
-    """``mpeg1`` (``es`` passes the blob through) or ``mpeg_ps`` (``es``
-    demuxes it): media_profile decodes every picture of ``es(b)`` (the
-    I/P reconstruction chain is what its stats pin) and container_info
-    reads its sequence header."""
+def _mpeg_info(b: bytes):
+    i = _lazy_op("mpeg1").mpeg1_info(_sniffed_es(b))
+    return i["width"], i["height"], i["n_pictures"], round(i["fps"])
 
-    def info(b):
-        i = _lazy_op("mpeg1").mpeg1_info(_sniffed_es(b))
-        return i["width"], i["height"], i["n_pictures"], round(i["fps"])
 
-    def frames(b, n):
-        return _lazy_op("mpeg1").decode_mpeg1(_sniffed_es(b),
-                                              max_frames=n)[2]
+def _mpeg_pixels(b: bytes):
+    # every picture: the I/P reconstruction chain is what the stats pin
+    _fps, (w, h), fs = _lazy_op("mpeg1").decode_mpeg1(_sniffed_es(b))
+    return len(fs), w, h, fs
 
-    def pixels(b):
-        _fps, (w, h), fs = _lazy_op("mpeg1").decode_mpeg1(es(b))
-        return len(fs), w, h, fs
 
-    def container(b):
-        i = _lazy_op("mpeg1").mpeg1_info(es(b))
-        return dict(i, duration_ms=int(round(i["n_pictures"] * 1000
-                                             / i["fps"])))
+def _mpeg_container(b: bytes) -> dict:
+    i = _lazy_op("mpeg1").mpeg1_info(_sniffed_es(b))
+    return dict(i, duration_ms=int(round(i["n_pictures"] * 1000
+                                         / i["fps"])))
 
-    return _Codec(video_info=info, video_frames=frames,
-                  frame_blob=encode_png, video_pixels=pixels,
-                  container=(container, "n_pictures"))
+
+#: ``mpeg1`` and ``mpeg_ps`` name one entry: every slot sniffs the
+#: blob, so either name reads an elementary or a program stream
+_MPEG = _Codec(video_info=_mpeg_info,
+               video_frames=lambda b, n: _lazy_op("mpeg1").decode_mpeg1(
+                   _sniffed_es(b), max_frames=n)[2],
+               frame_blob=encode_png, video_pixels=_mpeg_pixels,
+               container=(_mpeg_container, "n_pictures"))
 
 
 _CODECS: "dict[str, _Codec]" = {
@@ -994,8 +991,8 @@ _CODECS: "dict[str, _Codec]" = {
     "avi": _Codec(video_info=_avi_info,
                   video_frames=lambda b, n: decode_avi(b, max_frames=n)[3],
                   video_pixels=_avi_pixels),
-    "mpeg1": _mpeg_codec(lambda b: b),
-    "mpeg_ps": _mpeg_codec(_ps_video_es),
+    "mpeg1": _MPEG,
+    "mpeg_ps": _MPEG,
 }
 
 _NO_CODEC = _Codec()

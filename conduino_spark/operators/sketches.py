@@ -71,6 +71,12 @@ def kmv_distinct_sql(expr: str, k: int = 256, *,
 BLOOM_WORD_BITS = 63
 
 
+def _salted_pos(col: Column, i: int, size: int) -> Column:
+    """``h32('i|' || col) % size``: the Bloom bit / Count-Min cell of
+    ``col`` under salt ``i``, for every build and probe of both."""
+    return h32(F.concat(F.lit(f"{i}|"), col.cast("string"))) % size
+
+
 def bloom_build(expr: Union[str, Column], *, m_bits: int = 1 << 20,
                 k: int = 5, out: str = "bloom") -> Stage:
     """Build a Bloom filter over ``expr`` as ONE row holding the bit
@@ -101,9 +107,7 @@ def bloom_build(expr: Union[str, Column], *, m_bits: int = 1 << 20,
     n_words = (m_bits + BLOOM_WORD_BITS - 1) // BLOOM_WORD_BITS
 
     def fn(df: DataFrame) -> DataFrame:
-        pos = F.array(*[
-            h32(F.concat(F.lit(f"{i}|"), col.cast("string"))) % m_bits
-            for i in range(k)])
+        pos = F.array(*[_salted_pos(col, i, m_bits) for i in range(k)])
         p = (df.where(col.isNotNull())
                .select(F.explode(pos).alias("__p"))
                .distinct())
@@ -178,7 +182,7 @@ def bloom_contains(bloom: DataFrame, expr: Union[str, Column], *,
             bloom.select(F.col(bloom_col).alias("__bloom"))))
         hit = F.lit(True)
         for i in range(k):
-            p = h32(F.concat(F.lit(f"{i}|"), col.cast("string"))) % m_bits
+            p = _salted_pos(col, i, m_bits)
             word = F.element_at(
                 "__bloom", (p / BLOOM_WORD_BITS).cast("int") + 1)
             bit = F.call_function("shiftleft", F.lit(1).cast("long"),
@@ -213,6 +217,13 @@ def bloom_build_sql(expr: str, *, m_bits: int = 1 << 20, k: int = 5,
       SELECT w, bits FROM __w ORDER BY w"""
 
 
+def _countmin_cells(col: Column, width: int, depth: int) -> Column:
+    """``col``'s ``depth`` cells as an array of (d, c) structs."""
+    return F.array(*[F.struct(F.lit(d).alias("d"),
+                              _salted_pos(col, d, width).alias("c"))
+                     for d in range(depth)])
+
+
 def countmin_build(expr: Union[str, Column], *, width: int = 2048,
                    depth: int = 4, out: str = "cms") -> Stage:
     """Count-Min sketch over ``expr`` as ONE row of ``depth`` count
@@ -243,13 +254,9 @@ def countmin_build(expr: Union[str, Column], *, width: int = 2048,
     col = F.expr(expr) if isinstance(expr, str) else expr
 
     def fn(df: DataFrame) -> DataFrame:
-        pos = F.array(*[
-            F.struct(F.lit(d).alias("d"),
-                     (h32(F.concat(F.lit(f"{d}|"), col.cast("string")))
-                      % width).alias("c"))
-            for d in range(depth)])
         cells = (df.where(col.isNotNull())
-                   .select(F.explode(pos).alias("__p"))
+                   .select(F.explode(_countmin_cells(col, width, depth))
+                           .alias("__p"))
                    .groupBy(F.col("__p.d").alias("__d"),
                             F.col("__p.c").alias("__c"))
                    .agg(F.count(F.lit(1)).alias("__n")))
@@ -376,7 +383,7 @@ def countmin_estimate(cms: DataFrame, expr: Union[str, Column], *,
             cms.select(F.col(cms_col).alias("__cms"))))
         est = None
         for dd in range(depth):
-            p = h32(F.concat(F.lit(f"{dd}|"), col.cast("string"))) % width
+            p = _salted_pos(col, dd, width)
             cell = F.element_at(F.element_at("__cms", dd + 1),
                                 p.cast("int") + 1)
             est = cell if est is None else F.least(est, cell)
@@ -604,6 +611,15 @@ def _hll_rho(h: Column) -> Column:
         F.lit(32) - F.floor(F.log2(h))).cast("long")
 
 
+def _hll_cell(col: Column, m: int) -> "tuple[Column, Column]":
+    """(bucket, rho) of ``col`` in an ``m``-register HLL, from ONE md5:
+    bucket = ``hex[1:8] % m``, rho = first-one position of
+    ``hex[9:16]`` (see :func:`hll_build`)."""
+    hx = F.md5(col.cast("string"))
+    return (F.conv(F.substring(hx, 1, 8), 16, 10).cast("long") % m,
+            _hll_rho(F.conv(F.substring(hx, 9, 8), 16, 10).cast("long")))
+
+
 def hll_build(expr: Union[str, Column], *, p: int = 12,
               keys: "tuple[str, ...]" = (),
               out: str = "hll") -> Stage:
@@ -646,9 +662,7 @@ def hll_build(expr: Union[str, Column], *, p: int = 12,
     m = 1 << p
 
     def fn(df: DataFrame) -> DataFrame:
-        hx = F.md5(col.cast("string"))
-        bucket = F.conv(F.substring(hx, 1, 8), 16, 10).cast("long") % m
-        rho = _hll_rho(F.conv(F.substring(hx, 9, 8), 16, 10).cast("long"))
+        bucket, rho = _hll_cell(col, m)
         pairs = df.where(col.isNotNull()) \
                   .select(*keys, bucket.alias("__b"), rho.alias("__r"))
         regs = pairs.groupBy(*keys, "__b").agg(F.max("__r").alias("__rho"))

@@ -118,42 +118,53 @@ def token_count(text_col: str = "text", *, out: str = "n_tokens") -> Stage:
     return Stage(fn, name="token_count", seq_preserving=True)
 
 
-def quality_score(text_col: str = "text", *, out: str = "quality") -> Stage:
-    """Deterministic quality heuristic in [0,1]:
-
-      0.25·len_ok + 0.25·alpha_ratio + 0.25·stopword_signal + 0.25·(1-punct_excess)
-
-    * len_ok: 1 if 200 ≤ n_chars ≤ 8000 else n_chars/200 (short) or
-      8000/n_chars (long)
-    * alpha_ratio: alphabetic chars / chars
-    * stopword_signal: min(1, 5 · stopword_tokens/tokens) — natural
-      prose has ≥20% stopwords
-    * punct_excess: max(0, punct_ratio − 0.1) / 0.9
-
-    Pure column algebra — scales to any corpus size with zero Python.
-    """
-    t = F.col(text_col)
+def _quality_components(t: Column) -> "dict[str, Column]":
+    """The four :func:`quality_score` components of the text column
+    ``t``, in the trainer's feature order
+    (``classifier.QUALITY_FEATURES``); ``classifier.quality_features``
+    returns them as they are."""
     n_chars = F.length(t)
     alpha = F.length(F.regexp_replace(t, "[^A-Za-z]", ""))
     punct = F.length(F.regexp_replace(t, "[^.,!?;:]", ""))
     toks = tokens_col(t)
     n_toks = F.size(toks)
     stop_hits = F.size(F.filter(toks, lambda x: x.isin(QUALITY_STOPWORDS)))
-
-    len_ok = (
-        F.when(n_chars >= 8000, F.lit(8000.0) / n_chars)
-        .when(n_chars >= 200, F.lit(1.0))
-        .otherwise(n_chars / F.lit(200.0))
-    )
-    alpha_ratio = F.when(n_chars > 0, alpha / n_chars).otherwise(F.lit(0.0))
-    stop_sig = F.when(n_toks > 0,
-                      F.least(F.lit(1.0), F.lit(5.0) * stop_hits / n_toks)
-                      ).otherwise(F.lit(0.0))
     punct_ratio = F.when(n_chars > 0, punct / n_chars).otherwise(F.lit(0.0))
-    punct_pen = F.greatest(F.lit(0.0), punct_ratio - F.lit(0.1)) / F.lit(0.9)
+    return {
+        "len_ok": (F.when(n_chars >= 8000, F.lit(8000.0) / n_chars)
+                   .when(n_chars >= 200, F.lit(1.0))
+                   .otherwise(n_chars / F.lit(200.0))),
+        "alpha_ratio": F.when(n_chars > 0, alpha / n_chars)
+                        .otherwise(F.lit(0.0)),
+        "stop_sig": F.when(n_toks > 0,
+                           F.least(F.lit(1.0),
+                                   F.lit(5.0) * stop_hits / n_toks)
+                           ).otherwise(F.lit(0.0)),
+        "punct_ok": (F.lit(1.0)
+                     - F.greatest(F.lit(0.0), punct_ratio - F.lit(0.1))
+                     / F.lit(0.9)),
+    }
 
-    score = F.round(
-        0.25 * len_ok + 0.25 * alpha_ratio + 0.25 * stop_sig + 0.25 * (1.0 - punct_pen), 6)
+
+def quality_score(text_col: str = "text", *, out: str = "quality") -> Stage:
+    """Deterministic quality heuristic in [0,1]:
+
+      0.25·len_ok + 0.25·alpha_ratio + 0.25·stop_sig + 0.25·punct_ok
+
+    * len_ok: 1 if 200 ≤ n_chars ≤ 8000 else n_chars/200 (short) or
+      8000/n_chars (long)
+    * alpha_ratio: alphabetic chars / chars
+    * stop_sig: min(1, 5 · stopword_tokens/tokens) — natural prose
+      has ≥20% stopwords
+    * punct_ok: 1 − max(0, punct_ratio − 0.1) / 0.9
+
+    Each component is a ratio of exact integer counts (or a capped
+    linear map of one); the sum is rounded to 6 dp.  Pure column
+    algebra — scales to any corpus size with zero Python.
+    """
+    c = _quality_components(F.col(text_col))
+    score = F.round(0.25 * c["len_ok"] + 0.25 * c["alpha_ratio"]
+                    + 0.25 * c["stop_sig"] + 0.25 * c["punct_ok"], 6)
 
     def fn(df: DataFrame) -> DataFrame:
         return df.withColumn(out, score)

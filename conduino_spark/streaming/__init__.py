@@ -779,7 +779,7 @@ def windowed_countmin_cells(ts_col: str, duration: str, expr: str, *,
     assembled row is BIT-identical to ``countmin_build`` over that
     window's rows (law-tested).  State per (window, keys) group is ≤
     depth·width cells regardless of stream length."""
-    from conduino_spark.functions.hashing import h32
+    from conduino_spark.operators.sketches import _countmin_cells
     if width < 1 or depth < 1:
         raise ValueError(f"need width >= 1 and depth >= 1, got "
                          f"width={width}, depth={depth}")
@@ -789,14 +789,10 @@ def windowed_countmin_cells(ts_col: str, duration: str, expr: str, *,
         if watermark and d.isStreaming:
             d = d.withWatermark(ts_col, watermark)
         col = F.expr(expr)
-        pos = F.array(*[
-            F.struct(F.lit(dd).alias("d"),
-                     (h32(F.concat(F.lit(f"{dd}|"), col.cast("string")))
-                      % width).alias("c"))
-            for dd in range(depth)])
         return (d.where(col.isNotNull())
                  .select(F.window(ts_col, duration).alias("w"), *keys,
-                         F.explode(pos).alias("__p"))
+                         F.explode(_countmin_cells(col, width, depth))
+                         .alias("__p"))
                  .groupBy("w", *keys, F.col("__p.d").alias("d"),
                           F.col("__p.c").alias("c"))
                  .agg(F.count(F.lit(1)).alias("n"))
@@ -827,7 +823,7 @@ def windowed_hll_registers(ts_col: str, duration: str, expr: str, *,
     pinned in tests.  State per (window, keys) group is ≤ 2^p register
     rows regardless of stream length — the whole point of HLL as the
     streaming distinct sketch."""
-    from conduino_spark.operators.sketches import HLL_RHO_MAX
+    from conduino_spark.operators.sketches import _hll_cell
     if not 4 <= p <= 18:
         raise ValueError(f"p must be in [4, 18], got {p}")
     m = 1 << p
@@ -837,11 +833,7 @@ def windowed_hll_registers(ts_col: str, duration: str, expr: str, *,
         if watermark and d.isStreaming:
             d = d.withWatermark(ts_col, watermark)
         col = F.expr(expr)
-        hx = F.md5(col.cast("string"))
-        bucket = F.conv(F.substring(hx, 1, 8), 16, 10).cast("long") % m
-        hr = F.conv(F.substring(hx, 9, 8), 16, 10).cast("long")
-        rho = F.when(hr == 0, F.lit(HLL_RHO_MAX)).otherwise(
-            F.lit(32) - F.floor(F.log2(hr))).cast("long")
+        bucket, rho = _hll_cell(col, m)
         return (d.where(col.isNotNull())
                  .groupBy(F.window(ts_col, duration).alias("w"), *keys,
                           bucket.alias("b"))

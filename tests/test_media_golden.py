@@ -405,3 +405,29 @@ def test_image_resize_gif_refused_at_build():
     with pytest.raises(ValueError, match=r"sample frames first \("
                        r"frame_sample\(codec='gif'\) emits PNG frames\)"):
         image_resize(codec="gif")
+
+
+# ---------------------------------------------------------------------------
+# mpeg1 and mpeg_ps name one table entry: each name reads the other form
+# (elementary stream / program stream) exactly as its matching name does
+# ---------------------------------------------------------------------------
+
+CROSS = [(op, name, form) for op in ("container_info", "media_profile")
+         for name, form in (("mpeg1", "mpeg_ps"), ("mpeg_ps", "mpeg1"))]
+
+
+@pytest.mark.parametrize("op, name, form", CROSS,
+                         ids=[f"{op}-{n}-on-{f}" for op, n, f in CROSS])
+def test_mpeg_name_reads_either_form(spark, op, name, form):
+    make, _ = _stages()[op]
+    rows = [(0, _blobs()[form][0], form)]
+
+    def unnamed(stage_codec):
+        # the rows carry the codec name the stage was built with
+        out = _outcome(spark, make(stage_codec), rows)
+        return {i: [r.replace(repr(stage_codec), "<codec>") for r in v]
+                for i, v in out.items()}
+
+    got = unnamed(name)
+    assert got == unnamed(form)
+    assert "error" not in repr(got)

@@ -573,9 +573,10 @@ def test_ann_join_cell_split_bit_identical(spark):
 
 # ---------------------------------------------------------------------------
 # r15 blocked-GEMM verify: the data-adaptive output-dense strategy of
-# jaccard_prefix_pairs / cosine_prefix_pairs must emit EXACTLY the
-# pair-path rows, through both kernel sub-paths (dense scatter+GEMM
-# and sparse match-expansion)
+# ngram_jaccard_pairs / jaccard_prefix_pairs / cosine_prefix_pairs must
+# emit EXACTLY the pair-path rows, through both kernel sub-paths (dense
+# scatter+GEMM and sparse match-expansion); the shingle joins refuse
+# n < 1 and sign the shingles they verify
 # ---------------------------------------------------------------------------
 
 def _gemm_corpus(spark, n_docs=36, vocab=14, seed=5):
@@ -587,17 +588,60 @@ def _gemm_corpus(spark, n_docs=36, vocab=14, seed=5):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-@pytest.mark.parametrize("threshold", [0.25, 0.6])
-def test_jaccard_gemm_branch_matches_pair_path(spark, monkeypatch,
-                                               threshold):
-    from conduino_spark import jaccard_prefix_pairs
+#: (operator, threshold, _gemm_corpus arguments)
+GEMM_LAW = ([("ngram_jaccard_pairs", t, dict(n_docs=32, vocab=12, seed=11))
+             for t in (0.2, 0.5)]
+            + [("jaccard_prefix_pairs", t, {}) for t in (0.25, 0.6)]
+            + [("cosine_prefix_pairs", t, {}) for t in (0.3, 0.6, 0.8)])
+
+
+@pytest.mark.parametrize("op, threshold, corpus", GEMM_LAW,
+                         ids=[f"{op}-{t}" for op, t, _ in GEMM_LAW])
+def test_gemm_verify_branch_matches_pair_path(spark, monkeypatch, op,
+                                              threshold, corpus):
+    import conduino_spark
     from conduino_spark.operators import dedup as dd
-    df = _gemm_corpus(spark)
-    q = jaccard_prefix_pairs(threshold=threshold, n=1)
+    df = _gemm_corpus(spark, **corpus)
+    shingles = {} if op == "cosine_prefix_pairs" else {"n": 1}
+    q = getattr(conduino_spark, op)(threshold=threshold, **shingles)
+    gate, took = dd._gemm_verify, []
+    monkeypatch.setattr(dd, "_gemm_verify",
+                        lambda *a: took.append(gate(*a)) or took[-1])
     gemm = sorted(map(tuple, q(df).collect()))
     monkeypatch.setattr(dd, "_GEMM_VERIFY_BUDGET", -1.0)
     pair = sorted(map(tuple, q(df).collect()))
+    assert took == [True, False]
     assert gemm == pair and len(gemm) > 0
+
+
+@pytest.mark.parametrize("n", [0, -2])
+def test_shingle_n_below_one_refused_at_build(n):
+    from conduino_spark import (decontaminate, jaccard_prefix_pairs,
+                                minhash_eval, ngram_jaccard_pairs,
+                                source_overlap)
+    from conduino_spark.operators.dedup import ngram_jaccard_lsh
+    for make in (ngram_jaccard_pairs, ngram_jaccard_lsh,
+                 jaccard_prefix_pairs, minhash_eval, source_overlap,
+                 lambda n: decontaminate([], n=n)):
+        with pytest.raises(ValueError, match=f"n must be >= 1, got {n}"):
+            make(n=n)
+
+
+def test_ngram_jaccard_lsh_signs_the_verified_shingles(spark):
+    # word-set duplicates that share no 3-gram: only signatures over
+    # the same n=1 shingles the verify reads make them candidates
+    from conduino_spark import ngram_jaccard_pairs
+    from conduino_spark.operators.dedup import ngram_jaccard_lsh
+    words = "alpha bravo charlie delta echo foxtrot golf hotel".split()
+    df = spark.createDataFrame(
+        [(0, " ".join(words)), (1, " ".join(words[::-1])),
+         (2, "india juliet kilo lima mike november oscar papa")],
+        "doc_id long, text string")
+    lsh = sorted(map(tuple, ngram_jaccard_lsh(threshold=0.9, n=1)(df)
+                     .collect()))
+    exact = sorted(map(tuple, ngram_jaccard_pairs(threshold=0.9, n=1)(df)
+                       .collect()))
+    assert lsh == exact == [(0, 1, 1.0)]
 
 
 def test_gemm_sparse_subkernel_matches_dense(spark, monkeypatch):
@@ -639,19 +683,6 @@ def test_minhash_cc_labels_hook_equivalence(spark):
         a = sorted(map(tuple, self_q(df).select("doc_id").collect()))
         b = sorted(map(tuple, hook_q(df).select("doc_id").collect()))
         assert a == b and len(a) > 0
-
-
-@pytest.mark.parametrize("threshold", [0.2, 0.5])
-def test_ngram_jaccard_gemm_branch_matches_join_path(spark, monkeypatch,
-                                                     threshold):
-    from conduino_spark import ngram_jaccard_pairs
-    from conduino_spark.operators import dedup as dd
-    df = _gemm_corpus(spark, n_docs=32, vocab=12, seed=11)
-    q = ngram_jaccard_pairs(threshold=threshold, n=1)
-    gemm = sorted(map(tuple, q(df).collect()))
-    monkeypatch.setattr(dd, "_GEMM_VERIFY_BUDGET", -1.0)
-    join = sorted(map(tuple, q(df).collect()))
-    assert gemm == join and len(gemm) > 0
 
 
 # ---------------------------------------------------------------------------
