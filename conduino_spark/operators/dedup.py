@@ -2293,18 +2293,22 @@ def minhash_eval(threshold: float = 0.5, *, text_col: str = "text",
     dedup; precision only costs verification work.
 
     Plan: both sides reduce to pair tables of (id_a < id_b) longs —
-    LSH candidates from the banded self-join, truth from the exact
-    shared-shingle inverted index — then two tiny counts + one
+    LSH candidates from the banded self-join over signatures of the
+    same word-``n``-gram shingles (:func:`ngram_jaccard_lsh`'s signing
+    path, so the audited banding is the one that runs), truth from
+    the exact shared-shingle inverted index — then two tiny counts + one
     pair-keyed join.  Empty sides yield 1.0 precision/recall by
     convention (nothing claimed, nothing missed → vacuous success);
     n_candidates == 0 with n_true > 0 yields recall 0.0."""
-    cand_stage = minhash_dedup_pairs(text_col, id_col, n_perm=n_perm,
-                                     bands=bands)
+    _banding_rows(n_perm, bands)  # validate eagerly
     true_stage = ngram_jaccard_pairs(text_col, id_col,
                                      threshold=threshold, n=n)
 
     def fn(df: DataFrame) -> DataFrame:
-        cand = cand_stage(df).select("id_a", "id_b")
+        # the banding under audit signs the same n-gram shingles the
+        # truth verifies (ngram_jaccard_lsh's signing path)
+        cand = _lsh_pairs(_shingle_hashes(df, text_col, id_col, n),
+                          id_col, n_perm=n_perm, bands=bands)
         true = true_stage(df).select("id_a", "id_b")
         cand = track(cand)
         true = track(true)

@@ -19,7 +19,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from conduino_spark.plans.core import Stage
+from conduino_spark.plans.core import Stage, fenced_where
 from conduino_spark.functions.hashing import lcg_params
 
 from conduino_spark.operators.smallio import (
@@ -29,6 +29,13 @@ from conduino_spark.operators.smallio import (
     driver_parquet_write as _driver_parquet_write, local_frame)
 
 LSH_PLANES = 8  # 2^8 = 256 buckets
+
+#: fixed-point scale of every centroid mean, cell dot and cell norm:
+#: elements round to longs at this scale before summing.  One value for
+#: the whole family, so :func:`cell_centroids` models equal
+#: :func:`ann_join`'s data means bit for bit; the DuckDB oracles
+#: hard-code the same 1e9.
+CENTROID_SCALE = 1_000_000_000
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -54,8 +61,38 @@ def _guarded_long_sum(v: Column, what: str) -> Column:
         F.lit(0.0))
     return F.when(bound < F.lit(2.0 ** 53), s).otherwise(
         F.raise_error(F.lit(
-            f"{what}: scaled-long |sum| bound >= 2^53; reduce the scale "
-            "or shrink the cell (exactness claim would be void)")))
+            f"{what}: scaled-long |sum| bound >= 2^53; shrink the cell "
+            "(exactness claim would be void)")))
+
+
+def _means(ex: DataFrame, keys: Sequence[str], what: str) -> DataFrame:
+    """(keys, __i, __m): the mean of ``ex.__x`` per (keys, dim ``__i``)
+    — ONE hash aggregate of guarded scaled-long partials (constant
+    state per group: the r2 fix for the ``collect_list``-per-cell OOM),
+    so means are order-free and replay exactly in DuckDB.  Rows with a
+    NULL key are dropped: a NULL cell is no cell.  The drop is fenced
+    (:func:`fenced_where`): a key computed upstream, such as the Lloyd
+    assignment, would otherwise be re-evaluated inside the filter."""
+    sv = F.round(F.col("__x") * CENTROID_SCALE).cast("long")
+    keep = F.lit(True)
+    for c in keys:
+        keep = keep & F.col(c).isNotNull()
+    return (fenced_where(ex, keep).groupBy(*keys, "__i")
+              .agg((_guarded_long_sum(sv, what).cast("double")
+                    / F.count(F.lit(1)).cast("double")
+                    / F.lit(float(CENTROID_SCALE))).alias("__m")))
+
+
+def _mean_dict(ex: DataFrame, keys: Sequence[str], what: str) -> dict:
+    """:func:`_means` assembled driver-side as ``{key: [d floats]}`` in
+    ``__i`` order (a tuple key when ``keys`` has several columns) — the
+    centroid model every trainer returns (cells × dim doubles)."""
+    out: dict = {}
+    for r in sorted(_means(ex, keys, what).collect(),
+                    key=lambda r: r["__i"]):
+        key = r[keys[0]] if len(keys) == 1 else tuple(r[c] for c in keys)
+        out.setdefault(key, []).append(r["__m"])
+    return out
 
 
 def cosine_to(query: Sequence[float], vec_col: str = "embedding", *,
@@ -234,7 +271,7 @@ def knn_lsh(query: Sequence[float], k: int = 10, *, vec_col: str = "embedding",
       probe directories, never the corpus."""
     probe = probe_buckets(query, planes=planes)
     bucket_stage = lsh_bucket(vec_col, dim=len(query), planes=planes)
-    scorer = cosine_to(query, vec_col)
+    topk = knn_brute(query, k, vec_col=vec_col, id_col=id_col)
 
     def fn(df: DataFrame) -> DataFrame:
         if bucket_col is None:
@@ -243,26 +280,22 @@ def knn_lsh(query: Sequence[float], k: int = 10, *, vec_col: str = "embedding",
             # SRP sum re-inlined into an interpreted per-row predicate
             # (the r8 giant-filter smell; plan_audit caught it when
             # this path joined the pq_adc_search gate pin)
-            from conduino_spark.plans.core import fenced_where
             cand = fenced_where(bucket_stage(df),
                                 F.col("bucket").isin(probe))
         else:
             cand = df.where(F.col(bucket_col).isin(probe))
-        return (scorer(cand)
-                .select(id_col, "cosine")
-                .orderBy(F.desc("cosine"), F.col(id_col))
-                .limit(k))
+        return topk(cand)
 
     return Stage(fn, name=f"knn_lsh({k})", seq_preserving=False)
 
 
 def ivf_build(k: int = 8, iters: int = 1, *, vec_col: str = "embedding",
-              id_col: str = "vec_id", out: str = "cell",
-              scale: int = 1_000_000_000) -> Stage:
+              id_col: str = "vec_id", out: str = "cell") -> Stage:
     """Train an IVF coarse quantizer (k-means-lite, Lloyd iterations)
     and return the (id, cell) assignment — feeds ``ivf_search`` /
     ``embedding_near_dup_pairs`` a REAL computed quantizer instead of a
-    pre-existing label column.
+    pre-existing label column.  :func:`kmeans_fit` followed by
+    :func:`kmeans_assign`.
 
     Scale shape (the same one distributed k-means always has):
     centroids are driver-sized (k × dim doubles) and BROADCAST as
@@ -274,13 +307,11 @@ def ivf_build(k: int = 8, iters: int = 1, *, vec_col: str = "embedding",
     lowest-id vectors; distances rounded to 6dp with ties broken by
     cell id; means from order-free scaled-long sums (see
     __spark_entry__._scaled_sum for the rationale)."""
-
     def fn(df: DataFrame) -> DataFrame:
-        base = df.select(F.col(id_col),
-                         F.col(vec_col).cast("array<double>").alias("__v"))
-        cents = _lloyd_iterate(base, k, iters, id_col=id_col, out=out,
-                               scale=scale, what="ivf_build means")
-        return _km_assign(base, cents, out).select(id_col, out)
+        model = _lloyd_iterate(df, k, iters, vec_col=vec_col,
+                               id_col=id_col, what="ivf_build means")
+        return kmeans_assign(model, vec_col=vec_col, out=out)(df) \
+            .select(id_col, out)
 
     return Stage(fn, name=f"ivf_build(k={k})", seq_preserving=False)
 
@@ -311,31 +342,22 @@ def _km_assign(b: DataFrame, cents: dict, out: str) -> DataFrame:
     return b.withColumn(out, F.expr(expr))
 
 
-def _lloyd_iterate(base: DataFrame, k: int, iters: int, *, id_col: str,
-                   out: str, scale: int, what: str) -> dict:
-    """The deterministic Lloyd loop shared by :func:`ivf_build` and
-    :func:`kmeans_fit`: init = the k lowest-id vectors; update = means
-    from order-free scaled-long sums (one (cell, dim)-keyed shuffle per
-    iteration, centroids driver-sized)."""
+def _lloyd_iterate(df: DataFrame, k: int, iters: int, *, vec_col: str,
+                   id_col: str, what: str) -> "KMeansModel":
+    """The deterministic Lloyd loop behind :func:`kmeans_fit` and
+    :func:`ivf_build` (``what`` labels the overflow guard): init = the
+    k lowest-id vectors; update = :func:`_mean_dict` over the
+    assignment (one (cell, dim)-keyed shuffle per iteration, centroids
+    driver-sized)."""
+    base = df.select(F.col(id_col),
+                     F.col(vec_col).cast("array<double>").alias("__v"))
     init = base.orderBy(id_col).limit(k).collect()
     cents = {j: list(r["__v"]) for j, r in enumerate(init)}
     for _ in range(iters):
-        a = _km_assign(base, cents, out)
-        ex = a.select(out, F.posexplode("__v").alias("__i", "__x"))
-        sv = F.round(F.col("__x") * scale).cast("long")
-        sums = (ex.groupBy(out, "__i")
-                  .agg(_guarded_long_sum(sv, what).alias("__s"),
-                       F.count(F.lit(1)).alias("__n")))
-        rows = (sums.groupBy(out)
-                    .agg(F.array_sort(F.collect_list(F.struct(
-                         F.col("__i"),
-                         (F.col("__s").cast("double")
-                          / F.col("__n").cast("double")
-                          / F.lit(float(scale))).alias("m")))).alias("__a"))
-                    .select(out, F.transform("__a", lambda t: t.m).alias("__c"))
-                    .collect())
-        cents = {r[out]: list(r["__c"]) for r in rows}
-    return cents
+        ex = _km_assign(base, cents, "__cell").select(
+            "__cell", F.posexplode("__v").alias("__i", "__x"))
+        cents = _mean_dict(ex, ["__cell"], what)
+    return KMeansModel(cents)
 
 
 class KMeansModel:
@@ -353,8 +375,8 @@ class KMeansModel:
 
 
 def kmeans_fit(df: DataFrame, k: int = 8, iters: int = 2, *,
-               vec_col: str = "embedding", id_col: str = "vec_id",
-               scale: int = 1_000_000_000) -> KMeansModel:
+               vec_col: str = "embedding",
+               id_col: str = "vec_id") -> KMeansModel:
     """Public k-means training over an embedding column (document /
     embedding clustering for mixture balancing, SemDeDup cells, drift
     monitoring).  Driver function returning the model; pair with
@@ -363,11 +385,8 @@ def kmeans_fit(df: DataFrame, k: int = 8, iters: int = 2, *,
     update rules — law-tested identical assignments), factored so the
     centroids are a first-class, persistable artifact instead of being
     discarded after assignment."""
-    base = df.select(F.col(id_col),
-                     F.col(vec_col).cast("array<double>").alias("__v"))
-    return KMeansModel(_lloyd_iterate(base, k, iters, id_col=id_col,
-                                      out="__cell", scale=scale,
-                                      what="kmeans_fit means"))
+    return _lloyd_iterate(df, k, iters, vec_col=vec_col, id_col=id_col,
+                          what="kmeans_fit means")
 
 
 def kmeans_assign(model: KMeansModel, *, vec_col: str = "embedding",
@@ -548,20 +567,19 @@ __kd{t} AS (
 
 def ivf_search(query: Sequence[float], k: int = 10, *, vec_col: str = "embedding",
                id_col: str = "vec_id", cell_col: str = "label",
-               nprobe: int = 2, centroids: Optional[DataFrame] = None,
-               scale: int = 1_000_000_000) -> Stage:
+               nprobe: int = 2,
+               centroids: Optional[DataFrame] = None) -> Stage:
     """IVF-style ANN when a coarse quantizer column already exists
     (``cell_col``, e.g. a cluster id): rank cells by centroid cosine,
     search the top ``nprobe`` cells only.
 
-    Centroid shape (the r2 VERDICT scale fix): per-(cell, dim) means via
-    ``posexplode`` + one hash aggregate — constant aggregation state per
-    group, the exact plan :func:`ivf_build` uses for its update step.
-    The old ``collect_list``-per-cell formulation materialized every
-    vector of a cell in one buffer (executor OOM on the first hot cell
-    at 100 TB).  The cell ranking never assembles centroid arrays at
-    all: the dot product and norm are per-(cell, dim) products summed in
-    a second tiny aggregate.
+    Centroid shape (the r2 VERDICT scale fix): the lazy per-(cell, dim)
+    :func:`_means` frame — constant aggregation state per group, the
+    plan every centroid model in this module is built from.  The cell
+    ranking never assembles centroid arrays at all: the dot product
+    and norm are per-(cell, dim) products summed in a second tiny
+    aggregate, so the whole search is one plan (no build job).  NULL
+    cells are no cells: they are never ranked or probed.
 
     Pass ``centroids`` — (cell, centroid array<double>), e.g. persisted
     from an :func:`ivf_build` training run — to skip the mean
@@ -569,8 +587,8 @@ def ivf_search(query: Sequence[float], k: int = 10, *, vec_col: str = "embedding
 
     Deterministic across engines (DuckDB oracle: ivf_search_topk):
     scaled-long sums for means/dot/norm, ties on cell id and vec id."""
-    scorer = cosine_to(query, vec_col)
-    sc = float(scale)
+    topk = knn_brute(query, k, vec_col=vec_col, id_col=id_col)
+    sc = float(CENTROID_SCALE)
 
     def fn(df: DataFrame) -> DataFrame:
         q = F.array(*[F.lit(float(x)) for x in query])
@@ -581,19 +599,16 @@ def ivf_search(query: Sequence[float], k: int = 10, *, vec_col: str = "embedding
                  .alias("__i", "__m"))
         else:
             v = F.col(vec_col).cast("array<double>")
-            ex = df.select(F.col(cell_col), F.posexplode(v).alias("__i", "__x"))
-            sv = F.round(F.col("__x") * scale).cast("long")
-            means = (ex.groupBy(cell_col, "__i")
-                       .agg((_guarded_long_sum(sv, "ivf_search means")
-                              .cast("double")
-                             / F.count(F.lit(1)).cast("double")
-                             / F.lit(sc)).alias("__m")))
+            means = _means(df.select(F.col(cell_col),
+                                     F.posexplode(v).alias("__i", "__x")),
+                           [cell_col], "ivf_search means")
         # dot/n2 sums are per-cell over DIM terms (not rows): |term| ≤
         # scale·max|m·q| ≈ 2^30 for unit-ish vectors, so the 2^53 bound
         # holds for any dim < ~8e6 — guarded anyway for the policy
         qi = F.element_at(q, F.col("__i") + 1)
-        dv = F.round(F.col("__m") * qi * scale).cast("long")
-        nv = F.round(F.col("__m") * F.col("__m") * scale).cast("long")
+        dv = F.round(F.col("__m") * qi * CENTROID_SCALE).cast("long")
+        nv = F.round(F.col("__m") * F.col("__m")
+                     * CENTROID_SCALE).cast("long")
         scored = (means.groupBy(cell_col)
                   .agg((_guarded_long_sum(dv, "ivf_search dot")
                          .cast("double") / F.lit(sc)).alias("__dot"),
@@ -602,11 +617,7 @@ def ivf_search(query: Sequence[float], k: int = 10, *, vec_col: str = "embedding
         ccos = F.col("__dot") / (F.sqrt(F.col("__n2")) + F.lit(1e-12))
         top_cells = (scored.orderBy(ccos.desc(), F.col(cell_col))
                            .limit(nprobe).select(cell_col))
-        cand = df.join(F.broadcast(top_cells), cell_col, "semi")
-        return (scorer(cand)
-                .select(id_col, "cosine")
-                .orderBy(F.desc("cosine"), F.col(id_col))
-                .limit(k))
+        return topk(df.join(F.broadcast(top_cells), cell_col, "semi"))
 
     return Stage(fn, name=f"ivf_search({k})", seq_preserving=False)
 
@@ -691,8 +702,8 @@ def vec_dequantize(q_col: str = "q_embedding", scale_col: str = "q_scale",
 
 
 def pq_train(df: DataFrame, *, m: int = 8, k: int = 16, iters: int = 1,
-             vec_col: str = "embedding", id_col: str = "vec_id",
-             scale: int = 1_000_000_000) -> "dict[int, dict[int, list[float]]]":
+             vec_col: str = "embedding",
+             id_col: str = "vec_id") -> "dict[int, dict[int, list[float]]]":
     """Train a Product Quantization codebook — the OTHER half of the
     100 TB ANN stack (IVF prunes the scan; PQ shrinks what remains):
     split every vector into ``m`` subvectors, learn ``k`` centroids per
@@ -738,22 +749,9 @@ def pq_train(df: DataFrame, *, m: int = 8, k: int = 16, iters: int = 1,
                .select(F.col("__e.__s").alias("__s"),
                        F.col("__e.__code").alias("__code"),
                        F.posexplode("__e.__sub").alias("__i", "__x")))
-        sv = F.round(F.col("__x") * scale).cast("long")
-        sums = (ex.groupBy("__s", "__code", "__i")
-                  .agg(_guarded_long_sum(sv, "pq_train means").alias("__sm"),
-                       F.count(F.lit(1)).alias("__n")))
-        rows = (sums.groupBy("__s", "__code")
-                    .agg(F.array_sort(F.collect_list(F.struct(
-                         F.col("__i"),
-                         (F.col("__sm").cast("double")
-                          / F.col("__n").cast("double")
-                          / F.lit(float(scale))).alias("mn")))).alias("__a"))
-                    .select("__s", "__code",
-                            F.transform("__a", lambda t: t.mn).alias("__c"))
-                    .collect())
-        for r in rows:
-            book[int(r["__s"])][int(r["__code"])] = \
-                [float(x) for x in r["__c"]]
+        for (sub, code), c in _mean_dict(ex, ["__s", "__code"],
+                                         "pq_train means").items():
+            book[sub][code] = c
     return book
 
 
@@ -844,28 +842,16 @@ def pq_search(book: "dict[int, dict[int, list[float]]]",
 
 
 def cell_centroids(df: DataFrame, *, cell_col: str = "cell",
-                   vec_col: str = "embedding",
-                   scale: int = 1_000_000_000) -> "dict[int, list[float]]":
+                   vec_col: str = "embedding") -> "dict[int, list[float]]":
     """Collect per-cell mean vectors as a driver-sized dict (cells ×
-    dim doubles — the coarse-quantizer MODEL).  One (cell, dim)-keyed
-    aggregate of guarded scaled-long partials; deterministic means
-    (same arithmetic as :func:`ivf_build`)."""
+    dim doubles — the coarse-quantizer MODEL): :func:`_mean_dict`, so
+    the model equals :func:`ann_join`'s data means bit for bit.  NULL
+    cells are dropped."""
     v = F.col(vec_col).cast("array<double>")
     ex = df.select(F.col(cell_col).alias("__c"),
                    F.posexplode(v).alias("__i", "__x"))
-    sv = F.round(F.col("__x") * scale).cast("long")
-    sums = (ex.groupBy("__c", "__i")
-              .agg(_guarded_long_sum(sv, "cell_centroids").alias("__s"),
-                   F.count(F.lit(1)).alias("__n")))
-    rows = (sums.groupBy("__c")
-                .agg(F.array_sort(F.collect_list(F.struct(
-                     F.col("__i"),
-                     (F.col("__s").cast("double")
-                      / F.col("__n").cast("double")
-                      / F.lit(float(scale))).alias("m")))).alias("__a"))
-                .select("__c", F.transform("__a", lambda t: t.m).alias("__v"))
-                .collect())
-    return {int(r["__c"]): [float(x) for x in r["__v"]] for r in rows}
+    return {int(c): [float(x) for x in m]
+            for c, m in _mean_dict(ex, ["__c"], "cell_centroids").items()}
 
 
 def ivfpq_search(book: "dict[int, dict[int, list[float]]]",
@@ -1032,7 +1018,6 @@ def sq_search(model: SQModel, query, kk: int = 10, *,
         # sq_encode's transform projection (the r8 giant-filter smell
         # — the whole 256-term encode expression re-inlined into an
         # interpreted per-row predicate).
-        from conduino_spark.plans.core import fenced_where
         return (fenced_where(df, c.isNotNull() & (F.size(c) == model.dim))
                 .select(F.col(id_col), dist.alias(out))
                 .orderBy(out, id_col).limit(kk))
@@ -1321,8 +1306,7 @@ def ann_join(corpus: DataFrame, k: int = 10, *, nprobe: int = 2,
              out_cos: str = "cosine", exclude_self: bool = False,
              kernel: str = "exact",
              centroids: "Optional[dict]" = None,
-             cell_split: "int | str" = "auto",
-             scale: int = 1_000_000_000) -> Stage:
+             cell_split: "int | str" = "auto") -> Stage:
     """Batched ANN JOIN: for EVERY query vector, its top-``k`` cosine
     neighbors from ``corpus`` — the all-rows counterpart of the
     single-query :func:`knn_lsh`/:func:`ivf_search` probes, and the
@@ -1335,12 +1319,11 @@ def ann_join(corpus: DataFrame, k: int = 10, *, nprobe: int = 2,
     100 TB plan — never all-pairs: the corpus is bucketed by its coarse
     cells (``cell_col``, e.g. an :func:`ivf_build` assignment or any
     cluster id); per-(cell, dim) centroid means come from ONE hash
-    aggregate of scaled-long partials (constant state per group — the
-    r2 collect_list OOM fix); every query ranks the C cells via a
-    BROADCAST join of the tiny (cell, dim, mean) table and probes only
-    its ``nprobe`` best, so the candidate join moves each query
-    ``nprobe`` times and each corpus row once per its cell — both
-    equi-joins on the cell key.  Per-query top-k is one window over the
+    aggregate of scaled-long partials (:func:`_mean_dict`); every
+    query ranks the C cells against the tiny driver-held means in one
+    Arrow pass and probes only its ``nprobe`` best, so the candidate
+    join moves each query ``nprobe`` times and each corpus row once
+    per its cell — both equi-joins on the cell key.  Per-query top-k is one window over the
     candidate set.
 
     Deterministic across engines (DuckDB oracle in
@@ -1370,9 +1353,8 @@ def ann_join(corpus: DataFrame, k: int = 10, *, nprobe: int = 2,
     may not coalesce.  The candidate SET is unchanged (every corpus
     row lives in exactly one sub, every probing query meets every
     sub), so results are bit-identical; only the parallelism
-    changes.  "auto" sizes S ≈ defaultParallelism / n_cells (one
-    tiny distinct-count when no ``centroids`` model is given);
-    an int pins it; 1 disables."""
+    changes.  "auto" sizes S ≈ defaultParallelism / n_cells (the
+    cell count of the means model); an int pins it; 1 disables."""
     if k < 1 or nprobe < 1:
         raise ValueError(f"need k >= 1 and nprobe >= 1, got k={k}, "
                          f"nprobe={nprobe}")
@@ -1383,7 +1365,7 @@ def ann_join(corpus: DataFrame, k: int = 10, *, nprobe: int = 2,
         raise ValueError(f"cell_split must be 'auto' or an int >= 1, "
                          f"got {cell_split!r}")
     from pyspark.sql import Window
-    sc = float(scale)
+    sc = float(CENTROID_SCALE)
 
     def fn(queries: DataFrame) -> DataFrame:
         cvec = F.col(vec_col).cast("array<double>")
@@ -1397,52 +1379,39 @@ def ann_join(corpus: DataFrame, k: int = 10, *, nprobe: int = 2,
                               F.col(id_col).alias(out_id),
                               cvec.alias("__cv")))
         queries = queries.where(F.col(vec_col).isNotNull())
-        # per-(cell, dim) centroid means — ivf_search's aggregate shape
-        # (fresh scan, not derived from `corp`: sharing the lineage
-        # makes the later corp-join ambiguous on __cell; same NULL
-        # filter so both sides see the same universe).  When
+        # per-cell centroid means {cell: [d floats]}.  When
         # ``centroids`` is given (a {cell: [d floats]} model, e.g.
         # :func:`cell_centroids`/:class:`KMeansModel` output, or the
         # in-band quantizer :func:`ivf_index_join` reads back), the
-        # corpus-wide mean scan is SKIPPED — the model becomes a tiny
-        # literal table and the only corpus access left is the pruned
-        # candidate join.  Cells absent from the model are never
-        # probed.  cell_n2 derives from the literal means through the
-        # SAME expressions, so rankings stay bit-identical to the
-        # data-derived path when the model equals the data means
-        # (law-tested).
+        # corpus-wide mean scan is SKIPPED and the only corpus access
+        # left is the pruned candidate join; cells absent from the
+        # model are never probed.  Otherwise the data means come from
+        # :func:`_mean_dict` (fresh scan, not derived from `corp`:
+        # sharing the lineage makes the later corp-join ambiguous on
+        # __cell), which a cell_centroids model equals bit for bit, so
+        # rankings stay bit-identical between the two (law-tested).
         if centroids is not None:
-            means = local_frame(
-                queries.sparkSession,
-                [(int(c), i, float(x))
-                 for c, v in centroids.items()
-                 for i, x in enumerate(v)],
-                "__cell long, __i int, __m double")
+            cmeans = {int(c): [float(x) for x in v]
+                      for c, v in centroids.items() if len(v)}
         else:
-            ex = (corpus.where(F.col(cell_col).isNotNull())
-                        .select(F.col(cell_col).alias("__cell"),
-                                F.posexplode(cvec).alias("__i", "__x")))
-            sv = F.round(F.col("__x") * scale).cast("long")
-            means = (ex.groupBy("__cell", "__i")
-                       .agg((_guarded_long_sum(sv, "ann_join means")
-                              .cast("double")
-                             / F.count(F.lit(1)).cast("double")
-                             / F.lit(sc)).alias("__m")))
+            cmeans = _mean_dict(
+                corpus.select(F.col(cell_col).alias("__cell"),
+                              F.posexplode(cvec).alias("__i", "__x")),
+                ["__cell"], "ann_join means")
         # rank cells PER QUERY (r15 rewrite — found by the real-sf1
         # probe): the old path posexploded every query vector and
         # joined the means on the dim index, materializing n·d·C rows
         # through a shuffle aggregate — with cells scaling alongside
         # the corpus that is O(N²d/cell_size), and it dominated the
-        # scaled-cell probe at 10x.  The means table is tiny (C·d
-        # rows), so collect it once and score every query against all
-        # cells in ONE Arrow pass.  BIT-IDENTICAL by construction:
-        # the kernel reproduces the exact scaled-long formula —
-        # per-term HALF_UP round (Spark's F.round, NOT numpy's
-        # half-even) summed in int64 — so dots, ccos doubles, and the
-        # (ccos desc, cell asc) ranking are the same numbers the SQL
-        # aggregate produced (ann_join_emb / knn_methods gate pins
-        # replay hash-green; DuckDB oracle unchanged).
-        mrows = means.collect()
+        # scaled-cell probe at 10x.  The means are tiny (C·d floats),
+        # so score every query against all cells in ONE Arrow pass.
+        # BIT-IDENTICAL by construction: the kernel reproduces the
+        # exact scaled-long formula — per-term HALF_UP round (Spark's
+        # F.round, NOT numpy's half-even) summed in int64 — so dots,
+        # ccos doubles, and the (ccos desc, cell asc) ranking are the
+        # same numbers the SQL aggregate produced (ann_join_emb /
+        # knn_methods gate pins replay hash-green; DuckDB oracle
+        # unchanged).
         qv = F.col(vec_col).cast("array<double>")
         cell_type = corpus.schema[cell_col].dataType
         from pyspark.sql.types import StructField, StructType
@@ -1450,15 +1419,14 @@ def ann_join(corpus: DataFrame, k: int = 10, *, nprobe: int = 2,
             StructField(id_col, queries.schema[id_col].dataType),
             StructField("__cell", cell_type),
         ])
-        if not mrows:
+        if not cmeans:
             probes = local_frame(queries.sparkSession, [], probe_schema)
         else:
-            cells_sorted = sorted({r["__cell"] for r in mrows})
-            cidx = {c: j for j, c in enumerate(cells_sorted)}
-            dmax = max(r["__i"] for r in mrows) + 1
+            cells_sorted = sorted(cmeans)
+            dmax = max(len(v) for v in cmeans.values())
             cmat = _np.zeros((len(cells_sorted), dmax))
-            for r in mrows:
-                cmat[cidx[r["__cell"]], r["__i"]] = r["__m"]
+            for j, c in enumerate(cells_sorted):
+                cmat[j, :len(cmeans[c])] = cmeans[c]
 
             def _half_up(a):
                 # Spark round(double): HALF AWAY FROM ZERO
@@ -1514,9 +1482,7 @@ def ann_join(corpus: DataFrame, k: int = 10, *, nprobe: int = 2,
         # r15 cell sub-split (docstring): same candidates, more tasks
         if cell_split == "auto":
             dp = queries.sparkSession.sparkContext.defaultParallelism
-            nc = (len(centroids) if centroids is not None
-                  else corp.select("__cell").distinct().count())
-            S = max(1, min(64, -(-dp // max(int(nc), 1))))
+            S = max(1, min(64, -(-dp // max(len(cmeans), 1))))
         else:
             S = cell_split
         jkeys = ["__cell"]

@@ -627,21 +627,32 @@ def test_shingle_n_below_one_refused_at_build(n):
             make(n=n)
 
 
-def test_ngram_jaccard_lsh_signs_the_verified_shingles(spark):
+def _wordset_dups(spark):
     # word-set duplicates that share no 3-gram: only signatures over
     # the same n=1 shingles the verify reads make them candidates
-    from conduino_spark import ngram_jaccard_pairs
-    from conduino_spark.operators.dedup import ngram_jaccard_lsh
     words = "alpha bravo charlie delta echo foxtrot golf hotel".split()
-    df = spark.createDataFrame(
+    return spark.createDataFrame(
         [(0, " ".join(words)), (1, " ".join(words[::-1])),
          (2, "india juliet kilo lima mike november oscar papa")],
         "doc_id long, text string")
+
+
+def test_ngram_jaccard_lsh_signs_the_verified_shingles(spark):
+    from conduino_spark import ngram_jaccard_pairs
+    from conduino_spark.operators.dedup import ngram_jaccard_lsh
+    df = _wordset_dups(spark)
     lsh = sorted(map(tuple, ngram_jaccard_lsh(threshold=0.9, n=1)(df)
                      .collect()))
     exact = sorted(map(tuple, ngram_jaccard_pairs(threshold=0.9, n=1)(df)
                        .collect()))
     assert lsh == exact == [(0, 1, 1.0)]
+
+
+def test_minhash_eval_scores_the_banding_it_names(spark):
+    # at n=1 the audited candidates come from n=1 signatures too
+    from conduino_spark import minhash_eval
+    row = minhash_eval(threshold=0.9, n=1)(_wordset_dups(spark)).first()
+    assert tuple(row) == (1, 1, 1, 1.0, 1.0)
 
 
 def test_gemm_sparse_subkernel_matches_dense(spark, monkeypatch):
